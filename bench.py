@@ -38,21 +38,26 @@ HEADLINE = [
 ]
 
 
-CEILING_REF = "BENCH/ceiling_ref.json"
+CEILING_REF = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           ".perfbench", "ceiling_ref.json")
 
 
-def _load_factor(measured_ips: float) -> tuple[float, float]:
-    """(ref_ips, load_factor): ref is a ratcheting best-known ceiling kept
-    in BENCH/ceiling_ref.json; load_factor = measured/ref ∈ (0, ~1]."""
-    ref = measured_ips
+def _load_factor(measured_ips: float, cpus: int) -> tuple[float, float]:
+    """(ref_ips, load_factor): ref is the best ceiling seen so far at this
+    core count, kept per core count in the git-ignored
+    .perfbench/ceiling_ref.json; load_factor = measured/ref ∈ (0, ~1]."""
+    refs = {}
     if os.path.exists(CEILING_REF):
         with open(CEILING_REF) as f:
-            ref = max(float(json.load(f)["ips"]), measured_ips)
+            refs = json.load(f)
+    key = str(cpus)
+    ref = max(float(refs.get(key, {}).get("ips", 0.0)), measured_ips)
     if ref == measured_ips:          # ratchet up on a good window
-        os.makedirs("BENCH", exist_ok=True)
+        refs[key] = {"ips": round(measured_ips, 1),
+                     "at": time.strftime("%Y-%m-%d %H:%M")}
+        os.makedirs(os.path.dirname(CEILING_REF), exist_ok=True)
         with open(CEILING_REF, "w") as f:
-            json.dump({"ips": round(measured_ips, 1),
-                       "at": time.strftime("%Y-%m-%d %H:%M")}, f)
+            json.dump(refs, f)
     return ref, measured_ips / ref
 
 
@@ -103,7 +108,7 @@ def run_default() -> None:
     win_a = sweep(2)
     ceiling_ips = _raw_ceiling(min(cpus, 16))
     win_b = sweep(2)
-    ref_ips, load = _load_factor(ceiling_ips)
+    ref_ips, load = _load_factor(ceiling_ips, cpus)
 
     qtimes = {"img_flagship": round(flagship_wall, 3)}
     qtimes.update({n: round(min(win_a[n], win_b[n]), 3) for n in HEADLINE})

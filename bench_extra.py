@@ -6,7 +6,7 @@ are reproducible: each probe times one query (or one internal stage) with
 the noop sink so the computation is measured, not the sink.
 
 Usage:
-    python bench_extra.py <probe> [...probe]     # e.g. minhash_stages
+    python bench_extra.py <probe> [...probe]     # e.g. flagship
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py headline
 """
 
@@ -47,50 +47,6 @@ def get_session():
     return get_spark("bench-extra", cores=CPUS, shuffle_partitions=CPUS)
 
 
-def probe_minhash_stages(spark):
-    """Stage isolation for dedup_minhash_lsh (64 hashes / 16 bands)."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-    from raster_functions_spark import dedup
-
-    docs = entry._t(spark, SF_DIR, "documents")
-    print(f"minhash stage isolation @ {SF_DIR}")
-
-    # 0. full query exactly as the frozen bench times it (count())
-    qs = entry.queries()
-    timed(spark, "full query (bench methodology: .count())",
-          lambda: None,
-          sink=lambda _: qs["dedup_minhash_lsh"](spark, SF_DIR).count())
-
-    # 1. candidate pairs, lazy, noop sink (no order/driver round-trip)
-    def pairs():
-        p = dedup.minhash_lsh_candidates(docs, n_hashes=64, bands=16)
-        return p
-    def run_pairs():
-        p = pairs()
-        try:
-            noop(p)
-        finally:
-            dedup.release_signature_cache(p)
-    timed(spark, "pairs lazy -> noop", lambda: None, sink=lambda _: run_pairs())
-
-    # 2. signature table only
-    k, n_hashes = 5, 64
-    A, B = dedup.minhash_family(n_hashes)
-    sh = (docs.select(F.col("doc_id").alias("_id"), F.col("text").alias("_t"))
-          .select("_id", F.expr(
-              f"explode(sequence(1, greatest(length(_t) - {k - 1}, 1)))").alias("i"),
-              "_t")
-          .select("_id", F.expr(f"substring(_t, i, {k})").alias("s")))
-    hashed = sh.select("_id", F.expr(dedup._polyhash_sql("s", k)).alias("ph"))
-    aggs = [F.min(F.expr(f"({a}L * ph + {b}L) % {dedup.MINHASH_P}")).alias(f"h{h}")
-            for h, (a, b) in enumerate(zip(A, B))]
-    timed(spark, "shingle explode + substring", lambda: sh)
-    timed(spark, "  + polyhash", lambda: hashed)
-    timed(spark, "  + 64-min hash agg (= signatures)",
-          lambda: hashed.groupBy("_id").agg(*aggs))
-
-
 def probe_headline(spark):
     """All headline queries, bench methodology (count), min-of-N."""
     import __spark_entry__ as entry
@@ -117,14 +73,13 @@ def probe_flagship(spark):
 
 
 PROBES = {
-    "minhash_stages": probe_minhash_stages,
     "headline": probe_headline,
     "flagship": probe_flagship,
 }
 
 
 if __name__ == "__main__":
-    wanted = [a for a in sys.argv[1:] if a in PROBES] or ["minhash_stages"]
+    wanted = [a for a in sys.argv[1:] if a in PROBES] or ["headline"]
     s = get_session()
     for w in wanted:
         PROBES[w](s)

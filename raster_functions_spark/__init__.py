@@ -17,3 +17,8 @@ No code is ported from the reference; citations in docstrings are to the
 """
 
 __version__ = "0.1.0"
+
+from . import _worker
+
+if _worker.in_worker():
+    _worker.install()

@@ -193,11 +193,18 @@ def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
         buf: list[pd.DataFrame] = []
 
         def emit(key, g):
-            buf.append(fn(tuple(key), g))
+            # empty frames are dropped, not concatenated: pandas is ending
+            # its exclusion of them from the result dtypes (FutureWarning),
+            # and focal assembly returns one for every halo target past
+            # the grid edge. With every frame empty nothing is yielded and
+            # the declared output schema stands.
+            out = fn(tuple(key), g)
+            if len(out):
+                buf.append(out)
 
         for pdf in batches:
             if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
+                pdf = pd.concat([pend, pdf], ignore_index=True) if len(pdf) else pend
                 pend = None
             if not len(pdf):
                 continue

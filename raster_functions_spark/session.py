@@ -7,10 +7,21 @@ timezone (required for DuckDB-oracle comparisons), and BLAS/OMP pinned to one
 thread per task so NumPy kernels inside Arrow batches don't oversubscribe
 cores (the reference pins BLAS threads the same way:
 /root/reference/functions/LandsatMedianImage.py:4-9).
+
+Per-task Python worker cost: PySpark starts every Python task with
+``importlib.invalidate_caches()``, which on Python >= 3.10 makes each zip
+importer re-read its archive's central directory (``pyspark.zip`` once per
+imported sub-package, plus the shipped package zip) — ~225 ms of CPU per
+task in a warm worker, more than a small tile task's own work. The package
+``__init__`` installs ``_worker``'s stat-keyed hook inside workers so an
+unchanged archive is not re-read. Its counterpart here: ``ship_package``
+writes the package zip once per content hash and adds each file once per
+SparkContext, so an archive that workers import from never changes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -115,20 +126,36 @@ def package_zip(path: str | None = None) -> str:
     """Zip this package for ``spark-submit --py-files`` / ``addPyFile``.
 
     The north rule requires the engine to run via ``spark-submit
-    --py-files`` on multi-executor clusters; this builds that artifact."""
+    --py-files`` on multi-executor clusters; this builds that artifact.
+    Without ``path`` the zip goes to the temp directory under a name
+    carrying a hash of the package's content, and is written only when
+    no file of that name exists: a zip that workers may already import
+    from is never rewritten in place."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = path or os.path.join(tempfile.gettempdir(), "raster_functions_spark.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join("raster_functions_spark",
-                                       os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    return out
+    files = []                                   # (path, name in the zip)
+    for root, dirs, names in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for fn in sorted(names):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                files.append((full, os.path.join("raster_functions_spark",
+                                                 os.path.relpath(full, pkg_dir))))
+    if path is None:
+        digest = hashlib.sha1()
+        for full, rel in files:
+            digest.update(rel.encode() + b"\0")
+            with open(full, "rb") as f:
+                digest.update(f.read())
+        path = os.path.join(tempfile.gettempdir(),
+                            f"raster_functions_spark-{digest.hexdigest()[:16]}.zip")
+        if os.path.exists(path):
+            return path
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        for full, rel in files:
+            zf.write(full, rel)
+    os.replace(tmp, path)
+    return path
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -137,15 +164,18 @@ def ship_package(spark: SparkSession) -> None:
     `__spark_entry__.py` ships too when present: its module-level helpers
     (per-tile stat lambdas) are pickled BY REFERENCE into mapInPandas
     closures, so executors must be able to import the module even when the
-    driver was launched from another directory."""
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in this context, or non-local FS restrictions
+    driver was launched from another directory.
+
+    Cheap to call per query: each file is added once per SparkContext.
+    A file whose name the context already lists is skipped (the package
+    zip's name carries its content hash), so a failing ``addPyFile`` is a
+    real failure and raises. One ``mkString`` call reads the list: the
+    public ``listFiles`` walks the Scala Seq element by element (~20 ms)."""
+    sc = spark.sparkContext
+    added = {uri.rsplit("/", 1)[-1]
+             for uri in sc._jsc.sc().listFiles().mkString("\n").split("\n")}
     entry = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                          "__spark_entry__.py")
-    if os.path.exists(entry):
-        try:
-            spark.sparkContext.addPyFile(entry)
-        except Exception:
-            pass
+    for path in (package_zip(), entry):
+        if os.path.basename(path) not in added and os.path.exists(path):
+            sc.addPyFile(path)

@@ -183,6 +183,33 @@ def test_grouped_sorted_map_stitches_across_arrow_batches(spark):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def test_grouped_sorted_map_drops_empty_group_frames(spark):
+    """fn may return an empty frame for a group (focal assembly does for
+    every halo target past the grid edge); those add no rows, the other
+    groups keep their values, and all-empty output keeps the schema."""
+    import pandas as pd
+    import pyspark.sql.types as T
+    from raster_functions_spark.operators.stack import grouped_sorted_map
+    df = spark.createDataFrame(pd.DataFrame({"k": [i % 6 for i in range(60)],
+                                             "v": [float(i) for i in range(60)]}))
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("s", T.DoubleType())])
+
+    def fn_some(key, g):
+        if key[0] % 2:
+            return pd.DataFrame({"k": pd.Series(dtype="object"),
+                                 "s": pd.Series(dtype="object")})
+        return pd.DataFrame({"k": [key[0]], "s": [float(g["v"].sum())]})
+
+    got = grouped_sorted_map(df, ["k"], fn_some, schema, num_partitions=2).toPandas()
+    want = {k: float(sum(i for i in range(60) if i % 6 == k)) for k in (0, 2, 4)}
+    assert dict(zip(got["k"], got["s"])) == want
+
+    empty = grouped_sorted_map(df, ["k"], lambda key, g: fn_some((1,), g), schema,
+                               num_partitions=2)
+    assert empty.schema == schema and empty.count() == 0
+
+
 def test_grouped_sorted_map_keeps_null_group_keys(spark):
     """applyInPandas keeps a null-key group (dropna is a pandas-ism) —
     grouped_sorted_map must too: null string keys, NaN-containing
