@@ -123,6 +123,16 @@ def choose_bands(n_hashes: int, target_jaccard: float) -> int:
     return best[1]
 
 
+def _check_shingle_k(k: int) -> None:
+    """Reject shingle sizes the int64 rolling hash cannot represent: k ≤ 7
+    keeps the leading term < 2^63 for every Unicode code point (see
+    _polyhash_sql); k < 1 has no shingles."""
+    if not 1 <= k <= 7:
+        raise ValueError(
+            f"shingle k={k} is out of range: the rolling hash overflows "
+            "BIGINT for non-ASCII text beyond k = 7 (valid: 1 ≤ k ≤ 7)")
+
+
 def _polyhash_sql(s_expr: str, k: int) -> str:
     """((a1·131 + a2)·131 + …) % P with aj = unicode point of char j —
     valid Spark SQL and DuckDB SQL alike."""
@@ -132,10 +142,7 @@ def _polyhash_sql(s_expr: str, k: int) -> str:
     # (1,114,111 · 131^6 ≈ 5.6e18); k=8 already overflows on astral-plane
     # text — Spark non-ANSI would wrap silently while DuckDB promotes to
     # HUGEINT, splitting the engines apart
-    if k > 7:
-        raise ValueError(
-            f"shingle k={k} overflows BIGINT in the rolling hash for "
-            "non-ASCII text (max safe k = 7)")
+    _check_shingle_k(k)
     e = f"CAST(ascii(substring({s_expr}, 1, 1)) AS BIGINT)"
     for j in range(2, k + 1):
         e = f"({e} * 131 + ascii(substring({s_expr}, {j}, 1)))"
@@ -238,7 +245,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 5,
                        n_hashes: int = 8) -> DataFrame:
     """Signature table (_id, h0..h{n-1}) via the vectorized Arrow kernel —
-    the production path minhash_lsh_candidates builds on."""
+    the production path minhash_lsh_candidates builds on. Raises for a
+    shingle size outside 1 ≤ k ≤ 7, like the SQL form (_check_shingle_k):
+    the int64 kernel would wrap silently on astral-plane text."""
+    _check_shingle_k(k)
     A, B = minhash_family(n_hashes)
     An, Bn = np.asarray(A, np.int64), np.asarray(B, np.int64)
     narrow = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
@@ -339,8 +349,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     aggregates sharing the pairing shuffle's exchange (_salted_buckets),
     so the signature stage runs ONCE per job and nothing needs to be
     persisted — the returned DataFrame is fully lazy with no cache to
-    release (``release_signature_cache`` stays as a no-op for callers
-    written against the old contract).
+    release.
 
     Family size: any ``n_hashes`` up to :data:`MINHASH_MAX_HASHES` (128);
     pick ``bands`` with :func:`choose_bands` to target a Jaccard
@@ -381,17 +390,6 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
              .groupBy("id_a", "id_b")
              .agg(F.count("*").alias("n_shared_bands")))
     return pairs
-
-
-def release_signature_cache(pairs: DataFrame) -> None:
-    """No-op since r7: minhash_lsh_candidates no longer persists a
-    signature table (the single-pass window plan reads it once — see the
-    r7 note in its docstring), so there is nothing to release. Kept for
-    callers written against the old cache contract; still unpersists a
-    ``signature_cache`` handle if one is present."""
-    handle = getattr(pairs, "signature_cache", None)
-    if handle is not None:
-        handle.unpersist()
 
 
 def _i64(x: int) -> int:

@@ -14,6 +14,9 @@ over the unavoidable one pass; this is the design that survives 100 TB
 (an 8-way self-join would read the table 8×).
 
 All kernels are whole-array NumPy (no scipy available, none needed).
+
+Output tiles follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
+filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
-from ..raster import TileOp
+from ..raster import TILE_FIELDS, TileOp, tile_row
 
 # ------------------------------------------------------------ kernels ------
 # All kernel fns take an already-padded (bands, h+2p, w+2p) array and return
@@ -383,10 +386,7 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
         T.StructField(scn, df.schema[scn].dataType),
         T.StructField(txc, df.schema[txc].dataType),
         T.StructField(tyc, df.schema[tyc].dataType),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
+        *TILE_FIELDS,
     ] + ([df.schema[c] for c in meta_keep]))
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -438,15 +438,8 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
         fn_meta = dict(meta)
         fn_meta["_halo_pad"] = p
         fn_meta["_halo_valid"] = halo_valid
-        out_px = op.fn(padded, fn_meta)
-        if out_px.ndim == 2:
-            out_px = out_px[None]
         row = {scn: key[0], txc: int(key[1]), tyc: int(key[2]),
-               "bytes": codec.encode(out_px, fmt_out),
-               "w": out_px.shape[2], "h": out_px.shape[1],
-               "bands": out_px.shape[0],
-               "dtype": out_px.dtype.str.lstrip("<>=|"), "fmt": fmt_out}
-        row.update(meta)
+               **tile_row(op.fn(padded, fn_meta), fmt_out), **meta}
         return pd.DataFrame([row])
 
     # carry per-tile meta columns through the shuffle (joined onto messages)

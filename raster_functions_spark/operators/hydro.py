@@ -11,6 +11,9 @@ elevation-ordered single-pass accumulation (equivalent to the sparse
 solve for an acyclic D8 graph). Distributed-iterative (halo-exchange
 relaxation) is the documented scale-up path for scenes that exceed one
 executor's memory.
+
+Output tiles follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
+filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
+from ..raster import TILE_FIELDS, tile_row
 from .focal import _horn_gradients
 
 # D8 neighbor offsets (E, SE, S, SW, W, NW, N, NE)
@@ -269,13 +273,8 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
             f"stabilize within max_rounds={max_rounds}; raise max_rounds "
             f"(needed ≈ longest flow path in tiles)")
 
-    final_schema = T.StructType([
-        df.schema[scn], df.schema[txc], df.schema[tyc],
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()),
-        T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType())])
+    final_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
+                                 *TILE_FIELDS])
 
     def finalize(batches):
         for pdf in batches:
@@ -285,20 +284,11 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
                 rows.append({scn: pdf[scn].iloc[i],
                              txc: int(pdf[txc].iloc[i]),
                              tyc: int(pdf[tyc].iloc[i]),
-                             "bytes": codec.encode(acc, fmt_out),
-                             "w": acc.shape[2], "h": acc.shape[1],
-                             "bands": acc.shape[0], "dtype": "f8",
-                             "fmt": fmt_out})
+                             **tile_row(acc, fmt_out)})
             yield pd.DataFrame(rows, columns=[f.name for f in final_schema])
 
     # rounds iterate on raw (re-encoding per round would be waste); the
     # REQUESTED fmt_out applies to the final product only
-    if fmt_out == "raw":
-        return result.select(
-            scn, txc, tyc, F.col("acc_bytes").alias("bytes"),
-            F.lit(tile).alias("w"), F.lit(tile).alias("h"),
-            F.lit(1).alias("bands"), F.lit("f8").alias("dtype"),
-            F.lit("raw").alias("fmt"))
     return result.select(scn, txc, tyc, "acc_bytes").mapInPandas(
         finalize, schema=final_schema)
 
@@ -336,13 +326,8 @@ def cti_scene(df: DataFrame, tile: int,
     and re-tiles. Scene size is bounded by executor memory (the
     ProcessFullImage tradeoff, SURVEY.md O13)."""
     scn, txc, tyc = grid_cols
-    out_schema = T.StructType([
-        df.schema[scn], df.schema[txc], df.schema[tyc],
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-    ])
+    out_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
+                               *TILE_FIELDS])
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         txs = pdf[txc].to_numpy()
@@ -361,9 +346,7 @@ def cti_scene(df: DataFrame, tile: int,
             t = cti[tys[i] * tile:(tys[i] + 1) * tile,
                     txs[i] * tile:(txs[i] + 1) * tile]
             rows.append({scn: key[0], txc: int(txs[i]), tyc: int(tys[i]),
-                         "bytes": codec.encode(np.ascontiguousarray(t)[None], fmt_out),
-                         "w": tile, "h": tile, "bands": 1, "dtype": "f4",
-                         "fmt": fmt_out})
+                         **tile_row(t, fmt_out)})
         return pd.DataFrame(rows)
 
     return df.groupBy(scn).applyInPandas(run, schema=out_schema)

@@ -7,6 +7,9 @@ so the models are small pure-NumPy implementations fitted driver-side on
 the (broadcastable) training table and applied per-pixel inside Arrow
 batches — the same broadcast-train / vectorized-predict shape the Spark
 deployment of the reference would use.
+
+The SARIMA delta tiles follow the tile-row contract in :mod:`raster`
+(``TILE_FIELDS`` filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..raster import TileOp
+from ..raster import TILE_FIELDS, TileOp, tile_row
 
 
 # ------------------------------------------------------------- kNN ---------
@@ -559,12 +562,8 @@ def sarima_template_delta(df, data_start_year: int, train_start_year: int,
         raise ValueError("predict/current year precede the training end")
     horizon = max(j_final, j_cur) + 1
 
-    out_schema = T.StructType([df.schema[c] for c in group_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("n_obs", T.IntegerType())])
+    out_schema = T.StructType([df.schema[c] for c in group_cols] + TILE_FIELDS
+                              + [T.StructField("n_obs", T.IntegerType())])
 
     def per_scene(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col)
@@ -577,10 +576,8 @@ def sarima_template_delta(df, data_start_year: int, train_start_year: int,
             fc = sarima_forecast_batch(Y, horizon, period=s,
                                        seasonal_order=(P, D, Q))
             delta = (fc[:, j_final] - fc[:, j_cur]).reshape(h, w).astype(np.float32)
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"bytes": codec.encode(delta[None], fmt_out), "w": w, "h": h,
-                    "bands": 1, "dtype": "f4", "fmt": fmt_out, "n_obs": n_t})
-        return pd.DataFrame([row])
+        return pd.DataFrame([{**dict(zip(group_cols, key)),
+                              **tile_row(delta, fmt_out), "n_obs": n_t}])
 
     return df.groupBy(*group_cols).applyInPandas(per_scene, schema=out_schema)
 
@@ -597,12 +594,8 @@ def sarima_stack_delta(df, period: int = 12, horizon: int = 12,
     from pyspark.sql import types as T
     from .. import codec
 
-    out_schema = T.StructType([df.schema[c] for c in group_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("n_obs", T.IntegerType())])
+    out_schema = T.StructType([df.schema[c] for c in group_cols] + TILE_FIELDS
+                              + [T.StructField("n_obs", T.IntegerType())])
 
     def per_scene(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col)
@@ -620,10 +613,8 @@ def sarima_stack_delta(df, period: int = 12, horizon: int = 12,
         else:
             fc = sarima_forecast_batch(Y, horizon, period)[:, -1]
             delta = (fc - Y[:, -1]).reshape(h, w).astype(np.float32)
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"bytes": codec.encode(delta[None], fmt_out), "w": w, "h": h,
-                    "bands": 1, "dtype": "f4", "fmt": fmt_out, "n_obs": n_t})
-        return pd.DataFrame([row])
+        return pd.DataFrame([{**dict(zip(group_cols, key)),
+                              **tile_row(delta, fmt_out), "n_obs": n_t}])
 
     return df.groupBy(*group_cols).applyInPandas(per_scene, schema=out_schema)
 

@@ -5,6 +5,9 @@ The reference receives co-registered rasters as multiple pixelBlocks
 (updatePixels(**pixelBlocks)); the Spark equivalent aligns them with an
 equi-join on the tile key (the grid-alignment join J4), then runs one
 kernel over both decoded arrays.
+
+Output tiles follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
+filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
+from ..raster import TILE_FIELDS, tile_row
 from .focal import slope_aspect_np
 
 
@@ -27,11 +31,7 @@ def two_raster_op(df_a: DataFrame, df_b: DataFrame, fn, key_cols: list[str],
     a = df_a.select(*key_cols, F.col("bytes").alias("bytes_a"))
     b = df_b.select(*key_cols, F.col("bytes").alias("bytes_b"))
     joined = a.join(b, key_cols)
-    out_schema = T.StructType([df_a.schema[c] for c in key_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType())])
+    out_schema = T.StructType([df_a.schema[c] for c in key_cols] + TILE_FIELDS)
 
     def run(batches):
         for pdf in batches:
@@ -39,14 +39,8 @@ def two_raster_op(df_a: DataFrame, df_b: DataFrame, fn, key_cols: list[str],
             for i in range(len(pdf)):
                 pa = codec.decode(bytes(pdf["bytes_a"].iloc[i]))
                 pb = codec.decode(bytes(pdf["bytes_b"].iloc[i]))
-                out = fn(pa, pb)
-                if out.ndim == 2:
-                    out = out[None]
                 rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             "bytes": codec.encode(out, fmt_out),
-                             "w": out.shape[2], "h": out.shape[1],
-                             "bands": out.shape[0],
-                             "dtype": out.dtype.str.lstrip("<>=|"), "fmt": fmt_out})
+                             **tile_row(fn(pa, pb), fmt_out)})
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
     return joined.mapInPandas(run, schema=out_schema)
@@ -148,12 +142,8 @@ def topographic_c_correction(dem: DataFrame, image: DataFrame,
 
     # pass 2: per-pixel correction with the broadcast C
     joined2 = joined.join(F.broadcast(stats), scene_key)
-    out_schema = T.StructType([dem.schema[c] for c in key_cols] + [
-        T.StructField("c_factor", T.DoubleType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType())])
+    out_schema = T.StructType([dem.schema[c] for c in key_cols]
+                              + [T.StructField("c_factor", T.DoubleType())] + TILE_FIELDS)
 
     def correct(batches):
         for pdf in batches:
@@ -179,10 +169,7 @@ def topographic_c_correction(dem: DataFrame, image: DataFrame,
                                     / np.where(lit, ci + C, 1.0),
                                     v).astype(np.float32)
                 rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             "c_factor": C,
-                             "bytes": codec.encode(corr[None], fmt_out),
-                             "w": corr.shape[1], "h": corr.shape[0], "bands": 1,
-                             "dtype": "f4", "fmt": fmt_out})
+                             "c_factor": C, **tile_row(corr, fmt_out)})
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
     return joined2.mapInPandas(correct, schema=out_schema)
@@ -255,11 +242,7 @@ def cloud_fill_scene(target: DataFrame, replacement: DataFrame, mask: DataFrame,
     r = replacement.select(*grid_cols, F.col("bytes").alias("b_r"))
     m = mask.select(*grid_cols, F.col("bytes").alias("b_m"))
     joined = t.join(r, list(grid_cols)).join(m, list(grid_cols))
-    out_schema = T.StructType([target.schema[c] for c in grid_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType())])
+    out_schema = T.StructType([target.schema[c] for c in grid_cols] + TILE_FIELDS)
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         txs = pdf[txc].to_numpy()
@@ -279,9 +262,7 @@ def cloud_fill_scene(target: DataFrame, replacement: DataFrame, mask: DataFrame,
             t_out = filled[tys[i] * tile:(tys[i] + 1) * tile,
                            txs[i] * tile:(txs[i] + 1) * tile]
             rows.append({scn: key[0], txc: int(txs[i]), tyc: int(tys[i]),
-                         "bytes": codec.encode(np.ascontiguousarray(t_out)[None], fmt_out),
-                         "w": tile, "h": tile, "bands": 1, "dtype": "f4",
-                         "fmt": fmt_out})
+                         **tile_row(t_out, fmt_out)})
         return pd.DataFrame(rows)
 
     return joined.groupBy(scn).applyInPandas(run, schema=out_schema)
@@ -298,11 +279,7 @@ def cloud_fill(target: DataFrame, replacement: DataFrame, mask: DataFrame,
     r = replacement.select(*key_cols, F.col("bytes").alias("b_r"))
     m = mask.select(*key_cols, F.col("bytes").alias("b_m"))
     joined = t.join(r, key_cols).join(m, key_cols)
-    out_schema = T.StructType([target.schema[c] for c in key_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType())])
+    out_schema = T.StructType([target.schema[c] for c in key_cols] + TILE_FIELDS)
 
     def run(batches):
         for pdf in batches:
@@ -311,11 +288,8 @@ def cloud_fill(target: DataFrame, replacement: DataFrame, mask: DataFrame,
                 pt = codec.decode(bytes(pdf["b_t"].iloc[i]))[0]
                 pr = codec.decode(bytes(pdf["b_r"].iloc[i]))[0]
                 pm = codec.decode(bytes(pdf["b_m"].iloc[i]))[0]
-                out = ring_fill_np(pt, pr, pm, window)[None]
                 rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             "bytes": codec.encode(out, fmt_out),
-                             "w": out.shape[2], "h": out.shape[1], "bands": 1,
-                             "dtype": "f4", "fmt": fmt_out})
+                             **tile_row(ring_fill_np(pt, pr, pm, window), fmt_out)})
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
     return joined.mapInPandas(run, schema=out_schema)

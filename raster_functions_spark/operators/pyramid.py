@@ -6,6 +6,9 @@ parent levels instead: 2×2 child tiles merge into one parent tile at half
 resolution. Queries then pick the level matching their zoom — the
 pre-aggregation that turns "read 100 TB to render a thumbnail" into
 "read the 25 GB level-10 table".
+
+Parent tiles follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
+filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
+from ..raster import TILE_FIELDS, tile_row
 from .focal import block_statistics_np
 
 
@@ -37,10 +41,7 @@ def pyramid_level(df: DataFrame, tile: int, measure: str = "mean",
     out_schema = T.StructType([
         df.schema[scn],
         T.StructField(txc, T.IntegerType()), T.StructField(tyc, T.IntegerType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
+        *TILE_FIELDS,
         T.StructField("n_children", T.IntegerType()),
     ])
 
@@ -55,12 +56,9 @@ def pyramid_level(df: DataFrame, tile: int, measure: str = "mean",
             qy = int(pdf[tyc].iloc[i]) % 2
             mosaic[:, qy * tile:(qy + 1) * tile, qx * tile:(qx + 1) * tile] = px
         down = np.stack([block_statistics_np(b, measure, 2) for b in mosaic])
-        out = down.astype(np.float32)
         return pd.DataFrame([{
             scn: key[0], txc: int(key[1]), tyc: int(key[2]),
-            "bytes": codec.encode(out, fmt_out),
-            "w": tile, "h": tile, "bands": out.shape[0], "dtype": "f4",
-            "fmt": fmt_out, "n_children": len(pdf)}])
+            **tile_row(down.astype(np.float32), fmt_out), "n_children": len(pdf)}])
 
     # ≤4 tiny rows per parent and (at scale) millions of parents — the
     # per-group applyInPandas Arrow round trip would dominate; stream the

@@ -14,6 +14,9 @@ Catalyst path via :func:`stack_stats_decomposable` — partial aggregation
 measure allows. Median/percentile need the full stack per group; group size
 is bounded by (n_acquisitions × tile bytes) — cap stacks by time-bucketing
 upstream if needed (SURVEY.md O13).
+
+Composite tiles follow the tile-row contract in :mod:`raster`
+(``TILE_FIELDS`` filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
+from ..raster import TILE_FIELDS, tile_row
 
 def _nansum_keep_invalid(s):
     """nansum that preserves the module invariant: a position with NO
@@ -49,13 +53,8 @@ _MEASURES: dict[str, Callable] = {
 
 
 def _out_schema(group_cols: list[str], df: DataFrame) -> T.StructType:
-    return T.StructType([df.schema[c] for c in group_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("n_rasters", T.IntegerType()),
-    ])
+    return T.StructType([df.schema[c] for c in group_cols] + TILE_FIELDS
+                        + [T.StructField("n_rasters", T.IntegerType())])
 
 
 def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
@@ -72,9 +71,7 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
     else:
         data = stack.astype(np.float64)
     with np.errstate(all="ignore"):
-        red = reducer(data)          # (bands, h, w)
-    if red.ndim == 2:
-        red = red[None]
+        red = reducer(data)          # (bands, h, w) or (h, w)
     # never-clear pixels stay INVALID (NaN in the f4 output) — the
     # reference's mask model keeps them out of downstream statistics
     # (Reference.py:100-105,212-216); pass ``nodata`` to substitute an
@@ -82,12 +79,9 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
     # silently fed fake zeros into downstream stats)
     if nodata is not None:
         red = np.nan_to_num(red, nan=nodata)
-    red = red.astype(np.float32)
-    row = {c: key[i] for i, c in enumerate(group_cols)}
-    row.update({"bytes": codec.encode(red, fmt_out), "w": red.shape[2],
-                "h": red.shape[1], "bands": red.shape[0], "dtype": "f4",
-                "fmt": fmt_out, "n_rasters": len(pdf)})
-    return pd.DataFrame([row])
+    return pd.DataFrame([{**dict(zip(group_cols, key)),
+                          **tile_row(red.astype(np.float32), fmt_out),
+                          "n_rasters": len(pdf)}])
 
 
 def stack_composite(df: DataFrame, measure: str, group_cols: list[str] = ["scene_id"],
@@ -305,12 +299,9 @@ def stack_topk_assoc(df: DataFrame, k: int = 1, cap: float | None = None,
         if cap is not None:
             all_invalid = ~(tops != invalid).any(axis=0)
             red = np.where(all_invalid, invalid, red)
-        red = red.astype(np.float32)[None]
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"bytes": codec.encode(red, fmt_out), "w": red.shape[2],
-                    "h": red.shape[1], "bands": 1, "dtype": "f4",
-                    "fmt": fmt_out, "n_rasters": n_total})
-        return pd.DataFrame([row])
+        return pd.DataFrame([{**dict(zip(group_cols, key)),
+                              **tile_row(red.astype(np.float32), fmt_out),
+                              "n_rasters": n_total}])
 
     # tiny partials, many groups → the streamed grouped map (see
     # grouped_sorted_map: applyInPandas per-group overhead would dominate)
@@ -384,13 +375,9 @@ def merge_mean_partials(partials: DataFrame,
             acc = d if acc is None else acc + d
         with np.errstate(invalid="ignore", divide="ignore"):
             mean = np.where(acc[1] > 0, acc[0] / acc[1], np.nan)
-        mean = mean.astype(np.float32)[None]
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"bytes": codec.encode(mean, fmt_out), "w": mean.shape[2],
-                    "h": mean.shape[1], "bands": 1, "dtype": "f4",
-                    "fmt": fmt_out,
-                    "n_rasters": int(pdf["n_members"].sum())})
-        return pd.DataFrame([row])
+        return pd.DataFrame([{**dict(zip(group_cols, key)),
+                              **tile_row(mean.astype(np.float32), fmt_out),
+                              "n_rasters": int(pdf["n_members"].sum())}])
 
     return grouped_sorted_map(partials, group_cols, merge, out_schema)
 

@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..raster import TileOp
+from ..raster import TileOp, chained_tiles
 
 
 def _zones_payload(zones_pdf: pd.DataFrame, attrs: list[str] | None = None) -> dict:
@@ -124,18 +124,13 @@ def zonal_statistics_px(df: DataFrame, zones_per_pixel: TileOp | None,
     max) partials from its pixels; Catalyst finishes the aggregation —
     a two-phase plan where the Python side only does the map-side combine.
     ``zones_per_pixel`` (optional) synthesizes/attaches the zone band
-    first — it is fused into the same decode pass via apply_chain."""
+    first, fused into the same decode pass (raster.chained_tiles): one
+    Python pass, no re-encode."""
     import pyspark.sql.functions as F
     from pyspark.sql import types as T
-    from .. import codec
-    from ..raster import apply_chain
 
-    if zones_per_pixel is not None:
-        # the parameter used to be accepted and silently ignored — a
-        # caller's zone-synthesizing op now actually runs
-        df = apply_chain(df, [zones_per_pixel], fmt_out="raw",
-                         meta_cols=meta_cols)
-
+    tiles = chained_tiles([] if zones_per_pixel is None else [zones_per_pixel],
+                          meta_cols)
     out_schema = T.StructType([
         T.StructField("zone", T.LongType()),
         T.StructField("psum", T.DoubleType()), T.StructField("pn", T.LongType()),
@@ -145,8 +140,7 @@ def zonal_statistics_px(df: DataFrame, zones_per_pixel: TileOp | None,
     def run(batches):
         for pdf in batches:
             zs, sums, ns, mins, maxs = [], [], [], [], []
-            for b in pdf["bytes"]:
-                px = codec.decode(bytes(b))
+            for px, _ in tiles(pdf):
                 v = px[value_band].astype(np.float64).ravel()
                 zb = px[zone_band].astype(np.int64).ravel()
                 order = np.argsort(zb, kind="stable")
@@ -161,7 +155,7 @@ def zonal_statistics_px(df: DataFrame, zones_per_pixel: TileOp | None,
             yield pd.DataFrame({"zone": zs, "psum": sums, "pn": ns,
                                 "pmin": mins, "pmax": maxs})
 
-    partials = df.mapInPandas(run, schema=out_schema)
+    partials = df.select("bytes", *meta_cols).mapInPandas(run, schema=out_schema)
     return (partials.groupBy("zone")
             .agg(F.sum("psum").alias("sum"), F.sum("pn").alias("n"),
                  (F.sum("psum") / F.sum("pn")).alias("mean"),

@@ -12,8 +12,6 @@ most) one shuffle for the join + one for the agg — the minimum possible.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -63,14 +61,6 @@ def decode_features(images: DataFrame, cell_res: int = 7) -> DataFrame:
     return feats.withColumn("cell", grid.encode_col(F.col("lon"), F.col("lat"), cell_res))
 
 
-def tile_assign(features: DataFrame, aoi: DataFrame,
-                broadcast_threshold: int = 10000, **pip_kwargs) -> DataFrame:
-    """Assign each image to (cell, aoi) — the join-output rows the baseline
-    grades. Deterministic: cell ids are bit-exact, PIP edge rule half-open."""
-    return spatial.pip_join(features, aoi, broadcast_threshold=broadcast_threshold,
-                            **pip_kwargs)
-
-
 def _zonal_agg(assigned: DataFrame) -> DataFrame:
     """Batch flagship aggregation — expressed as the MERGE of the same
     decomposable partials the incremental view commits
@@ -78,16 +68,6 @@ def _zonal_agg(assigned: DataFrame) -> DataFrame:
     materialized-view paths share one definition of every statistic and
     cannot drift."""
     return merge_flagship_partials(_assigned_partials(assigned))
-
-
-def flagship_modular(spark: SparkSession, images: DataFrame, aoi: DataFrame,
-                     cell_res: int = 7) -> DataFrame:
-    """Composable variant: separate decode / join / agg stages. Each
-    mapInPandas stage spawns its own Python worker per task, so prefer
-    :func:`flagship` (fused) for throughput."""
-    feats = decode_features(images, cell_res)
-    assigned = tile_assign(feats, aoi)
-    return _zonal_agg(assigned)
 
 
 def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
@@ -98,9 +78,9 @@ def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
     prefilter and exact PIP all happen on each Arrow batch in a single
     worker; the only shuffle in the whole plan is the final zonal groupBy.
 
-    At N tasks this runs exactly N Python workers (the chained-stage
-    variant runs 3N — a 3× oversubscription that inverts local-mode
-    scaling and wastes executor memory on a real cluster).
+    At N tasks this runs exactly N Python workers (separate decode / join
+    / agg stages would run 3N — a 3× oversubscription that inverts
+    local-mode scaling and wastes executor memory on a real cluster).
 
     Routing: the fused path materializes the AOI table on the driver and
     broadcasts it, which is the right call for the typical few-thousand-
@@ -144,24 +124,29 @@ def flagship_assigned_prepared(spark: SparkSession, images: DataFrame,
     def run(batches):
         a = baoi.value
         for pdf in batches:
-            n = len(pdf)
-            x = pdf["lon"].to_numpy(np.float64)
-            y = pdf["lat"].to_numpy(np.float64)
-            cells = grid.encode_np(x, y, cell_res)
-            mean, std, ham, _npx = _decode_feature_arrays(pdf)
-            # shared broadcast-PIP kernel (spatial.pip_assign_np): AOI-
-            # chunked bbox prefilter + exact crossing-number refine
-            ridx, aid = spatial.pip_assign_np(a, x, y)
-            yield pd.DataFrame({
-                "aoi_id": aid,
-                "image_id": pdf["image_id"].to_numpy()[ridx],
-                "caption": pdf["caption"].to_numpy()[ridx],
-                "cell": cells[ridx],
-                "px_mean": mean[ridx], "px_std": std[ridx],
-                "phash_ham": ham[ridx],
-            })
+            yield _assign_batch(pdf, a, cell_res)
 
     return images.mapInPandas(run, schema=_ASSIGNED_SCHEMA)
+
+
+def _assign_batch(pdf: pd.DataFrame, aoi_arrays, cell_res: int) -> pd.DataFrame:
+    """The fused per-batch body of every broadcast flagship path: decode +
+    features (_decode_feature_arrays), vectorized cell-encode and the
+    shared broadcast-PIP kernel (spatial.pip_assign_np: AOI-chunked bbox
+    prefilter + exact crossing-number refine) → _ASSIGNED_SCHEMA rows."""
+    x = pdf["lon"].to_numpy(np.float64)
+    y = pdf["lat"].to_numpy(np.float64)
+    cells = grid.encode_np(x, y, cell_res)
+    mean, std, ham, _npx = _decode_feature_arrays(pdf)
+    ridx, aid = spatial.pip_assign_np(aoi_arrays, x, y)
+    return pd.DataFrame({
+        "aoi_id": aid,
+        "image_id": pdf["image_id"].to_numpy()[ridx],
+        "caption": pdf["caption"].to_numpy()[ridx],
+        "cell": cells[ridx],
+        "px_mean": mean[ridx], "px_std": std[ridx],
+        "phash_ham": ham[ridx],
+    })
 
 
 def _decode_feature_arrays(pdf: pd.DataFrame):
@@ -221,42 +206,16 @@ def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
     def run(batches):
         a = baoi.value
         for idx_pdf in batches:
-            # zlib_level=3: the encoded bytes are decoded two lines down
-            # and never leave this function — level 3 is ~1.8× faster to
+            # zlib_level=3: the encoded bytes are decoded by _assign_batch
+            # and never leave this task — level 3 is ~1.8× faster to
             # compress and slightly smaller on this data (codec.encode)
-            pdf = fixtures.images_pdf(idx_pdf["id"].to_numpy(), zlib_level=3)
-            x = pdf["lon"].to_numpy(np.float64)
-            y = pdf["lat"].to_numpy(np.float64)
-            cells = grid.encode_np(x, y, cell_res)
-            mean, std, ham, _npx = _decode_feature_arrays(pdf)
-            ridx, aid = spatial.pip_assign_np(a, x, y)
-            yield pd.DataFrame({
-                "aoi_id": aid,
-                "image_id": pdf["image_id"].to_numpy()[ridx],
-                "caption": pdf["caption"].to_numpy()[ridx],
-                "cell": cells[ridx],
-                "px_mean": mean[ridx], "px_std": std[ridx],
-                "phash_ham": ham[ridx],
-            })
+            yield _assign_batch(
+                fixtures.images_pdf(idx_pdf["id"].to_numpy(), zlib_level=3),
+                a, cell_res)
 
     assigned = (spark.range(0, n_images, 1, partitions)
                 .mapInPandas(run, schema=_ASSIGNED_SCHEMA))
     return _zonal_agg(assigned)
-
-
-def run_benchmark(spark: SparkSession, n_images: int, n_aoi: int = 50,
-                  cell_res: int = 7, partitions: int | None = None) -> dict:
-    """Timed flagship run → images/sec (the BASELINE.json metric)."""
-    from . import fixtures
-    t0 = time.time()
-    images = fixtures.images_df(spark, n_images, partitions)
-    aoi = fixtures.aoi_df(spark, n_aoi)
-    result = flagship(spark, images, aoi, cell_res)
-    rows = result.collect()
-    dt = time.time() - t0
-    return {"n_images": n_images, "wall_sec": round(dt, 3),
-            "images_per_sec": round(n_images / dt, 1),
-            "n_aoi_matched": len(rows)}
 
 
 # ------------------------------------------------ incremental flagship ----

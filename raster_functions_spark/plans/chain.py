@@ -17,6 +17,9 @@ consecutive zero-padding ops into single mapInPandas passes (SURVEY.md
 O11); focal ops split the pipeline at halo-exchange boundaries. The
 registry plays the role of the XML ``PythonModule``/``ClassName`` dynamic
 binding (deprecated/NDVI.rft.xml:12-27).
+
+Chain outputs follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
+filled by ``tile_row``).
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..raster import TileOp, apply_chain
+from ..raster import TILE_COLS, TILE_FIELDS, TileOp, apply_chain, tile_columns, tile_row
 from ..operators import effects, focal, pointwise
 
 REGISTRY: dict[str, Callable[..., TileOp]] = {
@@ -121,14 +124,11 @@ def stack_tiles(dfs: list[DataFrame], fmt_out: str = "zlib",
     keys (AQE broadcasts/splits as sizes dictate — same alignment shape as
     multiraster.two_raster_op), decode each side once, stack bands,
     re-encode. Non-pixel metadata columns ride along from the first table."""
-    import pandas as pd
-
     from .. import codec
 
     keys = [c for c in grid_cols if c in dfs[0].columns]
-    pixel_cols = ("bytes", "w", "h", "bands", "dtype", "fmt")
     base = dfs[0].withColumnRenamed("bytes", "_b0").drop(
-        *[c for c in pixel_cols[1:] if c in dfs[0].columns])
+        *[c for c in TILE_COLS[1:] if c in dfs[0].columns])
     joined = base
     for k, d in enumerate(dfs[1:], start=1):
         # a branch that reduced away part of the grid (a mosaic composite
@@ -139,34 +139,18 @@ def stack_tiles(dfs: list[DataFrame], fmt_out: str = "zlib",
             d.select(*dk, F.col("bytes").alias(f"_b{k}")), dk)
     bcols = [f"_b{k}" for k in range(len(dfs))]
     keep = [c for c in joined.columns if c not in bcols]
-    out_schema = T.StructType(
-        [joined.schema[c] for c in keep]
-        + [T.StructField("bytes", T.BinaryType()),
-           T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-           T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-           T.StructField("fmt", T.StringType())])
+    out_schema = T.StructType([joined.schema[c] for c in keep] + TILE_FIELDS)
 
     def run(batches):
         for pdf in batches:
-            bufs, ws, hs, bs, dts = [], [], [], [], []
+            rows = []
             for r in range(len(pdf)):
                 parts = [codec.decode(bytes(pdf[c].iloc[r])) for c in bcols]
-                hh, ww = parts[0].shape[1:]
-                if any(p.shape[1:] != (hh, ww) for p in parts):
+                if any(p.shape[1:] != parts[0].shape[1:] for p in parts):
                     raise ValueError("stack_tiles: branch tile shapes differ")
-                px = np.concatenate(
-                    [p.astype(np.float32) for p in parts], axis=0)
-                bufs.append(codec.encode(px, fmt_out))
-                bs.append(px.shape[0]); hs.append(hh); ws.append(ww)
-                dts.append("f4")
-            out = pdf[keep].copy()
-            out["bytes"] = bufs
-            out["w"] = pd.array(ws, dtype="int32")
-            out["h"] = pd.array(hs, dtype="int32")
-            out["bands"] = pd.array(bs, dtype="int32")
-            out["dtype"] = dts
-            out["fmt"] = fmt_out
-            yield out
+                rows.append(tile_row(np.concatenate(
+                    [p.astype(np.float32) for p in parts], axis=0), fmt_out))
+            yield pdf[keep].assign(**tile_columns(rows))
 
     return joined.mapInPandas(run, schema=out_schema)
 

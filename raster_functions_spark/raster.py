@@ -13,6 +13,15 @@ Operators are declarative :class:`TileOp` objects mirroring the reference's
 (/root/reference/functions/Reference.py:67-185): they declare padding,
 band needs and output dtype/bands so the planner can decide halo joins and
 band pruning before any data moves.
+
+The tile-row contract: a tile table carries one encoded tile per row in
+the six columns of :data:`TILE_FIELDS` — ``bytes`` (the :mod:`codec`
+container), ``w``/``h``/``bands`` (int) and ``dtype``/``fmt`` (the
+container's type and format codes), always equal to
+``codec.peek_header(bytes)``. Every operator that emits tiles appends
+:data:`TILE_FIELDS` after its own key/meta columns and fills them with
+:func:`tile_row`, which reads shape and dtype off the encoded array, so
+no emitter restates them.
 """
 
 from __future__ import annotations
@@ -61,8 +70,51 @@ class TileOp:
         return out if out.ndim == 3 else out[None]
 
 
-def _row_meta(pdf: pd.DataFrame, idx: int, meta_cols: list[str]) -> dict:
-    return {c: pdf[c].iloc[idx] for c in meta_cols}
+TILE_FIELDS = [
+    T.StructField("bytes", T.BinaryType()),
+    T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
+    T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
+    T.StructField("fmt", T.StringType()),
+]
+TILE_COLS = tuple(f.name for f in TILE_FIELDS)
+
+
+def tile_row(px: np.ndarray, fmt: str) -> dict:
+    """Encode one ``(bands, h, w)`` or ``(h, w)`` tile into its
+    :data:`TILE_FIELDS` values, shape and dtype taken from the array."""
+    if px.ndim == 2:
+        px = px[None]
+    return {"bytes": codec.encode(px, fmt), "w": px.shape[2], "h": px.shape[1],
+            "bands": px.shape[0], "dtype": px.dtype.str.lstrip("<>=|"), "fmt": fmt}
+
+
+def tile_columns(rows: list[dict]) -> dict:
+    """A batch of :func:`tile_row` values as columns (shape columns int32),
+    for column-wise emitters: ``pdf[keep].assign(**tile_columns(rows))``."""
+    return {c: np.array([r[c] for r in rows], np.int32) if c in ("w", "h", "bands")
+            else [r[c] for r in rows] for c in TILE_COLS}
+
+
+def chained_tiles(ops: list[TileOp], meta_cols: Iterable[str] = (),
+                  bytes_col: str = "bytes") -> Callable:
+    """The one decode → fused chain loop. Checks at plan time that every op
+    is zero-padding (padded ops need the halo exchange of
+    :func:`operators.focal.apply_focal`) and returns ``tiles(pdf)``, which
+    yields ``(px, meta)`` per row of an Arrow batch: the decoded tile after
+    every op in ``ops``, and the row's ``meta_cols`` values."""
+    if any(op.padding for op in ops):
+        raise ValueError("padded ops must go through operators.focal.apply_focal")
+    meta_cols = list(meta_cols)
+
+    def tiles(pdf: pd.DataFrame):
+        for ridx, buf in enumerate(pdf[bytes_col]):
+            px = codec.decode(bytes(buf))
+            meta = {c: pdf[c].iloc[ridx] for c in meta_cols}
+            for op in ops:
+                px = op.apply(px, meta)
+            yield px, meta
+
+    return tiles
 
 
 def apply_chain(df: DataFrame, ops: list[TileOp], fmt_out: str = "zlib",
@@ -70,39 +122,18 @@ def apply_chain(df: DataFrame, ops: list[TileOp], fmt_out: str = "zlib",
                 bytes_col: str = "bytes") -> DataFrame:
     """Run a fused chain of zero-padding ops over every tile: decode once,
     apply all kernels, encode once. Returns the input columns (minus pixel
-    shape changes) with ``bytes``/``w``/``h``/``bands``/``dtype``/``fmt``
-    rewritten. Chain composition = the reference's function-chain templates
-    (SURVEY.md §3 entry point 2) expressed as plain Python composition."""
-    if any(op.padding for op in ops):
-        raise ValueError("padded ops must go through operators.focal.apply_focal")
-    meta_cols = list(meta_cols)
+    shape changes) with the tile-row columns rewritten. Chain composition =
+    the reference's function-chain templates (SURVEY.md §3 entry point 2)
+    expressed as plain Python composition."""
+    tiles = chained_tiles(ops, meta_cols, bytes_col)
     keep = list(keep_cols) if keep_cols is not None else \
-        [c for c in df.columns if c not in (bytes_col, "w", "h", "bands", "dtype", "fmt")]
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField("bytes", T.BinaryType()),
-           T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-           T.StructField("bands", T.IntegerType()), T.StructField("dtype", T.StringType()),
-           T.StructField("fmt", T.StringType())])
+        [c for c in df.columns if c not in (bytes_col, *TILE_COLS)]
+    out_schema = T.StructType([df.schema[c] for c in keep] + TILE_FIELDS)
 
     def run(batches):
         for pdf in batches:
-            n = len(pdf)
-            bufs, ws, hs, bs, dts = [], [], [], [], []
-            for ridx in range(n):
-                px = codec.decode(bytes(pdf[bytes_col].iloc[ridx]))
-                meta = _row_meta(pdf, ridx, meta_cols)
-                for op in ops:
-                    px = op.apply(px, meta)
-                bufs.append(codec.encode(px, fmt_out))
-                bs.append(px.shape[0]); hs.append(px.shape[1]); ws.append(px.shape[2])
-                dts.append(px.dtype.str.lstrip("<>=|"))
-            out = pdf[keep].copy()
-            out["bytes"] = bufs
-            out["w"] = np.array(ws, np.int32); out["h"] = np.array(hs, np.int32)
-            out["bands"] = np.array(bs, np.int32); out["dtype"] = dts
-            out["fmt"] = fmt_out
-            yield out
+            rows = [tile_row(px, fmt_out) for px, _ in tiles(pdf)]
+            yield pdf[keep].assign(**tile_columns(rows))
 
     return df.mapInPandas(run, schema=out_schema)
 
@@ -114,9 +145,7 @@ def tile_stats(df: DataFrame, ops: list[TileOp],
     """Decode → fused kernel chain → per-tile scalar statistics (no
     re-encode). This is the raster→relational bridge: downstream zonal
     aggregation is a plain Catalyst groupBy over the emitted columns."""
-    if any(op.padding for op in ops):
-        raise ValueError("padded ops must go through operators.focal.apply_focal")
-    meta_cols = list(meta_cols)
+    tiles = chained_tiles(ops, meta_cols, bytes_col)
     keep = list(keep_cols) if keep_cols is not None else \
         [c for c in df.columns if c != bytes_col]
     out_schema = T.StructType([df.schema[c] for c in keep]
@@ -125,11 +154,7 @@ def tile_stats(df: DataFrame, ops: list[TileOp],
     def run(batches):
         for pdf in batches:
             cols: dict[str, list] = {s: [] for s in stats}
-            for ridx in range(len(pdf)):
-                px = codec.decode(bytes(pdf[bytes_col].iloc[ridx]))
-                meta = _row_meta(pdf, ridx, meta_cols)
-                for op in ops:
-                    px = op.apply(px, meta)
+            for px, meta in tiles(pdf):
                 for s, fn in stats.items():
                     cols[s].append(float(fn(px, meta)))
             out = pdf[keep].copy()
@@ -255,7 +280,6 @@ def stretch_stats_apply(df: DataFrame, stretch_type: str = "minmax",
     NumberOfStandardDeviation); 'hist_equalize' = 4 (the classic CDF
     transfer: out = out_min + span·cdf(v), the histogram LUT broadcast to
     a per-pixel searchsorted gather)."""
-    from .operators import pointwise
     # the stats pass(es) read the same tiles 1-2x before the map pass:
     # persist across THEM, then release — holding the cache for the
     # (lazy) returned plan would pin a full tile-table copy in executor

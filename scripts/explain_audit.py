@@ -5,17 +5,23 @@ properties the engine is designed around (SURVEY.md §4):
 - small-side joins go broadcast
 - cell-encode lives inside WholeStageCodegen (zero Python)
 - minhash runs as codegen'd hash aggregation (no interpreted HOFs)
+- per-pixel zonal statistics run their zone op in one Python pass
 
-Writes the evidence to BENCH/explain_r{N}.txt.
+Run from anywhere: ``python scripts/explain_audit.py``. Prints one
+PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
+plans to the git-ignored ``.perfbench/explain_audit.txt``, so an audit run
+never rewrites tracked files.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -348,13 +354,29 @@ def main() -> int:
     checks.append(("winnow pairs: fingerprint hash equi-join, zero Python", ok))
     out += ["\n## dedup_winnow_pairs\n", p]
 
+    # 26. per-pixel zonal statistics with a zone-synthesizing op: the op
+    # runs inside the partial-aggregate pass (raster.chained_tiles) — one
+    # Python pass, no encode → decode hop between two mapInPandas
+    from raster_functions_spark.operators import zonal as _zonal
+    dem = (fixtures.dem_scene_df(spark, tiles_x=2, tiles_y=2, tile=16)
+           .withColumn("xmin", F.col("tx") * 0.016)
+           .withColumn("ymax", F.col("ty") * -0.016))
+    zs = _zonal.zonal_statistics_px(
+        dem, _zonal.zone_band_from_cells(15, 20),
+        meta_cols=("xmin", "ymax", "cell_dx", "cell_dy"))
+    p = plan_of(zs)
+    ok = len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1
+    checks.append(("pixel zonal stats: zone op fused, exactly one MapInPandas", ok))
+    out += ["\n## zonal_statistics_px\n", p]
+
     out.append("\n# Assertions\n")
     failed = 0
     for name, ok in checks:
         out.append(f"- {'PASS' if ok else 'FAIL'}: {name}\n")
         print(("PASS " if ok else "FAIL ") + name)
         failed += not ok
-    with open("BENCH/explain_audit.txt", "w") as f:
+    os.makedirs(os.path.join(REPO, ".perfbench"), exist_ok=True)
+    with open(os.path.join(REPO, ".perfbench", "explain_audit.txt"), "w") as f:
         f.writelines(out)
     spark.stop()
     return 1 if failed else 0

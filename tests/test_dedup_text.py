@@ -45,6 +45,16 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert not any(3 in p for p in pairs)       # unrelated not caught
 
 
+@pytest.mark.parametrize("k", [8, 0])
+def test_minhash_lsh_rejects_unsafe_shingle_k(spark, k):
+    """The NumPy signature kernel never builds the SQL rolling hash, so it
+    must reject the same k range itself: at k ≥ 8 its int64 hash would
+    wrap silently on astral-plane text."""
+    df = spark.createDataFrame([(0, "\U0001F600" * 12)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="BIGINT"):
+        dedup.minhash_lsh_candidates(df, k=k)
+
+
 def test_minhash_signature_matches_duckdb(spark, docs, docs_pdf):
     """The md5-minhash signature must be byte-identical across engines."""
     n_hashes = 4

@@ -58,6 +58,40 @@ def test_zonal_statistics_px(spark):
     assert abs(out[2].sum - (v1[:, 2:].sum() + v2.sum())) < 1e-9
 
 
+def test_zonal_statistics_px_zone_op_single_pass(spark):
+    """With a zone-synthesizing op and meta_cols: per-zone sum/n/min/max
+    equal a NumPy replay over the decoded tiles, and the zone op runs
+    inside the one partial-aggregate Python pass (no re-encode hop)."""
+    from raster_functions_spark import grid
+    tile, d, lon0, lat0, res, nz = 16, fixtures.CELL_DEG, 12.3, 45.6, 15, 5
+    pdf = fixtures.dem_scene_pdf("z", 3, 2, tile).assign(
+        xmin=lambda p: lon0 + p.tx * tile * d, ymax=lambda p: lat0 - p.ty * tile * d)
+    meta = ("xmin", "ymax", "cell_dx", "cell_dy")
+    zs = zonal.zonal_statistics_px(spark.createDataFrame(pdf),
+                                   zonal.zone_band_from_cells(res, nz),
+                                   value_band=0, zone_band=1, meta_cols=meta)
+    plan = zs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    got = {r.zone: r for r in zs.collect()}
+
+    vals, zones = [], []
+    for _, r in pdf.iterrows():
+        lon = r.xmin + (np.arange(tile) + 0.5) * r.cell_dx
+        lat = r.ymax - (np.arange(tile) + 0.5) * r.cell_dy
+        glon, glat = np.meshgrid(lon, lat)
+        cells = grid.encode_np(glon.ravel(), glat.ravel(), res)
+        zones.append((cells >> grid.RES_BITS) % nz + 1)
+        vals.append(codec.decode(bytes(r.bytes))[0].astype(np.float64).ravel())
+    v, z = np.concatenate(vals), np.concatenate(zones)
+    assert set(got) == set(np.unique(z).tolist()) and len(got) > 1
+    for k, row in got.items():
+        sel = v[z == k]
+        assert row.n == sel.size
+        assert row.sum == pytest.approx(sel.sum(), rel=1e-12)
+        assert row.mean == pytest.approx(sel.mean(), rel=1e-12)
+        assert (row.min, row.max) == (sel.min(), sel.max())
+
+
 def test_zone_band_from_cells():
     op = zonal.zone_band_from_cells(res=10, n_zones=7)
     px = np.zeros((1, 8, 8), dtype=np.float32)

@@ -104,9 +104,7 @@ def test_brute_force_topk_boundary_tie_survives_batch():
 
 def test_minhash_no_signature_cache_needed(spark):
     """r7 contract: minhash_lsh_candidates is fully lazy — the window-based
-    bucket sizing reads the signature pass once, so nothing is persisted
-    and release_signature_cache degrades to a safe no-op (old callers may
-    still invoke it)."""
+    bucket sizing reads the signature pass once, so nothing is persisted."""
     df = spark.createDataFrame([(i, f"document number {i} text " * 4)
                                 for i in range(20)], "doc_id long, text string")
     pairs = dedup.minhash_lsh_candidates(df)
@@ -114,8 +112,6 @@ def test_minhash_no_signature_cache_needed(spark):
     assert getattr(pairs, "signature_cache", None) is None
     # and the plan persists nothing (no InMemoryRelation anywhere)
     assert "InMemoryRelation" not in pairs._jdf.queryExecution().optimizedPlan().toString()
-    dedup.release_signature_cache(pairs)  # no handle → no-op
-    dedup.release_signature_cache(df)     # idempotent / foreign df → no-op
 
 
 # ------------------------------------------- SARIMA short-series parity ----

@@ -88,7 +88,6 @@ def test_lsh_explode_form_matches_signature_form_at_64(spark):
                 for y in ids[i + 1:]:
                     want[(x, y)] = want.get((x, y), 0) + 1
     got = {(r.id_a, r.id_b): r.n_shared_bands for r in pairs.collect()}
-    dedup.release_signature_cache(pairs)
     assert got == want
 
 
@@ -115,8 +114,6 @@ def test_sharper_s_curve_cuts_candidates_at_equal_recall(spark):
     loose = dedup.minhash_lsh_candidates(df, n_hashes=8, bands=4)
     sharp = dedup.minhash_lsh_candidates(df, n_hashes=64, bands=16)
     n_loose, n_sharp = loose.count(), sharp.count()
-    dedup.release_signature_cache(loose)
-    dedup.release_signature_cache(sharp)
     truth = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(
         df, k=5, threshold=0.8).collect()}
     got_sharp = {(r.id_a, r.id_b) for r in
