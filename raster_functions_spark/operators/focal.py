@@ -25,7 +25,6 @@ import numpy as np
 import pandas as pd
 from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
@@ -319,9 +318,10 @@ def mask_erode(size: int = 3, mask_band: int = -1) -> TileOp:
 
 # ------------------------------------------------------ halo exchange ------
 
-def _halo_msg_schema(df: DataFrame, grid_cols) -> T.StructType:
+def _halo_msg_schema(df: DataFrame, grid_cols, meta_cols) -> T.StructType:
     """Message schema for the halo shuffle — key types follow the INPUT's
-    grid columns (a bigint ty or a non-string scene id must round-trip)."""
+    grid columns (a bigint ty or a non-string scene id must round-trip);
+    the sending tile's ``meta_cols`` ride along with their input types."""
     scn, txc, tyc = grid_cols
     return T.StructType([
         T.StructField("scene_id", df.schema[scn].dataType),
@@ -330,7 +330,7 @@ def _halo_msg_schema(df: DataFrame, grid_cols) -> T.StructType:
         T.StructField("dx", T.IntegerType()),
         T.StructField("dy", T.IntegerType()),
         T.StructField("part", T.BinaryType()),
-    ])
+    ] + [df.schema[c] for c in meta_cols])
 
 
 def _strip_for_target(px: np.ndarray, dx: int, dy: int, p: int) -> np.ndarray:
@@ -360,6 +360,7 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
     def emit(batches):
         for pdf in batches:
             rows = {"scene_id": [], "ttx": [], "tty": [], "dx": [], "dy": [], "part": []}
+            src = []                       # sending row of each message
             for r in range(len(pdf)):
                 px = codec.decode(bytes(pdf["bytes"].iloc[r]))
                 tx, ty = int(pdf[txc].iloc[r]), int(pdf[tyc].iloc[r])
@@ -374,10 +375,15 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
                         rows["ttx"].append(ttx); rows["tty"].append(tty)
                         rows["dx"].append(dx); rows["dy"].append(dy)
                         rows["part"].append(codec.encode(np.ascontiguousarray(part), "raw"))
+                        src.append(r)
+            # the tile's meta values go on its own messages; assemble
+            # reads them off the center one
+            src = np.asarray(src, dtype=np.intp)
+            rows.update({c: pdf[c].to_numpy()[src] for c in meta_keep})
             yield pd.DataFrame(rows)
 
-    msgs = df.select(scn, txc, tyc, "bytes").mapInPandas(
-        emit, schema=_halo_msg_schema(df, grid_cols))
+    msgs = df.select(scn, txc, tyc, "bytes", *meta_keep).mapInPandas(
+        emit, schema=_halo_msg_schema(df, grid_cols, meta_keep))
 
     # output keys keep the CALLER's grid column names and types — the
     # pre-r5 schema hardcoded scene_id/tx/ty, breaking every grid_cols
@@ -442,11 +448,6 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
                **tile_row(op.fn(padded, fn_meta), fmt_out), **meta}
         return pd.DataFrame([row])
 
-    # carry per-tile meta columns through the shuffle (joined onto messages)
-    if meta_keep:
-        meta_df = df.select(F.col(scn).alias("scene_id"),
-                            F.col(txc).alias("ttx"), F.col(tyc).alias("tty"), *meta_keep)
-        msgs = msgs.join(meta_df, ["scene_id", "ttx", "tty"], "left")
     # ≤9 halo messages per tile, tiles unbounded — same many-tiny-groups
     # class as the pyramid merge: stream the sorted partition rather than
     # paying the per-group applyInPandas round trip (BENCH/notes_r4.md)

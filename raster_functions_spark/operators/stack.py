@@ -8,15 +8,24 @@ shape: groupBy(tile key) → applyInPandas assembles the stack once and
 reduces it with ONE vectorized NumPy call (the reference's per-pixel Python
 loops replaced by axis-0 reductions — identical math, SURVEY.md O9).
 
-Decomposable measures (sum/mean/min/max/count) additionally get a pure
-Catalyst path via :func:`stack_stats_decomposable` — partial aggregation
-(map-side combine) means no stack ever materializes; use it when the
-measure allows. Median/percentile need the full stack per group; group size
-is bounded by (n_acquisitions × tile bytes) — cap stacks by time-bucketing
-upstream if needed (SURVEY.md O13).
+Every reduction takes one of three shapes, each with one code path:
 
-Composite tiles follow the tile-row contract in :mod:`raster`
-(``TILE_FIELDS`` filled by ``tile_row``).
+- full-stack composite (median, percentile, coalesce, any measure):
+  :func:`_composite` streams each position's members through
+  :func:`_reduce_group`. Group size is bounded by (n_acquisitions × tile
+  bytes) — cap stacks by time-bucketing upstream if needed (SURVEY.md O13).
+- map-side partial → merge (the k-th max of the FindMax family and the
+  mean): :func:`_partial_tiles` reduces each input partition's members per
+  position to one f8 partial tile, :func:`_merge_partials` shuffles only
+  those and finishes. :func:`stack_topk_assoc` is the one k-th-max
+  definition (``cap=None`` for a plain k-th max).
+- per-tile scalars (sum/min/max/count, threshold fractions):
+  :func:`raster.tile_stats` emits them and a Catalyst aggregation finishes —
+  no stack ever materializes.
+
+Composite and partial tiles alike follow the tile-row contract in
+:mod:`raster`: group cols + ``TILE_FIELDS`` (filled by ``tile_row``) +
+``n_rasters``, the member count behind the tile.
 """
 
 from __future__ import annotations
@@ -30,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
-from ..raster import TILE_FIELDS, tile_row
+from ..raster import TILE_FIELDS, TileOp, tile_row, tile_stats
 
 def _nansum_keep_invalid(s):
     """nansum that preserves the module invariant: a position with NO
@@ -57,6 +66,12 @@ def _out_schema(group_cols: list[str], df: DataFrame) -> T.StructType:
                         + [T.StructField("n_rasters", T.IntegerType())])
 
 
+def _out_row(key: tuple, group_cols: list[str], px: np.ndarray, fmt_out: str,
+             n_rasters: int) -> dict:
+    return {**dict(zip(group_cols, key)), **tile_row(px, fmt_out),
+            "n_rasters": n_rasters}
+
+
 def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
                   clear_values, order_col, nodata=None):
     if order_col is not None:
@@ -79,9 +94,25 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
     # silently fed fake zeros into downstream stats)
     if nodata is not None:
         red = np.nan_to_num(red, nan=nodata)
-    return pd.DataFrame([{**dict(zip(group_cols, key)),
-                          **tile_row(red.astype(np.float32), fmt_out),
-                          "n_rasters": len(pdf)}])
+    return pd.DataFrame([_out_row(key, group_cols, red.astype(np.float32),
+                                  fmt_out, len(pdf))])
+
+
+def _composite(df: DataFrame, group_cols: list[str], reducer: Callable,
+               fmt_out: str, value_band: int | None = 0,
+               qa_band: int | None = None, clear_values: tuple[int, ...] = (),
+               order_col: str | None = None,
+               nodata: float | None = None) -> DataFrame:
+    """The full-stack composite: every position's members meet in one group
+    and :func:`_reduce_group` reduces them with ``reducer``. Group count is
+    unbounded (tile positions) while group size is small (acquisitions) —
+    stream the sorted partition instead of paying the per-group
+    applyInPandas round trip (see grouped_sorted_map)."""
+    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
+                             value_band, qa_band, clear_values, order_col,
+                             nodata)
+    return grouped_sorted_map(df, group_cols, _apply, _out_schema(group_cols, df))
 
 
 def stack_composite(df: DataFrame, measure: str, group_cols: list[str] = ["scene_id"],
@@ -94,16 +125,8 @@ def stack_composite(df: DataFrame, measure: str, group_cols: list[str] = ["scene
     (A5) / Landsat_Image_Synthesis mean (A6) depending on measure + QA args.
     Never-clear pixels stay NaN (invalid) unless ``nodata`` substitutes a
     sentinel — see _reduce_group."""
-    reducer = _MEASURES[measure]
-    schema = _out_schema(group_cols, df)
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
-                             value_band, qa_band, clear_values, order_col,
-                             nodata)
-    # group count is unbounded (tile positions) while group size is small
-    # (acquisitions) — stream the sorted partition instead of paying the
-    # per-group applyInPandas round trip (see grouped_sorted_map)
-    return grouped_sorted_map(df, group_cols, _apply, schema)
+    return _composite(df, group_cols, _MEASURES[measure], fmt_out, value_band,
+                      qa_band, clear_values, order_col, nodata)
 
 
 def stack_percentile(df: DataFrame, q: float, group_cols: list[str] = ["scene_id"],
@@ -114,56 +137,12 @@ def stack_percentile(df: DataFrame, q: float, group_cols: list[str] = ["scene_id
     """Per-pixel percentile across a QA-filtered stack — LandsatPixelPercentile
     (A4), with np.nanpercentile over axis 0 replacing the reference's
     per-pixel loop (LandsatPixelPercentile.py:175-190; same math)."""
-    reducer = lambda s: np.nanpercentile(s, q, axis=0)
-    schema = _out_schema(group_cols, df)
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
-                             value_band, qa_band, clear_values, None, nodata)
-    return grouped_sorted_map(df, group_cols, _apply, schema)
-
-
-def stack_topk(df: DataFrame, k: int, group_cols: list[str] = ["scene_id"],
-               fmt_out: str = "zlib") -> DataFrame:
-    """Per-pixel k-th max across the stack — FindMax/FindSecondMax/FindThirdMax
-    (A8: np.sort along stack axis, FindSecondMax.py:73)."""
-    def reducer(s):
-        srt = np.sort(s, axis=0)  # ascending; k-th max = [-k]
-        return srt[-k] if s.shape[0] >= k else srt[0]
-    schema = _out_schema(group_cols, df)
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
-                             0, None, (), None)
-    return grouped_sorted_map(df, group_cols, _apply, schema)
-
-
-def find_max_k(df: DataFrame, k: int = 1, cap: float = 100.0,
-               group_cols: list[str] = ["scene_id"],
-               fmt_out: str = "zlib", value_band: int = 0) -> DataFrame:
-    """Per-pixel k-th max across the stack with the FindMax family's exact
-    validity rule (FindMax.py:66-84, FindSecondMax.py:73,
-    FindThirdMax.py:73): values > ``cap`` are invalidated to −1 before the
-    sort, and pixels where every member is invalid stay −1. This is the
-    math the FindMaxPixel_Mosaic .rft templates bind (the sort-then-index
-    over the acquisition axis), vectorized per tile group."""
-    def reducer(s):
-        v = s.copy()
-        v[v > cap] = -1.0
-        srt = np.sort(v, axis=0)         # ascending; k-th max = [-k]
-        out = srt[-k] if v.shape[0] >= k else srt[0]
-        all_invalid = ~(v != -1.0).any(axis=0)
-        out = np.where(all_invalid, -1.0, out)
-        return out
-    schema = _out_schema(group_cols, df)
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
-                             value_band, None, (), None)
-    return grouped_sorted_map(df, group_cols, _apply, schema)
+    return _composite(df, group_cols, lambda s: np.nanpercentile(s, q, axis=0),
+                      fmt_out, value_band, qa_band, clear_values, None, nodata)
 
 
 def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
-                       out_schema: T.StructType,
-                       num_partitions: int | None = None,
-                       flush_rows: int = 64) -> DataFrame:
+                       out_schema: T.StructType) -> DataFrame:
     """``groupBy().applyInPandas`` without the per-GROUP Arrow round trip.
 
     applyInPandas pays ~ms of serde/scheduling per group — fine for big
@@ -173,12 +152,11 @@ def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
     the group key, sort within partitions, then stream the partition
     through ONE mapInPandas that stitches group runs across Arrow batch
     boundaries and calls ``fn(key_tuple, group_pdf)`` per group, buffering
-    outputs into chunked frames. Parallelism is pinned by
-    ``num_partitions`` (AQE can't collapse it), per-group overhead is a
+    outputs into frames of 64 groups. Parallelism is pinned at twice the
+    default parallelism (AQE can't collapse it), per-group overhead is a
     dict lookup. fn must be insensitive to row order within the group
     unless it sorts internally (same contract as applyInPandas)."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
+    n = df.sparkSession.sparkContext.defaultParallelism * 2
     d = df.repartition(n, *group_cols).sortWithinPartitions(*group_cols)
     cols = list(group_cols)
 
@@ -214,7 +192,7 @@ def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
             body, pend = pdf[~mask], pdf[mask]
             for key, g in body.groupby(cols, sort=False, dropna=False):
                 emit(key if isinstance(key, tuple) else (key,), g)
-            if len(buf) >= flush_rows:
+            if len(buf) >= 64:
                 yield pd.concat(buf, ignore_index=True)
                 buf = []
         if pend is not None and len(pend):
@@ -225,13 +203,42 @@ def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
     return d.mapInPandas(run, schema=out_schema)
 
 
-def _partial_schema(group_cols: list[str], df: DataFrame) -> T.StructType:
-    return T.StructType([df.schema[c] for c in group_cols] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType()),
-        T.StructField("bands", T.IntegerType()),
-        T.StructField("n_members", T.IntegerType()),
-    ])
+def _partial_tiles(df: DataFrame, group_cols: list[str], reduce: Callable,
+                   fmt_out: str) -> DataFrame:
+    """Stage 1 of a map-side combine, no shuffle: group each Arrow batch's
+    members by position and reduce the group's decoded tiles with
+    ``reduce(tiles) -> partial`` into one f8 partial tile, ``n_rasters``
+    = the group's member count."""
+    schema = _out_schema(group_cols, df)
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for key, g in pdf.groupby(group_cols, sort=False, dropna=False):
+                key = key if isinstance(key, tuple) else (key,)
+                part = reduce([codec.decode(bytes(b)) for b in g["bytes"]])
+                rows.append(_out_row(key, group_cols, part.astype(np.float64),
+                                     fmt_out, len(g)))
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _merge_partials(partials: DataFrame, group_cols: list[str],
+                    finish: Callable, fmt_out: str) -> DataFrame:
+    """Stage 2 of a map-side combine: shuffle the partial tiles by position,
+    ``finish(partials, n_rasters) -> tile`` over the decoded partials, and
+    sum ``n_rasters``. Partials are tiny and positions unbounded → the
+    streamed grouped map (applyInPandas per-group overhead would
+    dominate)."""
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        n = int(pdf["n_rasters"].sum())
+        red = finish([codec.decode(bytes(b)) for b in pdf["bytes"]], n)
+        return pd.DataFrame([_out_row(key, group_cols, red.astype(np.float32),
+                                      fmt_out, n)])
+
+    return grouped_sorted_map(partials, group_cols, merge,
+                              _out_schema(group_cols, partials))
 
 
 def stack_topk_assoc(df: DataFrame, k: int = 1, cap: float | None = None,
@@ -239,73 +246,49 @@ def stack_topk_assoc(df: DataFrame, k: int = 1, cap: float | None = None,
                      group_cols: list[str] = ["scene_id"],
                      value_band: int = 0,
                      fmt_out: str = "zlib") -> DataFrame:
-    """FindMax-family reduction with MAP-SIDE COMBINE — the 100-TB path.
+    """Per-pixel k-th max across the stack — FindMax/FindSecondMax/
+    FindThirdMax (A8: np.sort along the stack axis, FindSecondMax.py:73) —
+    with MAP-SIDE COMBINE, the 100-TB path.
+
+    With ``cap``, values > ``cap`` are invalidated to ``invalid`` before
+    the sort and pixels where every member is invalid stay ``invalid``
+    (the FindMax.py:66-84 rule the FindMaxPixel_Mosaic .rft templates
+    bind); ``cap=None`` is the plain k-th max. With fewer than k members
+    the per-pixel minimum stands in.
 
     ``groupBy + applyInPandas`` ships every member's pixels through the
-    shuffle (n_members × tile bytes per position). The k-th-largest-per-
+    shuffle (members × tile bytes per position). The k-th-largest-per-
     pixel statistic is associative: the global answer lives in the union
-    of per-subset top-k. So stage 1 (mapInPandas, NO shuffle) reduces each
-    input partition's members per position to the per-pixel k largest
-    (capped values > ``cap`` invalidated to ``invalid`` first — the
-    FindMax.py:66-84 rule) plus the per-pixel min as a guard band for the
-    n_members < k edge; stage 2 shuffles only those partials (≤ (k+1)
-    bands each, independent of members-per-partition) and merges. With
-    inputs clustered by scene/time — the common layout — shuffle volume
-    drops by ~members-per-partition ×. Exact for the integer-valued
-    rasters the FindMax family targets (sort/max are order-free)."""
+    of per-subset top-k. So stage 1 reduces each input partition's members
+    per position to the per-pixel k largest plus the per-pixel min as a
+    guard band for the members < k edge; stage 2 shuffles only those
+    partials (≤ (k+1) bands each, independent of members-per-partition)
+    and merges. With inputs clustered by scene/time — the common layout —
+    shuffle volume drops by ~members-per-partition ×. Exact for the
+    integer-valued rasters the FindMax family targets (sort/max are
+    order-free)."""
     kk = int(k)
 
-    def cap_vals(v: np.ndarray) -> np.ndarray:
+    def top(tiles: list[np.ndarray]) -> np.ndarray:
+        v = np.stack([t[value_band] for t in tiles]).astype(np.float64)
         if cap is not None:
             v = np.where(v > cap, invalid, v)
-        return v
+        srt = np.sort(v, axis=0)
+        # guard band (per-pixel min) + the per-pixel largest
+        return np.concatenate([srt[:1], srt[-min(kk, srt.shape[0]):]])
 
-    part_schema = _partial_schema(group_cols, df)
-
-    def partial(batches):
-        for pdf in batches:
-            rows = []
-            for key, g in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                stack = np.stack([
-                    cap_vals(codec.decode(bytes(b))[value_band]
-                             .astype(np.float64))
-                    for b in g["bytes"]])
-                srt = np.sort(stack, axis=0)
-                top = srt[-min(kk, srt.shape[0]):]       # per-pixel largest
-                out = np.concatenate([srt[:1], top])     # guard: per-px min
-                row = dict(zip(group_cols, key))
-                row.update({"bytes": codec.encode(out.astype(np.float64),
-                                                  fmt_out),
-                            "w": out.shape[2], "h": out.shape[1],
-                            "bands": out.shape[0],
-                            "n_members": stack.shape[0]})
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in part_schema])
-
-    partials = df.mapInPandas(partial, schema=part_schema)
-    out_schema = _out_schema(group_cols, df)
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = [codec.decode(bytes(b)) for b in pdf["bytes"]]
-        mins = np.stack([d[0] for d in decoded])
-        tops = np.concatenate([d[1:] for d in decoded])
-        n_total = int(pdf["n_members"].sum())
-        srt = np.sort(tops, axis=0)
-        if n_total >= kk:
-            red = srt[-kk]
+    def kth(parts: list[np.ndarray], n: int) -> np.ndarray:
+        tops = np.concatenate([p[1:] for p in parts])
+        if n >= kk:
+            red = np.sort(tops, axis=0)[-kk]
         else:
-            red = mins.min(axis=0)                       # global smallest
+            red = np.stack([p[0] for p in parts]).min(axis=0)   # global smallest
         if cap is not None:
-            all_invalid = ~(tops != invalid).any(axis=0)
-            red = np.where(all_invalid, invalid, red)
-        return pd.DataFrame([{**dict(zip(group_cols, key)),
-                              **tile_row(red.astype(np.float32), fmt_out),
-                              "n_rasters": n_total}])
+            red = np.where((tops == invalid).all(axis=0), invalid, red)
+        return red
 
-    # tiny partials, many groups → the streamed grouped map (see
-    # grouped_sorted_map: applyInPandas per-group overhead would dominate)
-    return grouped_sorted_map(partials, group_cols, merge, out_schema)
+    return _merge_partials(_partial_tiles(df, group_cols, top, fmt_out),
+                           group_cols, kth, fmt_out)
 
 
 def mean_partial_tiles(df: DataFrame, group_cols: list[str] = ["scene_id"],
@@ -318,68 +301,34 @@ def mean_partial_tiles(df: DataFrame, group_cols: list[str] = ["scene_id"],
     (f8 — exact for integer-valued rasters). Public so STREAMING ingest
     can commit one partial set per microbatch and merge on read
     (streaming/composites.py)."""
-    part_schema = _partial_schema(group_cols, df)
+    def sum_count(tiles: list[np.ndarray]) -> np.ndarray:
+        px = np.stack(tiles)
+        v = px[:, value_band].astype(np.float64)
+        if qa_band is not None:
+            # same validity rule as the batch path (stack_composite masks
+            # non-clear to NaN then nanmeans): a QA-clear pixel whose value
+            # is NaN must not poison the Σ partial
+            valid = np.isin(px[:, qa_band], np.asarray(clear_values)) & ~np.isnan(v)
+        elif nan_skip:
+            valid = ~np.isnan(v)
+        else:
+            valid = np.ones(v.shape, bool)           # NaN propagates
+        return np.stack([np.where(valid, v, 0.0).sum(axis=0),
+                         valid.sum(axis=0, dtype=np.float64)])
 
-    def partial(batches):
-        for pdf in batches:
-            rows = []
-            for key, g in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                acc_s = acc_n = None
-                n = 0
-                for b in g["bytes"]:
-                    px = codec.decode(bytes(b))
-                    v = px[value_band].astype(np.float64)
-                    if qa_band is not None:
-                        # same validity rule as the batch path
-                        # (stack_composite masks non-clear to NaN then
-                        # nanmeans): a QA-clear pixel whose value is NaN
-                        # must not poison the Σ partial
-                        valid = (np.isin(px[qa_band],
-                                         np.asarray(clear_values))
-                                 & ~np.isnan(v))
-                        contrib = np.where(valid, v, 0.0)
-                        cnt = valid.astype(np.float64)
-                    elif nan_skip:
-                        valid = ~np.isnan(v)
-                        contrib = np.where(valid, v, 0.0)
-                        cnt = valid.astype(np.float64)
-                    else:
-                        contrib = v                       # NaN propagates
-                        cnt = np.ones_like(v)
-                    acc_s = contrib if acc_s is None else acc_s + contrib
-                    acc_n = cnt if acc_n is None else acc_n + cnt
-                    n += 1
-                out = np.stack([acc_s, acc_n])
-                row = dict(zip(group_cols, key))
-                row.update({"bytes": codec.encode(out, fmt_out),
-                            "w": out.shape[2], "h": out.shape[1],
-                            "bands": 2, "n_members": n})
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in part_schema])
-
-    return df.mapInPandas(partial, schema=part_schema)
+    return _partial_tiles(df, group_cols, sum_count, fmt_out)
 
 
 def merge_mean_partials(partials: DataFrame,
                         group_cols: list[str] = ["scene_id"],
                         fmt_out: str = "zlib") -> DataFrame:
-    """Stage 2: sum the [Σ, count] partial tiles per position and divide —
-    streamed through grouped_sorted_map (groups are tiny and unbounded)."""
-    out_schema = _out_schema(group_cols, partials)
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["bytes"]:
-            d = codec.decode(bytes(b)).astype(np.float64)
-            acc = d if acc is None else acc + d
+    """Stage 2: sum the [Σ, count] partial tiles per position and divide."""
+    def mean(parts: list[np.ndarray], n: int) -> np.ndarray:
+        acc = np.sum(parts, axis=0, dtype=np.float64)
         with np.errstate(invalid="ignore", divide="ignore"):
-            mean = np.where(acc[1] > 0, acc[0] / acc[1], np.nan)
-        return pd.DataFrame([{**dict(zip(group_cols, key)),
-                              **tile_row(mean.astype(np.float32), fmt_out),
-                              "n_rasters": int(pdf["n_members"].sum())}])
+            return np.where(acc[1] > 0, acc[0] / acc[1], np.nan)
 
-    return grouped_sorted_map(partials, group_cols, merge, out_schema)
+    return _merge_partials(partials, group_cols, mean, fmt_out)
 
 
 def stack_mean_assoc(df: DataFrame, group_cols: list[str] = ["scene_id"],
@@ -418,11 +367,24 @@ def stack_coalesce(df: DataFrame, group_cols: list[str] = ["scene_id"],
         any_valid = valid.any(axis=0)
         picked = np.take_along_axis(s, first[None], axis=0)[0]
         return np.where(any_valid, picked, np.nan)
-    schema = _out_schema(group_cols, df)
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
-                             None, None, (), order_col)
-    return grouped_sorted_map(df, group_cols, _apply, schema)
+    return _composite(df, group_cols, reducer, fmt_out, None,
+                      order_col=order_col)
+
+
+def _value_band_f8(value_band: int) -> TileOp:
+    return TileOp("value_band_f8", lambda px, meta: px.astype(np.float64),
+                  bands_in=(value_band,))
+
+
+def pixel_partials(df: DataFrame, value_band: int = 0) -> DataFrame:
+    """Per-tile decomposable partials of one band through
+    :func:`raster.tile_stats`: every column but ``bytes``, then ``px_sum``,
+    ``px_min``, ``px_max`` (double) and ``px_n`` (long)."""
+    per = tile_stats(df, [_value_band_f8(value_band)], {
+        "px_sum": lambda px, m: px.sum(), "px_min": lambda px, m: px.min(),
+        "px_max": lambda px, m: px.max(), "px_n": lambda px, m: px.size,
+    })
+    return per.withColumn("px_n", F.col("px_n").cast(T.LongType()))
 
 
 def percent_above_threshold(df: DataFrame, threshold: float,
@@ -432,9 +394,10 @@ def percent_above_threshold(df: DataFrame, threshold: float,
                             t_min=None, t_max=None) -> DataFrame:
     """Scalar %-of-stack-pixels beyond a threshold, optionally time-filtered —
     PercentAboveThreshold (A7; date-range filter
-    PercentAboveThreshold.py:124-137). Pure Catalyst: the time filter is a
-    plain predicate (prunes partitions on a date-partitioned table) and the
-    ratio is avg of a boolean — fully decomposable, no stack materialized."""
+    PercentAboveThreshold.py:124-137). The time filter is a plain predicate
+    (prunes partitions on a date-partitioned table), each tile emits its
+    hit fraction through :func:`raster.tile_stats`, and the ratio is a
+    Catalyst avg — fully decomposable, no stack materialized."""
     d = df
     # open-ended ranges: apply each bound independently — ANDing with a
     # null literal makes the predicate null and silently filters out
@@ -445,20 +408,10 @@ def percent_above_threshold(df: DataFrame, threshold: float,
         if t_max is not None:
             d = d.filter(F.col(time_col) <= t_max)
 
-    def per_tile(batches):
-        for pdf in batches:
-            fracs = []
-            for b in pdf["bytes"]:
-                px = codec.decode(bytes(b))[value_band].astype(np.float64)
-                hit = px >= threshold if above else px <= threshold
-                fracs.append(float(hit.mean()))
-            out = pdf[[c for c in pdf.columns if c != "bytes"]].copy()
-            out["frac"] = fracs
-            yield out
+    def frac(px, meta):
+        return (px >= threshold if above else px <= threshold).mean()
 
-    schema = T.StructType([f for f in d.schema if f.name != "bytes"]
-                          + [T.StructField("frac", T.DoubleType())])
-    per = d.mapInPandas(per_tile, schema)
+    per = tile_stats(d, [_value_band_f8(value_band)], {"frac": frac})
     return (per.groupBy(*group_cols)
             .agg(F.round(F.avg("frac") * 100.0, 6).alias("pct"),
                  F.count("*").alias("n_rasters")))
@@ -470,21 +423,7 @@ def stack_stats_decomposable(df: DataFrame, group_cols: list[str],
     aggregates) via pure Catalyst hash agg — the partial+final two-phase
     plan Spark gives for free (SURVEY.md A1 note). Use for measures that
     don't need the co-registered per-pixel stack."""
-    def per_tile(batches):
-        for pdf in batches:
-            out = pdf[[c for c in pdf.columns if c != "bytes"]].copy()
-            sums, mins, maxs, cnts = [], [], [], []
-            for b in pdf["bytes"]:
-                px = codec.decode(bytes(b))[value_band].astype(np.float64)
-                sums.append(px.sum()); mins.append(px.min())
-                maxs.append(px.max()); cnts.append(px.size)
-            out["px_sum"] = sums; out["px_min"] = mins
-            out["px_max"] = maxs; out["px_n"] = cnts
-            yield out
-    schema = T.StructType([f for f in df.schema if f.name != "bytes"] + [
-        T.StructField("px_sum", T.DoubleType()), T.StructField("px_min", T.DoubleType()),
-        T.StructField("px_max", T.DoubleType()), T.StructField("px_n", T.LongType())])
-    per = df.mapInPandas(per_tile, schema)
+    per = pixel_partials(df, value_band)
     return (per.groupBy(*group_cols)
             .agg(F.sum("px_sum").alias("sum"), F.min("px_min").alias("min"),
                  F.max("px_max").alias("max"),

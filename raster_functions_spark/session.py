@@ -60,12 +60,6 @@ def get_spark(app_name: str = "raster_functions_spark",
         # measured and REVERTED — alternating same-window A/B at sf1.0
         # showed it 0.6-0.9s slower on the heaviest query in every trial;
         # more shuffle blocks + AQE coalescing overhead, no win.)
-        # Floor on scan parallelism (guide §6): a table whose file count ×
-        # size lands under maxPartitionBytes scans as ONE task no matter
-        # how many cores exist (sf1.0 lineitem = 126 MB = 1 split, so
-        # every lineitem query ran its scan + partial agg on one core).
-        # A floor is scale-neutral: large tables already exceed it.
-        .config("spark.sql.files.minPartitionNum", str(n))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -92,12 +86,13 @@ def ensure_min_parallelism(df, bytes_per_core: int = 4 * 1024 * 1024):
 
     Parquet effective scan parallelism is bounded by row-group count, not
     split count — a one-row-group table puts EVERY row in one task no
-    matter what minPartitionNum says, which serializes any heavy per-row
+    matter how many splits the scan plans, which serializes any heavy per-row
     stage built on it (the r7 profile: the whole minhash signature kernel
     and the langid marker scoring each ran on a single core). The rule is
     size-based and self-limiting: repartition only when the total input is
     under cores × ``bytes_per_core`` — exactly the regime where the extra
-    exchange is trivially cheap. Large tables (unknowable sizes included)
+    exchange is trivially cheap. Large tables and unknowable sizes — no
+    input files (an in-memory or range source), a non-local file system —
     are NEVER repartitioned, so the helper is a no-op at 100-TB scale.
     Row-wise downstream results are partitioning-invariant."""
     sc = df.sparkSession.sparkContext
@@ -105,6 +100,8 @@ def ensure_min_parallelism(df, bytes_per_core: int = 4 * 1024 * 1024):
     try:
         files = df.inputFiles()
     except Exception:
+        return df
+    if not files:
         return df
     total = 0
     for uri in files:

@@ -3,8 +3,8 @@ per-scene statistics (the engine addition on top of the reference's batch
 time-stacks; SURVEY.md §2.10 notes ingest may be Structured Streaming).
 
 Pattern: each microbatch computes decomposable per-tile partials
-(sum/count/min/max — the same map-side combine as
-``stack.stack_stats_decomposable``) and APPENDS them to a partials table
+(sum/count/min/max — ``stack.pixel_partials``, the same map-side combine
+as ``stack.stack_stats_decomposable``) and APPENDS them to a partials table
 via ``foreachBatch`` (exactly-once with the query checkpoint). The
 "current composite" is a plain aggregation view over the partials — always
 consistent, never rewritten. Non-decomposable composites (median,
@@ -13,13 +13,11 @@ answers the streaming-freshness cases."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import codec
+from ..operators.stack import mean_partial_tiles, merge_mean_partials, pixel_partials
 
 PARTIALS_SCHEMA = T.StructType([
     T.StructField("scene_id", T.StringType()),
@@ -32,18 +30,9 @@ PARTIALS_SCHEMA = T.StructType([
 
 
 def tile_partials(df: DataFrame, value_band: int = 0) -> DataFrame:
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                px = codec.decode(bytes(pdf["bytes"].iloc[i]))[value_band].astype(np.float64)
-                rows.append({"scene_id": pdf["scene_id"].iloc[i],
-                             "px_sum": float(px.sum()), "px_min": float(px.min()),
-                             "px_max": float(px.max()), "px_n": int(px.size)})
-            yield pd.DataFrame(rows, columns=["scene_id", "px_sum", "px_min",
-                                              "px_max", "px_n"])
-    schema = T.StructType([f for f in PARTIALS_SCHEMA if f.name != "batch_id"])
-    return df.mapInPandas(run, schema=schema)
+    """One row of decomposable partials per tile (``PARTIALS_SCHEMA``
+    without ``batch_id``) — :func:`stack.pixel_partials`."""
+    return pixel_partials(df.select("scene_id", "bytes"), value_band)
 
 
 def start_incremental_composite(stream: DataFrame, partials_path: str,
@@ -108,7 +97,6 @@ def start_pixel_mean_ingest(stream: DataFrame, table_path: str,
     raw acquisitions are never re-read. ``compact_every`` folds snapshot
     small-file compaction into the sink every N batches (exactly-once via
     its own run_id)."""
-    from ..operators.stack import mean_partial_tiles
     from ..snapshots import SnapshotTable
 
     table = SnapshotTable(stream.sparkSession, table_path)
@@ -134,7 +122,6 @@ def current_pixel_composite(spark: SparkSession, table_path: str,
     """The live mean IMAGE per position: merge the snapshot table's
     [Σ, count] partials (stack.merge_mean_partials). Consistent at any
     snapshot; time travel gives the composite as-of any earlier batch."""
-    from ..operators.stack import merge_mean_partials
     from ..snapshots import SnapshotTable
 
     partials = SnapshotTable(spark, table_path).read()

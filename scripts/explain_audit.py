@@ -6,6 +6,7 @@ properties the engine is designed around (SURVEY.md §4):
 - cell-encode lives inside WholeStageCodegen (zero Python)
 - minhash runs as codegen'd hash aggregation (no interpreted HOFs)
 - per-pixel zonal statistics run their zone op in one Python pass
+- a halo-exchange chain scans its tile table once and joins nothing
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -368,6 +369,21 @@ def main() -> int:
     ok = len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1
     checks.append(("pixel zonal stats: zone op fused, exactly one MapInPandas", ok))
     out += ["\n## zonal_statistics_px\n", p]
+
+    # 27. halo exchange over a stored tile table: the tile's meta columns
+    # travel on its own halo messages — the chain scans the table once
+    # and joins nothing back onto the messages
+    from raster_functions_spark.plans import chain as _chain
+    with tempfile.TemporaryDirectory() as td:
+        fixtures.dem_scene_df(spark, tiles_x=2, tiles_y=2, tile=16).write.parquet(td + "/dem")
+        shade = _chain.build_chain(spark.read.parquet(td + "/dem"), [
+            {"op": "hillshade", "args": {"geographic": True}},
+            {"op": "stretch", "args": {"band": 0, "in_min": 0, "in_max": 255,
+                                       "out_min": 0, "out_max": 1}}])
+        p = plan_of(shade)
+    ok = len(_re.findall(r"\(\d+\) Scan parquet", p)) == 1 and "Join" not in p
+    checks.append(("halo exchange: one parquet scan, no join", ok))
+    out += ["\n## build_chain hillshade→stretch\n", p]
 
     out.append("\n# Assertions\n")
     failed = 0

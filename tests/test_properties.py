@@ -143,7 +143,7 @@ def test_topk_assoc_decomposition_property(k, n_members, seed, n_chunks):
     cap = 100.0
     stack = rng.integers(0, 150, (n_members, h, w)).astype(np.float64)
     capped = np.where(stack > cap, -1.0, stack)
-    # direct (reference semantics, stack.find_max_k reducer)
+    # direct (reference semantics: the FindMax whole-stack sort)
     srt = np.sort(capped, axis=0)
     direct = srt[-k] if n_members >= k else srt[0]
     direct = np.where(~(capped != -1.0).any(axis=0), -1.0, direct)

@@ -32,6 +32,7 @@ def _emitters(spark) -> dict[str, DataFrame]:
             stk, "median", qa_band=1, clear_values=fixtures.QA_CLEAR_C1),
         "stack.stack_topk_assoc": stack.stack_topk_assoc(stk, k=2),
         "stack.merge_mean_partials": stack.stack_mean_assoc(stk, fmt_out="raw"),
+        "stack.mean_partial_tiles": stack.mean_partial_tiles(stk, fmt_out="rle"),
         "multiraster.two_raster_op": mr.two_raster_op(
             dem, dem, mr.mask_raster_fn(), KEYS),
         "multiraster.topographic_c_correction": mr.topographic_c_correction(

@@ -154,3 +154,24 @@ def test_package_zip_named_by_content(tmp_path):
     with zipfile.ZipFile(a) as za, zipfile.ZipFile(explicit) as zb:
         assert sorted(za.namelist()) == sorted(zb.namelist())
         assert "raster_functions_spark/_worker.py" in za.namelist()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ensure_min_parallelism_leaves_fileless_inputs_alone(spark, tmp_path):
+    """An input with no files (an in-memory frame) has no knowable size, so
+    it is returned unchanged; a small parquet table is still spread over
+    the cores."""
+    from raster_functions_spark.session import ensure_min_parallelism
+    df = spark.createDataFrame(pd.DataFrame({"v": range(100)}))
+    out = ensure_min_parallelism(df)
+    assert out is df
+    assert "RoundRobinPartitioning" not in _plan(out)
+
+    path = str(tmp_path / "small.parquet")
+    df.coalesce(1).write.parquet(path)
+    small = ensure_min_parallelism(spark.read.parquet(path))
+    assert "RoundRobinPartitioning" in _plan(small)
+    assert sorted(r["v"] for r in small.collect()) == list(range(100))

@@ -74,13 +74,68 @@ def test_stack_percentile(spark):
 
 
 def test_stack_topk(spark):
+    """k-th max of the value band (cap=None: the plain FindSecondMax sort)."""
     df = fixtures.stack_images_df(spark, n_scenes=2, n_times=6)
     for k in (1, 2, 3):
-        out = {r["scene_id"]: r for r in S.stack_topk(df, k, fmt_out="raw").collect()}
+        out = {r["scene_id"]: r for r in
+               S.stack_topk_assoc(df, k, fmt_out="raw").collect()}
         for s in range(2):
-            srt = np.sort(_golden_stack(s, 6).astype(np.float64), axis=0)
-            got = codec.decode(bytes(out[f"scene{s}"]["bytes"]))
+            srt = np.sort(_golden_stack(s, 6).astype(np.float64)[:, 0], axis=0)
+            got = codec.decode(bytes(out[f"scene{s}"]["bytes"]))[0]
             assert np.allclose(got, srt[-k], atol=1e-4), (k, s)
+            assert out[f"scene{s}"]["n_rasters"] == 6
+
+
+def test_stack_topk_assoc_findmax_rule(spark):
+    """cap=100 is the FindMax family's rule (FindMax.py:66-84): values above
+    the cap become −1 before the sort, a pixel invalid in every member stays
+    −1, and with fewer than k members the per-pixel minimum stands in —
+    whatever partition each member lands in."""
+    import pandas as pd
+    rng = np.random.default_rng(7)
+    n_by_scene = {"a": 7, "b": 2}                       # b: n < k for k = 3
+    stacks, rows = {}, []
+    for sid, n in n_by_scene.items():
+        v = rng.integers(0, 150, (n, 6, 6)).astype(np.float32)
+        v[:, 0, 0] = 120.0                              # above the cap in every member
+        v[:, 0, 1] = 100.0                              # at the cap: valid
+        stacks[sid] = v
+        rows += [{"scene_id": sid, "bytes": codec.encode(v[i][None])}
+                 for i in range(n)]
+    df = spark.createDataFrame(pd.DataFrame(rows)).repartition(3)
+    for k in (1, 2, 3):
+        out = {r["scene_id"]: r for r in S.stack_topk_assoc(
+            df, k, cap=100.0, fmt_out="raw").collect()}
+        for sid, v in stacks.items():
+            capped = np.where(v > 100.0, -1.0, v.astype(np.float64))
+            srt = np.sort(capped, axis=0)
+            want = srt[-k] if len(v) >= k else srt[0]
+            want = np.where(~(capped != -1.0).any(axis=0), -1.0, want)
+            got = codec.decode(bytes(out[sid]["bytes"]))[0]
+            assert np.array_equal(got, want.astype(np.float32)), (k, sid)
+            assert got[0, 0] == -1.0 and got[0, 1] == 100.0
+            assert out[sid]["n_rasters"] == len(v)
+
+
+def test_stack_outputs_share_the_tile_row_schema(spark):
+    """Every stack tile output, the map-side partials included, is
+    group cols + TILE_FIELDS + n_rasters; partials stay f8."""
+    import pyspark.sql.types as T
+    from raster_functions_spark.raster import TILE_FIELDS
+    df = fixtures.stack_images_df(spark, n_scenes=2, n_times=4, tile=8)
+    want = T.StructType([df.schema["scene_id"]] + TILE_FIELDS
+                        + [T.StructField("n_rasters", T.IntegerType())])
+    outs = {"composite": S.stack_composite(df, "mean"),
+            "percentile": S.stack_percentile(df, 50.0),
+            "coalesce": S.stack_coalesce(df, order_col="t"),
+            "topk": S.stack_topk_assoc(df, 2),
+            "mean_partials": S.mean_partial_tiles(df),
+            "mean_merged": S.stack_mean_assoc(df)}
+    for name, out in outs.items():
+        assert out.schema == want, name
+    parts = outs["mean_partials"].collect()
+    assert {r["dtype"] for r in parts} == {"f8"}
+    assert sum(r["n_rasters"] for r in parts) == 8
 
 
 def test_percent_above_threshold(spark):
@@ -167,8 +222,7 @@ def test_grouped_sorted_map_stitches_across_arrow_batches(spark):
             return pd.DataFrame([{"a": key[0], "b": key[1],
                                   "n": len(g), "s": float(g["v"].sum())}])
 
-        out = grouped_sorted_map(df, ["a", "b"], fn, schema,
-                                 num_partitions=4).toPandas()
+        out = grouped_sorted_map(df, ["a", "b"], fn, schema).toPandas()
         assert len(out) == 10                      # one row per (a, b)
         want = (pd.DataFrame(rows).groupby(["a", "b"])
                 .agg(n=("v", "size"), s=("v", "sum")).reset_index())
@@ -201,12 +255,11 @@ def test_grouped_sorted_map_drops_empty_group_frames(spark):
                                  "s": pd.Series(dtype="object")})
         return pd.DataFrame({"k": [key[0]], "s": [float(g["v"].sum())]})
 
-    got = grouped_sorted_map(df, ["k"], fn_some, schema, num_partitions=2).toPandas()
+    got = grouped_sorted_map(df, ["k"], fn_some, schema).toPandas()
     want = {k: float(sum(i for i in range(60) if i % 6 == k)) for k in (0, 2, 4)}
     assert dict(zip(got["k"], got["s"])) == want
 
-    empty = grouped_sorted_map(df, ["k"], lambda key, g: fn_some((1,), g), schema,
-                               num_partitions=2)
+    empty = grouped_sorted_map(df, ["k"], lambda key, g: fn_some((1,), g), schema)
     assert empty.schema == schema and empty.count() == 0
 
 
@@ -238,8 +291,7 @@ def test_grouped_sorted_map_keeps_null_group_keys(spark):
             return pd.DataFrame([{"a": k, "n": len(g),
                                   "s": float(g["v"].sum())}])
 
-        out = grouped_sorted_map(df, ["a"], fn, schema,
-                                 num_partitions=4).toPandas()
+        out = grouped_sorted_map(df, ["a"], fn, schema).toPandas()
         # reference semantics: groupBy().applyInPandas keeps the null group
         ref = df.groupBy("a").applyInPandas(
             lambda k, g: fn((k[0],), g), schema).toPandas()
