@@ -297,9 +297,15 @@ def _salted_buckets(banded: DataFrame, max_bucket: int,
     canonical row's value — callers then need no lookup join (and
     especially no corpus-wide broadcast) to resolve the canonical's
     payload. (min over struct(id, carry) is ordered by id first; ids are
-    unique within a bucket, so the carry is exactly the canonical's.)"""
+    unique within a bucket, so the carry is exactly the canonical's.)
+
+    A NULL id raises (inline, in the window's projection — no extra job):
+    ``min(id)`` would skip it while ``min(struct(id, carry))`` elects it
+    canonical, and a NULL member cannot be paired either way."""
     w = Window.partitionBy("band", "bsig")
-    j = banded.withColumn("_n", F.count("*").over(w))
+    j = banded.withColumn(id_col, F.when(F.col(id_col).isNull(), F.raise_error(
+        F.lit("LSH input has a NULL id; ids must be non-null"))).otherwise(F.col(id_col)))
+    j = j.withColumn("_n", F.count("*").over(w))
     if carry_col is None:
         j = j.withColumn("_bmin", F.min(id_col).over(w))
     else:

@@ -13,8 +13,14 @@ Video containers demux for real (round 4): formats.demux_mp4 walks the
 ISO-BMFF box tree (moov → video trak → stsc/stsz/stco sample map) and
 ``video_decode_metrics`` decodes image-coded tracks (motion-JPEG / PNG
 samples); other codecs (avc1/hvc1 …) surface demuxed metadata with
-ok=false — the quarantine contract. frame_sample additionally operates
-on band-stacked frame tensors in the engine container.
+ok=false — the quarantine contract.
+
+Tile-to-tile steps emit the tile-row contract of :mod:`raster`:
+``resize_tiles`` and ``frame_sample`` (bands as frames) are
+:class:`raster.TileOp` kernels run through ``raster.apply_chain``;
+``augment_tiles`` (extra decision columns) and ``patchify_tiles`` (one
+row per patch) keep their own pass over ``raster.chained_tiles`` and fill
+``TILE_FIELDS`` with ``tile_row``.
 """
 
 from __future__ import annotations
@@ -26,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec, formats
+from .raster import (TILE_COLS, TILE_FIELDS, TileOp, apply_chain, chained_tiles,
+                     tile_columns, tile_row)
 
 
 def decode_external_image(buf: bytes) -> np.ndarray:
@@ -188,63 +196,38 @@ def image_catalog(df: DataFrame, bytes_col: str = "bytes",
 
 def resize_tiles(df: DataFrame, out_h: int, out_w: int,
                  bytes_col: str = "bytes", fmt_out: str = "zlib") -> DataFrame:
-    """Box-resample every tile to (out_h, out_w) — the resize step of a
-    multimodal ingest pipeline, NumPy bin-mean (reduceat), no PIL."""
-    keep = [c for c in df.columns if c not in (bytes_col, "w", "h")]
-    out_schema = T.StructType([df.schema[c] for c in keep] + [
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()), T.StructField("h", T.IntegerType())])
+    """Box-resample every tile to (out_h, out_w) as f4 — the resize step of
+    a multimodal ingest pipeline, NumPy bin-mean (reduceat), no PIL."""
+    def fn(px, meta):
+        px = px.astype(np.float64)
+        h, w = px.shape[1:]
+        # UPSCALED axes use nearest-gather: reduceat bin edges repeat when
+        # out > in, and the zero-width bins divide by zero — every
+        # upscaled tile came back inf/NaN before
+        if out_h > h:
+            rows_s = px[:, (np.arange(out_h) * h) // out_h, :]
+            rc = np.ones((1, out_h, 1))
+        else:
+            ri = (np.arange(out_h) * h) // out_h
+            rows_s = np.add.reduceat(px, ri, axis=1)
+            rc = np.diff(np.append(ri, h)).astype(np.float64)[None, :, None]
+        if out_w > w:
+            small = rows_s[:, :, (np.arange(out_w) * w) // out_w]
+            cc = np.ones((1, 1, out_w))
+        else:
+            ci = (np.arange(out_w) * w) // out_w
+            small = np.add.reduceat(rows_s, ci, axis=2)
+            cc = np.diff(np.append(ci, w)).astype(np.float64)[None, None, :]
+        return (small / (rc * cc)).astype(np.float32)
 
-    def run(batches):
-        for pdf in batches:
-            bufs = []
-            for b in pdf[bytes_col]:
-                px = codec.decode(bytes(b)).astype(np.float64)
-                bands, h, w = px.shape
-                # UPSCALED axes use nearest-gather: reduceat bin edges
-                # repeat when out > in, and the zero-width bins divide by
-                # zero — every upscaled tile came back inf/NaN before
-                if out_h > h:
-                    rows_s = px[:, (np.arange(out_h) * h) // out_h, :]
-                    rc = np.ones((1, out_h, 1))
-                else:
-                    ri = (np.arange(out_h) * h) // out_h
-                    rows_s = np.add.reduceat(px, ri, axis=1)
-                    rc = np.diff(np.append(ri, h)).astype(np.float64)[None, :, None]
-                if out_w > w:
-                    small = rows_s[:, :, (np.arange(out_w) * w) // out_w]
-                    cc = np.ones((1, 1, out_w))
-                else:
-                    ci = (np.arange(out_w) * w) // out_w
-                    small = np.add.reduceat(rows_s, ci, axis=2)
-                    cc = np.diff(np.append(ci, w)).astype(np.float64)[None, None, :]
-                small = small / (rc * cc)
-                bufs.append(codec.encode(small.astype(np.float32), fmt_out))
-            out = pdf[keep].copy()
-            out["bytes"] = bufs
-            out["w"] = np.int32(out_w)
-            out["h"] = np.int32(out_h)
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return apply_chain(df, [TileOp("resize", fn, dtype_out="f4")], fmt_out=fmt_out,
+                       bytes_col=bytes_col)
 
 
-def frame_sample(df: DataFrame, every_n: int, frames_col: str = "bands") -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int) -> DataFrame:
     """Frame-sampling plumbing for video-like stacks: treat bands as frames,
-    keep every n-th — pure metadata + slicing kernel."""
-    def run(batches):
-        for pdf in batches:
-            bufs, nb = [], []
-            for b in pdf["bytes"]:
-                px = codec.decode(bytes(b))
-                sel = px[::every_n]
-                bufs.append(codec.encode(np.ascontiguousarray(sel), "zlib"))
-                nb.append(sel.shape[0])
-            out = pdf.copy()
-            out["bytes"] = bufs
-            out[frames_col] = np.array(nb, np.int32)
-            yield out
-    return df.mapInPandas(run, schema=df.schema)
+    keep every n-th (zlib tiles)."""
+    return apply_chain(df, [TileOp("frame_sample", lambda px, meta: px[::every_n])])
 
 
 def video_decode_metrics(df: DataFrame, bytes_col: str = "bytes",
@@ -366,23 +349,21 @@ def patchify_tiles(df: DataFrame, patch_h: int, patch_w: int,
     embedding-model input prep."""
     if patch_h < 1 or patch_w < 1:
         raise ValueError("patch dims must be >= 1")
-    keep = [c for c in df.columns if c not in (bytes_col, "w", "h")]
+    keep = [c for c in df.columns if c not in (bytes_col, *TILE_COLS)]
     out_schema = T.StructType(
         [df.schema[c] for c in keep]
         + [T.StructField("pr", T.IntegerType()),
            T.StructField("pc", T.IntegerType()),
-           T.StructField("seq", T.IntegerType()),
-           T.StructField("bytes", T.BinaryType()),
-           T.StructField("w", T.IntegerType()),
-           T.StructField("h", T.IntegerType()),
-           T.StructField("psum", T.DoubleType()),
+           T.StructField("seq", T.IntegerType())]
+        + TILE_FIELDS
+        + [T.StructField("psum", T.DoubleType()),
            T.StructField("pchk", T.DoubleType())])
+    tiles = chained_tiles([], keep, bytes_col)
 
     def run(batches):
         for pdf in batches:
             out_rows = []
-            for i in range(len(pdf)):
-                px = codec.decode(bytes(pdf[bytes_col].iloc[i]))
+            for px, base in tiles(pdf):
                 bands, h, w = px.shape
                 if h % patch_h or w % patch_w:
                     raise ValueError(
@@ -396,17 +377,12 @@ def patchify_tiles(df: DataFrame, patch_h: int, patch_w: int,
                 wgt = np.arange(1, flat.shape[1] + 1, dtype=np.float64)
                 psum = flat.sum(axis=1)
                 pchk = flat @ wgt
-                base = {c: pdf[c].iloc[i] for c in keep}
                 for p in range(n_pr * n_pc):
-                    r = dict(base)
-                    r["pr"], r["pc"] = p // n_pc, p % n_pc
-                    r["seq"] = p
-                    r["bytes"] = codec.encode(
-                        np.ascontiguousarray(grid[r["pr"], r["pc"]]), fmt_out)
-                    r["w"], r["h"] = patch_w, patch_h
-                    r["psum"] = float(psum[p])
-                    r["pchk"] = float(pchk[p])
-                    out_rows.append(r)
+                    pr, pc = divmod(p, n_pc)
+                    out_rows.append({**base, "pr": pr, "pc": pc, "seq": p,
+                                     **tile_row(grid[pr, pc], fmt_out),
+                                     "psum": float(psum[p]),
+                                     "pchk": float(pchk[p])})
             yield pd.DataFrame(out_rows,
                                columns=[f.name for f in out_schema])
 
@@ -434,29 +410,26 @@ def augment_tiles(df: DataFrame, crop_h: int, crop_w: int,
 
     One fused mapInPandas (decode → crop/flip → encode), map-only."""
     from .sampling import u60_col
-    keep = [c for c in df.columns if c not in (bytes_col, "w", "h")]
+    keep = [c for c in df.columns if c not in (bytes_col, *TILE_COLS)]
     out_schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField("bytes", T.BinaryType()),
-           T.StructField("w", T.IntegerType()),
-           T.StructField("h", T.IntegerType()),
-           T.StructField("hflip", T.BooleanType()),
+        [df.schema[c] for c in keep] + TILE_FIELDS
+        + [T.StructField("hflip", T.BooleanType()),
            T.StructField("vflip", T.BooleanType()),
            T.StructField("oy", T.IntegerType()),
            T.StructField("ox", T.IntegerType())])
     key = F.concat_ws(",", *[F.col(c).cast("string") for c in id_cols])
     work = df.withColumn("_aug_u", u60_col(key, seed))
+    tiles = chained_tiles([], ["_aug_u"], bytes_col)
 
     def run(batches):
         for pdf in batches:
-            bufs, hfs, vfs, oys, oxs = [], [], [], [], []
-            for b, u in zip(pdf[bytes_col], pdf["_aug_u"]):
-                px = codec.decode(bytes(b))
+            rows, hfs, vfs, oys, oxs = [], [], [], [], []
+            for px, meta in tiles(pdf):
                 bands, h, w = px.shape
                 if crop_h > h or crop_w > w:
                     raise ValueError(
                         f"crop {crop_h}x{crop_w} exceeds tile {h}x{w}")
-                u = int(u)
+                u = int(meta["_aug_u"])
                 hf, vf = bool(u % 2), bool((u // 2) % 2)
                 oy = (u // 4) % (h - crop_h + 1)
                 ox = (u // 4096) % (w - crop_w + 1)
@@ -465,18 +438,10 @@ def augment_tiles(df: DataFrame, crop_h: int, crop_w: int,
                     out = out[:, ::-1, :]
                 if hf:
                     out = out[:, :, ::-1]
-                bufs.append(codec.encode(
-                    np.ascontiguousarray(out.astype(np.float32)), fmt_out))
+                rows.append(tile_row(out.astype(np.float32), fmt_out))
                 hfs.append(hf); vfs.append(vf); oys.append(oy); oxs.append(ox)
-            o = pdf[keep].copy()
-            o["bytes"] = bufs
-            o["w"] = np.int32(crop_w)
-            o["h"] = np.int32(crop_h)
-            o["hflip"] = hfs
-            o["vflip"] = vfs
-            o["oy"] = np.int32(oys)
-            o["ox"] = np.int32(oxs)
-            yield o
+            yield pdf[keep].assign(**tile_columns(rows), hflip=hfs, vflip=vfs,
+                                   oy=np.int32(oys), ox=np.int32(oxs))
 
     return work.mapInPandas(run, schema=out_schema)
 

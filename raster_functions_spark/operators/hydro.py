@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codec
-from ..raster import TILE_FIELDS, tile_row
+from ..raster import TileOp, apply_chain, join_tiles, scene_map
 from .focal import _horn_gradients
 
 # D8 neighbor offsets (E, SE, S, SW, W, NW, N, NE)
@@ -165,7 +165,6 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
     localCheckpoint'ed to keep lineage flat.
     """
     from .focal import apply_focal
-    from ..raster import TileOp
     scn, txc, tyc = grid_cols
 
     # 1. directions from haloed z (kernel consumes padded input, crops 1)
@@ -273,24 +272,10 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
             f"stabilize within max_rounds={max_rounds}; raise max_rounds "
             f"(needed ≈ longest flow path in tiles)")
 
-    final_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
-                                 *TILE_FIELDS])
-
-    def finalize(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                acc = codec.decode(bytes(pdf["acc_bytes"].iloc[i]))
-                rows.append({scn: pdf[scn].iloc[i],
-                             txc: int(pdf[txc].iloc[i]),
-                             tyc: int(pdf[tyc].iloc[i]),
-                             **tile_row(acc, fmt_out)})
-            yield pd.DataFrame(rows, columns=[f.name for f in final_schema])
-
     # rounds iterate on raw (re-encoding per round would be waste); the
     # REQUESTED fmt_out applies to the final product only
-    return result.select(scn, txc, tyc, "acc_bytes").mapInPandas(
-        finalize, schema=final_schema)
+    return apply_chain(result.select(scn, txc, tyc, "acc_bytes"), [],
+                       fmt_out=fmt_out, bytes_col="acc_bytes")
 
 
 def cti_distributed(df: DataFrame, tile: int,
@@ -314,39 +299,18 @@ def cti_distributed(df: DataFrame, tile: int,
         return (np.log(((acc_px[0].astype(np.float64) + 1.0) * cellsize) / tan_s)
                 .astype(np.float32))
 
-    return two_raster_op(acc, slp, cti_fn, list(grid_cols), fmt_out=fmt_out,
-                         name="cti")
+    return two_raster_op(acc, slp, cti_fn, list(grid_cols), fmt_out=fmt_out)
 
 
 def cti_scene(df: DataFrame, tile: int,
               grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty"),
               cellsize_col: str = "cell_dx", fmt_out: str = "zlib") -> DataFrame:
-    """Per-scene CTI over a tiled DEM table: one applyInPandas group per
-    scene assembles the mosaic, computes flow accumulation + CTI globally,
-    and re-tiles. Scene size is bounded by executor memory (the
-    ProcessFullImage tradeoff, SURVEY.md O13)."""
-    scn, txc, tyc = grid_cols
-    out_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
-                               *TILE_FIELDS])
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        txs = pdf[txc].to_numpy()
-        tys = pdf[tyc].to_numpy()
-        W = (txs.max() + 1) * tile
-        H = (tys.max() + 1) * tile
-        full = np.zeros((H, W), dtype=np.float64)
-        for i in range(len(pdf)):
-            px = codec.decode(bytes(pdf["bytes"].iloc[i]))[0]
-            full[tys[i] * tile:(tys[i] + 1) * tile,
-                 txs[i] * tile:(txs[i] + 1) * tile] = px
-        cs = float(pdf[cellsize_col].iloc[0]) if cellsize_col in pdf else 1.0
-        cti = cti_np(full, cs)
-        rows = []
-        for i in range(len(pdf)):
-            t = cti[tys[i] * tile:(tys[i] + 1) * tile,
-                    txs[i] * tile:(txs[i] + 1) * tile]
-            rows.append({scn: key[0], txc: int(txs[i]), tyc: int(tys[i]),
-                         **tile_row(t, fmt_out)})
-        return pd.DataFrame(rows)
-
-    return df.groupBy(scn).applyInPandas(run, schema=out_schema)
+    """Per-scene CTI over a tiled DEM table: one group per scene assembles
+    the mosaic, computes flow accumulation + CTI globally, and re-tiles
+    (:func:`raster.scene_map`; cell size from the scene's
+    ``cellsize_col``, 1.0 without it). Scene size is bounded by executor
+    memory (the ProcessFullImage tradeoff, SURVEY.md O13)."""
+    meta = [cellsize_col] if cellsize_col in df.columns else []
+    return scene_map(join_tiles([df], grid_cols), tile, grid_cols,
+                     lambda full, m: cti_np(full[0], float(m.get(cellsize_col, 1.0))),
+                     fmt_out, meta_cols=meta)

@@ -3,11 +3,11 @@ two-pass maps, and iterative gap-fill — SURVEY.md §2.3 J4/J9, §2.4 A9.
 
 The reference receives co-registered rasters as multiple pixelBlocks
 (updatePixels(**pixelBlocks)); the Spark equivalent aligns them with an
-equi-join on the tile key (the grid-alignment join J4), then runs one
-kernel over both decoded arrays.
-
-Output tiles follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
-filled by ``tile_row``).
+equi-join on the tile key (the grid-alignment join J4,
+:func:`raster.join_tiles`), then runs one kernel over the decoded arrays
+(:func:`raster.apply_aligned`; whole-scene kernels through
+:func:`raster.scene_map`). Output tiles follow the tile-row contract in
+:mod:`raster`.
 """
 
 from __future__ import annotations
@@ -18,32 +18,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import codec
-from ..raster import TILE_FIELDS, tile_row
+from ..raster import aligned_tiles, apply_aligned, join_tiles, scene_map
 from .focal import slope_aspect_np
 
 
 def two_raster_op(df_a: DataFrame, df_b: DataFrame, fn, key_cols: list[str],
-                  fmt_out: str = "zlib", name: str = "two_raster") -> DataFrame:
+                  fmt_out: str = "zlib") -> DataFrame:
     """Equi-join two tile tables on the tile key and apply
     ``fn(px_a, px_b) -> px`` per aligned pair — the host's multi-raster
     alignment (J4, FindMaxPixel_Mosaic.rft.xml MatchVariable semantics)."""
-    a = df_a.select(*key_cols, F.col("bytes").alias("bytes_a"))
-    b = df_b.select(*key_cols, F.col("bytes").alias("bytes_b"))
-    joined = a.join(b, key_cols)
-    out_schema = T.StructType([df_a.schema[c] for c in key_cols] + TILE_FIELDS)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                pa = codec.decode(bytes(pdf["bytes_a"].iloc[i]))
-                pb = codec.decode(bytes(pdf["bytes_b"].iloc[i]))
-                rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             **tile_row(fn(pa, pb), fmt_out)})
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return joined.mapInPandas(run, schema=out_schema)
+    joined = join_tiles([df_a.select(*key_cols, "bytes"), df_b], key_cols)
+    return apply_aligned(joined, key_cols, lambda parts, meta: fn(*parts), fmt_out)
 
 
 def dnbr_fn(nir_band: int = 0, swir_band: int = 1):
@@ -108,17 +93,16 @@ def topographic_c_correction(dem: DataFrame, image: DataFrame,
         T.StructField("s_xx", T.DoubleType()), T.StructField("s_xy", T.DoubleType()),
         T.StructField("n", T.LongType())])
 
-    joined = (dem.select(*key_cols, F.col("bytes").alias("bytes_dem"))
-              .join(image.select(*key_cols, F.col("bytes").alias("bytes_img")), key_cols))
+    joined = join_tiles([dem.select(*key_cols, "bytes"), image], key_cols)
+    tiles = aligned_tiles(key_cols, meta_cols=key_cols)
 
     def partials(batches):
         for pdf in batches:
             rows = []
-            for i in range(len(pdf)):
-                ci = cos_i_of(codec.decode(bytes(pdf["bytes_dem"].iloc[i]))).ravel()
-                v = codec.decode(bytes(pdf["bytes_img"].iloc[i]))[0].astype(np.float64).ravel()
-                rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             "s_x": ci.sum(), "s_y": v.sum(),
+            for (zpx, img), keys in tiles(pdf):
+                ci = cos_i_of(zpx).ravel()
+                v = img[0].astype(np.float64).ravel()
+                rows.append({**keys, "s_x": ci.sum(), "s_y": v.sum(),
                              "s_xx": (ci * ci).sum(), "s_xy": (ci * v).sum(),
                              "n": ci.size})
             yield pd.DataFrame(rows, columns=[f.name for f in part_schema])
@@ -141,38 +125,25 @@ def topographic_c_correction(dem: DataFrame, image: DataFrame,
              .select(scene_key, "c_factor"))
 
     # pass 2: per-pixel correction with the broadcast C
-    joined2 = joined.join(F.broadcast(stats), scene_key)
-    out_schema = T.StructType([dem.schema[c] for c in key_cols]
-                              + [T.StructField("c_factor", T.DoubleType())] + TILE_FIELDS)
+    def correct(parts, meta):
+        zpx, img = parts
+        ci = cos_i_of(zpx)
+        v = img[0].astype(np.float64)
+        C = meta["c_factor"]
+        if pd.isna(C):
+            return v.astype(np.float32)        # identity: no terrain signal
+        # self-shadowed / grazing pixels (cos_i ≈ 0 or < 0) sit on the
+        # division singularity — leave uncorrected. The DENOMINATOR is
+        # cos_i + C: with a negative C (brightness anti-correlated with
+        # illumination) it crosses zero for LIT pixels too, so guard
+        # |cos_i+C| as well — a near-zero denominator would encode ±inf
+        # into the tile and poison downstream aggregates
+        lit = (ci > 0.05) & (np.abs(ci + C) > 0.05)
+        return np.where(lit, v * (np.cos(sz) + C) / np.where(lit, ci + C, 1.0),
+                        v).astype(np.float32)
 
-    def correct(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                ci = cos_i_of(codec.decode(bytes(pdf["bytes_dem"].iloc[i])))
-                v = codec.decode(bytes(pdf["bytes_img"].iloc[i]))[0].astype(np.float64)
-                C_raw = pdf["c_factor"].iloc[i]
-                if C_raw is None or (isinstance(C_raw, float) and np.isnan(C_raw)):
-                    corr = v.astype(np.float32)        # identity: no terrain signal
-                    C = float("nan")
-                else:
-                    C = float(C_raw)
-                    # self-shadowed / grazing pixels (cos_i ≈ 0 or < 0)
-                    # sit on the division singularity — leave uncorrected.
-                    # The DENOMINATOR is cos_i + C: with a negative C
-                    # (brightness anti-correlated with illumination) it
-                    # crosses zero for LIT pixels too, so guard |cos_i+C|
-                    # as well — a near-zero denominator would encode ±inf
-                    # into the tile and poison downstream aggregates
-                    lit = (ci > 0.05) & (np.abs(ci + C) > 0.05)
-                    corr = np.where(lit, v * (np.cos(sz) + C)
-                                    / np.where(lit, ci + C, 1.0),
-                                    v).astype(np.float32)
-                rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             "c_factor": C, **tile_row(corr, fmt_out)})
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return joined2.mapInPandas(correct, schema=out_schema)
+    return apply_aligned(joined.join(F.broadcast(stats), scene_key), key_cols,
+                         correct, fmt_out, meta_cols=["c_factor"])
 
 
 # ------------------------------------------------------ gap fill (J9) ------
@@ -231,41 +202,16 @@ def cloud_fill_scene(target: DataFrame, replacement: DataFrame, mask: DataFrame,
                      grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty"),
                      window: int = 8, fmt_out: str = "zlib") -> DataFrame:
     """Whole-scene cloud fill: the 3 tile tables are aligned by tile key,
-    then ONE applyInPandas group per scene assembles the mosaics and runs
-    ring_fill_np across the full scene — fill regions that cross tile
+    then ONE group per scene runs ring_fill_np across the assembled
+    mosaics (:func:`raster.scene_map`) — fill regions that cross tile
     boundaries grow correctly (the reference's ProcessFullImage semantics,
     StepwiseLocalRadiometricAdjustment.py:67-234). Scene size is bounded
     by executor memory, exactly the cti_scene tradeoff; use per-tile
     :func:`cloud_fill` when masks never span tiles."""
-    scn, txc, tyc = grid_cols
-    t = target.select(*grid_cols, F.col("bytes").alias("b_t"))
-    r = replacement.select(*grid_cols, F.col("bytes").alias("b_r"))
-    m = mask.select(*grid_cols, F.col("bytes").alias("b_m"))
-    joined = t.join(r, list(grid_cols)).join(m, list(grid_cols))
-    out_schema = T.StructType([target.schema[c] for c in grid_cols] + TILE_FIELDS)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        txs = pdf[txc].to_numpy()
-        tys = pdf[tyc].to_numpy()
-        W = (txs.max() + 1) * tile
-        H = (tys.max() + 1) * tile
-        full = {c: np.zeros((H, W), np.float64) for c in ("t", "r", "m")}
-        for i in range(len(pdf)):
-            sl = (slice(tys[i] * tile, (tys[i] + 1) * tile),
-                  slice(txs[i] * tile, (txs[i] + 1) * tile))
-            full["t"][sl] = codec.decode(bytes(pdf["b_t"].iloc[i]))[0]
-            full["r"][sl] = codec.decode(bytes(pdf["b_r"].iloc[i]))[0]
-            full["m"][sl] = codec.decode(bytes(pdf["b_m"].iloc[i]))[0]
-        filled = ring_fill_np(full["t"], full["r"], full["m"], window)
-        rows = []
-        for i in range(len(pdf)):
-            t_out = filled[tys[i] * tile:(tys[i] + 1) * tile,
-                           txs[i] * tile:(txs[i] + 1) * tile]
-            rows.append({scn: key[0], txc: int(txs[i]), tyc: int(tys[i]),
-                         **tile_row(t_out, fmt_out)})
-        return pd.DataFrame(rows)
-
-    return joined.groupBy(scn).applyInPandas(run, schema=out_schema)
+    joined = join_tiles([target.select(*grid_cols, "bytes"), replacement, mask],
+                        grid_cols)
+    return scene_map(joined, tile, grid_cols,
+                     lambda full, meta: ring_fill_np(*full, window), fmt_out)
 
 
 def cloud_fill(target: DataFrame, replacement: DataFrame, mask: DataFrame,
@@ -275,21 +221,7 @@ def cloud_fill(target: DataFrame, replacement: DataFrame, mask: DataFrame,
     — the distributed shape of SURVEY.md J9 (per-tile; use
     :func:`cloud_fill_scene` when fill regions cross tile boundaries —
     the reference forces whole-image processing for exactly that reason)."""
-    t = target.select(*key_cols, F.col("bytes").alias("b_t"))
-    r = replacement.select(*key_cols, F.col("bytes").alias("b_r"))
-    m = mask.select(*key_cols, F.col("bytes").alias("b_m"))
-    joined = t.join(r, key_cols).join(m, key_cols)
-    out_schema = T.StructType([target.schema[c] for c in key_cols] + TILE_FIELDS)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                pt = codec.decode(bytes(pdf["b_t"].iloc[i]))[0]
-                pr = codec.decode(bytes(pdf["b_r"].iloc[i]))[0]
-                pm = codec.decode(bytes(pdf["b_m"].iloc[i]))[0]
-                rows.append({**{c: pdf[c].iloc[i] for c in key_cols},
-                             **tile_row(ring_fill_np(pt, pr, pm, window), fmt_out)})
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return joined.mapInPandas(run, schema=out_schema)
+    joined = join_tiles([target.select(*key_cols, "bytes"), replacement, mask],
+                        key_cols)
+    return apply_aligned(joined, key_cols, lambda parts, meta: ring_fill_np(
+        parts[0][0], parts[1][0], parts[2][0], window), fmt_out)

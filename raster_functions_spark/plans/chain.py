@@ -30,9 +30,8 @@ from typing import Callable
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..raster import TILE_COLS, TILE_FIELDS, TileOp, apply_chain, tile_columns, tile_row
+from ..raster import TileOp, apply_aligned, apply_chain, join_tiles
 from ..operators import effects, focal, pointwise
 
 REGISTRY: dict[str, Callable[..., TileOp]] = {
@@ -120,39 +119,15 @@ def parse_chain(spec) -> list[TileOp]:
 
 def stack_tiles(dfs: list[DataFrame], fmt_out: str = "zlib",
                 grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty")) -> DataFrame:
-    """Band-concatenate co-registered tile tables: equi-join on the grid
-    keys (AQE broadcasts/splits as sizes dictate — same alignment shape as
-    multiraster.two_raster_op), decode each side once, stack bands,
-    re-encode. Non-pixel metadata columns ride along from the first table."""
-    from .. import codec
-
+    """Band-concatenate co-registered tile tables: align them on the grid
+    keys (:func:`raster.join_tiles` — a branch that reduced away part of
+    the grid, such as a mosaic composite keyed by tile position only,
+    attaches its composite to every member row), decode each side once,
+    stack bands as f4, re-encode. Non-pixel metadata columns ride along
+    from the first table."""
     keys = [c for c in grid_cols if c in dfs[0].columns]
-    base = dfs[0].withColumnRenamed("bytes", "_b0").drop(
-        *[c for c in TILE_COLS[1:] if c in dfs[0].columns])
-    joined = base
-    for k, d in enumerate(dfs[1:], start=1):
-        # a branch that reduced away part of the grid (a mosaic composite
-        # keyed by tile position only) joins on the keys it still carries —
-        # the member-level rows each pick up their group's composite
-        dk = [c for c in keys if c in d.columns]
-        joined = joined.join(
-            d.select(*dk, F.col("bytes").alias(f"_b{k}")), dk)
-    bcols = [f"_b{k}" for k in range(len(dfs))]
-    keep = [c for c in joined.columns if c not in bcols]
-    out_schema = T.StructType([joined.schema[c] for c in keep] + TILE_FIELDS)
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for r in range(len(pdf)):
-                parts = [codec.decode(bytes(pdf[c].iloc[r])) for c in bcols]
-                if any(p.shape[1:] != parts[0].shape[1:] for p in parts):
-                    raise ValueError("stack_tiles: branch tile shapes differ")
-                rows.append(tile_row(np.concatenate(
-                    [p.astype(np.float32) for p in parts], axis=0), fmt_out))
-            yield pdf[keep].assign(**tile_columns(rows))
-
-    return joined.mapInPandas(run, schema=out_schema)
+    return apply_aligned(join_tiles(dfs, keys), keys, lambda parts, meta: np.concatenate(
+        [p.astype(np.float32) for p in parts], axis=0), fmt_out)
 
 
 def _resolve_ctx_args(args: dict, ctx: dict | None) -> dict:

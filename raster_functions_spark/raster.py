@@ -22,6 +22,22 @@ container's type and format codes), always equal to
 :data:`TILE_FIELDS` after its own key/meta columns and fills them with
 :func:`tile_row`, which reads shape and dtype off the encoded array, so
 no emitter restates them.
+
+Every tile operator has one of five shapes, each with one owner:
+
+- chain — zero-padding :class:`TileOp` kernels fused into one pass:
+  :func:`chained_tiles` (the decode → ops loop) behind
+  :func:`apply_chain` (tiles out) and :func:`tile_stats` (scalars out);
+- halo — padded ops over a tile and its neighbours' edge strips:
+  :func:`operators.focal.apply_focal`;
+- stack — reductions over a group of co-registered members:
+  ``operators.stack._composite`` (full stack) and
+  ``_partial_tiles`` / ``_merge_partials`` (map-side partials);
+- aligned multi-input — several co-registered tables, one kernel over
+  the decoded sides: :func:`join_tiles` (the alignment join),
+  :func:`aligned_tiles` (the decode loop) and :func:`apply_aligned`;
+- whole scene — a kernel over each scene's assembled mosaic:
+  :func:`scene_map`.
 """
 
 from __future__ import annotations
@@ -163,6 +179,97 @@ def tile_stats(df: DataFrame, ops: list[TileOp],
             yield out
 
     return df.mapInPandas(run, schema=out_schema)
+
+
+# ------------------------------------------- aligned multi-input tiles --
+
+def join_tiles(dfs: list[DataFrame], keys: Iterable[str]) -> DataFrame:
+    """Align co-registered tile tables — the reference's several
+    ``pixelBlocks`` (grid-alignment join J4): every table after the first
+    is equi-joined on the ``keys`` it carries, so a side reduced to fewer
+    keys (a composite keyed by tile position only) attaches to every
+    matching row. The first table keeps its non-tile columns; table
+    ``k``'s ``bytes`` becomes column ``_b{k}``."""
+    keys = list(keys)
+    out = dfs[0].withColumnRenamed("bytes", "_b0").drop(*TILE_COLS[1:])
+    for k, d in enumerate(dfs[1:], start=1):
+        dk = [c for c in keys if c in d.columns]
+        out = out.join(d.select(*dk, F.col("bytes").alias(f"_b{k}")), dk)
+    return out
+
+
+def _sides(columns: Iterable[str]) -> list[str]:
+    """The ``_b{k}`` tile columns of a :func:`join_tiles` table, in order."""
+    return [c for c in columns if c.startswith("_b") and c[2:].isdigit()]
+
+
+def aligned_tiles(keys: Iterable[str], meta_cols: Iterable[str] = ()) -> Callable:
+    """The one decode loop over :func:`join_tiles` rows: ``tiles(pdf)``
+    yields ``(parts, meta)`` per row — every side decoded once, in table
+    order, and the row's ``meta_cols`` values. Raises ``ValueError``
+    naming the row's ``keys`` when the sides' ``(h, w)`` differ."""
+    keys, meta_cols = list(keys), list(meta_cols)
+
+    def tiles(pdf: pd.DataFrame):
+        sides = _sides(pdf.columns)
+        for r in range(len(pdf)):
+            parts = [codec.decode(bytes(pdf[c].iloc[r])) for c in sides]
+            if len({p.shape[1:] for p in parts}) > 1:
+                at = ", ".join(f"{c}={pdf[c].iloc[r]}" for c in keys)
+                raise ValueError(f"aligned tiles differ in (h, w) at {at}: "
+                                 f"{[p.shape[1:] for p in parts]}")
+            yield parts, {c: pdf[c].iloc[r] for c in meta_cols}
+
+    return tiles
+
+
+def apply_aligned(joined: DataFrame, keys: Iterable[str], fn: Callable,
+                  fmt_out: str = "zlib", meta_cols: Iterable[str] = ()) -> DataFrame:
+    """Run ``fn(parts, meta) -> px`` over every row of a :func:`join_tiles`
+    table: returns its non-tile columns with the tile-row columns of
+    ``px`` appended."""
+    tiles = aligned_tiles(keys, meta_cols)
+    keep = [c for c in joined.columns if c not in _sides(joined.columns)]
+    out_schema = T.StructType([joined.schema[c] for c in keep] + TILE_FIELDS)
+
+    def run(batches):
+        for pdf in batches:
+            rows = [tile_row(fn(parts, meta), fmt_out) for parts, meta in tiles(pdf)]
+            yield pdf[keep].assign(**tile_columns(rows))
+
+    return joined.mapInPandas(run, schema=out_schema)
+
+
+def scene_map(joined: DataFrame, tile: int, grid_cols: tuple[str, str, str],
+              fn: Callable, fmt_out: str = "zlib",
+              meta_cols: Iterable[str] = ()) -> DataFrame:
+    """Whole-scene operator (the reference's ``ProcessFullImage``) over a
+    :func:`join_tiles` table of ``tile``×``tile`` tiles: one group per
+    scene assembles band 0 of every side into a float64 mosaic from the
+    ``(tx, ty)`` grid, runs ``fn(mosaics, meta) -> (H, W)`` with the
+    scene's first-row ``meta_cols`` values, and re-tiles the result with
+    :func:`tile_row`. Scene size is bounded by executor memory."""
+    scn, txc, tyc = grid_cols
+    meta_cols = list(meta_cols)
+    sides = _sides(joined.columns)
+    tiles = aligned_tiles(grid_cols)
+    out_schema = T.StructType([joined.schema[c] for c in grid_cols] + TILE_FIELDS)
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        txs, tys = pdf[txc].to_numpy(), pdf[tyc].to_numpy()
+        mosaics = [np.zeros(((tys.max() + 1) * tile, (txs.max() + 1) * tile))
+                   for _ in sides]
+        wins = [(slice(ty * tile, (ty + 1) * tile), slice(tx * tile, (tx + 1) * tile))
+                for tx, ty in zip(txs, tys)]
+        for win, (parts, _) in zip(wins, tiles(pdf)):
+            for m, p in zip(mosaics, parts):
+                m[win] = p[0]
+        out = fn(mosaics, {c: pdf[c].iloc[0] for c in meta_cols})
+        return pdf[list(grid_cols)].assign(
+            **tile_columns([tile_row(out[win], fmt_out) for win in wins]))
+
+    return (joined.select(*grid_cols, *meta_cols, *sides).groupBy(scn)
+            .applyInPandas(run, schema=out_schema))
 
 
 def update_key_metadata(df: DataFrame, band_index: int | None = None,

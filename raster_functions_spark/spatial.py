@@ -680,24 +680,24 @@ def knn_geo(df: DataFrame, k: int, theta0: float, id_col: str = "id",
     unsat_df = pts.join(sat, pts[id_col] == sat["_sat"], "left_anti")
     # r7 guard (VERDICT r6 #2): the fallback materializes the unsat set on
     # the driver and broadcasts it as a dense matrix — "bounded" was an
-    # assumption about theta0, not an invariant. COUNT first; a mis-sized
-    # theta0 on a sparse corpus now auto-escalates theta0 geometrically
-    # (×4 per step — the grid phase stays exact under ANY theta0 by the
-    # same proof) instead of OOMing the driver, and raises with sizing
-    # guidance once the widening budget is spent.
-    n_unsat = unsat_df.limit(max_fallback + 1).count()
-    if n_unsat > max_fallback:
+    # assumption about theta0, not an invariant. Collect at most one row
+    # past the cap (one evaluation of the anti-join per widen step); a
+    # mis-sized theta0 on a sparse corpus now auto-escalates theta0
+    # geometrically (×4 per step — the grid phase stays exact under ANY
+    # theta0 by the same proof) instead of OOMing the driver, and raises
+    # with sizing guidance once the widening budget is spent.
+    unsat = unsat_df.limit(max_fallback + 1).toPandas()
+    if len(unsat) > max_fallback:
         if auto_widen > 0:
             return knn_geo(df, k, 4.0 * theta0, id_col, lat_col, lon_col,
                            max_abs_lat, max_fallback=max_fallback,
                            auto_widen=auto_widen - 1)
         raise ValueError(
-            f"knn_geo: >{max_fallback} points ({n_unsat}+) fail the grid "
+            f"knn_geo: >{max_fallback} points fail the grid "
             f"guarantee at theta0={theta0!r} even after widening — the "
             "corpus is too sparse for this theta0; pass a larger theta0 "
             "(the k-th-neighbor angle for typical points) or raise "
             "max_fallback if the driver can hold the matrix")
-    unsat = unsat_df.toPandas()   # ≤ max_fallback rows by the guard above
     if len(unsat) == 0:
         return phase1
     q_id = unsat[id_col].to_numpy()

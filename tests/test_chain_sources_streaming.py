@@ -49,6 +49,27 @@ def test_chain_with_focal_stage(spark):
         assert np.allclose(got, want.astype(np.float32), atol=1e-5)
 
 
+def test_stack_tiles_subset_key_branch(spark):
+    """A branch keyed by tile position only (a composite over the scenes)
+    attaches its tile to every member row with that position."""
+    members = fixtures.dem_scene_df(spark, "m0", 2, 2, 8).unionByName(
+        fixtures.dem_scene_df(spark, "m1", 2, 2, 8))
+    comp = spark.createDataFrame(
+        [(tx, ty, codec.encode(np.full((1, 8, 8), 10 * tx + ty, np.uint8)))
+         for tx in range(2) for ty in range(2)], "tx long, ty long, bytes binary")
+    z = fixtures.dem_scene(2, 2, 8)
+    out = chain.stack_tiles([members, comp], fmt_out="raw").collect()
+    assert sorted((r["scene_id"], r["tx"], r["ty"]) for r in out) == [
+        (s, tx, ty) for s in ("m0", "m1") for tx in range(2) for ty in range(2)]
+    for r in out:
+        px = codec.decode(bytes(r["bytes"]))
+        assert (px.shape, px.dtype, r["bands"], r["cell_dx"]) == (
+            (2, 8, 8), np.float32, 2, fixtures.CELL_DEG)
+        tx, ty = r["tx"], r["ty"]
+        assert np.array_equal(px[0], z[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8])
+        assert (px[1] == 10 * tx + ty).all()
+
+
 def test_chain_unknown_op():
     with pytest.raises(ValueError, match="unknown operator"):
         chain.parse_chain([{"op": "does_not_exist"}])

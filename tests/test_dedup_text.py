@@ -55,6 +55,21 @@ def test_minhash_lsh_rejects_unsafe_shingle_k(spark, k):
         dedup.minhash_lsh_candidates(df, k=k)
 
 
+@pytest.mark.parametrize("max_bucket", [1000, 1])
+def test_lsh_rejects_null_ids(spark, max_bucket):
+    """A NULL id would be skipped as minhash's bucket canonical but elected
+    canonical by SimHash's carry branch: both raise, salted or not."""
+    base = "the quick brown fox jumps over the lazy dog " * 8
+    df = spark.createDataFrame([(None, base), (1, base), (2, base)],
+                               "doc_id long, text string")
+    for build in (lambda: dedup.minhash_lsh_candidates(df, n_hashes=8, bands=8,
+                                                       max_bucket=max_bucket),
+                  lambda: dedup.simhash_near_dups(df, max_hamming=8,
+                                                  max_bucket=max_bucket)):
+        with pytest.raises(Exception, match="NULL id"):
+            build().collect()
+
+
 def test_minhash_signature_matches_duckdb(spark, docs, docs_pdf):
     """The md5-minhash signature must be byte-identical across engines."""
     n_hashes = 4

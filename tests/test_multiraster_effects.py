@@ -124,6 +124,21 @@ def test_cloud_fill_pipeline(spark):
     assert np.allclose(got, 80.0, atol=1e-6)
 
 
+def test_aligned_ops_reject_mismatched_tile_shapes(spark):
+    """Sides whose tiles differ in (h, w) at the same key raise one
+    ValueError naming the row's keys, instead of broadcasting or failing
+    inside the kernel."""
+    big = fixtures.dem_scene_df(spark, "s", 1, 1, 32)
+    small = fixtures.dem_scene_df(spark, "s", 1, 1, 16)
+    keys = ["scene_id", "tx", "ty"]
+    for build in (lambda: mr.two_raster_op(big, small, mr.dnbr_fn(0, 0), keys),
+                  lambda: mr.cloud_fill(big, small, big, keys),
+                  lambda: mr.cloud_fill(small, small, big, keys)):
+        with pytest.raises(Exception, match=r"aligned tiles differ in \(h, w\) at "
+                                            r"scene_id=s, tx=0, ty=0"):
+            build().collect()
+
+
 def test_cubism_blocks_constant():
     px = np.arange(64, dtype=np.float32).reshape(1, 8, 8)
     out = effects.cubism(block=4).apply(px, {})

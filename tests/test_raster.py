@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from raster_functions_spark import codec, fixtures
+from raster_functions_spark import codec, fixtures, multimodal
 from raster_functions_spark.operators import (
     focal, hydro, ml, multiraster as mr, pointwise, pyramid, stack)
 from raster_functions_spark.plans import chain
@@ -48,6 +48,10 @@ def _emitters(spark) -> dict[str, DataFrame]:
         "hydro.finalize_raw": hydro.flow_accumulation_distributed(
             dem, TILE, fmt_out="raw"),
         "hydro.cti_scene": hydro.cti_scene(dem, TILE),
+        "multimodal.resize_tiles": multimodal.resize_tiles(dem, 4, 4, fmt_out="raw"),
+        "multimodal.frame_sample": multimodal.frame_sample(stk, 2),
+        "multimodal.augment_tiles": multimodal.augment_tiles(dem, 4, 6, fmt_out="raw"),
+        "multimodal.patchify_tiles": multimodal.patchify_tiles(stk, 4, 4, fmt_out="raw"),
     }
 
 
@@ -70,6 +74,7 @@ def test_every_tile_emitter_matches_its_header(spark):
     assert ("raster.apply_chain", "u2") in dtypes
     assert ("hydro.finalize", "f8") in dtypes
     assert ("multiraster.cloud_fill", "f4") in dtypes
+    assert ("multimodal.patchify_tiles", "u2") in dtypes
 
 
 def test_tile_row_reads_shape_and_dtype_off_the_array():
