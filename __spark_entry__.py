@@ -1565,12 +1565,13 @@ def q_sketch_quantile_stream(spark, sf_dir):
 def q_geo_compact_cover(spark, sf_dir):
     """H3/S2-style compact(): the minimal mixed-resolution cell set whose
     res-9 descendants exactly tile a bbox cover — what an index-metadata
-    layer stores per AOI (O(perimeter) cells, not O(area)). Closed-form
-    containment tests per resolution over spark.range arms (no driver
-    materialization, no iteration); the oracle re-derives the cover
-    rectangle from the bbox literals and replays the same integer
-    math. pytest separately proves closed form == iterated
-    complete-sibling-group merging."""
+    layer stores per AOI (O(perimeter) cells, not O(area)). One
+    mapInPandas compacts the cover rectangle as one column run per row,
+    level by level (full and parent not full, no iteration over cells);
+    the oracle re-derives the cover rectangle from the bbox literals and
+    replays the closed-form containment tests per resolution. pytest
+    separately proves closed form == iterated complete-sibling-group
+    merging."""
     from raster_functions_spark import grid
     out = grid.compact_cover_df(spark, -10.0, -5.0, 25.0, 30.0, 9)
     return out.select("cell", "res").orderBy("cell")
@@ -1693,12 +1694,12 @@ def q_sketch_quantile(spark, sf_dir):
 
 def q_geo_polyfill(spark, sf_dir):
     """H3/S2-style polyfill + compact over three fixture AOI polygons at
-    res 11: cells whose center passes the even-odd PIP, compacted to the
-    minimal mixed-resolution set via the count closed form (ancestor
-    full ⟺ 4^(res−r) kept descendants; emit fulls with non-full
-    parents) — two shuffles, no sibling-merge iteration. The oracle
-    re-derives the rings in SQL and replays membership + compaction
-    independently."""
+    res 11: cells whose center passes the even-odd PIP, as scanline
+    column runs per cell row, compacted to the minimal mixed-resolution
+    set (emit fulls with non-full parents, level by level over the runs)
+    — one mapInPandas, no shuffle. The oracle re-derives the rings in
+    SQL and replays membership per cell plus the count closed form
+    (ancestor full ⟺ 4^(res−r) kept descendants) independently."""
     from raster_functions_spark import fixtures, spatial
     rings = [(k, *fixtures.aoi_ring(k)) for k in (0, 1, 2)]
     out = spatial.polyfill_compact(spark, rings, 11)
@@ -2841,7 +2842,9 @@ def oracle_sql() -> dict[str, str]:
             "events", "value", "event_type", "grp",
             [0.5, 0.95, 0.99], lo=0.0, hi=500.0, bins=256),
         "text_vocab": _text.vocab_sql("documents", top_n=15),
-        "geo_knn": _orc.geo_knn_sql(3, 7, 15.0),
+        # the lat band must exceed the largest k-th-NN angle (25.6° at
+        # sf0.001, where the points are sparsest)
+        "geo_knn": _orc.geo_knn_sql(3, 7, 30.0),
         "dedup_winnow_pairs": _text.winnow_pairs_sql("documents"),
         "mm_shards": _orc.shards_sql(120, 1 << 16),
         # lossless count-additive merge => oracle is the one-shot sketch

@@ -437,11 +437,6 @@ def simhash64_udf(text_col: str = "text", token_split: str = " "):
     return simhash(F.col(text_col))
 
 
-def hamming64_col(a, b):
-    """Popcount of XOR via bit-count — JVM-side."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-
 def band_masks(max_hamming: int, band_bits: int = 16) -> list[int]:
     """Bit-band masks whose count GUARANTEES candidate generation for every
     pair within ``max_hamming`` (pigeonhole: h differing bits cannot touch

@@ -18,7 +18,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
@@ -423,23 +422,6 @@ def zones_pdf(n_zones: int = 20) -> pd.DataFrame:
 
 def zones_df(spark: SparkSession, n_zones: int = 20) -> DataFrame:
     return spark.createDataFrame(zones_pdf(n_zones))
-
-
-# --------------------------------------------------------- stack meta ------
-
-def stack_meta_df(spark: SparkSession, n_scenes: int, acq_per_scene: int = 24) -> DataFrame:
-    """Per-acquisition key metadata (AcquisitionDate, sun angles) for the
-    time-stack composites — mirrors rasters_keyMetadata
-    (/root/reference/functions/PercentAboveThreshold.py:80,98)."""
-    df = (spark.range(n_scenes * acq_per_scene)
-          .withColumn("scene_id", F.concat(F.lit("scene"), (F.col("id") / acq_per_scene).cast("long")))
-          .withColumn("seq", (F.col("id") % acq_per_scene).cast("int"))
-          .withColumn("image_id", F.concat(F.lit("img"), F.lpad(F.col("id").cast("string"), 9, "0")))
-          .withColumn("acq_date", F.expr("timestampadd(MONTH, seq, timestamp'1985-01-15 00:00:00')"))
-          .withColumn("acq_days", F.expr("datediff(acq_date, date'1900-01-01') * 1.0"))
-          .withColumn("sun_azimuth", 90.0 + (F.col("id") * 37 % 180).cast("double"))
-          .withColumn("sun_elevation", 20.0 + (F.col("id") * 13 % 50).cast("double")))
-    return df.drop("id")
 
 
 # ------------------------------------------------- DEM scenes (halo) -------

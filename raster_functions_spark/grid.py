@@ -31,8 +31,10 @@ cell ids match bit-for-bit (BASELINE.json requires bit-exact cell ids).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MAX_RES = 15
 RES_BITS = 4
@@ -311,84 +313,82 @@ def compact_cover_np(xmin: float, ymin: float, xmax: float, ymax: float,
     return np.concatenate(out) if out else np.empty(0, np.int64)
 
 
+def _runs_where(j, lo, hi, w, want: int):
+    """Maximal runs of each row ``j`` where the summed weight ``w`` of the
+    runs ``[lo, hi)`` covering a column equals ``want`` (> 0): one sorted
+    sweep of +w/-w events, so touching runs merge."""
+    if not len(j):
+        return j, lo, hi
+    key = np.concatenate([j, j])
+    x = np.concatenate([lo, hi])
+    d = np.concatenate([w, -w])
+    o = np.lexsort((x, key))
+    key, x, d = key[o], x[o], d[o]
+    at = np.flatnonzero(np.r_[True, (key[1:] != key[:-1]) | (x[1:] != x[:-1])])
+    d = np.add.reduceat(d, at)
+    at = at[d != 0]  # one run ending where another starts: no boundary
+    key, x, d = key[at], x[at], d[d != 0]
+    # every row nets to zero, so one running sum serves all rows, and a
+    # run at ``want`` > 0 always ends inside its own row
+    s = np.flatnonzero(np.cumsum(d)[:-1] == want)
+    return key[s], x[s], x[s + 1]
+
+
+def compact_runs(runs, res: int) -> np.ndarray:
+    """H3/S2 ``compact()`` of a res-``res`` cell set given as row runs
+    ``(j, lo, hi)``: half-open column runs ``[lo, hi)`` per cell row
+    ``j``, disjoint within a row (touching is fine). Closed form, level by
+    level: one level up, the full blocks are the aligned intersection of
+    the two child rows' full runs, and a block is emitted when it is full
+    and its parent is not — the iterated complete-sibling merge in
+    O(runs × levels), never O(area). Returns the cell ids."""
+    j, lo, hi = (np.asarray(a, dtype=np.int64) for a in runs)
+    out = []
+    for r in range(res, -1, -1):
+        if not len(j):
+            break
+        one = np.ones_like(j)
+        # full parents (none above the root): both child rows cover the
+        # aligned column pair
+        pj, plo, phi = _runs_where(j >> 1, lo, hi, one, 2) if r else (j[:0],) * 3
+        plo, phi = (plo + 1) >> 1, phi >> 1
+        ok = plo < phi
+        pj, plo, phi = pj[ok], plo[ok], phi[ok]
+        # emit the full cells not under a full parent
+        ej, elo, ehi = _runs_where(
+            np.concatenate([j, 2 * pj, 2 * pj + 1]),
+            np.concatenate([lo, 2 * plo, 2 * plo]),
+            np.concatenate([hi, 2 * phi, 2 * phi]),
+            np.concatenate([one, np.full(2 * len(pj), 2)]), 1)
+        n = ehi - elo
+        i = np.arange(n.sum()) + np.repeat(elo - (np.cumsum(n) - n), n)
+        out.append(ij_to_cell(i, np.repeat(ej, n), r))
+        j, lo, hi = pj, plo, phi
+    return np.concatenate(out) if out else np.empty(0, np.int64)
+
+
 def compact_cover_df(spark, xmin: float, ymin: float, xmax: float,
                      ymax: float, res: int):
-    """Distributed :func:`compact_cover_np`, restricted to the candidate
-    cells that can actually be emitted: a cell at resolution ``r`` is
-    kept only when its PARENT is not fully covered, and since the cover
-    rectangle is contiguous, only the first/last parent row/column along
-    each axis can be partially covered — so candidates live in the ≤
-    2-cell-wide bands under those boundary parents. Each resolution arm
-    therefore enumerates O(perimeter) cells, not O(area): a res-15
-    hemisphere cover has ~10^8 rectangle cells but only ~10^5 band
-    candidates. The deepest bands still generate via ``spark.range`` (no
-    driver materialization). The O(area) NumPy form is the semantic
-    reference; pytest pins df == np."""
+    """Distributed :func:`compact_cover_np`: the cover rectangle, one run
+    per cell row, goes through :func:`compact_runs` inside one
+    ``mapInPandas`` — O(rows × levels) work, never O(area) (a res-15
+    hemisphere cover has ~10^8 rectangle cells but ~10^4 rows). The
+    O(area) NumPy form is the semantic reference; pytest pins
+    df == np."""
     i0, i1, j0, j1 = _cover_ranges(xmin, ymin, xmax, ymax, res)
-    frames = []
-    for r in range(res + 1):
-        sh = res - r
-        ia0, ia1 = i0 >> sh, i1 >> sh
-        ja0, ja1 = j0 >> sh, j1 >> sh
-        if r == 0:
-            # root arm: whole (tiny) rectangle, no parent to test
-            band_i = list(range(ia0, ia1 + 1))
-            full_j = (ja0, ja1)
-        else:
-            # children of the boundary parents along each axis
-            band_i = sorted({v for p in (ia0 >> 1, ia1 >> 1)
-                             for v in (2 * p, 2 * p + 1)
-                             if ia0 <= v <= ia1})
-            full_j = (ja0, ja1)
-        w = ia1 - ia0 + 1
-        hgt = ja1 - ja0 + 1
-        # band A: boundary-parent columns × all rows
-        na = len(band_i) * hgt
-        dfa = spark.range(na).select(
-            F.element_at(F.array(*[F.lit(v) for v in band_i]),
-                         (F.col("id") % len(band_i) + 1).cast("int")
-                         ).alias("i"),
-            (F.lit(full_j[0]) + (F.col("id") / len(band_i)).cast("long")
-             ).alias("j"))
-        if r == 0:
-            df = dfa
-        else:
-            band_j = sorted({v for p in (ja0 >> 1, ja1 >> 1)
-                             for v in (2 * p, 2 * p + 1)
-                             if ja0 <= v <= ja1})
-            # band B: all columns × boundary-parent rows, minus band A
-            nb = w * len(band_j)
-            dfb = (spark.range(nb).select(
-                (F.lit(ia0) + F.col("id") % w).alias("i"),
-                F.element_at(F.array(*[F.lit(v) for v in band_j]),
-                             ((F.col("id") / w).cast("long") % len(band_j)
-                              + 1).cast("int")).alias("j"))
-                .filter(~F.col("i").isin(band_i)))
-            df = dfa.unionByName(dfb)
-        full = ((F.shiftleft(F.col("i"), sh) >= i0)
-                & (F.shiftleft(F.col("i"), sh) + ((1 << sh) - 1) <= i1)
-                & (F.shiftleft(F.col("j"), sh) >= j0)
-                & (F.shiftleft(F.col("j"), sh) + ((1 << sh) - 1) <= j1))
-        if r == 0:
-            keep = full
-        else:
-            sh2 = sh + 1
-            pi = F.shiftright(F.col("i"), 1)
-            pj = F.shiftright(F.col("j"), 1)
-            pfull = ((F.shiftleft(pi, sh2) >= i0)
-                     & (F.shiftleft(pi, sh2) + ((1 << sh2) - 1) <= i1)
-                     & (F.shiftleft(pj, sh2) >= j0)
-                     & (F.shiftleft(pj, sh2) + ((1 << sh2) - 1) <= j1))
-            keep = full & ~pfull
-        morton = _spread_col(F.col("i")).bitwiseOR(
-            F.shiftleft(_spread_col(F.col("j")), 1))
-        cell = F.shiftleft(morton, RES_BITS).bitwiseOR(F.lit(r))
-        frames.append(df.filter(keep).select(cell.alias("cell"),
-                                             F.lit(r).alias("res")))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+
+    def cover(batches):
+        for pdf in batches:
+            if len(pdf):
+                j = np.arange(j0, j1 + 1)
+                cells = compact_runs((j, np.full_like(j, i0),
+                                      np.full_like(j, i1 + 1)), res)
+                yield pd.DataFrame({"cell": cells,
+                                    "res": cell_res(cells).astype(np.int32)})
+
+    return spark.range(1, numPartitions=1).mapInPandas(cover, T.StructType([
+        T.StructField("cell", T.LongType()),
+        T.StructField("res", T.IntegerType(), False)]))
 
 
 def compact_cover_sql(xmin: float, ymin: float, xmax: float, ymax: float,

@@ -54,15 +54,6 @@ def mask_raster_fn(nodata: float = 0.0):
     return fn
 
 
-def arithmetic_fn(op: str):
-    f = {"add": np.add, "sub": np.subtract, "mul": np.multiply, "div": np.divide}[op]
-    def fn(pa, pb):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = f(pa.astype(np.float64), pb.astype(np.float64))
-        return np.nan_to_num(out, nan=0.0, posinf=0.0, neginf=0.0).astype(np.float32)
-    return fn
-
-
 # ---------------------------------------------- topographic correction -----
 
 def topographic_c_correction(dem: DataFrame, image: DataFrame,

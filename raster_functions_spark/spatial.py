@@ -54,6 +54,39 @@ def point_in_polygon_np(px: np.ndarray, py: np.ndarray,
     return inside
 
 
+def polygon_runs(xs, ys, res: int):
+    """Scanline cover of one ring at ``res`` (Raptor, VLDB'19): per cell
+    row ``j`` of the ring's bbox, the half-open column runs ``[lo, hi)``
+    of cells whose CENTER passes the even-odd test. Each edge visits only
+    the rows its y-span crosses and uses :func:`point_in_polygon_np`'s
+    exact ``xint`` arithmetic, so membership is bit-identical to testing
+    every centre at O(edges + crossings), not O(bbox area). Returns
+    ``(j, lo, hi)`` int64 arrays sorted by ``(j, lo)``; runs of one row
+    never touch."""
+    n = 1 << res
+    x0 = np.asarray(xs, dtype=np.float64)
+    y0 = np.asarray(ys, dtype=np.float64)
+    i0, j0 = grid.lonlat_to_ij(float(x0.min()), float(y0.min()), res)
+    i1, j1 = grid.lonlat_to_ij(float(x0.max()), float(y0.max()), res)
+    lon = (np.arange(i0, i1 + 1) + 0.5) / n * 360.0 - 180.0
+    lat = (np.arange(j0, j1 + 1) + 0.5) / n * 180.0 - 90.0
+    rows, cols = [], []
+    for ex0, ey0, ex1, ey1 in zip(x0, y0, np.roll(x0, -1), np.roll(y0, -1)):
+        # the edge crosses the centre rows with min(ey) <= lat < max(ey)
+        a, b = np.searchsorted(lat, sorted((ey0, ey1)))
+        xint = ex0 + (lat[a:b] - ey0) * (ex1 - ex0) / (ey1 - ey0)
+        rows.append(np.arange(a, b))
+        cols.append(np.searchsorted(lon, xint))  # centres with lon < xint
+    # a crossing flips the parity of every centre left of it; two at the
+    # same (row, column) cancel, so keep the odd-multiplicity flips
+    key, cnt = np.unique(np.concatenate(rows) * (lon.size + 1)
+                         + np.concatenate(cols), return_counts=True)
+    j, t = np.divmod(key[cnt % 2 == 1], lon.size + 1)
+    # a closed ring crosses each row an even number of times: the sorted
+    # flips pair up into runs
+    return j[0::2] + j0, t[0::2] + i0, t[1::2] + i0
+
+
 def polygon_cover_cells(ring_x, ring_y, res: int) -> np.ndarray:
     """Cells at ``res`` intersecting the polygon's bbox (coarse cover used
     as the equi-join key; exact PIP refines). Bbox cover is the analog of
@@ -560,73 +593,40 @@ def polyfill_compact(spark, rings, res: int):
     the cells whose CENTER lies inside the polygon (center-in rule, the
     H3 polyfill convention). ``rings`` is ``[(aoi_id, xs, ys), ...]``.
 
-    Plan shape — two shuffles, no iteration:
-
-    1. per polygon, the bbox cell rectangle at ``res`` generates
-       distributedly (``spark.range``, O(bbox area) candidates — polyfill
-       is inherently area-proportional, exactly like H3's) and the
-       even-odd PIP unrolls the ring's ≤ a-few-dozen edges into ONE
-       codegen boolean expression (zero Python, zero joins);
-    2. every kept cell explodes its ``res + 1`` ancestors; one hash
-       aggregation counts descendants per (polygon, level, ancestor) —
-       an ancestor is fully inside iff its count is ``4^(res - r)`` —
-       and a self-join on the parent level keeps the fulls whose parent
-       is not full. Compaction of an arbitrary kept set needs no
-       sibling-merge loop: the count test IS the closed form.
+    One ``mapInPandas`` over a one-row-per-ring table: each ring's
+    :func:`polygon_runs` scanline cover is compacted by
+    :func:`grid.compact_runs` (full and parent not full, level by level).
+    No shuffle, no union, and the plan does not grow with the number of
+    rings; the work per ring is O(perimeter × levels).
 
     Returns ``(aoi_id, cell, res)`` — what an AOI index stores per
-    polygon (O(perimeter) rows at depth ``res``)."""
-    from pyspark.sql import functions as F
-    from . import grid as _grid
-    if not 0 <= res <= _grid.MAX_RES:
-        raise ValueError(f"res must be in [0, {_grid.MAX_RES}]")
-    n = 1 << res
-    frames = []
-    for aoi_id, xs, ys in rings:
-        i0, j0 = _grid.lonlat_to_ij(float(np.min(xs)), float(np.min(ys)), res)
-        i1, j1 = _grid.lonlat_to_ij(float(np.max(xs)), float(np.max(ys)), res)
-        i0, i1, j0, j1 = int(i0), int(i1), int(j0), int(j1)
-        w = i1 - i0 + 1
-        cand = spark.range(w * (j1 - j0 + 1)).select(
-            (F.lit(i0) + F.col("id") % w).alias("i"),
-            (F.lit(j0) + (F.col("id") / w).cast("long")).alias("j"))
-        lon = (F.col("i") + F.lit(0.5)) / F.lit(float(n)) * 360.0 - 180.0
-        lat = (F.col("j") + F.lit(0.5)) / F.lit(float(n)) * 180.0 - 90.0
-        x0s, y0s = np.asarray(xs, np.float64), np.asarray(ys, np.float64)
-        x1s, y1s = np.roll(x0s, -1), np.roll(y0s, -1)
-        inside = F.lit(False)
-        for ex0, ey0, ex1, ey1 in zip(x0s, y0s, x1s, y1s):
-            crosses = (F.lit(float(ey0)) > lat) != (F.lit(float(ey1)) > lat)
-            xint = (F.lit(float(ex0)) + (lat - F.lit(float(ey0)))
-                    * F.lit(float(ex1 - ex0)) / F.lit(float(ey1 - ey0)))
-            inside = inside != (crosses & (lon < xint))
-        z = _grid._spread_col(F.col("i")).bitwiseOR(
-            F.shiftleft(_grid._spread_col(F.col("j")), 1))
-        frames.append(cand.filter(inside)
-                      .select(F.lit(aoi_id).alias("aoi_id"), z.alias("z")))
-    kept = frames[0]
-    for f in frames[1:]:
-        kept = kept.unionByName(f)
-    anc = kept.select(
-        "aoi_id", F.explode(F.sequence(F.lit(0), F.lit(res))).alias("r"),
-        "z").select(
-        "aoi_id", "r",
-        F.expr(f"shiftright(z, 2 * ({res} - r))").alias("za"))
-    fulls = (anc.groupBy("aoi_id", "r", "za")
-             .agg(F.count(F.lit(1)).alias("cnt"))
-             .filter(F.col("cnt") == F.expr(f"shiftleft(1L, 2 * ({res} - r))"))
-             .select("aoi_id", "r", "za"))
-    par = fulls.select(F.col("aoi_id").alias("_pa"), F.col("r").alias("_pr"),
-                       F.col("za").alias("_pza"))
-    out = (fulls.join(par, (F.col("aoi_id") == F.col("_pa"))
-                      & (F.col("_pr") == F.col("r") - 1)
-                      & (F.col("_pza") == F.expr("shiftright(za, 2)")),
-                      "left")
-           .filter((F.col("r") == 0) | F.col("_pza").isNull())
-           .select("aoi_id",
-                   F.expr(f"shiftleft(za, {4}) | r").alias("cell"),
-                   F.col("r").alias("res")))
-    return out
+    polygon (O(perimeter) rows at depth ``res``). ``aoi_id`` has the type
+    Spark gives the id literals (int, or bigint past the int32 range)."""
+    if not 0 <= res <= grid.MAX_RES:
+        raise ValueError(f"res must be in [0, {grid.MAX_RES}]")
+    ids = [k for k, _, _ in rings]
+    id_type = spark.range(0).select(F.array(F.lit(min(ids)), F.lit(max(ids)))
+                                    ).schema[0].dataType.elementType
+    table = spark.createDataFrame(
+        [(k, np.asarray(xs, np.float64).tolist(), np.asarray(ys, np.float64).tolist())
+         for k, xs, ys in rings],
+        T.StructType([T.StructField("aoi_id", id_type, False),
+                      T.StructField("ring_x", T.ArrayType(T.DoubleType())),
+                      T.StructField("ring_y", T.ArrayType(T.DoubleType()))]))
+
+    def polyfill(batches):
+        for pdf in batches:
+            cells = [grid.compact_runs(polygon_runs(xs, ys, res), res)
+                     for xs, ys in zip(pdf["ring_x"], pdf["ring_y"])]
+            cell = np.concatenate(cells + [np.empty(0, np.int64)])
+            yield pd.DataFrame({
+                "aoi_id": np.repeat(pdf["aoi_id"].to_numpy(), [c.size for c in cells]),
+                "cell": cell, "res": grid.cell_res(cell).astype(np.int32)})
+
+    return table.mapInPandas(polyfill, T.StructType([
+        T.StructField("aoi_id", id_type, False),
+        T.StructField("cell", T.LongType()),
+        T.StructField("res", T.IntegerType(), False)]))
 
 
 def knn_geo(df: DataFrame, k: int, theta0: float, id_col: str = "id",

@@ -11,16 +11,8 @@ acquisition date; watermarked windows handle late acquisitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def read_image_stream(spark: SparkSession, path: str,
-                      schema: T.StructType) -> DataFrame:
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "16")
-            .parquet(path))
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour",

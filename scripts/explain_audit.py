@@ -7,6 +7,8 @@ properties the engine is designed around (SURVEY.md §4):
 - minhash runs as codegen'd hash aggregation (no interpreted HOFs)
 - per-pixel zonal statistics run their zone op in one Python pass
 - a halo-exchange chain scans its tile table once and joins nothing
+- polyfill plans one MapInPandas and no Exchange; neither it nor the
+  compact bbox cover plans a Union
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -384,6 +386,23 @@ def main() -> int:
     ok = len(_re.findall(r"\(\d+\) Scan parquet", p)) == 1 and "Join" not in p
     checks.append(("halo exchange: one parquet scan, no join", ok))
     out += ["\n## build_chain hillshade→stretch\n", p]
+
+    # 28. polyfill + compact: one scanline-cover mapInPandas over a
+    # one-row-per-ring table — no shuffle, no union, and the plan does not
+    # grow with the number of rings
+    ok = True
+    for n_rings in (3, 30):
+        rings = [(k, *fixtures.aoi_ring(k)) for k in range(n_rings)]
+        p = plan_of(_spatial.polyfill_compact(spark, rings, 11))
+        ok &= (len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1
+               and "Exchange" not in p and "Union" not in p)
+        out += [f"\n## polyfill_compact ({n_rings} rings)\n", p]
+    checks.append(("polyfill: one MapInPandas, no Exchange, no Union (3 and 30 rings)", ok))
+
+    # 29. compact bbox cover: one run compaction, no per-resolution arms
+    p = plan_of(grid.compact_cover_df(spark, -10.0, -5.0, 25.0, 30.0, 9))
+    checks.append(("compact bbox cover: no Union", "Union" not in p))
+    out += ["\n## compact_cover_df\n", p]
 
     out.append("\n# Assertions\n")
     failed = 0

@@ -207,16 +207,10 @@ def _bboxes(draw):
     return (xmin, ymin, xmax, ymax, res)
 
 
-@given(_bboxes())
-@settings(max_examples=40, deadline=None)
-def test_compact_cover_property(bbox):
-    """Closed-form compaction == iterated complete-sibling merging, and
-    the compact set's res-R descendants tile the cover exactly."""
+def _sibling_merge(cells, res):
+    """Iterated complete-sibling merging of a res-``res`` cell set."""
     from collections import Counter
-    comp = grid.compact_cover_np(*bbox)
-    cells = set(grid.cover_bbox(*bbox).tolist())
-    final = set()
-    res = bbox[4]
+    cells, final = set(cells), set()
     for r in range(res, 0, -1):
         cur = {c for c in cells if (c & 15) == r}
         rest = cells - cur
@@ -226,7 +220,53 @@ def test_compact_cover_property(bbox):
             pp = int(grid.parent(np.array([c]), r - 1)[0])
             (merged.add(pp) if par[pp] == 4 else final.add(c))
         cells = rest | merged
-    assert set(comp.tolist()) == final | cells
+    return final | cells
+
+
+@given(_bboxes())
+@settings(max_examples=40, deadline=None)
+def test_compact_cover_property(bbox):
+    """Closed-form compaction == iterated complete-sibling merging, and
+    the compact set's res-R descendants tile the cover exactly."""
+    comp = grid.compact_cover_np(*bbox)
+    cells = set(grid.cover_bbox(*bbox).tolist())
+    assert set(comp.tolist()) == _sibling_merge(cells, bbox[4])
+
+
+@st.composite
+def _rings(draw):
+    """Random rings, self-intersecting allowed, with a resolution."""
+    nv = draw(st.integers(3, 12))
+    cx = draw(st.floats(-170.0, 170.0))
+    cy = draw(st.floats(-80.0, 80.0))
+    span = draw(st.floats(0.05, 6.0))
+    off = st.lists(st.floats(-1.0, 1.0), min_size=nv, max_size=nv)
+    xs = cx + span * np.array(draw(off))
+    ys = cy + span * np.array(draw(off))
+    return xs, ys, draw(st.integers(4, 10))
+
+
+@given(_rings())
+@settings(max_examples=60, deadline=None)
+def test_polygon_runs_compact_runs_property(ring):
+    """Scanline runs hold exactly the bbox cell centres the even-odd test
+    puts inside, and compact_runs of them == iterated sibling merging."""
+    from raster_functions_spark import spatial
+    xs, ys, res = ring
+    n = 1 << res
+    i0, j0 = grid.lonlat_to_ij(float(xs.min()), float(ys.min()), res)
+    i1, j1 = grid.lonlat_to_ij(float(xs.max()), float(ys.max()), res)
+    gi, gj = np.meshgrid(np.arange(int(i0), int(i1) + 1),
+                         np.arange(int(j0), int(j1) + 1), indexing="ij")
+    gi, gj = gi.reshape(-1), gj.reshape(-1)
+    inside = spatial.point_in_polygon_np((gi + 0.5) / n * 360.0 - 180.0,
+                                         (gj + 0.5) / n * 180.0 - 90.0, xs, ys)
+    kept = set(grid.ij_to_cell(gi[inside], gj[inside], res).tolist())
+    runs = spatial.polygon_runs(xs, ys, res)
+    cells = [int(grid.ij_to_cell(np.array([i]), np.array([j]), res)[0])
+             for j, lo, hi in zip(*runs) for i in range(lo, hi)]
+    assert len(cells) == len(kept) and set(cells) == kept
+    assert set(grid.compact_runs(runs, res).tolist()) == _sibling_merge(kept, res)
 
 
 @given(st.lists(st.integers(0, 50), min_size=1, max_size=120),

@@ -272,7 +272,9 @@ def test_hll_incremental_snapshot(spark, tmp_path):
 def test_polyfill_compact_matches_numpy_reference(spark):
     from raster_functions_spark import fixtures, spatial
     res = 10
-    rings = [(k, *fixtures.aoi_ring(k)) for k in (0, 1)]
+    # AOI 20: two of row 661's crossings fall between the same two cell
+    # centres, so its runs [838, 839) and [839, 845) touch and must merge
+    rings = [(k, *fixtures.aoi_ring(k)) for k in (0, 1, 20)]
     got = {}
     for r in spatial.polyfill_compact(spark, rings, res).collect():
         got.setdefault(r["aoi_id"], set()).add(r["cell"])
