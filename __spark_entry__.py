@@ -2,7 +2,7 @@
 
 ``queries()`` registers one entry per implemented operator family from
 SURVEY.md §2 (keys prefixed with their SURVEY operator id); ``oracle_sql()``
-gives the DuckDB-equivalent SQL for EVERY query — all 102, no rows-only
+gives the DuckDB-equivalent SQL for EVERY query — no rows-only
 entries. Image-engine queries re-derive their pixels inside the oracle SQL
 from the closed-form fixtures (generate_series + arithmetic; see
 raster_functions_spark/oracles.py for the builders and the float-parity
@@ -18,6 +18,10 @@ hash comparison is stable.
 
 from __future__ import annotations
 
+import functools
+import inspect
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +37,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _reg(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n in names:
         _t(spark, sf_dir, n).createOrReplaceTempView(n)
+
+
+def _scratch_query(prefix: str, build: Callable[[str], DataFrame]) -> DataFrame:
+    """Run ``build(tmp_dir)`` in a fresh temporary directory and return its
+    result materialized (eager local checkpoint), so the directory it
+    staged files in is removed before anyone reads the rows."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return build(tmp).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # =====================================================================
@@ -582,17 +597,18 @@ def q_dedup_ingest(spark, sf_dir):
     prefilter (the committed corpus is never re-read per batch). The
     oracle replays the winner election as one window: min (batch_idx,
     doc_id) per content key."""
-    import tempfile
     from raster_functions_spark import dedup
     docs = _t(spark, sf_dir, "documents")
     key = F.md5(dedup.bow_fingerprint_col("text"))
-    root = tempfile.mkdtemp(prefix="dedup_ingest_")
-    ing = dedup.DedupIngest(spark, root + "/corpus", key=key,
-                            m_bits=1 << 18, n_buckets=8)
     bidx = F.substring("source", 4, 10).cast("int") % 3
-    for i in range(3):
-        ing.ingest(docs.filter(bidx == i), run_id=f"batch-{i}")
-    return ing.corpus().select("doc_id", "lang").orderBy("doc_id")
+
+    def build(tmp):
+        ing = dedup.DedupIngest(spark, tmp + "/corpus", key=key,
+                                m_bits=1 << 18, n_buckets=8)
+        for i in range(3):
+            ing.ingest(docs.filter(bidx == i), run_id=f"batch-{i}")
+        return ing.corpus().select("doc_id", "lang").orderBy("doc_id")
+    return _scratch_query("dedup_ingest_", build)
 
 
 def q_semdedup_corpus(spark, sf_dir):
@@ -723,12 +739,10 @@ def q_stream_sessionize(spark, sf_dir):
     each user's final (still-open) one."""
     import glob
     import os
-    import shutil
-    import tempfile
     from raster_functions_spark.streaming import stateful
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    td = tempfile.mkdtemp(prefix="sess_stream_")
-    try:
+
+    def build(td):
         src = os.path.join(td, "in")
         # two files → two availableNow microbatches (maxFilesPerTrigger=1):
         # sessions spanning the split exercise cross-batch state. The file
@@ -751,15 +765,13 @@ def q_stream_sessionize(spark, sf_dir):
              .queryName(qname).option("checkpointLocation", os.path.join(td, "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination()
-        return spark.createDataFrame(
-            spark.table(qname)
-            .select("user_id",
-                    F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("s_start"),
-                    F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("s_end"),
-                    "n_events")
-            .orderBy("user_id", "s_start").toPandas())
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return (spark.table(qname)
+                .select("user_id",
+                        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("s_start"),
+                        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("s_end"),
+                        "n_events")
+                .orderBy("user_id", "s_start"))
+    return _scratch_query("sess_stream_", build)
 
 
 def q_stream_windowed(spark, sf_dir):
@@ -1532,14 +1544,12 @@ def q_sketch_quantile_stream(spark, sf_dir):
     rewrites them into one summed vector, a replayed run_id no-ops —
     and because count addition is lossless the read-side p50/p95/p99
     must equal DuckDB's one-shot sketch over ALL events."""
-    import shutil
-    import tempfile
     from raster_functions_spark import sketches
     from raster_functions_spark.snapshots import SnapshotTable
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .withColumn("grp", F.col("event_type")))
-    td = tempfile.mkdtemp(prefix="q_stream_")
-    try:
+
+    def build(td):
         t = SnapshotTable(spark, td + "/regs")
         for b in range(2):
             sketches.quantile_commit_batch(
@@ -1552,14 +1562,12 @@ def q_sketch_quantile_stream(spark, sf_dir):
         sketches.quantile_commit_batch(  # replay must no-op
             t, ev.filter(F.col("event_id") % 3 == 1), "value", ["grp"],
             lo=0.0, hi=500.0, bins=256, run_id="batch-1")
-        out = (sketches.quantile_read(t, ["grp"], [0.5, 0.95, 0.99],
-                                      lo=0.0, hi=500.0, bins=256)
-               .select("grp", *[F.round(c, 6).alias(c)
-                                for c in ("p50", "p95", "p99")])
-               .orderBy("grp"))
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return (sketches.quantile_read(t, ["grp"], [0.5, 0.95, 0.99],
+                                       lo=0.0, hi=500.0, bins=256)
+                .select("grp", *[F.round(c, 6).alias(c)
+                                 for c in ("p50", "p95", "p99")])
+                .orderBy("grp"))
+    return _scratch_query("q_stream_", build)
 
 
 def q_geo_compact_cover(spark, sf_dir):
@@ -1715,14 +1723,12 @@ def q_sketch_hll_stream(spark, sf_dir):
     checked against DuckDB's one-shot sketch over ALL events — register
     merge is lossless-associative, so incremental must equal batch
     exactly."""
-    import shutil
-    import tempfile
     from raster_functions_spark import sketches
     from raster_functions_spark.snapshots import SnapshotTable
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .withColumn("grp", F.col("event_type")))
-    td = tempfile.mkdtemp(prefix="hll_stream_")
-    try:
+
+    def build(td):
         t = SnapshotTable(spark, td + "/regs")
         for b in range(2):
             sketches.hll_commit_batch(t, ev.filter(F.col("event_id") % 3 == b),
@@ -1734,12 +1740,10 @@ def q_sketch_hll_stream(spark, sf_dir):
         # replay of an already-committed batch must be a no-op
         sketches.hll_commit_batch(t, ev.filter(F.col("event_id") % 3 == 1),
                                   "user_id", ["grp"], p=8, run_id="batch-1")
-        out = (sketches.hll_read_distinct(t, ["grp"], p=8)
-               .select("grp", F.round("est", 4).alias("est"))
-               .orderBy("grp"))
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return (sketches.hll_read_distinct(t, ["grp"], p=8)
+                .select("grp", F.round("est", 4).alias("est"))
+                .orderBy("grp"))
+    return _scratch_query("hll_stream_", build)
 
 
 def q_mm_decode_png(spark, sf_dir):
@@ -1816,8 +1820,6 @@ def q_snap_incremental(spark, sf_dir):
     partition. The oracle re-derives every row set from the closed-form
     generators, so wrong file pruning (stale files read, added files
     missed, replaced files surviving) breaks counts or sums."""
-    import tempfile
-    from pyspark.sql import functions as F
     from raster_functions_spark.snapshots import SnapshotTable
 
     def batch(lo, hi, pexpr):
@@ -1825,9 +1827,7 @@ def q_snap_incremental(spark, sf_dir):
                 .withColumn("p_cell", pexpr)
                 .withColumn("v", (F.col("image_id") * 3).cast("long")))
 
-    import shutil
-    td = tempfile.mkdtemp(prefix="snap_q_")
-    try:
+    def build(td):
         t = SnapshotTable(spark, td + "/t")
         t.append(batch(0, 100, F.col("image_id") % 4), "p_cell")
         t.append(batch(100, 150, F.col("image_id") % 4), "p_cell")
@@ -1838,14 +1838,13 @@ def q_snap_incremental(spark, sf_dir):
                     .agg(F.count("*").alias("n"), F.sum("v").alias("sum_v"))
                     .withColumn("src", F.lit(src)))
 
-        return spark.createDataFrame(      # materialize pre-cleanup
-            agg(t.read(), "current")
-            .unionByName(agg(t.read_incremental(since_snapshot_id=1), "incremental"))
-            .select("src", F.col("p_cell").cast("long").alias("p_cell"),
-                    "n", "sum_v")
-            .orderBy("src", "p_cell").toPandas())
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return (agg(t.read(), "current")
+                .unionByName(agg(t.read_incremental(since_snapshot_id=1),
+                                 "incremental"))
+                .select("src", F.col("p_cell").cast("long").alias("p_cell"),
+                        "n", "sum_v")
+                .orderBy("src", "p_cell"))
+    return _scratch_query("snap_q_", build)
 
 
 def q_s3_feature_envelope(spark, sf_dir):
@@ -2084,22 +2083,18 @@ def q_ann_ivf_index(spark, sf_dir):
     ivf_search): searches read only probed lists' partitions. Exhaustive
     probe here (n_probe = n_lists) ⇒ same brute-force oracle as ann_ivf;
     the pruning behavior itself is plan-asserted in pytest."""
-    import shutil
-    import tempfile
     from raster_functions_spark import similarity
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivfidx_")
-    try:
+
+    def build(tmp):
         index, C = similarity.ivf_build(emb.filter(F.col("vec_id") >= 5),
                                         n_lists=8, index_path=tmp + "/idx")
         out = similarity.ivf_search(index, C,
                                     emb.filter(F.col("vec_id") < 5),
                                     k=3, n_probe=8)
-        res = (out.select("query_id", "neighbor_id", "rank")
-               .orderBy("query_id", "rank"))
-        return spark.createDataFrame(res.toPandas())   # materialize pre-cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return (out.select("query_id", "neighbor_id", "rank")
+                .orderBy("query_id", "rank"))
+    return _scratch_query("ivfidx_", build)
 
 
 def q_ann_ivf_append(spark, sf_dir):
@@ -2111,13 +2106,11 @@ def q_ann_ivf_append(spark, sf_dir):
     oracle as ann_ivf — centroid- and split-independent by construction;
     append/search parity itself is pytest-asserted with fixed centroids
     (tests/test_round6_ivf_append.py)."""
-    import shutil
-    import tempfile
     from raster_functions_spark import similarity
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") >= 5)
-    tmp = tempfile.mkdtemp(prefix="ivfsnap_")
-    try:
+
+    def build(tmp):
         similarity.ivf_build_snapshot(
             corpus.filter(F.col("vec_id") % 2 == 1), tmp + "/idx", n_lists=8)
         similarity.ivf_append(
@@ -2129,11 +2122,9 @@ def q_ann_ivf_append(spark, sf_dir):
         out = similarity.ivf_search_snapshot(
             spark, tmp + "/idx", emb.filter(F.col("vec_id") < 5),
             k=3, n_probe=8)
-        res = (out.select("query_id", "neighbor_id", "rank")
-               .orderBy("query_id", "rank"))
-        return spark.createDataFrame(res.toPandas())   # materialize pre-cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return (out.select("query_id", "neighbor_id", "rank")
+                .orderBy("query_id", "rank"))
+    return _scratch_query("ivfsnap_", build)
 
 
 def q_img_ndvi_zonal(spark, sf_dir):
@@ -2263,11 +2254,10 @@ def q_s4_training_csv(spark, sf_dir):
     training inputs): deterministic CSV written to a temp dir, parsed by
     ml.training_from_csv, returned as the (features, label) table the
     model fit consumes — vs a VALUES replay of the same content."""
-    import shutil
-    import tempfile
+    import pandas as pd
     from raster_functions_spark.operators import ml
-    tmp = tempfile.mkdtemp(prefix="traincsv_")
-    try:
+
+    def build(tmp):
         rows = ["red,nir,label"]
         for j in range(60):
             rows.append(f"{(j * 7) % 250},{(j * 13) % 240},{j % 3}")
@@ -2275,14 +2265,12 @@ def q_s4_training_csv(spark, sf_dir):
             f.write("\n".join(rows))
         X, y = ml.training_from_csv(spark, tmp + "/train.csv",
                                     ["red", "nir"], "label")
-        import pandas as pd
         pdf = pd.DataFrame({"red": X[:, 0].astype("int64"),
                             "nir": X[:, 1].astype("int64"),
                             "label": y.astype("int64")})
         return (spark.createDataFrame(pdf)
                 .orderBy("red", "nir", "label"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _scratch_query("traincsv_", build)
 
 
 def q_f16_key_metadata(spark, sf_dir):
@@ -2305,11 +2293,9 @@ def q_flagship_incremental(spark, sf_dir):
     batch flagship query uses, each committing the decomposable
     per-(aoi, cell) partials to the snapshot table exactly-once; the
     merged view must match the img_flagship DuckDB oracle row for row."""
-    import shutil
-    import tempfile
     from raster_functions_spark import fixtures, pipeline
-    tmp = tempfile.mkdtemp(prefix="flaginc_")
-    try:
+
+    def build(tmp):
         images = fixtures.images_df(spark, 1000)
         aoi = fixtures.aoi_df(spark, 25)
         images.filter("image_id < 'img000000500'").coalesce(1) \
@@ -2322,10 +2308,8 @@ def q_flagship_incremental(spark, sf_dir):
             stream, aoi, tmp + "/view", tmp + "/ckpt",
             query_name="flagship_incremental_q")
         q.awaitTermination()
-        out = pipeline.current_flagship(spark, tmp + "/view")
-        return spark.createDataFrame(out.toPandas())   # materialize pre-cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return pipeline.current_flagship(spark, tmp + "/view")
+    return _scratch_query("flaginc_", build)
 
 
 def q_stream_pixel_composite(spark, sf_dir):
@@ -2335,13 +2319,11 @@ def q_stream_pixel_composite(spark, sf_dir):
     (run_id=batch-N); the live composite is one merge over the partials.
     Oracle: the closed-form whole-stack mean (partials algebra is exact
     for the integer-valued fixture)."""
-    import shutil
-    import tempfile
     from raster_functions_spark import fixtures
     from raster_functions_spark.raster import tile_stats
     from raster_functions_spark.streaming import composites
-    tmp = tempfile.mkdtemp(prefix="spxc_")
-    try:
+
+    def build(tmp):
         pdf = fixtures.mosaic_stack_pdf(3, 6)
         spark.createDataFrame(pdf[pdf.t < 3]).coalesce(1).write.parquet(
             tmp + "/src/a")
@@ -2357,13 +2339,10 @@ def q_stream_pixel_composite(spark, sf_dir):
         live = composites.current_pixel_composite(spark, tmp + "/table")
         agg = tile_stats(live, [], {"sum_m": _px_sum},
                          keep_cols=["scene_id", "n_rasters"])
-        out = (agg.select("scene_id", "n_rasters",
-                          F.round("sum_m", 4).alias("sum_m"))
-               .orderBy("scene_id"))
-        out = spark.createDataFrame(out.toPandas())   # materialize pre-cleanup
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return (agg.select("scene_id", "n_rasters",
+                           F.round("sum_m", 4).alias("sum_m"))
+                .orderBy("scene_id"))
+    return _scratch_query("spxc_", build)
 
 
 def q_rft_mosaic_synthesis(spark, sf_dir):
@@ -2441,8 +2420,6 @@ def q_snap_retention(spark, sf_dir):
     The oracle re-derives the expected per-partition counts/sums in
     closed form: any double-commit, dropped data file, or lost tombstone
     changes the aggregates."""
-    import tempfile
-    from pyspark.sql import functions as F
     from raster_functions_spark.snapshots import SnapshotTable
 
     def batch(b):
@@ -2451,22 +2428,19 @@ def q_snap_retention(spark, sf_dir):
                 .withColumn("p_cell", F.col("image_id") % 3)
                 .withColumn("v", (F.col("image_id") * 7).cast("long")))
 
-    import shutil
-    td = tempfile.mkdtemp(prefix="snap_r_")
-    try:
+    def build(td):
         t = SnapshotTable(spark, td + "/t")
         sink = t.streaming_sink("p_cell", expire_every=4, keep_last=3)
         for b in range(10):
             sink(batch(b), b)
         sink(batch(0), 0)      # replay of an EXPIRED batch: watermark no-op
         sink(batch(9), 9)      # replay of a LIVE batch: run_id no-op
-        return spark.createDataFrame(      # materialize pre-cleanup
-            t.read().groupBy("p_cell")
-            .agg(F.count("*").alias("n"), F.sum("v").alias("sum_v"))
-            .select(F.col("p_cell").cast("long").alias("p_cell"), "n", "sum_v")
-            .orderBy("p_cell").toPandas())
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return (t.read().groupBy("p_cell")
+                .agg(F.count("*").alias("n"), F.sum("v").alias("sum_v"))
+                .select(F.col("p_cell").cast("long").alias("p_cell"), "n",
+                        "sum_v")
+                .orderBy("p_cell"))
+    return _scratch_query("snap_r_", build)
 
 
 def q_m5_sarima_d2(spark, sf_dir):
@@ -2503,196 +2477,42 @@ def entry(spark: SparkSession) -> DataFrame:
     return pipeline.flagship(spark, images, aoi)
 
 
+# The driver's correctness snapshot covers the first 50 keys of queries();
+# these are they, in order. Every other key follows in definition order.
+DRIVER_WINDOW = (
+    "snap_retention", "dedup_bloom", "text_pii", "text_chunks", "text_pack",
+    "text_pack_export", "dedup_ingest", "semdedup_corpus",
+    "text_unigram_ppl", "mm_augment", "dedup_spans", "curated_corpus",
+    "text_decontam", "text_repetition", "sample_budget", "dedup_crossmodal",
+    "sample_mixture", "sample_split", "sample_stratified",
+    "text_tokens_merged", "ann_ivf_append", "dedup_components",
+    "dedup_corpus", "dedup_minhash_lsh", "flagship_incremental",
+    "p9_zonal_interval", "img_zonal_remap_px", "s4_training_csv",
+    "f16_key_metadata", "ann_ivf_index", "mm_resize", "mm_patches",
+    "geo_area_centroid", "geo_radius_join", "geo_track_stats", "dedup_url",
+    "text_ppl_bucket", "sketch_hll", "sketch_hll_stream", "sketch_quantile",
+    "text_vocab", "geo_knn", "dedup_winnow_pairs", "mm_shards",
+    "sketch_quantile_stream", "funnel_steps", "geo_compact_cover",
+    "geo_polyfill", "text_winnow", "sample_mix_temperature",
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every ``q_*`` function, keyed by its name minus ``q_``: the
+    DRIVER_WINDOW keys first, then the rest in definition order. Each
+    ships the package first, because the driver may call it on a session
+    that ``get_spark`` did not build."""
     def shipped(fn):
+        @functools.wraps(fn)
         def inner(spark, sf_dir):
             _ensure_shipped(spark)
             return fn(spark, sf_dir)
-        inner.__doc__ = fn.__doc__
-        inner.__name__ = fn.__name__
         return inner
 
-    # ORDER MATTERS: the driver's correctness snapshot covers the FIRST 50
-    # keys, so the front of the dict carries (a) this round's new queries
-    # and (b) every key that has never had a driver-issued green row
-    # (r1-r3 snapshots covered the long-stable relational/image keys, which
-    # now rotate to the back — they remain verified by
-    # scripts/check_oracles.py, which runs ALL keys).
-    return {k: shipped(v) for k, v in {
-        # ---- r6 driver window (first 50): snap_retention (zero
-        # driver rows ever) + this round's new (text_tokens_merged,
-        # ann_ivf_append) and semantically-changed queries
-        # (dedup_minhash_lsh 64-hash family, flagship_incremental
-        # cell-partials, zonal last-match-wins), then every key
-        # whose last driver row predates round 5 ----
-        "snap_retention": q_snap_retention,
-        "dedup_bloom": q_dedup_bloom,
-        "text_pii": q_text_pii,
-        "text_chunks": q_text_chunks,
-        "text_pack": q_text_pack,
-        "text_pack_export": q_text_pack_export,
-        "dedup_ingest": q_dedup_ingest,
-        "semdedup_corpus": q_semdedup_corpus,
-        "text_unigram_ppl": q_text_unigram_ppl,
-        "mm_augment": q_mm_augment,
-        "dedup_spans": q_dedup_spans,
-        "curated_corpus": q_curated_corpus,
-        "text_decontam": q_text_decontam,
-        "text_repetition": q_text_repetition,
-        "sample_budget": q_sample_budget,
-        "dedup_crossmodal": q_dedup_crossmodal,
-        "sample_mixture": q_sample_mixture,
-        "sample_split": q_sample_split,
-        "sample_stratified": q_sample_stratified,
-        "text_tokens_merged": q_text_tokens_merged,
-        "ann_ivf_append": q_ann_ivf_append,
-        "dedup_components": q_dedup_components,
-        "dedup_corpus": q_dedup_corpus,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "flagship_incremental": q_flagship_incremental,
-        "p9_zonal_interval": q_p9_zonal_interval,
-        "img_zonal_remap_px": q_img_zonal_remap_px,
-        "s4_training_csv": q_s4_training_csv,
-        "f16_key_metadata": q_f16_key_metadata,
-        "ann_ivf_index": q_ann_ivf_index,
-        "mm_resize": q_mm_resize,
-        "mm_patches": q_mm_patches,
-        "geo_area_centroid": q_geo_area_centroid,
-        "geo_radius_join": q_geo_radius_join,
-        "geo_track_stats": q_geo_track_stats,
-        "dedup_url": q_dedup_url,
-        "text_ppl_bucket": q_text_ppl_bucket,
-        "sketch_hll": q_sketch_hll,
-        "sketch_hll_stream": q_sketch_hll_stream,
-        "sketch_quantile": q_sketch_quantile,
-        "text_vocab": q_text_vocab,
-        "geo_knn": q_geo_knn,
-        "dedup_winnow_pairs": q_dedup_winnow_pairs,
-        "mm_shards": q_mm_shards,
-        "sketch_quantile_stream": q_sketch_quantile_stream,
-        "funnel_steps": q_funnel_steps,
-        "geo_compact_cover": q_geo_compact_cover,
-        "geo_polyfill": q_geo_polyfill,
-        "text_winnow": q_text_winnow,
-        "sample_mix_temperature": q_sample_mix_temperature,
-        # ---- driver window boundary (50) — s5_random, u2_composite_bands,
-        # p5_fill_constant,
-        # m5_sarima_seasonal, f7_fish_habitat, ann_lsh_multi,
-        # rft_mosaic_findmax, rft_mosaic_synthesis (all r4-driver-green,
-        # unchanged in r6) and mm_decode_png..mm_ingest_rollup (all
-        # r4-driver-green) slid past it as the session-5 queries
-        # (sketch_hll, sketch_hll_stream, sketch_quantile, text_vocab,
-        # geo_knn, dedup_winnow_pairs, geo_compact_cover, geo_polyfill,
-        # text_winnow, sample_mix_temperature, mm_shards,
-        # sketch_quantile_stream, funnel_steps) registered ----
-        "s5_random": q_s5_random,
-        "u2_composite_bands": q_u2_composite_bands,
-        "p5_fill_constant": q_p5_fill_constant,
-        "m5_sarima_seasonal": q_m5_sarima_seasonal,
-        "f7_fish_habitat": q_f7_fish_habitat,
-        "ann_lsh_multi": q_ann_lsh_multi,
-        "rft_mosaic_findmax": q_rft_mosaic_findmax,
-        "rft_mosaic_synthesis": q_rft_mosaic_synthesis,
-        "mm_decode_png": q_mm_decode_png,
-        "mm_decode_jpeg": q_mm_decode_jpeg,
-        "mm_catalog": q_mm_catalog,
-        "mm_quarantine": q_mm_quarantine,
-        "mm_ingest_rollup": q_mm_ingest_rollup,
-        # ---- (older boundary history) m3_random_forest, m4_gbt,
-        # snap_incremental, f4_windchill_units (all r4-driver-green) slid
-        # past it as the session-4 queries (geo_radius_join,
-        # geo_track_stats, dedup_url, text_ppl_bucket) registered;
-        # f5_heat_index..f11_unmixing
-        # (all r3/r4-driver-green) slid just past it as dedup_spans,
-        # mm_patches, geo_area_centroid and text_pack_export registered;
-        # r5-green and the
-        # freshest-stale keys below (rotate into r7; a10_fuzzy_mssmall,
-        # j6_nearest_labels,
-        # p3_mask_apply, p4_replace_nulls, p7_qa_clear,
-        # s3_feature_envelope, s6_latitude, s7_catalog slid past 50 when
-        # the curation-layer queries were registered;
-        # a6_month_synthesis + a7_percent_above_px when dedup_bloom +
-        # text_pii landed; f13_calculator..f3_arith_div when the r6-session-2
-        # curation queries (text_chunks/text_pack/semdedup_corpus/
-        # dedup_ingest/text_unigram_ppl/mm_augment) landed — all r2-r4
-        # driver-green) ----
-        "m3_random_forest": q_m3_random_forest,
-        "m4_gbt": q_m4_gbt,
-        "snap_incremental": q_snap_incremental,
-        "f4_windchill_units": q_f4_windchill_units,
-        "f5_heat_index": q_f5_heat_index,
-        "f6_fuzzy_gaussian": q_f6_fuzzy_gaussian,
-        "f8_vineyard": q_f8_vineyard,
-        "f11_unmixing": q_f11_unmixing,
-        "f13_calculator": q_f13_calculator,
-        "f14_remap": q_f14_remap,
-        "f14_vector_field": q_f14_vector_field,
-        "f15_cubism": q_f15_cubism,
-        "f15_chuck_close": q_f15_chuck_close,
-        "f3_arith_div": q_f3_arith_div,
-        "a6_month_synthesis": q_a6_month_synthesis,
-        "a7_percent_above_px": q_a7_percent_above_px,
-        "a10_fuzzy_mssmall": q_a10_fuzzy_mssmall,
-        "j6_nearest_labels": q_j6_nearest_labels,
-        "p3_mask_apply": q_p3_mask_apply,
-        "p4_replace_nulls": q_p4_replace_nulls,
-        "p7_qa_clear": q_p7_qa_clear,
-        "s3_feature_envelope": q_s3_feature_envelope,
-        "s6_latitude": q_s6_latitude,
-        "s7_catalog": q_s7_catalog,
-        "w4_rank_median_px": q_w4_rank_median_px,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "m5_sarima_d2": q_m5_sarima_d2,
-        "mm_decode_video": q_mm_decode_video,
-        "stream_pixel_composite": q_stream_pixel_composite,
-        "dedup_simhash": q_dedup_simhash,
-        "text_langid": q_text_langid,
-        "text_tokens": q_text_tokens,
-        "j5_knn": q_j5_knn,
-        "ann_ivf": q_ann_ivf,
-        "ann_lsh": q_ann_lsh,
-        "sim_near_dup_pairs": q_sim_near_dup_pairs,
-        "img_phash_dedup": q_img_phash_dedup,
-        "sessionize": q_sessionize,
-        "stream_sessionize": q_stream_sessionize,
-        "stream_windowed": q_stream_windowed,
-        "a1_pricing_summary": q_a1_pricing_summary,
-        "a4_percentile": q_a4_percentile,
-        "a7_percent_above": q_a7_percent_above,
-        "a8_topk_per_group": q_a8_topk_per_group,
-        "a9_regression": q_a9_regression,
-        "p6_bitmask": q_p6_bitmask,
-        "p8_time_range": q_p8_time_range,
-        "j2_rasterize_attrs": q_j2_rasterize_attrs,
-        "j8_routing": q_j8_routing,
-        "w4_window_rank": q_w4_window_rank,
-        "w3_tumbling": q_w3_tumbling,
-        "u1_union_dedup": q_u1_union_dedup,
-        "u4_extent_union": q_u4_extent_union,
-        "f10_date_scale": q_f10_date_scale,
-        "f17_json": q_f17_json,
-        "grid_cell_encode": q_grid_cell_encode,
-        "spatial_bbox_join": q_spatial_bbox_join,
-        "dedup_exact": q_dedup_exact,
-        "text_quality": q_text_quality,
-        "text_fingerprint": q_text_fingerprint,
-        "img_hillshade": q_img_hillshade,
-        "img_ndvi_zonal": q_img_ndvi_zonal,
-        "img_cti": q_img_cti,
-        "img_knn_classify": q_img_knn_classify,
-        "img_chain": q_img_chain,
-        "img_dnbr": q_img_dnbr,
-        "img_cloud_fill": q_img_cloud_fill,
-        "img_hexbin": q_img_hexbin,
-        "img_pyramid": q_img_pyramid,
-        "w2_aspect_slope": q_w2_aspect_slope,
-        "w7_mdhillshade": q_w7_mdhillshade,
-        "f4_windchill": q_f4_windchill,
-        "m5_sarima": q_m5_sarima,
-        "m5_sarima_px": q_m5_sarima_px,
-        "img_flagship": q_img_flagship,
-        "img_stack_median": q_img_stack_median,
-    }.items()}
+    found = {n[2:]: f for n, f in globals().items()
+             if n.startswith("q_") and inspect.isfunction(f)}
+    order = [*DRIVER_WINDOW, *(k for k in found if k not in DRIVER_WINDOW)]
+    return {k: shipped(found[k]) for k in order}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2800,7 +2620,7 @@ def oracle_sql() -> dict[str, str]:
         "m5_sarima_d2": _orc.sarima_seasonal_sql(8, 144, (0, 2, 1)),
         "snap_retention": """
           SELECT CAST(i % 3 AS BIGINT) AS p_cell,
-                 COUNT(*) AS n, SUM(i * 7) AS sum_v
+                 COUNT(*) AS n, CAST(SUM(i * 7) AS BIGINT) AS sum_v
           FROM generate_series(0, 99) t(i)
           GROUP BY 1 ORDER BY 1""",
         "a6_month_synthesis": _orc.month_synthesis_sql(3, 24, 16, 1),
@@ -3320,7 +3140,7 @@ def oracle_sql() -> dict[str, str]:
                          COALESCE(c.component_id, e.vec_id) AS cc
                   FROM e LEFT JOIN comp c ON c.doc_id = e.vec_id),
           keep AS (SELECT cc, MIN(vec_id) AS k FROM lab GROUP BY cc)
-          SELECT label, COUNT(*) AS n_kept, SUM(vec_id) AS sum_ids
+          SELECT label, COUNT(*) AS n_kept, CAST(SUM(vec_id) AS BIGINT) AS sum_ids
           FROM lab JOIN keep ON lab.vec_id = keep.k
           GROUP BY label ORDER BY label""",
         "sim_near_dup_pairs": """

@@ -18,12 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import codec, grid, spatial
-
-
-def _auto_ship(spark: SparkSession) -> None:
-    from .session import ship_package
-    ship_package(spark)
+from . import codec, grid, session, spatial
 
 
 def decode_features(images: DataFrame, cell_res: int = 7) -> DataFrame:
@@ -36,7 +31,7 @@ def decode_features(images: DataFrame, cell_res: int = 7) -> DataFrame:
     path (_decode_feature_arrays): this function feeds the partitioned
     (large-AOI) flagship route, which must not die on corrupt rows
     either."""
-    _auto_ship(images.sparkSession)
+    session.ship_package(images.sparkSession)
     out_schema = T.StructType([
         images.schema["image_id"], images.schema["caption"],
         images.schema["lon"], images.schema["lat"],
@@ -88,7 +83,7 @@ def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
     probe as spatial.pip_join (limit N+1, never a full count) routes
     oversized vector sides to the fused-decode + cell-cover partitioned
     join, which never touches the driver."""
-    _auto_ship(spark)
+    session.ship_package(spark)
     prep = prepare_aoi(spark, aoi, broadcast_threshold)
     return flagship_assigned_prepared(spark, images, prep, cell_res)
 
@@ -196,7 +191,7 @@ def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
     pipeline's 8→32 scaling; ~1500-2000-image tasks put it under 2% of
     task wall. The rule stays data-proportional, so at 10^9 images it
     yields ~500k tasks, not a fixed 64."""
-    _auto_ship(spark)
+    session.ship_package(spark)
     if partitions is None:
         cores = spark.sparkContext.defaultParallelism
         partitions = max(2 * cores, (n_images + 1999) // 2000)

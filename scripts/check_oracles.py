@@ -1,7 +1,9 @@
 """Self-check: run every queries() entry on Spark AND its oracle_sql() on
-DuckDB at sf0.01; compare row count, column names, and order-insensitive
-values (exact for ints/strings, 1e-9 for floats). Mimics the driver's
-CORRECTNESS gate so mismatches surface before the round ends.
+DuckDB at sf0.01; compare row count, column names, each column's pandas
+dtype kind (an int-versus-float split fails, as it does in the driver's
+hash), and order-insensitive values (exact for ints/strings, 1e-9 for
+floats). Mimics the driver's CORRECTNESS gate so mismatches surface before
+the round ends.
 
 Usage: python scripts/check_oracles.py [sf_dir] [only_query_prefix]
 """
@@ -26,6 +28,11 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> str:
         return f"SCHEMA MISMATCH: spark={list(spark_df.columns)} duck={list(oracle_df.columns)}"
     if len(spark_df) != len(oracle_df):
         return f"ROWCOUNT MISMATCH: spark={len(spark_df)} duck={len(oracle_df)}"
+    kinds = {c: (spark_df[c].dtype.kind, oracle_df[c].dtype.kind)
+             for c in spark_df.columns}
+    split = {c: k for c, k in kinds.items() if k[0] != k[1]}
+    if split:
+        return f"DTYPE KIND MISMATCH (spark, duck): {split}"
     a = spark_df.sort_values(list(spark_df.columns)).reset_index(drop=True)
     b = oracle_df.sort_values(list(oracle_df.columns)).reset_index(drop=True)
     for c in a.columns:

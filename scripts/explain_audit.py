@@ -180,19 +180,19 @@ def main() -> int:
     # plus filter)
     import tempfile
     from raster_functions_spark.snapshots import SnapshotTable
-    tdir = tempfile.mkdtemp(prefix="audit_snap_")
-    st = SnapshotTable(spark, tdir + "/t")
-    mk = lambda lo, hi, pv: (spark.range(lo, hi).withColumnRenamed("id", "k")
-                             .withColumn("p", F.lit(pv)))
-    st.append(mk(0, 50, 1), "p")
-    st.append(mk(50, 80, 2), "p")
-    inc = st.read_incremental(since_snapshot_id=1)
-    added = set(st.snapshots()[1]["added"])
-    files = {f.split("/t/", 1)[1] for f in inc.inputFiles()}
-    ok = files == added and inc.count() == 30
-    checks.append(("snapshot incremental scan reads only the added files", ok))
-    out += ["\n## snapshot_incremental_files\n",
-            f"added={sorted(added)}\nscanned={sorted(files)}\n"]
+    with tempfile.TemporaryDirectory(prefix="audit_snap_") as tdir:
+        st = SnapshotTable(spark, tdir + "/t")
+        mk = lambda lo, hi, pv: (spark.range(lo, hi).withColumnRenamed("id", "k")
+                                 .withColumn("p", F.lit(pv)))
+        st.append(mk(0, 50, 1), "p")
+        st.append(mk(50, 80, 2), "p")
+        inc = st.read_incremental(since_snapshot_id=1)
+        added = set(st.snapshots()[1]["added"])
+        files = {f.split("/t/", 1)[1] for f in inc.inputFiles()}
+        ok = files == added and inc.count() == 30
+        checks.append(("snapshot incremental scan reads only the added files", ok))
+        out += ["\n## snapshot_incremental_files\n",
+                f"added={sorted(added)}\nscanned={sorted(files)}\n"]
 
     # 14. IVF ANN: candidates never materialize as join rows — the plan is
     # a single mapInPandas over the corpus scan + the tiny top-k window
@@ -226,18 +226,18 @@ def main() -> int:
     # partition_values pruning means the scan's input files are a strict
     # subset of the index's live files when probing few lists
     from raster_functions_spark import similarity as _sim
-    idx_dir = tempfile.mkdtemp(prefix="audit_ivf_")
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    _sim.ivf_build_snapshot(emb.filter(F.col("vec_id") >= 5),
-                            idx_dir + "/i", n_lists=8)
-    _st = SnapshotTable(spark, idx_dir + "/i")
-    all_live = {f["path"] for f in _st._manifest(_st.current_id)}
-    pruned = _st.read(partition_values=["0"])
-    scanned = {f.split("/i/", 1)[1] for f in pruned.inputFiles()}
-    ok = scanned < all_live and len(scanned) >= 1
-    checks.append(("snapshot IVF read prunes to probed lists' files", ok))
-    out += ["\n## snapshot_ivf_pruning\n",
-            f"live={len(all_live)} scanned={len(scanned)}\n"]
+    with tempfile.TemporaryDirectory(prefix="audit_ivf_") as idx_dir:
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        _sim.ivf_build_snapshot(emb.filter(F.col("vec_id") >= 5),
+                                idx_dir + "/i", n_lists=8)
+        _st = SnapshotTable(spark, idx_dir + "/i")
+        all_live = {f["path"] for f in _st._manifest(_st.current_id)}
+        pruned = _st.read(partition_values=["0"])
+        scanned = {f.split("/i/", 1)[1] for f in pruned.inputFiles()}
+        ok = scanned < all_live and len(scanned) >= 1
+        checks.append(("snapshot IVF read prunes to probed lists' files", ok))
+        out += ["\n## snapshot_ivf_pruning\n",
+                f"live={len(all_live)} scanned={len(scanned)}\n"]
 
     # 17. sampling: the hash filters are narrow (no shuffle) and reach
     # the scan stage — mixture sampling must add ZERO exchanges before

@@ -1,6 +1,8 @@
+import inspect
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from raster_functions_spark import fixtures, lineage, pipeline
@@ -39,6 +41,54 @@ def test_entry_contract(spark):
     oracles = em.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 30 and len(oracles) >= 25
+    # the driver's window is DRIVER_WINDOW, not dict-literal order
+    assert len(em.DRIVER_WINDOW) == 50 == len(set(em.DRIVER_WINDOW))
+    assert list(qs)[:50] == list(em.DRIVER_WINDOW)
+    q_fns = {n[2:]: f for n, f in vars(em).items()
+             if n.startswith("q_") and inspect.isfunction(f)}
+    assert set(qs) == set(q_fns) and len(qs) == 139
+    for k, fn in qs.items():
+        assert fn.__name__ == f"q_{k}" and fn.__doc__ == q_fns[k].__doc__
+
+
+def test_scratch_query_materializes_then_removes_dir(spark):
+    import __spark_entry__ as em
+    seen, schemas = [], []
+
+    def build(tmp):
+        seen.append(tmp)
+        spark.range(20).withColumn("v", F.col("id") * 3) \
+            .write.parquet(tmp + "/t")
+        out = spark.read.parquet(tmp + "/t").orderBy("id")
+        schemas.append(out.schema)
+        return out
+
+    df = em._scratch_query("scratch_test_", build)
+    assert not os.path.exists(seen[0])
+    assert df.schema == schemas[0]
+    assert [(r.id, r.v) for r in df.collect()] == [(i, 3 * i) for i in range(20)]
+
+    def failing(tmp):
+        seen.append(tmp)
+        open(tmp + "/partial", "w").close()
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        em._scratch_query("scratch_test_", failing)
+    assert not os.path.exists(seen[1])
+
+
+def test_sum_oracles_return_int64():
+    # DuckDB types SUM(BIGINT) as HUGEINT, which pandas reads as float64;
+    # the oracles cast back so the dtype matches Spark's LongType
+    import duckdb
+    import __spark_entry__ as em
+    oracles = em.oracle_sql()
+    con = duckdb.connect()
+    con.sql("CREATE VIEW embeddings AS SELECT * FROM "
+            "read_parquet('/root/testdata/sf0.001/embeddings.parquet')")
+    assert con.sql(oracles["snap_retention"]).df()["sum_v"].dtype == np.int64
+    assert con.sql(oracles["semdedup_corpus"]).df()["sum_ids"].dtype == np.int64
 
 
 def test_checkpointed_write_resume(spark, tmp_path):
