@@ -21,6 +21,8 @@ filled by ``tile_row``).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import numpy as np
 import pandas as pd
 from numpy.lib.stride_tricks import sliding_window_view
@@ -28,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .. import codec
-from ..raster import TILE_FIELDS, TileOp, tile_row
+from ..raster import TILE_FIELDS, TileOp, chained_tiles, tile_row
 
 # ------------------------------------------------------------ kernels ------
 # All kernel fns take an already-padded (bands, h+2p, w+2p) array and return
@@ -344,27 +346,45 @@ def _strip_for_target(px: np.ndarray, dx: int, dy: int, p: int) -> np.ndarray:
 
 def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
                 meta_cols: tuple[str, ...] = ("cell_dx",),
-                grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty")) -> DataFrame:
+                grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty"),
+                pre: Sequence[TileOp] = (), post: Sequence[TileOp] = (),
+                ops_meta_cols: tuple[str, ...] = ()) -> DataFrame:
     """Distributed edge-correct focal op over a scene-gridded tile table.
 
     Tiles missing a neighbor (scene boundary) get edge-replicated padding —
     matching the reference's behavior at raster borders. Output schema:
-    grid cols + bytes/w/h/bands/dtype/fmt.
+    grid cols + bytes/w/h/bands/dtype/fmt + the ``meta_cols`` present.
+
+    Zero-padding ops next to the focal op run inside the stage, with no
+    encode → decode hop: ``pre`` on each decoded tile before its strips
+    are cut (the emit pass), ``post`` on the kernel's output (the assemble
+    pass). Both get the meta :func:`raster.apply_chain` would give them —
+    the row's ``ops_meta_cols`` values, which must be among the forwarded
+    ``meta_cols`` — so the stage equals
+    ``apply_chain(apply_focal(apply_chain(df, pre), op), post)`` up to
+    the skipped intermediate encodes (lossless formats: byte for byte).
     """
     p = op.padding
     if p <= 0:
         raise ValueError("apply_focal requires op.padding > 0")
+    if any(o.padding for o in post):
+        raise ValueError("post ops must be zero-padding; run a padded op "
+                         "as its own apply_focal stage")
     scn, txc, tyc = grid_cols
     meta_keep = [c for c in meta_cols if c in df.columns]
+    ops_meta = list(ops_meta_cols) if pre or post else []
+    missing = [c for c in ops_meta if c not in meta_keep]
+    if missing:
+        raise ValueError(f"ops_meta_cols {missing} must be meta_cols present in df")
+    tiles = chained_tiles(pre, ops_meta)
 
     def emit(batches):
         for pdf in batches:
             rows = {"scene_id": [], "ttx": [], "tty": [], "dx": [], "dy": [], "part": []}
             src = []                       # sending row of each message
-            for r in range(len(pdf)):
-                px = codec.decode(bytes(pdf["bytes"].iloc[r]))
-                tx, ty = int(pdf[txc].iloc[r]), int(pdf[tyc].iloc[r])
-                sid = pdf[scn].iloc[r]
+            sids, txs, tys = (pdf[c].to_numpy() for c in grid_cols)
+            for r, (px, _) in enumerate(tiles(pdf)):
+                tx, ty, sid = int(txs[r]), int(tys[r]), sids[r]
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         ttx, tty = tx + dx, ty + dy
@@ -395,22 +415,24 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
         *TILE_FIELDS,
     ] + ([df.schema[c] for c in meta_keep]))
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        center = pdf[(pdf["dx"] == 0) & (pdf["dy"] == 0)]
-        if center.empty:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema})
-        px = codec.decode(bytes(center["part"].iloc[0]))
+    def assemble(key: tuple, pdf: pd.DataFrame) -> dict | None:
+        dxs, dys = pdf["dx"].to_numpy(), pdf["dy"].to_numpy()
+        parts = pdf["part"].to_numpy()
+        center = np.flatnonzero((dxs == 0) & (dys == 0))
+        if not len(center):
+            return None
+        ci = center[0]
+        px = codec.decode(bytes(parts[ci]))
         bands, h, w = px.shape
         padded = np.zeros((bands, h + 2 * p, w + 2 * p), dtype=px.dtype)
         valid = np.zeros((h + 2 * p, w + 2 * p), dtype=bool)
         padded[:, p:h + p, p:w + p] = px
         valid[p:h + p, p:w + p] = True
-        for r in range(len(pdf)):
-            dx, dy = int(pdf["dx"].iloc[r]), int(pdf["dy"].iloc[r])
+        for dx, dy, buf in zip(dxs, dys, parts):
             if dx == 0 and dy == 0:
                 continue
             # message sent by neighbor at (tx-dx, ty-dy) relative to me
-            part = codec.decode(bytes(pdf["part"].iloc[r]))
+            part = codec.decode(bytes(buf))
             rs = slice(p, h + p) if dy == 0 else (slice(h + p, h + 2 * p) if dy == -1 else slice(0, p))
             cs = slice(p, w + p) if dx == 0 else (slice(w + p, w + 2 * p) if dx == -1 else slice(0, p))
             padded[:, rs, cs] = part
@@ -436,17 +458,17 @@ def apply_focal(df: DataFrame, op: TileOp, fmt_out: str = "zlib",
                 fill = ~valid[:, c] & valid[:, c - 1]
                 padded[:, fill, c] = padded[:, fill, c - 1]
                 valid[fill, c] = True
-        meta = {c: center[c].iloc[0] for c in meta_keep} if meta_keep else {}
+        meta = {c: pdf[c].to_numpy()[ci] for c in meta_keep}
         # ops that must distinguish REAL neighbor data from scene-boundary
         # edge-extension (mask_erode's NoData-at-border rule) get the
         # pre-extension validity map + pad width; kept out of `meta` so
-        # row.update(meta) below stays schema-clean
-        fn_meta = dict(meta)
-        fn_meta["_halo_pad"] = p
-        fn_meta["_halo_valid"] = halo_valid
-        row = {scn: key[0], txc: int(key[1]), tyc: int(key[2]),
-               **tile_row(op.fn(padded, fn_meta), fmt_out), **meta}
-        return pd.DataFrame([row])
+        # the output row below stays schema-clean
+        out = op.fn(padded, {**meta, "_halo_pad": p, "_halo_valid": halo_valid})
+        ops_meta_row = {c: meta[c] for c in ops_meta}
+        for o in post:
+            out = o.apply(out if out.ndim == 3 else out[None], ops_meta_row)
+        return {scn: key[0], txc: int(key[1]), tyc: int(key[2]),
+                **tile_row(out, fmt_out), **meta}
 
     # ≤9 halo messages per tile, tiles unbounded — same many-tiny-groups
     # class as the pyramid merge: stream the sorted partition rather than

@@ -45,20 +45,19 @@ def pyramid_level(df: DataFrame, tile: int, measure: str = "mean",
         T.StructField("n_children", T.IntegerType()),
     ])
 
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> dict:
         mosaic = None
-        for i in range(len(pdf)):
-            px = codec.decode(bytes(pdf["bytes"].iloc[i])).astype(np.float64)
+        for b, tx, ty in zip(pdf["bytes"].to_numpy(), pdf[txc].to_numpy(),
+                             pdf[tyc].to_numpy()):
+            px = codec.decode(bytes(b)).astype(np.float64)
             if mosaic is None:          # allocate from the first DECODE —
                 mosaic = np.zeros(      # no extra decode just for shape
                     (px.shape[0], 2 * tile, 2 * tile), dtype=np.float64)
-            qx = int(pdf[txc].iloc[i]) % 2
-            qy = int(pdf[tyc].iloc[i]) % 2
+            qx, qy = int(tx) % 2, int(ty) % 2
             mosaic[:, qy * tile:(qy + 1) * tile, qx * tile:(qx + 1) * tile] = px
         down = np.stack([block_statistics_np(b, measure, 2) for b in mosaic])
-        return pd.DataFrame([{
-            scn: key[0], txc: int(key[1]), tyc: int(key[2]),
-            **tile_row(down.astype(np.float32), fmt_out), "n_children": len(pdf)}])
+        return {scn: key[0], txc: int(key[1]), tyc: int(key[2]),
+                **tile_row(down.astype(np.float32), fmt_out), "n_children": len(pdf)}
 
     # ≤4 tiny rows per parent and (at scale) millions of parents — the
     # per-group applyInPandas Arrow round trip would dominate; stream the

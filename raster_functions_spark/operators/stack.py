@@ -94,8 +94,7 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
     # silently fed fake zeros into downstream stats)
     if nodata is not None:
         red = np.nan_to_num(red, nan=nodata)
-    return pd.DataFrame([_out_row(key, group_cols, red.astype(np.float32),
-                                  fmt_out, len(pdf))])
+    return _out_row(key, group_cols, red.astype(np.float32), fmt_out, len(pdf))
 
 
 def _composite(df: DataFrame, group_cols: list[str], reducer: Callable,
@@ -108,7 +107,7 @@ def _composite(df: DataFrame, group_cols: list[str], reducer: Callable,
     unbounded (tile positions) while group size is small (acquisitions) —
     stream the sorted partition instead of paying the per-group
     applyInPandas round trip (see grouped_sorted_map)."""
-    def _apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _apply(key: tuple, pdf: pd.DataFrame) -> dict:
         return _reduce_group(key, pdf, group_cols, reducer, fmt_out,
                              value_band, qa_band, clear_values, order_col,
                              nodata)
@@ -141,38 +140,56 @@ def stack_percentile(df: DataFrame, q: float, group_cols: list[str] = ["scene_id
                       fmt_out, value_band, qa_band, clear_values, None, nodata)
 
 
+def _run_starts(keys: list[np.ndarray]) -> np.ndarray:
+    """First row of every run of equal keys over sorted key columns.
+    Null-safe: a null key is still a group (applyInPandas keeps it), so a
+    null matches a null and differs from every value."""
+    change = np.zeros(len(keys[0]) - 1, bool)
+    for a in keys:
+        na = pd.isna(a)
+        change |= ((a[1:] != a[:-1]) & ~(na[1:] & na[:-1])) | (na[1:] != na[:-1])
+    return np.concatenate([[0], np.flatnonzero(change) + 1])
+
+
 def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
                        out_schema: T.StructType) -> DataFrame:
-    """``groupBy().applyInPandas`` without the per-GROUP Arrow round trip.
+    """``groupBy().applyInPandas`` without the per-GROUP Arrow round trip,
+    for many small groups (halo messages, pyramid children, a position's
+    acquisitions).
 
     applyInPandas pays ~ms of serde/scheduling per group — fine for big
     groups, ruinous for millions of tiny ones (and AQE coalesces a small
     partials shuffle to few partitions, serializing it; measured 28.6s vs
     1.7s of kernel time in BENCH/notes_r4.md). Here: hash-repartition on
     the group key, sort within partitions, then stream the partition
-    through ONE mapInPandas that stitches group runs across Arrow batch
-    boundaries and calls ``fn(key_tuple, group_pdf)`` per group, buffering
-    outputs into frames of 64 groups. Parallelism is pinned at twice the
-    default parallelism (AQE can't collapse it), per-group overhead is a
-    dict lookup. fn must be insensitive to row order within the group
-    unless it sorts internally (same contract as applyInPandas)."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
+    through ONE mapInPandas that finds the group runs with NumPy over the
+    sorted key columns, stitches runs across Arrow batch boundaries and
+    calls ``fn(key_tuple, group_pdf) -> dict | None`` per group. The dict
+    is the group's one output row (keys = ``out_schema`` field names);
+    ``None`` emits nothing. Rows are buffered and flushed as one
+    ``pd.DataFrame`` once 64 are pending, so no group builds an output
+    frame of its own; with every group ``None`` nothing is yielded and
+    the declared schema stands.
+
+    The shuffle has ``defaultParallelism`` partitions — one task per core
+    (AQE can't collapse an explicit repartition). Groups are many and
+    bounded in size, so hash partitioning balances them by count and a
+    second wave of tasks would only add Python task launches. fn must be
+    insensitive to row order within the group unless it sorts internally
+    (same contract as applyInPandas)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     d = df.repartition(n, *group_cols).sortWithinPartitions(*group_cols)
     cols = list(group_cols)
+    names = out_schema.fieldNames()
 
     def run(batches):
         pend = None
-        buf: list[pd.DataFrame] = []
+        rows: list[dict] = []
 
-        def emit(key, g):
-            # empty frames are dropped, not concatenated: pandas is ending
-            # its exclusion of them from the result dtypes (FutureWarning),
-            # and focal assembly returns one for every halo target past
-            # the grid edge. With every frame empty nothing is yielded and
-            # the declared output schema stands.
-            out = fn(tuple(key), g)
-            if len(out):
-                buf.append(out)
+        def emit(key: tuple, g: pd.DataFrame):
+            row = fn(key, g)
+            if row is not None:
+                rows.append(row)
 
         for pdf in batches:
             if pend is not None:
@@ -180,25 +197,19 @@ def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
                 pend = None
             if not len(pdf):
                 continue
-            last = tuple(pdf[c].iloc[-1] for c in cols)
-            mask = np.ones(len(pdf), bool)
-            for c, v in zip(cols, last):
-                # null-safe run detection: a null key is still a group
-                # (applyInPandas keeps it), so NaN must match NaN here
-                if pd.isna(v):
-                    mask &= pdf[c].isna().to_numpy()
-                else:
-                    mask &= (pdf[c] == v).to_numpy()
-            body, pend = pdf[~mask], pdf[mask]
-            for key, g in body.groupby(cols, sort=False, dropna=False):
-                emit(key if isinstance(key, tuple) else (key,), g)
-            if len(buf) >= 64:
-                yield pd.concat(buf, ignore_index=True)
-                buf = []
+            keys = [pdf[c].to_numpy() for c in cols]
+            starts = _run_starts(keys)
+            # the last run may continue in the next batch: carry it over
+            for s, e in zip(starts[:-1], starts[1:]):
+                emit(tuple(k[s] for k in keys), pdf.iloc[s:e])
+            pend = pdf.iloc[starts[-1]:]
+            if len(rows) >= 64:
+                yield pd.DataFrame(rows, columns=names)
+                rows = []
         if pend is not None and len(pend):
-            emit(tuple(pend[c].iloc[0] for c in cols), pend)
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
+            emit(tuple(pend[c].to_numpy()[0] for c in cols), pend)
+        if rows:
+            yield pd.DataFrame(rows, columns=names)
 
     return d.mapInPandas(run, schema=out_schema)
 
@@ -231,11 +242,10 @@ def _merge_partials(partials: DataFrame, group_cols: list[str],
     sum ``n_rasters``. Partials are tiny and positions unbounded → the
     streamed grouped map (applyInPandas per-group overhead would
     dominate)."""
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> dict:
         n = int(pdf["n_rasters"].sum())
         red = finish([codec.decode(bytes(b)) for b in pdf["bytes"]], n)
-        return pd.DataFrame([_out_row(key, group_cols, red.astype(np.float32),
-                                      fmt_out, n)])
+        return _out_row(key, group_cols, red.astype(np.float32), fmt_out, n)
 
     return grouped_sorted_map(partials, group_cols, merge,
                               _out_schema(group_cols, partials))

@@ -14,9 +14,10 @@ the leaves). Here a chain is a JSON-able list of operator specs:
 
 ``build_chain`` resolves names against the operator registry and fuses
 consecutive zero-padding ops into single mapInPandas passes (SURVEY.md
-O11); focal ops split the pipeline at halo-exchange boundaries. The
-registry plays the role of the XML ``PythonModule``/``ClassName`` dynamic
-binding (deprecated/NDVI.rft.xml:12-27).
+O11); each focal op becomes a halo-exchange stage that runs its
+zero-padding neighbours too. The registry plays the role of the XML
+``PythonModule``/``ClassName`` dynamic binding
+(deprecated/NDVI.rft.xml:12-27).
 
 Chain outputs follow the tile-row contract in :mod:`raster` (``TILE_FIELDS``
 filled by ``tile_row``).
@@ -150,9 +151,17 @@ def build_chain(df: DataFrame, spec, fmt_out: str = "zlib",
                 meta_cols: tuple[str, ...] = (),
                 grid_cols: tuple[str, str, str] = ("scene_id", "tx", "ty"),
                 ctx: dict | None = None) -> DataFrame:
-    """Apply a chain spec to a tile table: consecutive pointwise ops fuse
-    into one decode→kernels→encode pass; each focal op becomes a halo
-    exchange stage.
+    """Apply a chain spec to a tile table in one Python pass per stage.
+    A chain of pointwise ops fuses into one decode→kernels→encode pass
+    (:func:`raster.apply_chain`). Each focal op becomes a halo exchange
+    stage (:func:`operators.focal.apply_focal`, an emit and an assemble
+    pass) that also runs its pointwise neighbours: the ops before the
+    first focal op in the emit pass, the ops after each focal op (up to
+    the next one) in its assemble pass. The output tiles equal the
+    unfused ``apply_chain(apply_focal(apply_chain(df, pre), op), post)``
+    byte for byte under lossless formats; a lossy ``fmt_out`` is applied
+    once instead of after every stage. Fused ops get the ``meta_cols``
+    values, as :func:`raster.apply_chain` gives them.
 
     ``{"op": "branch_stack", "branches": [spec, …]}`` nodes (emitted by the
     .rft.xml importer for multi-input templates) evaluate each branch from
@@ -174,23 +183,22 @@ def build_chain(df: DataFrame, spec, fmt_out: str = "zlib",
     def flush_linear(cur: DataFrame, nodes: list) -> DataFrame:
         ops = parse_chain([{**n, "args": _resolve_ctx_args(n.get("args"), ctx)}
                            for n in nodes])
-        pending: list[TileOp] = []
-        for op in ops:
-            if op.padding == 0:
-                pending.append(op)
-            else:
-                if pending:
-                    cur = apply_chain(cur, pending, fmt_out=fmt_out, meta_cols=meta_cols)
-                    pending = []
-                # forward the chain's meta columns THROUGH the halo stage
-                # (plus apply_focal's own cell_dx default) — otherwise any
-                # meta-dependent op after a focal op loses its inputs and
-                # the next fused stage KeyErrors on the executor
-                cur = focal.apply_focal(
-                    cur, op, fmt_out=fmt_out, grid_cols=grid_cols,
-                    meta_cols=tuple(dict.fromkeys(("cell_dx",) + tuple(meta_cols))))
-        if pending:
-            cur = apply_chain(cur, pending, fmt_out=fmt_out, meta_cols=meta_cols)
+        focal_at = [i for i, op in enumerate(ops) if op.padding]
+        if not focal_at:
+            return apply_chain(cur, ops, fmt_out=fmt_out, meta_cols=meta_cols)
+        # each halo stage runs the pointwise ops up to the next focal op
+        # (its post list); the first one also runs the leading ops. The
+        # chain's meta columns travel THROUGH every stage (plus the focal
+        # op's own cell_dx default) so a meta-dependent op after it still
+        # has them, while the fused pointwise ops see only the chain's
+        # meta_cols, exactly as apply_chain would give them
+        pre = ops[:focal_at[0]]
+        for i, end in zip(focal_at, focal_at[1:] + [len(ops)]):
+            cur = focal.apply_focal(
+                cur, ops[i], fmt_out=fmt_out, grid_cols=grid_cols,
+                meta_cols=tuple(dict.fromkeys(("cell_dx",) + tuple(meta_cols))),
+                pre=pre, post=ops[i + 1:end], ops_meta_cols=tuple(meta_cols))
+            pre = []
         return cur
 
     for node in spec:

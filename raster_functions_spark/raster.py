@@ -29,7 +29,11 @@ Every tile operator has one of five shapes, each with one owner:
   :func:`chained_tiles` (the decode → ops loop) behind
   :func:`apply_chain` (tiles out) and :func:`tile_stats` (scalars out);
 - halo — padded ops over a tile and its neighbours' edge strips:
-  :func:`operators.focal.apply_focal`;
+  :func:`operators.focal.apply_focal`, one emit and one assemble pass
+  with the chain's zero-padding neighbours fused in (leading ops run on
+  the decoded tile before its strips are cut, trailing ops on the
+  kernel's output), so ``plans.chain.build_chain`` runs no
+  :func:`apply_chain` pass next to a halo stage;
 - stack — reductions over a group of co-registered members:
   ``operators.stack._composite`` (full stack) and
   ``_partial_tiles`` / ``_merge_partials`` (map-side partials);
@@ -123,9 +127,10 @@ def chained_tiles(ops: list[TileOp], meta_cols: Iterable[str] = (),
     meta_cols = list(meta_cols)
 
     def tiles(pdf: pd.DataFrame):
-        for ridx, buf in enumerate(pdf[bytes_col]):
+        metas = {c: pdf[c].to_numpy() for c in meta_cols}
+        for ridx, buf in enumerate(pdf[bytes_col].to_numpy()):
             px = codec.decode(bytes(buf))
-            meta = {c: pdf[c].iloc[ridx] for c in meta_cols}
+            meta = {c: v[ridx] for c, v in metas.items()}
             for op in ops:
                 px = op.apply(px, meta)
             yield px, meta

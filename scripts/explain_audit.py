@@ -6,7 +6,8 @@ properties the engine is designed around (SURVEY.md §4):
 - cell-encode lives inside WholeStageCodegen (zero Python)
 - minhash runs as codegen'd hash aggregation (no interpreted HOFs)
 - per-pixel zonal statistics run their zone op in one Python pass
-- a halo-exchange chain scans its tile table once and joins nothing
+- a halo-exchange chain scans its tile table once and joins nothing,
+  and runs its pointwise ops inside the halo stage's two Python passes
 - polyfill plans one MapInPandas and no Exchange; neither it nor the
   compact bbox cover plans a Union
 
@@ -403,6 +404,22 @@ def main() -> int:
     p = plan_of(grid.compact_cover_df(spark, -10.0, -5.0, 25.0, 30.0, 9))
     checks.append(("compact bbox cover: no Union", "Union" not in p))
     out += ["\n## compact_cover_df\n", p]
+
+    # 30. a halo stage fuses its pointwise neighbours: leading ops run in
+    # the emit pass, trailing ops in the assemble pass — two Python
+    # passes whatever pointwise ops surround the focal op
+    stretch = {"op": "stretch", "args": {"band": 0, "in_min": 0, "in_max": 255,
+                                         "out_min": 0, "out_max": 1}}
+    shade = {"op": "hillshade", "args": {"geographic": True}}
+    ok = True
+    with tempfile.TemporaryDirectory() as td:
+        fixtures.dem_scene_df(spark, tiles_x=2, tiles_y=2, tile=16).write.parquet(td + "/dem")
+        for name, spec in (("hillshade→stretch", [shade, stretch]),
+                           ("stretch→hillshade→stretch", [stretch, shade, stretch])):
+            p = plan_of(_chain.build_chain(spark.read.parquet(td + "/dem"), spec))
+            ok &= len(_re.findall(r"\(\d+\) MapInPandas", p)) == 2
+            out += [f"\n## build_chain {name}\n", p]
+    checks.append(("halo stage: pointwise neighbours fused, exactly two MapInPandas", ok))
 
     out.append("\n# Assertions\n")
     failed = 0

@@ -49,6 +49,94 @@ def test_chain_with_focal_stage(spark):
         assert np.allclose(got, want.astype(np.float32), atol=1e-5)
 
 
+def _unfused_chain(df, ops, meta_cols=()):
+    """Reference composition for build_chain's halo fusion: pointwise runs
+    as their own apply_chain passes around each apply_focal."""
+    from raster_functions_spark.raster import apply_chain
+    cur, pending = df, []
+    for op in ops:
+        if not op.padding:
+            pending.append(op)
+            continue
+        if pending:
+            cur = apply_chain(cur, pending, fmt_out="zlib", meta_cols=meta_cols)
+            pending = []
+        cur = focal.apply_focal(cur, op, fmt_out="zlib",
+                                meta_cols=tuple(dict.fromkeys(("cell_dx", *meta_cols))))
+    if pending:
+        cur = apply_chain(cur, pending, fmt_out="zlib", meta_cols=meta_cols)
+    return cur
+
+
+def _tile_bytes(df):
+    return {(r["scene_id"], r["tx"], r["ty"]): bytes(r["bytes"])
+            for r in df.select("scene_id", "tx", "ty", "bytes").collect()}
+
+
+_STRETCH = {"op": "stretch", "args": {"band": 0, "in_min": 0, "in_max": 255,
+                                      "out_min": 0, "out_max": 1}}
+
+
+@pytest.mark.parametrize("spec, meta_cols", [
+    ([{"op": "hillshade", "args": {"cellsize": 0.001}}, _STRETCH], ()),
+    ([_STRETCH, {"op": "slope", "args": {"geographic": True}}, _STRETCH],
+     ("cell_dx", "cell_dy")),
+    ([{"op": "slope", "args": {}}, _STRETCH,
+      {"op": "focal_statistics", "args": {"measure": "mean", "size": 3}},
+      {"op": "calculator", "args": {"expression": "a * 2.0", "band_names": {"a": 0}}}],
+     ()),
+], ids=["hillshade-stretch", "stretch-slope-stretch-meta", "two-focal"])
+def test_chain_halo_fusion_matches_unfused(spark, spec, meta_cols):
+    """Pointwise ops fused into a halo stage give the bytes of the unfused
+    apply_chain(apply_focal(apply_chain(df, pre), F), post) composition."""
+    df = fixtures.dem_scene_df(spark, "f0", 3, 2, 16)
+    got = _tile_bytes(chain.build_chain(df, spec, fmt_out="zlib", meta_cols=meta_cols))
+    want = _tile_bytes(_unfused_chain(df, chain.parse_chain(spec), meta_cols))
+    assert len(got) == 6 and got == want
+
+
+def test_chain_halo_fusion_mask_erode_post_op(spark):
+    """mask_erode reads the halo validity map; a pointwise op after it
+    runs on its output in the assemble pass, same bytes as unfused."""
+    import pandas as pd
+    rng = np.random.default_rng(7)
+    rows = [{"scene_id": "m", "tx": tx, "ty": ty,
+             "bytes": codec.encode(np.stack(
+                 [rng.random((8, 8)).astype(np.float32),
+                  (rng.random((8, 8)) > 0.2).astype(np.float32)]), "raw")}
+            for ty in range(2) for tx in range(3)]
+    df = spark.createDataFrame(pd.DataFrame(rows))
+    spec = [{"op": "mask_erode", "args": {"size": 3}},
+            {"op": "mask_apply", "args": {"value_band": 0, "mask_band": 1,
+                                          "nodata": -1.0}}]
+    got = _tile_bytes(chain.build_chain(df, spec, fmt_out="zlib"))
+    want = _tile_bytes(_unfused_chain(df, chain.parse_chain(spec)))
+    assert len(got) == 6 and got == want
+
+
+def test_chain_halo_fusion_post_op_meta_is_the_chains(spark, monkeypatch):
+    """A fused post op gets only the chain's meta_cols, not the halo's
+    cell_dx extension: zone_band_from_cells falls back to dx = 0.001 when
+    meta lacks cell_dx, as it does under apply_chain."""
+    from raster_functions_spark.operators import zonal
+    monkeypatch.setitem(chain.REGISTRY, "zone_band", zonal.zone_band_from_cells)
+    df = (fixtures.dem_scene_df(spark, "z0", 3, 2, 16)
+          .withColumn("cell_dx", F.lit(0.004))
+          .withColumn("xmin", F.col("tx") * 0.064)
+          .withColumn("ymax", F.col("ty") * -0.016))
+    spec = [{"op": "hillshade", "args": {"cellsize": 0.001}},
+            {"op": "zone_band", "args": {"res": 15, "n_zones": 20}}]
+    meta_cols = ("xmin", "ymax")
+    got = _tile_bytes(chain.build_chain(df, spec, fmt_out="zlib", meta_cols=meta_cols))
+    want = _tile_bytes(_unfused_chain(df, chain.parse_chain(spec), meta_cols))
+    assert len(got) == 6 and got == want
+    # the rule is observable: with cell_dx in its meta the op's zones differ
+    op = zonal.zone_band_from_cells(15, 20)
+    px = np.zeros((1, 16, 16), np.float32)
+    meta = {"xmin": 0.064, "ymax": 0.0}
+    assert not np.array_equal(op.apply(px, meta), op.apply(px, {**meta, "cell_dx": 0.004}))
+
+
 def test_stack_tiles_subset_key_branch(spark):
     """A branch keyed by tile position only (a composite over the scenes)
     attaches its tile to every member row with that position."""

@@ -219,8 +219,7 @@ def test_grouped_sorted_map_stitches_across_arrow_batches(spark):
                                T.StructField("s", T.DoubleType())])
 
         def fn(key, g):
-            return pd.DataFrame([{"a": key[0], "b": key[1],
-                                  "n": len(g), "s": float(g["v"].sum())}])
+            return {"a": key[0], "b": key[1], "n": len(g), "s": float(g["v"].sum())}
 
         out = grouped_sorted_map(df, ["a", "b"], fn, schema).toPandas()
         assert len(out) == 10                      # one row per (a, b)
@@ -237,10 +236,10 @@ def test_grouped_sorted_map_stitches_across_arrow_batches(spark):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_grouped_sorted_map_drops_empty_group_frames(spark):
-    """fn may return an empty frame for a group (focal assembly does for
-    every halo target past the grid edge); those add no rows, the other
-    groups keep their values, and all-empty output keeps the schema."""
+def test_grouped_sorted_map_drops_none_groups(spark):
+    """fn may return None for a group (focal assembly does for every halo
+    target past the grid edge); those add no rows, the other groups keep
+    their values, and all-None output keeps the schema."""
     import pandas as pd
     import pyspark.sql.types as T
     from raster_functions_spark.operators.stack import grouped_sorted_map
@@ -251,9 +250,8 @@ def test_grouped_sorted_map_drops_empty_group_frames(spark):
 
     def fn_some(key, g):
         if key[0] % 2:
-            return pd.DataFrame({"k": pd.Series(dtype="object"),
-                                 "s": pd.Series(dtype="object")})
-        return pd.DataFrame({"k": [key[0]], "s": [float(g["v"].sum())]})
+            return None
+        return {"k": key[0], "s": float(g["v"].sum())}
 
     got = grouped_sorted_map(df, ["k"], fn_some, schema).toPandas()
     want = {k: float(sum(i for i in range(60) if i % 6 == k)) for k in (0, 2, 4)}
@@ -288,13 +286,12 @@ def test_grouped_sorted_map_keeps_null_group_keys(spark):
         def fn(key, g):
             k = key[0]
             k = None if (k is None or (isinstance(k, float) and pd.isna(k))) else k
-            return pd.DataFrame([{"a": k, "n": len(g),
-                                  "s": float(g["v"].sum())}])
+            return {"a": k, "n": len(g), "s": float(g["v"].sum())}
 
         out = grouped_sorted_map(df, ["a"], fn, schema).toPandas()
         # reference semantics: groupBy().applyInPandas keeps the null group
         ref = df.groupBy("a").applyInPandas(
-            lambda k, g: fn((k[0],), g), schema).toPandas()
+            lambda k, g: pd.DataFrame([fn((k[0],), g)]), schema).toPandas()
         key = lambda d: d.assign(a=d["a"].fillna("<null>")).sort_values(
             "a").reset_index(drop=True)
         got, want = key(out), key(ref)
@@ -304,11 +301,36 @@ def test_grouped_sorted_map_keeps_null_group_keys(spark):
         # the null group's sum covers all i % 4 == 0 rows
         null_sum = sum(float(i) for i in range(60) if i % 4 == 0)
         assert float(got.loc[got["a"] == "<null>", "s"].iloc[0]) == null_sum
+        # a null in a numeric key column arrives as NaN, unequal to itself
+        schema_b = T.StructType([T.StructField("b", T.LongType()),
+                                 T.StructField("n", T.LongType())])
+        bs = [None if i % 4 == 0 else i % 3 for i in range(60)]
+        df_b = spark.createDataFrame([(b, float(i)) for i, b in enumerate(bs)],
+                                     "b long, v double").repartition(3)
+        out_b = grouped_sorted_map(
+            df_b, ["b"], lambda k, g: {"b": None if pd.isna(k[0]) else int(k[0]),
+                                       "n": len(g)}, schema_b).collect()
+        assert {r["b"]: r["n"] for r in out_b} == {b: bs.count(b) for b in set(bs)}
+        assert len(out_b) == 4
     finally:
         if old is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_grouped_sorted_map_one_task_per_core(spark):
+    """The grouped map's shuffle has defaultParallelism partitions: one
+    Python task per core, no second wave."""
+    import pandas as pd
+    import pyspark.sql.types as T
+    from raster_functions_spark.operators.stack import grouped_sorted_map
+    df = spark.createDataFrame(pd.DataFrame({"k": list(range(100))}))
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    out = grouped_sorted_map(df, ["k"], lambda key, g: {"k": key[0]}, schema)
+    n = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() == n
+    assert sorted(r["k"] for r in out.collect()) == list(range(100))
 
 
 def test_mean_assoc_qa_nan_value_matches_batch_path(spark):
