@@ -149,24 +149,9 @@ def _polyhash_sql(s_expr: str, k: int) -> str:
     return f"({e} % {MINHASH_P})"
 
 
-def minhash_signature(text_col: str, k: int = 5, n_hashes: int = 8):
-    """Array-expression form of the signature (used for parity tests and
-    small inputs; the LSH pipeline uses the faster explode form)."""
-    A, B = minhash_family(n_hashes)
-    sig = [F.expr(
-        f"array_min(transform({_shingles_sql_spark(text_col, k)},"
-        f" s -> ({a}L * {_polyhash_sql('s', k)} + {b}L) % {MINHASH_P}))").alias(f"h{i}")
-        for i, (a, b) in enumerate(zip(A, B))]
-    return F.array(*sig)
-
-
-def _shingles_sql_spark(text_col: str, k: int) -> str:
-    return (f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-            f" i -> substring({text_col}, i, {k})))")
-
-
 def minhash_sql(text_expr: str, k: int = 5, n_hashes: int = 8) -> list[str]:
-    """DuckDB expressions mirroring :func:`minhash_signature` exactly."""
+    """DuckDB expressions mirroring :func:`oracles.minhash_signature`
+    (the Spark array form) exactly."""
     A, B = minhash_family(n_hashes)
     sh = (f"list_distinct(list_transform(range(1, greatest(length({text_expr}) - {k - 1}, 1) + 1),"
           f" i -> substring({text_expr}, i, {k})))")
@@ -178,7 +163,7 @@ def minhash_sql(text_expr: str, k: int = 5, n_hashes: int = 8) -> list[str]:
 def _minhash_sig_batch(ids: np.ndarray, texts, A: np.ndarray, B: np.ndarray,
                        k: int) -> pd.DataFrame:
     """Vectorized NumPy minhash signatures for one Arrow batch — value-
-    identical to the SQL form (``minhash_signature`` / the pre-r7 explode+
+    identical to the SQL form (``oracles.minhash_signature`` / the pre-r7 explode+
     64-min-agg plan) but one C pass instead of one JVM row per character
     position (guide §4.2; the SQL plan additionally paid an O(position)
     UTF8 char-offset scan per substring, making it superlinear per doc).

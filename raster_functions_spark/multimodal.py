@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec, formats
+from .operators.stack import grouped_sorted_map
 from .raster import (TILE_COLS, TILE_FIELDS, TileOp, apply_chain, chained_tiles,
                      tile_columns, tile_row)
 
@@ -461,16 +462,13 @@ def export_shards(df, capacity_bytes: int, seed: int = 0x5A4D,
     :func:`~raster_functions_spark.sampling.pack_sequences` assignment
     (hash-salted into ``n_buckets`` independent packing streams — no
     global window), then ONE (bucket, bin) shuffle moves each image's
-    bytes exactly once into its shard's applyInPandas group; groups are
-    capacity-sized (~the shard size you asked for), so the per-group
-    Arrow tax is amortized over megabytes. Returns one row per shard:
+    bytes exactly once into its shard's group
+    (:func:`~raster_functions_spark.operators.stack.grouped_sorted_map`).
+    Returns one row per shard:
     the manifest (n_items, payload_bytes, names_md5 — order-pinning) +
     the tar payload and its md5."""
     import hashlib
-    import pandas as pd
-    from pyspark.sql import functions as F
     from .sampling import pack_sequences
-    from . import formats
 
     weight = F.length(F.col(bytes_col)) + F.octet_length(F.col(caption_col))
     base = (df.select(id_col, bytes_col, fmt_col, caption_col)
@@ -478,9 +476,9 @@ def export_shards(df, capacity_bytes: int, seed: int = 0x5A4D,
     assigned = pack_sequences(base, "_w", capacity_bytes, id_col, seed,
                               n_buckets)
 
-    schema = ("pack_bucket int, pack_bin long, n_items long, "
-              "payload_bytes long, names_md5 string, tar_bytes binary, "
-              "tar_md5 string")
+    schema = T.StructType.fromDDL(
+        "pack_bucket int, pack_bin long, n_items long, payload_bytes long, "
+        "names_md5 string, tar_bytes binary, tar_md5 string")
 
     def build(key, pdf):
         pdf = pdf.sort_values(["pack_offset", id_col])
@@ -495,13 +493,9 @@ def export_shards(df, capacity_bytes: int, seed: int = 0x5A4D,
             names.append(f"{img_name},{txt_name};")
             payload += len(payload_bytes) + len(cap)
         tar = formats.tar_archive(members)
-        return pd.DataFrame([{
-            "pack_bucket": int(key[0]), "pack_bin": int(key[1]),
-            "n_items": len(pdf), "payload_bytes": payload,
-            "names_md5": hashlib.md5("".join(names).encode()).hexdigest(),
-            "tar_bytes": tar,
-            "tar_md5": hashlib.md5(tar).hexdigest(),
-        }])
+        return {"pack_bucket": int(key[0]), "pack_bin": int(key[1]),
+                "n_items": len(pdf), "payload_bytes": payload,
+                "names_md5": hashlib.md5("".join(names).encode()).hexdigest(),
+                "tar_bytes": tar, "tar_md5": hashlib.md5(tar).hexdigest()}
 
-    return (assigned.groupBy("pack_bucket", "pack_bin")
-            .applyInPandas(build, schema))
+    return grouped_sorted_map(assigned, ["pack_bucket", "pack_bin"], build, schema)

@@ -11,8 +11,9 @@ from __future__ import annotations
 import numpy as np
 
 from .. import grid
-from ..raster import TileOp
+from ..raster import TileOp, chained_tiles
 from .focal import block_statistics_np
+from .zonal import keyed_reduce
 
 
 def cubism(block: int = 8, band: int | None = None) -> TileOp:
@@ -54,12 +55,7 @@ def hex_aggregate_np(px2d: np.ndarray, meta: dict, size_deg: float):
     lat = float(meta["ymax"]) - (np.arange(h) + 0.5) * dy
     glon, glat = np.meshgrid(lon, lat)
     hx = grid.hex_encode(glon.ravel(), glat.ravel(), size_deg)
-    v = px2d.astype(np.float64).ravel()
-    order = np.argsort(hx, kind="stable")
-    hs, vs = hx[order], v[order]
-    uh, starts = np.unique(hs, return_index=True)
-    sums = np.add.reduceat(vs, starts)
-    counts = np.diff(np.append(starts, hs.size))
+    uh, counts, (sums,) = keyed_reduce(hx, px2d.astype(np.float64).ravel())
     return uh, sums, counts
 
 
@@ -70,24 +66,22 @@ def hexagon_pixels(df, size_deg: float = 0.01, value_band: int = 0,
     import pandas as pd
     import pyspark.sql.functions as F
     from pyspark.sql import types as T
-    from .. import codec
 
     schema = T.StructType([T.StructField("hex_id", T.LongType()),
                            T.StructField("psum", T.DoubleType()),
                            T.StructField("pn", T.LongType())])
     cols = [c for c in meta_cols if c in df.columns]
+    tiles = chained_tiles([], cols)
 
     def run(batches):
         for pdf in batches:
             hs, ss, ns = [], [], []
-            for i in range(len(pdf)):
-                px = codec.decode(bytes(pdf["bytes"].iloc[i]))[value_band]
-                meta = {c: pdf[c].iloc[i] for c in cols}
-                uh, sums, counts = hex_aggregate_np(px, meta, size_deg)
+            for px, meta in tiles(pdf):
+                uh, sums, counts = hex_aggregate_np(px[value_band], meta, size_deg)
                 hs.extend(uh.tolist()); ss.extend(sums.tolist()); ns.extend(counts.tolist())
             yield pd.DataFrame({"hex_id": hs, "psum": ss, "pn": ns})
 
-    partials = df.mapInPandas(run, schema=schema)
+    partials = df.select("bytes", *cols).mapInPandas(run, schema=schema)
     return (partials.groupBy("hex_id")
             .agg((F.sum("psum") / F.sum("pn")).alias("mean"),
                  F.sum("pn").alias("n_px"))

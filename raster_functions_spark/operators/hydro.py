@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 from .. import codec
 from ..raster import TileOp, apply_chain, join_tiles, scene_map
 from .focal import _horn_gradients
+from .stack import grouped_sorted_map
 
 # D8 neighbor offsets (E, SE, S, SW, W, NW, N, NE)
 _D8 = np.array([(0, 1), (1, 1), (1, 0), (1, -1),
@@ -230,6 +231,15 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
                 })
             yield pd.DataFrame(rows, columns=[scn, txc, tyc, "acc_bytes", "outflows"])
 
+    def build_inflow(key: tuple, pdf: pd.DataFrame) -> dict:
+        inflow = np.zeros(tile * tile, dtype=np.float64)
+        np.add.at(inflow, pdf["cell"].to_numpy(np.int64),
+                  pdf["amt"].to_numpy(np.float64))
+        return {scn: key[0], txc: int(key[1]), tyc: int(key[2]),
+                "inflow_bytes": codec.encode(inflow.reshape(tile, tile)[None], "raw")}
+
+    inflow_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
+                                  T.StructField("inflow_bytes", T.BinaryType())])
     prev_checksum = None
     result = None
     converged = False
@@ -238,27 +248,16 @@ def flow_accumulation_distributed(df: DataFrame, tile: int,
         flows = (result.select(scn, F.explode("outflows").alias("o"))
                  .select(scn, F.col("o.ttx").alias(txc), F.col("o.tty").alias(tyc),
                          "o.cell", "o.amt"))
-        checksum = (flows.agg(F.count("*"), F.round(F.sum("amt"), 6)).first()
-                    if flows.head(1) else (0, 0.0))
-        checksum = tuple(checksum) if not isinstance(checksum, tuple) else checksum
+        # an empty round's NULL sum reads 0.0: two empty rounds converge
+        checksum = flows.agg(F.count("*"),
+                             F.coalesce(F.round(F.sum("amt"), 6), F.lit(0.0))).first()
         if checksum == prev_checksum:
             converged = True
             break
         prev_checksum = checksum
 
-        def build_inflow(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            inflow = np.zeros(tile * tile, dtype=np.float64)
-            np.add.at(inflow, pdf["cell"].to_numpy(np.int64),
-                      pdf["amt"].to_numpy(np.float64))
-            return pd.DataFrame([{scn: key[0], txc: int(key[1]), tyc: int(key[2]),
-                                  "inflow_bytes": codec.encode(
-                                      inflow.reshape(tile, tile)[None],
-                                      "raw")}])
-
-        inflow_schema = T.StructType([df.schema[scn], df.schema[txc], df.schema[tyc],
-                                      T.StructField("inflow_bytes", T.BinaryType())])
-        inflows = (flows.groupBy(scn, txc, tyc)
-                   .applyInPandas(build_inflow, schema=inflow_schema))
+        inflows = grouped_sorted_map(flows, [scn, txc, tyc], build_inflow,
+                                     inflow_schema)
         state = (state.drop("inflow_bytes")
                  .join(inflows, [scn, txc, tyc], "left")
                  .localCheckpoint())

@@ -8,16 +8,19 @@ the (broadcastable) training table and applied per-pixel inside Arrow
 batches — the same broadcast-train / vectorized-predict shape the Spark
 deployment of the reference would use.
 
-The SARIMA delta tiles follow the tile-row contract in :mod:`raster`
-(``TILE_FIELDS`` filled by ``tile_row``).
+The SARIMA delta tiles are full-stack composites of :mod:`.stack` (the
+tile-row contract of :mod:`raster`, ``n_obs`` = member count) and the
+per-group forecasters run on :func:`stack.grouped_sorted_map`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import types as T
 
-from ..raster import TILE_FIELDS, TileOp, tile_row
+from ..raster import TileOp
+from .stack import _composite, grouped_sorted_map
 
 
 # ------------------------------------------------------------- kNN ---------
@@ -480,32 +483,55 @@ def sarima_forecast_batch(Y: np.ndarray, horizon: int, period: int = 12,
     return out
 
 
-def sarima_forecast_by_group(df, group_cols: list[str], value_col: str,
-                             time_col: str, period: int = 12,
-                             horizon: int = 1):
-    """Per-group SARIMA (1,0,0)×(1,0,0,s)+c forecast via applyInPandas —
-    the true-SARIMA upgrade of seasonal_forecast_by_group (A11/M5,
-    SeasonalARIMA.py:192-216): same distributed shape, CSS-fit model."""
-    import pyspark.sql.types as T
-
+def _forecast_by_group(df, group_cols: list[str], value_col: str,
+                       time_col: str, fit):
+    """The one per-group forecaster body: each group's values in
+    ``time_col`` order (SeasonalARIMA.py:162-163) through
+    ``fit(values) -> (forecast, delta)``, one row per group on
+    :func:`stack.grouped_sorted_map`."""
     out_schema = T.StructType([df.schema[c] for c in group_cols] + [
         T.StructField("forecast", T.DoubleType()),
         T.StructField("delta", T.DoubleType()),
         T.StructField("n_obs", T.LongType())])
 
-    def per_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        vals = pdf[value_col].to_numpy(np.float64)
-        if vals.size < 2 * period + 2:
-            fc = float(vals[-1])                 # too short: naive hold
-        else:
-            fc = float(sarima_forecast_batch(vals[None], horizon, period)[0, -1])
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"forecast": fc, "delta": fc - float(vals[-1]),
-                    "n_obs": len(vals)})
-        return pd.DataFrame([row])
+    def per_group(key: tuple, pdf: pd.DataFrame) -> dict:
+        vals = pdf.sort_values(time_col)[value_col].to_numpy(np.float64)
+        fc, delta = fit(vals)
+        return {**dict(zip(group_cols, key)), "forecast": fc, "delta": delta,
+                "n_obs": len(vals)}
 
-    return df.groupBy(*group_cols).applyInPandas(per_group, schema=out_schema)
+    return grouped_sorted_map(df, group_cols, per_group, out_schema)
+
+
+def sarima_forecast(period: int = 12, horizon: int = 1):
+    """The CSS-SARIMA (1,0,0)×(1,0,0,s)+c fit for one series: returns
+    fn(values) -> (forecast, delta). Series shorter than 2·period+2 fall
+    back to a naive hold (forecast = last value, delta 0)."""
+
+    def fit_predict(values: np.ndarray) -> tuple[float, float]:
+        if values.size < 2 * period + 2:
+            fc = float(values[-1])               # too short: naive hold
+        else:
+            fc = float(sarima_forecast_batch(values[None], horizon, period)[0, -1])
+        return fc, fc - float(values[-1])
+
+    return fit_predict
+
+
+def sarima_forecast_by_group(df, group_cols: list[str], value_col: str,
+                             time_col: str, period: int = 12,
+                             horizon: int = 1):
+    """Per-group SARIMA (1,0,0)×(1,0,0,s)+c forecast — the true-SARIMA
+    upgrade of seasonal_forecast_by_group (A11/M5,
+    SeasonalARIMA.py:192-216): same distributed shape, CSS-fit model
+    (:func:`sarima_forecast`)."""
+    return _forecast_by_group(df, group_cols, value_col, time_col,
+                              sarima_forecast(period, horizon))
+
+
+def _pixel_series(stk: np.ndarray, value_band: int) -> np.ndarray:
+    """(n_t, bands, h, w) f8 stack → (pixels, n_t) series of one band."""
+    return stk[:, value_band].reshape(stk.shape[0], -1).T
 
 
 def sarima_template_delta(df, data_start_year: int, train_start_year: int,
@@ -549,9 +575,6 @@ def sarima_template_delta(df, data_start_year: int, train_start_year: int,
     ``current_year`` replaces the reference's wall-clock datetime.now()
     (SeasonalARIMA.py:181) with an explicit argument — default
     train_end_year + 1 — so runs are deterministic and replayable."""
-    from pyspark.sql import types as T
-    from .. import codec
-
     P, D, Q, s = seasonal_order
     cy = train_end_year + 1 if current_year is None else int(current_year)
     i0 = (train_start_year - data_start_year) * 12
@@ -562,24 +585,16 @@ def sarima_template_delta(df, data_start_year: int, train_start_year: int,
         raise ValueError("predict/current year precede the training end")
     horizon = max(j_final, j_cur) + 1
 
-    out_schema = T.StructType([df.schema[c] for c in group_cols] + TILE_FIELDS
-                              + [T.StructField("n_obs", T.IntegerType())])
-
-    def per_scene(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        stack = np.stack([codec.decode(bytes(b))[value_band] for b in pdf["bytes"]])
-        n_t, h, w = stack.shape
-        Y = stack.reshape(n_t, -1).T.astype(np.float64)[:, i0:i1]
+    def reducer(stk: np.ndarray) -> np.ndarray:
+        Y = _pixel_series(stk, value_band)[:, i0:i1]
         if Y.shape[1] < 2 * s + 2:      # too short: the engine-wide fallback
-            delta = np.zeros((h, w), np.float32)
-        else:
-            fc = sarima_forecast_batch(Y, horizon, period=s,
-                                       seasonal_order=(P, D, Q))
-            delta = (fc[:, j_final] - fc[:, j_cur]).reshape(h, w).astype(np.float32)
-        return pd.DataFrame([{**dict(zip(group_cols, key)),
-                              **tile_row(delta, fmt_out), "n_obs": n_t}])
+            return np.zeros(stk.shape[2:])
+        fc = sarima_forecast_batch(Y, horizon, period=s,
+                                   seasonal_order=(P, D, Q))
+        return (fc[:, j_final] - fc[:, j_cur]).reshape(stk.shape[2:])
 
-    return df.groupBy(*group_cols).applyInPandas(per_scene, schema=out_schema)
+    return (_composite(df, group_cols, reducer, fmt_out, None, order_col=order_col)
+            .withColumnRenamed("n_rasters", "n_obs"))
 
 
 def sarima_stack_delta(df, period: int = 12, horizon: int = 12,
@@ -590,39 +605,31 @@ def sarima_stack_delta(df, period: int = 12, horizon: int = 12,
     reference's actual shape (SeasonalARIMA.py:192-216 loops pixels and
     fits one SARIMAX each; here sarima_css_fit_batch fits EVERY pixel of
     the tile simultaneously as one whole-array solve). Output band =
-    forecast(t+horizon) − last observation (its 'delta' product)."""
-    from pyspark.sql import types as T
-    from .. import codec
+    forecast(t+horizon) − last observation (its 'delta' product); a
+    full-stack composite (:func:`stack._composite`), ``n_obs`` = the
+    stack's member count."""
 
-    out_schema = T.StructType([df.schema[c] for c in group_cols] + TILE_FIELDS
-                              + [T.StructField("n_obs", T.IntegerType())])
-
-    def per_scene(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        stack = np.stack([codec.decode(bytes(b))[value_band] for b in pdf["bytes"]])
-        n_t, h, w = stack.shape
-        Y = stack.reshape(n_t, -1).T.astype(np.float64)   # (pixels, T)
-        if n_t < period + 2:
+    def reducer(stk: np.ndarray) -> np.ndarray:
+        Y = _pixel_series(stk, value_band)               # (pixels, T)
+        if Y.shape[1] < period + 2:
             # short-series fallback: the CSS fit's regression slices are
             # Y[:, s+1:] — empty for T ≤ period+1, which would propagate
             # NaN coefficients into silently all-NaN tiles. (The stricter
             # 2s+2 bound the per-group paths use is about forecast
             # quality; here the exact historical behavior for
             # s+2 ≤ T < 2s+2 is kept byte-stable for the m5 oracles.)
-            delta = np.zeros((h, w), np.float32)
-        else:
-            fc = sarima_forecast_batch(Y, horizon, period)[:, -1]
-            delta = (fc - Y[:, -1]).reshape(h, w).astype(np.float32)
-        return pd.DataFrame([{**dict(zip(group_cols, key)),
-                              **tile_row(delta, fmt_out), "n_obs": n_t}])
+            return np.zeros(stk.shape[2:])
+        fc = sarima_forecast_batch(Y, horizon, period)[:, -1]
+        return (fc - Y[:, -1]).reshape(stk.shape[2:])
 
-    return df.groupBy(*group_cols).applyInPandas(per_scene, schema=out_schema)
+    return (_composite(df, group_cols, reducer, fmt_out, None, order_col=order_col)
+            .withColumnRenamed("n_rasters", "n_obs"))
 
 
 def seasonal_forecast(period: int = 12, horizon: int = 1):
-    """Per-group seasonal forecast for applyInPandas — SeasonalARIMA's
-    slot (SeasonalARIMA.py:192-216). The cheap deterministic stand-in
-    (seasonal-naive + linear trend); sarima_forecast_by_group is the full
+    """The seasonal fit for one series — SeasonalARIMA's slot
+    (SeasonalARIMA.py:192-216). The cheap deterministic stand-in
+    (seasonal-naive + linear trend); :func:`sarima_forecast` is the full
     CSS-SARIMA model. Returns fn(values) -> (forecast, delta)."""
 
     def fit_predict(values: np.ndarray) -> tuple[float, float]:
@@ -640,27 +647,11 @@ def seasonal_forecast(period: int = 12, horizon: int = 1):
 def seasonal_forecast_by_group(df, group_cols: list[str], value_col: str,
                                time_col: str, period: int = 12,
                                horizon: int = 1):
-    """Per-group seasonal forecast via applyInPandas — the distributed
-    shape of SeasonalARIMA (A11/M5: model-per-group aggregation,
-    SeasonalARIMA.py:192-216, time-sorted per 162-163)."""
-    import pyspark.sql.types as T
-
-    fit = seasonal_forecast(period, horizon)
-    base_schema = [df.schema[c] for c in group_cols]
-    out_schema = T.StructType(base_schema + [
-        T.StructField("forecast", T.DoubleType()),
-        T.StructField("delta", T.DoubleType()),
-        T.StructField("n_obs", T.LongType())])
-
-    def per_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        vals = pdf[value_col].to_numpy(np.float64)
-        fc, delta = fit(vals)
-        row = {c: key[i] for i, c in enumerate(group_cols)}
-        row.update({"forecast": fc, "delta": delta, "n_obs": len(vals)})
-        return pd.DataFrame([row])
-
-    return df.groupBy(*group_cols).applyInPandas(per_group, schema=out_schema)
+    """Per-group seasonal forecast — the distributed shape of
+    SeasonalARIMA (A11/M5: model-per-group aggregation,
+    SeasonalARIMA.py:192-216) with the :func:`seasonal_forecast` fit."""
+    return _forecast_by_group(df, group_cols, value_col, time_col,
+                              seasonal_forecast(period, horizon))
 
 
 def training_from_table(df, feature_cols: list[str], label_col: str):

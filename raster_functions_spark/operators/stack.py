@@ -4,16 +4,19 @@ The reference reduces a 4-D stack ``(n_rasters, bands, rows, cols)`` of
 co-registered acquisitions per request (deprecated/Aggregate.py:56-63,
 LandsatPixelPercentile.py:168-190, LandsatMedianImage.py:179,
 FindMax.py:66-84, PercentAboveThreshold.py:140-143). The Spark-native
-shape: groupBy(tile key) → applyInPandas assembles the stack once and
-reduces it with ONE vectorized NumPy call (the reference's per-pixel Python
-loops replaced by axis-0 reductions — identical math, SURVEY.md O9).
+shape: group by tile key (:func:`grouped_sorted_map`) assembles the stack
+once and reduces it with ONE vectorized NumPy call (the reference's
+per-pixel Python loops replaced by axis-0 reductions — identical math,
+SURVEY.md O9).
 
 Every reduction takes one of three shapes, each with one code path:
 
-- full-stack composite (median, percentile, coalesce, any measure):
-  :func:`_composite` streams each position's members through
-  :func:`_reduce_group`. Group size is bounded by (n_acquisitions × tile
-  bytes) — cap stacks by time-bucketing upstream if needed (SURVEY.md O13).
+- full-stack composite (median, percentile, coalesce, any measure, and
+  the per-pixel SARIMA deltas ``ml.sarima_stack_delta`` /
+  ``ml.sarima_template_delta``): :func:`_composite` streams each
+  position's members through :func:`_reduce_group`. Group size is bounded
+  by (n_acquisitions × tile bytes) — cap stacks by time-bucketing upstream
+  if needed (SURVEY.md O13).
 - map-side partial → merge (the k-th max of the FindMax family and the
   mean): :func:`_partial_tiles` reduces each input partition's members per
   position to one f8 partial tile, :func:`_merge_partials` shuffles only
@@ -153,9 +156,12 @@ def _run_starts(keys: list[np.ndarray]) -> np.ndarray:
 
 def grouped_sorted_map(df: DataFrame, group_cols: list[str], fn,
                        out_schema: T.StructType) -> DataFrame:
-    """``groupBy().applyInPandas`` without the per-GROUP Arrow round trip,
-    for many small groups (halo messages, pyramid children, a position's
-    acquisitions).
+    """``groupBy().applyInPandas`` without the per-GROUP Arrow round trip:
+    the package's one grouped map for every reduction that emits one row
+    per group (halo messages, pyramid children, a position's acquisitions,
+    a series' forecast, a tile's boundary inflows, a training shard).
+    The one exception is :func:`raster.scene_map`, which emits one row per
+    input tile and so stays on applyInPandas.
 
     applyInPandas pays ~ms of serde/scheduling per group — fine for big
     groups, ruinous for millions of tiny ones (and AQE coalesces a small

@@ -117,6 +117,17 @@ def zone_band_from_cells(res: int = 12, n_zones: int = 20) -> TileOp:
     return TileOp("zone_band", fn, dtype_out="f4")
 
 
+def keyed_reduce(keys: np.ndarray, values: np.ndarray, ufuncs=(np.add,)):
+    """The one keyed per-pixel partial reduce: stable argsort of ``keys``,
+    one run per distinct key, each ``ufunc.reduceat`` over the runs.
+    Returns ``(unique_keys, counts, [reduced per ufunc])``."""
+    order = np.argsort(keys, kind="stable")
+    k_s, v_s = keys[order], values[order]
+    uk, starts = np.unique(k_s, return_index=True)
+    counts = np.append(starts[1:], k_s.size) - starts
+    return uk, counts, [u.reduceat(v_s, starts) for u in ufuncs]
+
+
 def zonal_statistics_px(df: DataFrame, zones_per_pixel: TileOp | None,
                         value_band: int = 0, zone_band: int = 1,
                         meta_cols: tuple = ()) -> DataFrame:
@@ -141,17 +152,15 @@ def zonal_statistics_px(df: DataFrame, zones_per_pixel: TileOp | None,
         for pdf in batches:
             zs, sums, ns, mins, maxs = [], [], [], [], []
             for px, _ in tiles(pdf):
-                v = px[value_band].astype(np.float64).ravel()
-                zb = px[zone_band].astype(np.int64).ravel()
-                order = np.argsort(zb, kind="stable")
-                zb_s, v_s = zb[order], v[order]
-                uz, starts = np.unique(zb_s, return_index=True)
-                ends = np.append(starts[1:], zb_s.size)
+                uz, n, (sm, mn, mx) = keyed_reduce(
+                    px[zone_band].astype(np.int64).ravel(),
+                    px[value_band].astype(np.float64).ravel(),
+                    (np.add, np.minimum, np.maximum))
                 zs.extend(uz.tolist())
-                sums.extend(np.add.reduceat(v_s, starts).tolist())
-                ns.extend((ends - starts).tolist())
-                mins.extend(np.minimum.reduceat(v_s, starts).tolist())
-                maxs.extend(np.maximum.reduceat(v_s, starts).tolist())
+                sums.extend(sm.tolist())
+                ns.extend(n.tolist())
+                mins.extend(mn.tolist())
+                maxs.extend(mx.tolist())
             yield pd.DataFrame({"zone": zs, "psum": sums, "pn": ns,
                                 "pmin": mins, "pmax": maxs})
 

@@ -631,6 +631,22 @@ FROM j WHERE ROUND(inter / uni, 6) >= {threshold}
 ORDER BY id_a, id_b"""
 
 
+def minhash_signature(text_col: str, k: int = 5, n_hashes: int = 8):
+    """Spark reference for the minhash signature: a Spark SQL array
+    expression of the same (A, B) family, shingles and polynomial hash as
+    the DuckDB form :func:`dedup.minhash_sql`. Tests compare it with that
+    form and replay ``dedup.minhash_lsh_candidates``' banding over it."""
+    from pyspark.sql import functions as F
+    from .dedup import MINHASH_P, _polyhash_sql, minhash_family
+    A, B = minhash_family(n_hashes)
+    shingles = (f"array_distinct(transform(sequence(1, greatest(length({text_col})"
+                f" - {k - 1}, 1)), i -> substring({text_col}, i, {k})))")
+    return F.array(*[F.expr(
+        f"array_min(transform({shingles},"
+        f" s -> ({a}L * {_polyhash_sql('s', k)} + {b}L) % {MINHASH_P}))").alias(f"h{i}")
+        for i, (a, b) in enumerate(zip(A, B))])
+
+
 # ------------------------------------------------------ image queries ------
 
 def _img_dims_case() -> tuple[str, str]:

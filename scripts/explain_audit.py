@@ -10,6 +10,8 @@ properties the engine is designed around (SURVEY.md §4):
   and runs its pointwise ops inside the halo stage's two Python passes
 - polyfill plans one MapInPandas and no Exchange; neither it nor the
   compact bbox cover plans a Union
+- every reduction that emits one row per group runs on
+  ``stack.grouped_sorted_map`` (no FlatMapGroupsInPandas)
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 import io
 import os
+import re as _re
 import sys
 from contextlib import redirect_stdout
 
@@ -153,10 +156,12 @@ def main() -> int:
     ok = n_band_exchanges <= 2  # banded rows + the small sizes aggregate
     checks.append(("salted minhash adds no extra banded-table shuffle", ok))
 
-    # 11. SARIMA hourly pre-aggregation keeps partial aggregation
+    # 11. SARIMA hourly pre-aggregation keeps partial aggregation, then
+    # ONE grouped Python pass (stack.grouped_sorted_map's mapInPandas)
     p = plan_of(em.q_m5_sarima(spark, SF))
-    ok = "HashAggregate" in p and "FlatMapGroupsInPandas" in p
-    checks.append(("sarima: codegen pre-agg + single applyInPandas", ok))
+    ok = ("HashAggregate" in p and "FlatMapGroupsInPandas" not in p
+          and len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1)
+    checks.append(("sarima: codegen pre-agg + one grouped MapInPandas", ok))
     out += ["\n## m5_sarima\n", p]
 
     # 12. flagship above the AOI threshold routes to the cell-cover
@@ -198,7 +203,6 @@ def main() -> int:
     # 14. IVF ANN: candidates never materialize as join rows — the plan is
     # a single mapInPandas over the corpus scan + the tiny top-k window
     # merge (no Join operator of any kind; round-4 rewrite)
-    import re as _re
     p = plan_of(em.q_ann_ivf(spark, SF))
     ok = ("Join" not in p and "CartesianProduct" not in p
           and len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1)
@@ -420,6 +424,37 @@ def main() -> int:
             ok &= len(_re.findall(r"\(\d+\) MapInPandas", p)) == 2
             out += [f"\n## build_chain {name}\n", p]
     checks.append(("halo stage: pointwise neighbours fused, exactly two MapInPandas", ok))
+
+    # 31. every one-row-per-group reduction runs on grouped_sorted_map:
+    # the SARIMA stack delta, the shard export and each hydro round's
+    # inflow build (planned inside the round's localCheckpoint, so the
+    # checkpointed plans are captured) plan no FlatMapGroupsInPandas
+    from raster_functions_spark import multimodal
+    from raster_functions_spark.operators import hydro, ml
+    plans = [plan_of(ml.sarima_stack_delta(
+                 fixtures.stack_images_df(spark, n_scenes=2, n_times=16), horizon=6)),
+             plan_of(multimodal.export_shards(fixtures.images_df(spark, 20),
+                                              capacity_bytes=1 << 15))]
+    dem = fixtures.dem_scene_df(spark, tiles_x=2, tiles_y=2, tile=16)
+    cls = type(dem)
+    checkpoint = cls.localCheckpoint
+    rounds = []
+
+    def recording(self, *a, **kw):
+        rounds.append(plan_of(self))
+        return checkpoint(self, *a, **kw)
+    cls.localCheckpoint = recording
+    try:
+        plans.append(plan_of(hydro.flow_accumulation_distributed(dem, 16)))
+    finally:
+        cls.localCheckpoint = checkpoint
+    plans += rounds
+    ok = (any("Join" in r for r in rounds)
+          and not any("FlatMapGroupsInPandas" in p for p in plans))
+    checks.append(("one-row groups (sarima delta, shards, hydro inflow): "
+                   "no FlatMapGroupsInPandas", ok))
+    out += ["\n## sarima_stack_delta / export_shards / flow_accumulation_distributed\n",
+            *plans]
 
     out.append("\n# Assertions\n")
     failed = 0

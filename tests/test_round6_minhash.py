@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from raster_functions_spark import dedup, fixtures
+from raster_functions_spark import dedup, fixtures, oracles
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -55,7 +55,7 @@ def test_minhash_signature_64_matches_duckdb(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_hashes = 64
     got = (docs.filter(F.col("doc_id") < 10)
-           .select("doc_id", dedup.minhash_signature("text", 5, n_hashes).alias("sig"))
+           .select("doc_id", oracles.minhash_signature("text", 5, n_hashes).alias("sig"))
            .orderBy("doc_id").toPandas())
     con = duckdb.connect()
     con.register("docs", docs_pdf[docs_pdf.doc_id < 10])
@@ -72,7 +72,7 @@ def test_lsh_explode_form_matches_signature_form_at_64(spark):
     constants but not the execution shape)."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(30)
     sig = (docs.select("doc_id",
-                       dedup.minhash_signature("text", 5, 64).alias("sig"))
+                       oracles.minhash_signature("text", 5, 64).alias("sig"))
            .toPandas().set_index("doc_id")["sig"])
     pairs = dedup.minhash_lsh_candidates(docs, n_hashes=64, bands=16)
     # replay banding over the signature form
