@@ -82,12 +82,15 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
     stack = np.stack([codec.decode(bytes(b)) for b in pdf["bytes"]])  # (n,b,h,w)
     if qa_band is not None:
         # mask non-clear observations to NaN before reducing
-        # (LandsatMedianImage.py:25-27,163-177 behavior)
-        vals = stack[:, value_band].astype(np.float64)
+        # (LandsatMedianImage.py:25-27,163-177 behavior); value_band None
+        # = band 0
+        vals = stack[:, value_band or 0].astype(np.float64)
         clear = np.isin(stack[:, qa_band], np.asarray(clear_values))
         data = np.where(clear, vals, np.nan)[:, None, :, :]
+    elif value_band is not None:
+        data = stack[:, value_band:value_band + 1].astype(np.float64)
     else:
-        data = stack.astype(np.float64)
+        data = stack.astype(np.float64)       # every band
     with np.errstate(all="ignore"):
         red = reducer(data)          # (bands, h, w) or (h, w)
     # never-clear pixels stay INVALID (NaN in the f4 output) — the
@@ -101,7 +104,7 @@ def _reduce_group(key, pdf, group_cols, reducer, fmt_out, value_band, qa_band,
 
 
 def _composite(df: DataFrame, group_cols: list[str], reducer: Callable,
-               fmt_out: str, value_band: int | None = 0,
+               fmt_out: str, value_band: int | None = None,
                qa_band: int | None = None, clear_values: tuple[int, ...] = (),
                order_col: str | None = None,
                nodata: float | None = None) -> DataFrame:
@@ -118,21 +121,23 @@ def _composite(df: DataFrame, group_cols: list[str], reducer: Callable,
 
 
 def stack_composite(df: DataFrame, measure: str, group_cols: list[str] = ["scene_id"],
-                    fmt_out: str = "zlib", value_band: int = 0,
+                    fmt_out: str = "zlib", value_band: int | None = None,
                     qa_band: int | None = None,
                     clear_values: tuple[int, ...] = (),
                     order_col: str | None = None,
                     nodata: float | None = None) -> DataFrame:
     """Per-pixel composite across a stack: Aggregate (A1) / LandsatMedianImage
     (A5) / Landsat_Image_Synthesis mean (A6) depending on measure + QA args.
-    Never-clear pixels stay NaN (invalid) unless ``nodata`` substitutes a
-    sentinel — see _reduce_group."""
+    ``value_band`` picks the one band to reduce; None keeps every band
+    without a QA band and means band 0 with one. Never-clear pixels stay
+    NaN (invalid) unless ``nodata`` substitutes a sentinel — see
+    _reduce_group."""
     return _composite(df, group_cols, _MEASURES[measure], fmt_out, value_band,
                       qa_band, clear_values, order_col, nodata)
 
 
 def stack_percentile(df: DataFrame, q: float, group_cols: list[str] = ["scene_id"],
-                     fmt_out: str = "zlib", value_band: int = 0,
+                     fmt_out: str = "zlib", value_band: int | None = None,
                      qa_band: int | None = None,
                      clear_values: tuple[int, ...] = (),
                      nodata: float | None = None) -> DataFrame:

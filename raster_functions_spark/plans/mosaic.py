@@ -127,7 +127,7 @@ def apply_mosaic(df: DataFrame, kind: str, args: dict, ctx: dict | None = None,
         d = _doy_filter(df, args, ctx)
         return stack.stack_percentile(
             d, q=float(args["percentile"]), group_cols=pos, fmt_out=fmt_out,
-            value_band=0, qa_band=qa_band, clear_values=clear,
+            qa_band=qa_band, clear_values=clear,
             nodata=-1.0)               # never-clear → −1 (LandsatPixelPercentile.py:190)
 
     if kind == "month_synthesis":

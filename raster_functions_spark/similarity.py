@@ -1,28 +1,46 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three paths, per the scale guidance:
+Every cosine top-k path — brute force, single-table LSH, multi-table LSH
+and IVF — scores through ONE kernel, :func:`_cosine_topk`:
 
-- **brute-force cosine top-k** — the query set is broadcast as a dense
-  matrix; ONE ``mapInPandas`` pass over the corpus computes a
-  (queries × batch) GEMM per Arrow batch and emits per-batch top-k
-  partials, which a final window reduces to global top-k. No |corpus|×|q|
-  shuffle rows ever exist (top-k is decomposable), and scoring is a BLAS
-  matmul, not a per-row expression. Exact; the oracle-checkable path.
-- **LSH-bucketed ANN** — deterministic random-hyperplane sign bits bucket
-  the corpus; queries probe their own bucket (+ multi-probe neighbors).
-  One shuffle on the bucket key; candidates ≈ corpus / 2^bits per probe.
-- **IVF ANN** — k-means inverted lists, queries probe n_probe lists.
+1. the query set is collected once to the driver as a dense matrix and
+   broadcast (an empty query set is an empty typed result; ``k < 1``
+   raises before any job runs);
+2. ONE ``mapInPandas`` streams the corpus. Per Arrow batch, a *group rule*
+   splits the rows into groups, each paired with the queries that probe
+   it; a group is scored with one GEMM (Q·Cᵀ / |q||c|) and cut to a
+   per-query partial top-k (:func:`_partial_topk`);
+3. the batch's partials merge — a (query, neighbour) pair that several
+   groups scored is kept once, then k per query under the
+   (−score, neighbor_id) order — and one ``Window.partitionBy("query_id")``
+   takes the global top-k.
 
-Scoring on joined candidate rows uses a vectorized Arrow/pandas UDF
-(row-wise einsum over the stacked arrays). Spark evaluates array
-higher-order functions *interpreted* and re-evaluates the lambda per use
-(no CSE) — measured in round 1 (dedup.py); the HOF forms are kept only for
-tiny literal vectors (the hyperplane dot in lsh_bucket_col, which stays
-JVM-side whole-stage-codegen precisely because it must not round-trip the
-corpus through Python just to bucket it).
+No candidate row ever exists and the only shuffle carries ≤ n_q·k
+partial rows per batch. The paths differ only in their group rule:
+
+- **brute force** (exact; the oracle-checkable path): one group holding
+  every row, probed by every query;
+- **LSH** (``lsh_topk``: one table + bit-flip probes; ``lsh_multi_topk``:
+  OR-amplified tables): one group per table × sign bucket, probed by the
+  queries the driver-side bucket lookup registers there. Bucket bits are
+  bit-exact with ``lsh_bucket_col`` and the ``lsh_topk_sql`` oracle;
+- **IVF**: one group per inverted list, probed by the queries whose
+  ``n_probe`` nearest centroids include it (:func:`_probe_lists`).
+  ``ivf_topk`` assigns lists inside the batch; ``ivf_search`` reads the
+  index's ``list_id``.
+
+Row-wise scoring of joined pairs (``cosine_near_dup_pairs``) uses a
+vectorized pandas UDF. Spark evaluates array higher-order functions
+*interpreted* and re-evaluates the lambda per use (no CSE) — measured in
+round 1 (dedup.py); the HOF forms are kept only for tiny literal vectors
+(the hyperplane dot in lsh_bucket_col, which stays JVM-side
+whole-stage-codegen precisely because it must not round-trip the corpus
+through Python just to bucket it).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -87,55 +105,108 @@ def _partial_topk(S: np.ndarray, nid: np.ndarray, kk: int) -> np.ndarray:
     return part
 
 
+def _corpus_rows(corpus: DataFrame, id_col: str, vec_col: str,
+                 *extra) -> DataFrame:
+    """The kernel's row contract: bigint ``neighbor_id`` + f8 ``cv``."""
+    return corpus.select(F.col(id_col).alias("neighbor_id"),
+                         F.col(vec_col).cast("array<double>").alias("cv"),
+                         *extra)
+
+
+# A plan runs driver-side on the collected (n_q, dim) query matrix and
+# returns (rows, groups, payload): the corpus rows to stream (_corpus_rows
+# columns plus whatever the rule reads), the group rule, and the extra
+# broadcast state. groups(b, C, pdf) sees the broadcast dict, one batch's
+# f8 row matrix and its pandas frame, and yields (qi, ci) per group:
+# query indices and batch-row indices (index arrays or slices).
+Plan = Callable[[np.ndarray], "tuple[DataFrame, Callable, dict]"]
+
+
+def _cosine_topk(queries: DataFrame, k: int, vec_col: str, qid_col: str,
+                 plan: Plan, with_score: bool = True) -> DataFrame:
+    """The one cosine top-k kernel behind every search path (module
+    docstring). Output (query_id, neighbor_id, rank[, score]) — bigint
+    ids, so results are engine-comparable without float-hash hazards;
+    ``score`` is rounded to 6 places."""
+    if k < 1:
+        raise ValueError(f"top-k needs k ≥ 1, got k={k}")
+    spark = queries.sparkSession
+    q_pdf = queries.select(F.col(qid_col).alias("query_id"),
+                           F.col(vec_col).alias("qv")).toPandas()
+    out_cols = "query_id long, neighbor_id long, rank int"
+    if not len(q_pdf):
+        # empty query set: an empty RESULT, not an opaque np.stack crash
+        return spark.createDataFrame(
+            [], out_cols + (", score double" if with_score else ""))
+    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
+    rows, groups, payload = plan(Q)
+    bq = spark.sparkContext.broadcast(
+        {"ids": q_pdf["query_id"].to_numpy(np.int64), "Q": Q, **payload})
+
+    def score(batches):
+        b = bq.value
+        Qv, ids = b["Q"], b["ids"]
+        qn = np.sqrt(np.einsum("ij,ij->i", Qv, Qv))
+        q_idx = np.arange(len(Qv))
+        for pdf in batches:
+            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
+            nid = pdf["neighbor_id"].to_numpy(np.int64)
+            cn = np.sqrt(np.einsum("ij,ij->i", C, C))
+            c_idx = np.arange(len(nid))
+            out_q, out_c, out_s = [], [], []
+            for qi, ci in groups(b, C, pdf):
+                den = qn[qi][:, None] * cn[ci][None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    S = np.where(den == 0.0, 0.0, (Qv[qi] @ C[ci].T) / den)
+                kk = min(k, S.shape[1])
+                part = _partial_topk(S, nid[ci], kk)
+                out_q.append(np.repeat(q_idx[qi], kk))
+                out_c.append(c_idx[ci][part.ravel()])
+                out_s.append(np.take_along_axis(S, part, axis=1).ravel())
+            if not out_q:
+                continue
+            qa, ca, sa = (np.concatenate(v) for v in (out_q, out_c, out_s))
+            # a pair scored by several groups (multi-table LSH) counts once:
+            # its first group's score, as a single scan of the groups sees it
+            _, first = np.unique(qa * np.int64(len(nid)) + ca,
+                                 return_index=True)
+            qa, ca, sa = qa[first], ca[first], sa[first]
+            order = np.lexsort((nid[ca], -sa, qa))
+            qa, ca, sa = qa[order], ca[order], sa[order]
+            keep = np.arange(qa.size) - np.searchsorted(qa, qa) < k
+            yield pd.DataFrame({"query_id": ids[qa[keep]],
+                                "neighbor_id": nid[ca[keep]],
+                                "score": sa[keep]})
+
+    partials = rows.mapInPandas(
+        score, "query_id long, neighbor_id long, score double")
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (partials.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank",
+                    *([F.round("score", 6).alias("score")] if with_score else [])))
+
+
+def _all_rows(b: dict, C: np.ndarray, pdf: pd.DataFrame):
+    """Brute-force group rule: one group, every row, every query."""
+    yield slice(None), slice(None)
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      qid_col: str = "vec_id") -> DataFrame:
-    """Exact cosine top-k via broadcast query matrix + per-batch partial
-    top-k. Output (query_id, neighbor_id, rank) — integer-only so results
-    are engine-comparable without float-hash hazards.
+    """Exact cosine top-k: one (queries × batch) GEMM per Arrow batch.
+    Output (query_id, neighbor_id, rank) — integer-only so results are
+    engine-comparable without float-hash hazards.
 
     Plan: corpus scan → mapInPandas (GEMM + per-batch top-k, ≤ n_q·k rows
     out per batch) → one small shuffle on query_id → window top-k. At
     10^12 corpus rows the shuffle carries n_q·k·n_partitions rows, not
     the candidate cross product."""
-    q_pdf = queries.select(F.col(qid_col).alias("query_id"),
-                           F.col(vec_col).alias("qv")).toPandas()
-    spark = corpus.sparkSession
-    if not len(q_pdf):
-        # empty query set: an empty RESULT, not an opaque np.stack crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int")
-    bq = spark.sparkContext.broadcast({
-        "ids": q_pdf["query_id"].to_numpy(np.int64),
-        "Q": np.stack(q_pdf["qv"].to_numpy()).astype(np.float64),
-    })
-
-    def score(batches):
-        q = bq.value
-        Q = q["Q"]
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-        for pdf in batches:
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cn = np.sqrt(np.einsum("ij,ij->i", C, C))
-            den = qn[:, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(den == 0.0, 0.0, (Q @ C.T) / den)  # (n_q, n_c)
-            nid = pdf["neighbor_id"].to_numpy(np.int64)
-            kk = min(k, S.shape[1])
-            part = _partial_topk(S, nid, kk)
-            rows_q = np.repeat(q["ids"], kk)
-            rows_n = nid[part.ravel()]
-            rows_s = np.take_along_axis(S, part, axis=1).ravel()
-            yield pd.DataFrame({"query_id": rows_q, "neighbor_id": rows_n,
-                                "score": rows_s})
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("cv"))
-    partials = c.mapInPandas(score, "query_id long, neighbor_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _cosine_topk(
+        queries, k, vec_col, qid_col,
+        lambda Q: (_corpus_rows(corpus, id_col, vec_col), _all_rows, {}),
+        with_score=False)
 
 
 def _hyperplanes(dim: int, n_bits: int, table: int = 0) -> np.ndarray:
@@ -168,6 +239,58 @@ def lsh_bucket_col(vec_col, dim: int, n_bits: int = 8):
     return bucket
 
 
+def _bucket_ids(X: np.ndarray, H: np.ndarray) -> np.ndarray:
+    """Sign-bit bucket of each row of X under hyperplanes H (bits, dim) —
+    the GEMM form of lsh_bucket_col (tests/test_dedup_text.py pins the
+    two bit-exact)."""
+    return ((X @ H.T) > 0).astype(np.int64) @ (1 << np.arange(H.shape[0])).astype(np.int64)
+
+
+def _lsh_buckets(b: dict, C: np.ndarray, pdf: pd.DataFrame):
+    """LSH group rule: one group per table × occupied bucket that some
+    query probes."""
+    for H, lut in zip(b["H"], b["lookups"]):
+        cb = _bucket_ids(C, H)
+        for bk in np.unique(cb):
+            qi = lut.get(int(bk))
+            if qi is not None:
+                yield qi, np.nonzero(cb == bk)[0]
+
+
+def _lsh_plan(corpus: DataFrame, id_col: str, vec_col: str, n_bits: int,
+              n_tables: int, n_probes: int, dim: int | None) -> Plan:
+    """The LSH rule's driver side: per table, a bucket → probing-query
+    lookup. A query index is registered under its own bucket and under
+    each of its ``n_probes-1`` single-bit-flip neighbour buckets — the
+    group rule itself is probe-blind. A corpus row occupies exactly one
+    bucket per table, so a (query, neighbour) pair repeats only across
+    tables, and the kernel's merge keeps it once."""
+    def plan(Q: np.ndarray):
+        d = dim
+        if d is None:
+            row = corpus.select(vec_col).first()
+            if row is None:
+                raise ValueError("empty corpus: pass dim= explicitly (or skip "
+                                 "the search — there is nothing to match)")
+            d = len(row[0])
+        Hs = [_hyperplanes(d, n_bits, table=t) for t in range(n_tables)]
+        lookups = []
+        for H in Hs:
+            qb = _bucket_ids(Q, H)
+            lut: dict[int, list] = {}
+            for probe in range(n_probes):
+                # probe 0 = own bucket; probe p>0 flips bit p-1 (the original
+                # lsh_topk bit-flip probe sequence, preserved exactly)
+                pb = qb if probe == 0 else qb ^ np.int64(1 << (probe - 1))
+                for bk in np.unique(pb):
+                    lut.setdefault(int(bk), []).append(np.nonzero(pb == bk)[0])
+            lookups.append({bk: (np.concatenate(v) if len(v) > 1 else v[0])
+                            for bk, v in lut.items()})
+        return (_corpus_rows(corpus, id_col, vec_col), _lsh_buckets,
+                {"H": Hs, "lookups": lookups})
+    return plan
+
+
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "vec_id", n_bits: int = 6,
@@ -177,27 +300,29 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     candidates; top-k.
 
     Candidate semantics identical to the original bucket-equi-join form,
-    but executed on the streamed per-bucket GEMM kernel (round-4's IVF
-    shape): the broadcast-join version materialized one ROW per
-    (candidate, probe) pair carrying both embedding arrays through a
-    per-pair pandas UDF — measured 24.4s vs 4.7s brute force at 200k
-    (BENCH/notes_r4.md); the kernel form scores each occupied bucket with
-    one GEMM inside a single mapInPandas, no join, shuffle = n_q·k
-    partial rows.
+    executed on the streamed per-bucket GEMM kernel: the broadcast-join
+    version materialized one ROW per (candidate, probe) pair carrying both
+    embedding arrays through a per-pair pandas UDF — measured 24.4s vs
+    4.7s brute force at 200k (BENCH/notes_r4.md); the kernel scores each
+    occupied bucket with one GEMM inside a single mapInPandas, no join,
+    shuffle = n_q·k partial rows.
 
     Ids must be integers (the module-wide contract: every similarity
     path emits bigint ids so results are engine-comparable without
     float/string-hash hazards — see brute_force_topk). Map string keys
     to a surrogate bigint upstream."""
+    if n_probes < 1:
+        raise ValueError(f"n_probes ≥ 1 (probe 1 = the query's own "
+                         f"bucket), got n_probes={n_probes}")
     if n_probes - 1 > n_bits:
         # probe p flips bit p-1: probes beyond n_bits produce bucket ids
         # no corpus vector can occupy — silent no-ops that LOOK like
         # extra recall; refuse instead
         raise ValueError(f"n_probes ≤ n_bits+1 (= {n_bits + 1}): probe "
                          f"{n_bits + 2} would flip a nonexistent bit")
-    return _lsh_gemm_topk(corpus, queries, k, id_col, vec_col, qid_col,
-                          n_bits=n_bits, n_tables=1, n_probes=n_probes,
-                          dim=dim)
+    return _cosine_topk(queries, k, vec_col, qid_col,
+                        _lsh_plan(corpus, id_col, vec_col, n_bits, 1,
+                                  n_probes, dim))
 
 
 def lsh_multi_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -213,119 +338,21 @@ def lsh_multi_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     operating point on a 1M×64 clustered corpus (notes_r6.md §8) —
     OR-amplification holds its recall as the corpus grows.
 
-    Scale shape mirrors ivf_topk's round-4 rewrite: queries broadcast as a
-    matrix + per-table bucket→query lookup; corpus batches stream through
-    ONE mapInPandas that buckets rows per table (sign GEMM), scores each
-    occupied bucket's members against only its probing queries, dedups
-    (query, neighbor) pairs across tables, and emits per-query partial
-    top-k. No join, no candidate rows, shuffle = n_q·k partials."""
-    return _lsh_gemm_topk(corpus, queries, k, id_col, vec_col, qid_col,
-                          n_bits=n_bits, n_tables=n_tables, n_probes=1,
-                          dim=dim)
+    Same kernel as lsh_topk with one group per (table, bucket): corpus
+    batches are bucketed per table (sign GEMM), each occupied bucket's
+    members are scored against only its probing queries, and pairs
+    matched in several tables count once. No join, no candidate rows,
+    shuffle = n_q·k partials."""
+    return _cosine_topk(queries, k, vec_col, qid_col,
+                        _lsh_plan(corpus, id_col, vec_col, n_bits, n_tables,
+                                  1, dim))
 
 
-def _lsh_gemm_topk(corpus: DataFrame, queries: DataFrame, k: int,
-                   id_col: str, vec_col: str, qid_col: str, n_bits: int,
-                   n_tables: int, n_probes: int,
-                   dim: int | None = None) -> DataFrame:
-    """Shared streamed kernel behind lsh_topk (1 table × multi-probe) and
-    lsh_multi_topk (L tables × own bucket). The probe set enters only the
-    driver-side bucket→query lookup: a query index is registered under its
-    own bucket and, per table, under each of its ``n_probes-1``
-    single-bit-flip neighbor buckets — the kernel itself is probe-blind.
-    A corpus row occupies exactly one bucket per table, so a (query,
-    neighbor) pair appears at most once per table; the cross-table dedup
-    also covers multi-probe."""
-    if dim is None:
-        row = corpus.select(vec_col).first()
-        if row is None:
-            raise ValueError("empty corpus: pass dim= explicitly (or skip "
-                             "the search — there is nothing to match)")
-        dim = len(row[0])
-    Hs = np.stack([_hyperplanes(dim, n_bits, table=t)
-                   for t in range(n_tables)])          # (L, bits, dim)
-    q_pdf = queries.select(F.col(qid_col).alias("query_id"),
-                           F.col(vec_col).alias("qv")).toPandas()
-    if not len(q_pdf):
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, score double")
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    pow2 = (1 << np.arange(n_bits)).astype(np.int64)
-
-    def buckets_of(X: np.ndarray, t: int) -> np.ndarray:
-        return ((X @ Hs[t].T) > 0).astype(np.int64) @ pow2
-
-    lookups = []
-    for t in range(n_tables):
-        qb = buckets_of(Q, t)
-        d: dict[int, list] = {}
-        for probe in range(n_probes):
-            # probe 0 = own bucket; probe p>0 flips bit p-1 (the original
-            # lsh_topk bit-flip probe sequence, preserved exactly)
-            pb = qb if probe == 0 else qb ^ np.int64(1 << (probe - 1))
-            for b in np.unique(pb):
-                d.setdefault(int(b), []).append(np.nonzero(pb == b)[0])
-        lookups.append({b: (np.concatenate(v) if len(v) > 1 else v[0])
-                        for b, v in d.items()})
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast({
-        "ids": q_pdf["query_id"].to_numpy(np.int64), "Q": Q, "H": Hs,
-        "lookups": lookups})
-
-    def score(batches):
-        b = bq.value
-        Qv = b["Q"]
-        qn = np.sqrt(np.einsum("ij,ij->i", Qv, Qv))
-        p2 = (1 << np.arange(n_bits)).astype(np.int64)
-        for pdf in batches:
-            Cb = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            nid = pdf["neighbor_id"].to_numpy(np.int64)
-            cn = np.sqrt(np.einsum("ij,ij->i", Cb, Cb))
-            tq, tn, ts = [], [], []
-            for t in range(len(b["H"])):
-                cbuck = ((Cb @ b["H"][t].T) > 0).astype(np.int64) @ p2
-                lut = b["lookups"][t]
-                for bk in np.unique(cbuck):
-                    qi = lut.get(int(bk))
-                    if qi is None:
-                        continue
-                    csel = np.nonzero(cbuck == bk)[0]
-                    den = qn[qi][:, None] * cn[csel][None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        S = np.where(den == 0.0, 0.0,
-                                     (Qv[qi] @ Cb[csel].T) / den)
-                    tq.append(np.repeat(qi, csel.size))
-                    tn.append(np.tile(csel, qi.size))
-                    ts.append(S.ravel())
-            if not tq:
-                continue
-            qi_all = np.concatenate(tq)
-            ci_all = np.concatenate(tn)
-            s_all = np.concatenate(ts)
-            # dedupe (query, corpus-row) pairs matched by several tables
-            key = qi_all * np.int64(len(nid)) + ci_all
-            _, first = np.unique(key, return_index=True)
-            qi_all, ci_all, s_all = qi_all[first], ci_all[first], s_all[first]
-            # per-query partial top-k under the window's total order
-            order = np.lexsort((nid[ci_all], -s_all, qi_all))
-            qi_all, ci_all, s_all = qi_all[order], ci_all[order], s_all[order]
-            uq, starts = np.unique(qi_all, return_index=True)
-            keep = np.concatenate([
-                np.arange(s, min(s + k, e)) for s, e in
-                zip(starts, np.append(starts[1:], qi_all.size))])
-            yield pd.DataFrame({"query_id": b["ids"][qi_all[keep]],
-                                "neighbor_id": nid[ci_all[keep]],
-                                "score": s_all[keep]})
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("cv"))
-    partials = c.mapInPandas(
-        score, "query_id long, neighbor_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("score", 6).alias("score")))
+def _sq_dist(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, L) squared Euclidean distances of rows X to centroids C — the
+    one expression k-means, list assignment and probing share, so inline
+    and index IVF pick the same lists bit for bit."""
+    return (X ** 2).sum(1)[:, None] - 2 * X @ C.T + (C ** 2).sum(1)[None, :]
 
 
 def _kmeans_fit(X: np.ndarray, k: int, iters: int = 12) -> np.ndarray:
@@ -339,8 +366,7 @@ def _kmeans_fit(X: np.ndarray, k: int, iters: int = 12) -> np.ndarray:
         extra = X[(C.shape[0] * 131) % n][None]
         C = np.vstack([C, extra])
     for _ in range(iters):
-        d2 = ((X ** 2).sum(1)[:, None] - 2 * X @ C.T + (C ** 2).sum(1)[None, :])
-        assign = d2.argmin(1)
+        assign = _sq_dist(X, C).argmin(1)
         for j in range(k):
             sel = assign == j
             if sel.any():
@@ -357,6 +383,40 @@ def _train_sample(corpus: DataFrame, id_col: str, vec_col: str,
         corpus.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col)).limit(n)
         .toPandas()[vec_col].to_numpy())
+
+
+def _probe_lists(Q: np.ndarray, C: np.ndarray,
+                 n_probe: int) -> tuple[list, list]:
+    """Driver-side probing (n_q × n_lists distances — tiny): the prober
+    query indices of every list, and the sorted probed-list union for
+    scan pruning."""
+    if n_probe < 1:
+        # n_probe=0 probes nothing and a negative slice drops the nearest
+        # lists instead — both silently wrong results
+        raise ValueError(f"n_probe ≥ 1 (the query's nearest list), got "
+                         f"n_probe={n_probe}")
+    probed = np.argsort(_sq_dist(Q, C), axis=1)[:, :n_probe]
+    probers = [np.nonzero((probed == l).any(axis=1))[0]
+               for l in range(C.shape[0])]
+    return probers, sorted({int(l) for l in probed.ravel()})
+
+
+def _list_groups(lists: np.ndarray, probers: list):
+    """IVF group rule: one group per inverted list that some query probes."""
+    for l in np.unique(lists):
+        qi = probers[l]
+        if qi.size:
+            yield qi, np.nonzero(lists == l)[0]
+
+
+def _inline_lists(b: dict, C: np.ndarray, pdf: pd.DataFrame):
+    """ivf_topk: assign the batch's rows to lists in one GEMM."""
+    return _list_groups(_sq_dist(C, b["C"]).argmin(1), b["probers"])
+
+
+def _indexed_lists(b: dict, C: np.ndarray, pdf: pd.DataFrame):
+    """ivf_search: the index carries each row's list."""
+    return _list_groups(pdf["list_id"].to_numpy(np.int64), b["probers"])
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -388,71 +448,13 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     n_probe does not degrade with corpus growth, and beyond ~10M
     vectors denser list counts (256+) shrink per-query candidate
     volume 4× at equal recall."""
-    sample = _train_sample(corpus, id_col, vec_col, train_sample)
-    C = _kmeans_fit(sample.astype(np.float64), n_lists)
-    spark = corpus.sparkSession
-
-    # query side is the broadcastable dim: matrix + per-query probe sets
-    # computed driver-side (n_q × n_lists distances — tiny)
-    q_pdf = queries.select(F.col(qid_col).alias("query_id"),
-                           F.col(vec_col).alias("qv")).toPandas()
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    d2q = ((Q ** 2).sum(1)[:, None] - 2 * Q @ C.T + (C ** 2).sum(1)[None, :])
-    probed = np.argsort(d2q, axis=1)[:, :n_probe]          # (n_q, n_probe)
-    probers = [np.nonzero((probed == l).any(axis=1))[0]    # queries per list
-               for l in range(n_lists)]
-    bq = spark.sparkContext.broadcast({
-        "ids": q_pdf["query_id"].to_numpy(np.int64), "Q": Q,
-        "C": C, "probers": probers})
-
-    # GEMM-shaped candidate scoring (round-4 rewrite): the old plan
-    # materialized the (candidate × query) join as ROWS carrying both
-    # embedding arrays and scored them one pair at a time — measured 17×
-    # slower than brute force at 200k×64 (BENCH/notes_r4.md). Now each
-    # corpus batch assigns its rows to lists in one GEMM vs the centroids,
-    # then scores each list's members against ONLY the queries probing
-    # that list — flops = true IVF candidate count × dim, candidates never
-    # become rows, no shuffle beyond the final n_q·k-row top-k merge.
-    def score(batches):
-        b = bq.value
-        Qv, Cv = b["Q"], b["C"]
-        qn = np.sqrt(np.einsum("ij,ij->i", Qv, Qv))
-        for pdf in batches:
-            Cb = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            nid = pdf["neighbor_id"].to_numpy(np.int64)
-            d2 = ((Cb ** 2).sum(1)[:, None] - 2 * Cb @ Cv.T
-                  + (Cv ** 2).sum(1)[None, :])
-            assign = d2.argmin(1)
-            cn = np.sqrt(np.einsum("ij,ij->i", Cb, Cb))
-            out_q, out_n, out_s = [], [], []
-            for l in np.unique(assign):
-                qi = b["probers"][l]
-                if qi.size == 0:
-                    continue
-                csel = np.nonzero(assign == l)[0]
-                den = qn[qi][:, None] * cn[csel][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(den == 0.0, 0.0,
-                                 (Qv[qi] @ Cb[csel].T) / den)
-                kk = min(k, S.shape[1])
-                part = _partial_topk(S, nid[csel], kk)
-                out_q.append(np.repeat(b["ids"][qi], kk))
-                out_n.append(nid[csel][part.ravel()])
-                out_s.append(np.take_along_axis(S, part, axis=1).ravel())
-            if not out_q:
-                continue
-            yield pd.DataFrame({"query_id": np.concatenate(out_q),
-                                "neighbor_id": np.concatenate(out_n),
-                                "score": np.concatenate(out_s)})
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("cv"))
-    partials = c.mapInPandas(
-        score, "query_id long, neighbor_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.round("score", 6).alias("score")))
+    def plan(Q: np.ndarray):
+        sample = _train_sample(corpus, id_col, vec_col, train_sample)
+        C = _kmeans_fit(sample.astype(np.float64), n_lists)
+        probers, _ = _probe_lists(Q, C, n_probe)
+        return (_corpus_rows(corpus, id_col, vec_col), _inline_lists,
+                {"C": C, "probers": probers})
+    return _cosine_topk(queries, k, vec_col, qid_col, plan)
 
 
 def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -502,14 +504,10 @@ def _assign_lists(corpus: DataFrame, C: np.ndarray,
     @F.pandas_udf("long")
     def nearest_list(v):
         X = np.stack(v.to_numpy()).astype(np.float64)
-        Cv = bC.value
-        d2 = ((X ** 2).sum(1)[:, None] - 2 * X @ Cv.T
-              + (Cv ** 2).sum(1)[None, :])
-        return pd.Series(d2.argmin(1).astype(np.int64))
+        return pd.Series(_sq_dist(X, bC.value).argmin(1).astype(np.int64))
 
-    return corpus.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).cast("array<double>").alias("cv"),
-                         nearest_list(F.col(vec_col)).alias("list_id"))
+    return _corpus_rows(corpus, id_col, vec_col,
+                        nearest_list(F.col(vec_col)).alias("list_id"))
 
 
 def ivf_build(corpus: DataFrame, n_lists: int = 16, train_sample: int = 2000,
@@ -635,6 +633,24 @@ def start_ivf_ingest(stream: DataFrame, snap_path: str, checkpoint: str,
             .queryName(query_name).trigger(availableNow=True).start())
 
 
+def _search_lists(read_lists: Callable[[list], DataFrame], centroids,
+                  queries: DataFrame, k: int, n_probe: int, vec_col: str,
+                  qid_col: str) -> DataFrame:
+    """IVF search over a list-assigned index: ``read_lists(probed)``
+    returns the index rows, given the probed-list union; the scan is
+    filtered to that union (partition pruning on a partitioned index —
+    unprobed lists are never read)."""
+    C = np.asarray(centroids, dtype=np.float64)
+
+    def plan(Q: np.ndarray):
+        probers, probed_union = _probe_lists(Q, C, n_probe)
+        rows = (read_lists(probed_union)
+                .filter(F.col("list_id").isin(probed_union))
+                .select("neighbor_id", "cv", "list_id"))
+        return rows, _indexed_lists, {"probers": probers}
+    return _cosine_topk(queries, k, vec_col, qid_col, plan)
+
+
 def ivf_search_snapshot(spark, snap_path: str, queries: DataFrame,
                         k: int = 3, n_probe: int = 4,
                         vec_col: str = "embedding",
@@ -647,85 +663,19 @@ def ivf_search_snapshot(spark, snap_path: str, queries: DataFrame,
     from .snapshots import SnapshotTable
     C = ivf_load_centroids(spark, snap_path)
     table = SnapshotTable(spark, snap_path)
-    probes = _probe_lists(queries, C, n_probe, vec_col, qid_col)
-    index = table.read(partition_values=[str(l)
-                                         for l in probes["probed_union"]])
-    return ivf_search(index, C, queries, k=k, n_probe=n_probe,
-                      vec_col=vec_col, qid_col=qid_col, _probes=probes)
-
-
-def _probe_lists(queries: DataFrame, C: np.ndarray, n_probe: int,
-                 vec_col: str, qid_col: str) -> dict:
-    """Driver-side probe computation shared by ivf_search and
-    ivf_search_snapshot (one queries collect + one Q·Cᵀ GEMM, never
-    repeated per layer): per-query probed lists, the per-list prober
-    index sets, and the probed-list union for scan pruning."""
-    q_pdf = queries.select(F.col(qid_col).alias("query_id"),
-                           F.col(vec_col).alias("qv")).toPandas()
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    d2q = ((Q ** 2).sum(1)[:, None] - 2 * Q @ C.T + (C ** 2).sum(1)[None, :])
-    probed = np.argsort(d2q, axis=1)[:, :n_probe]
-    probers = [np.nonzero((probed == l).any(axis=1))[0]
-               for l in range(C.shape[0])]
-    return {"ids": q_pdf["query_id"].to_numpy(np.int64), "Q": Q,
-            "probers": probers,
-            "probed_union": sorted({int(l) for row in probed for l in row})}
+    return _search_lists(
+        lambda lists: table.read(partition_values=[str(l) for l in lists]),
+        C, queries, k, n_probe, vec_col, qid_col)
 
 
 def ivf_search(index: DataFrame, centroids: np.ndarray, queries: DataFrame,
                k: int = 3, n_probe: int = 4, vec_col: str = "embedding",
-               qid_col: str = "vec_id", _probes: dict | None = None) -> DataFrame:
+               qid_col: str = "vec_id") -> DataFrame:
     """Search-many half: probe lists per query are computed driver-side,
     the index scan is FILTERED to the union of probed lists (partition
     pruning on a partitioned index — unprobed lists are never read), and
     each batch scores per-list GEMMs against only its probing queries.
     Identical results to ivf_topk on the same corpus/queries (same
-    centroids, same assignment, same tie-exact order). ``_probes``: a
-    precomputed _probe_lists result (ivf_search_snapshot passes its own
-    so the query collect + GEMM run once, not once per layer)."""
-    C = np.asarray(centroids, dtype=np.float64)
-    spark = index.sparkSession
-    p = _probes if _probes is not None else _probe_lists(
-        queries, C, n_probe, vec_col, qid_col)
-    probed_union = p["probed_union"]
-    bq = spark.sparkContext.broadcast({
-        "ids": p["ids"], "Q": p["Q"], "probers": p["probers"]})
-
-    def score(batches):
-        b = bq.value
-        Qv = b["Q"]
-        qn = np.sqrt(np.einsum("ij,ij->i", Qv, Qv))
-        for pdf in batches:
-            Cb = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            nid = pdf["neighbor_id"].to_numpy(np.int64)
-            lid = pdf["list_id"].to_numpy(np.int64)
-            cn = np.sqrt(np.einsum("ij,ij->i", Cb, Cb))
-            out_q, out_n, out_s = [], [], []
-            for l in np.unique(lid):
-                qi = b["probers"][l]
-                if qi.size == 0:
-                    continue
-                csel = np.nonzero(lid == l)[0]
-                den = qn[qi][:, None] * cn[csel][None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(den == 0.0, 0.0,
-                                 (Qv[qi] @ Cb[csel].T) / den)
-                kk = min(k, S.shape[1])
-                part = _partial_topk(S, nid[csel], kk)
-                out_q.append(np.repeat(b["ids"][qi], kk))
-                out_n.append(nid[csel][part.ravel()])
-                out_s.append(np.take_along_axis(S, part, axis=1).ravel())
-            if not out_q:
-                continue
-            yield pd.DataFrame({"query_id": np.concatenate(out_q),
-                                "neighbor_id": np.concatenate(out_n),
-                                "score": np.concatenate(out_s)})
-
-    pruned = index.filter(F.col("list_id").isin(probed_union))
-    partials = pruned.select("neighbor_id", "cv", "list_id").mapInPandas(
-        score, "query_id long, neighbor_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("score", 6).alias("score")))
+    centroids, same assignment, same tie-exact order)."""
+    return _search_lists(lambda lists: index, centroids, queries, k, n_probe,
+                         vec_col, qid_col)

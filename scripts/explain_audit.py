@@ -12,6 +12,8 @@ properties the engine is designed around (SURVEY.md §4):
   compact bbox cover plans a Union
 - every reduction that emits one row per group runs on
   ``stack.grouped_sorted_map`` (no FlatMapGroupsInPandas)
+- every cosine top-k path scores in one MapInPandas with no candidate
+  cross product
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -136,16 +138,31 @@ def main() -> int:
     checks.append(("bucketed tables sort-merge join with ZERO shuffle", ok))
     out += ["\n## bucketed co-located join\n", p]
 
-    # 9. brute-force kNN: no cross join / nested loop anywhere — the
-    # candidate cross product was replaced by GEMM partial top-k partials
+    # 9. every cosine top-k path (brute force, LSH, multi-table LSH, IVF
+    # inline and over a prebuilt index) scores in ONE Python pass — the
+    # shared GEMM partial top-k kernel: one MapInPandas, no per-row
+    # Python UDF, no candidate cross product
     from raster_functions_spark import similarity
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = plan_of(similarity.brute_force_topk(
-        emb.filter(F.col("vec_id") >= 5), emb.filter(F.col("vec_id") < 5), k=3))
-    ok = ("NestedLoop" not in p and "CartesianProduct" not in p
-          and "MapInPandas" in p)
-    checks.append(("knn top-k has no candidate cross product (GEMM partials)", ok))
-    out += ["\n## brute_force_topk\n", p]
+    corpus, queries = emb.filter(F.col("vec_id") >= 5), emb.filter(F.col("vec_id") < 5)
+    with tempfile.TemporaryDirectory(prefix="audit_knn_") as td:
+        index, C = similarity.ivf_build(corpus, n_lists=8, index_path=td + "/idx")
+        knn_plans = {
+            "brute_force_topk": similarity.brute_force_topk(corpus, queries, k=3),
+            "lsh_topk": similarity.lsh_topk(corpus, queries, k=3, n_probes=3),
+            "lsh_multi_topk": similarity.lsh_multi_topk(corpus, queries, k=3),
+            "ivf_topk": similarity.ivf_topk(corpus, queries, k=3, n_lists=8),
+            "ivf_search": similarity.ivf_search(index, C, queries, k=3),
+        }
+        knn_plans = {name: plan_of(df) for name, df in knn_plans.items()}
+    ok = all(len(_re.findall(r"\(\d+\) MapInPandas", p)) == 1
+             and not any(node in p for node in ("ArrowEvalPython", "BatchEvalPython",
+                                                "NestedLoop", "CartesianProduct"))
+             for p in knn_plans.values())
+    checks.append(("knn top-k paths: one GEMM MapInPandas each, no Python UDF, "
+                   "no candidate cross product", ok))
+    for name, p in knn_plans.items():
+        out += [f"\n## {name}\n", p]
 
     # 10. salted minhash: the banded table is shuffled ONCE on (band, bsig)
     # for the size join, and the (band, bsig, salt) pairing groupBy reuses

@@ -1,5 +1,6 @@
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from raster_functions_spark import codec, fixtures, similarity
@@ -141,6 +142,65 @@ def test_ivf_build_search_matches_inline_and_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "list_id" in plan
     assert "list_id IN" in plan or "list_id#" in plan
 
+
+
+def test_topk_paths_share_tie_order(spark, tied_corpus):
+    """Every exhaustive top-k path resolves exact score ties like brute
+    force (test_brute_force_topk_ties_stable_across_partitioning), under
+    any partitioning: the lowest neighbor ids win."""
+    rows, vec = tied_corpus
+    queries = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<double>")
+    for nparts in (1, 4, 11):
+        corpus = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>").repartition(nparts)
+        index, C = similarity.ivf_build(corpus, n_lists=2)
+        paths = {
+            "lsh_topk": similarity.lsh_topk(corpus, queries, k=3, n_bits=1,
+                                            n_probes=2),
+            "lsh_multi_topk": similarity.lsh_multi_topk(corpus, queries, k=3),
+            "ivf_topk": similarity.ivf_topk(corpus, queries, k=3, n_lists=2,
+                                            n_probe=2),
+            "ivf_search": similarity.ivf_search(index, C, queries, k=3,
+                                                n_probe=2),
+        }
+        for name, df in paths.items():
+            got = df.orderBy("rank").toPandas().neighbor_id.tolist()
+            assert got == [100, 101, 102], f"{name} nparts={nparts}: {got}"
+
+
+def test_topk_entry_points_share_empty_and_k_rules(spark, tmp_path):
+    """All six search entry points answer an empty query set with an
+    empty frame of their usual schema, and reject k < 1 on the driver;
+    lsh_topk rejects n_probes < 1 and IVF search n_probe < 1."""
+    corpus, queries = fixtures.ann_vectors_dfs(spark, 200, 3, 8)
+    index, C = similarity.ivf_build(corpus, n_lists=4)
+    snap = str(tmp_path / "snap")
+    similarity.ivf_build_snapshot(corpus, snap, centroids=C)
+
+    def searches(q, k):
+        return {
+            "brute_force_topk": lambda: similarity.brute_force_topk(corpus, q, k=k),
+            "lsh_topk": lambda: similarity.lsh_topk(corpus, q, k=k),
+            "lsh_multi_topk": lambda: similarity.lsh_multi_topk(corpus, q, k=k),
+            "ivf_topk": lambda: similarity.ivf_topk(corpus, q, k=k, n_lists=4),
+            "ivf_search": lambda: similarity.ivf_search(index, C, q, k=k),
+            "ivf_search_snapshot": lambda: similarity.ivf_search_snapshot(
+                spark, snap, q, k=k),
+        }
+
+    full = searches(queries, 3)
+    for name, run in searches(queries.limit(0), 3).items():
+        out = run()
+        assert out.count() == 0, name
+        assert out.schema.simpleString() == full[name]().schema.simpleString(), name
+    for name, run in searches(queries, 0).items():
+        with pytest.raises(ValueError, match="k ≥ 1"):
+            run()
+    with pytest.raises(ValueError, match="n_probes"):
+        similarity.lsh_topk(corpus, queries, n_probes=0)
+    for n_probe in (0, -1):
+        with pytest.raises(ValueError, match="n_probe"):
+            similarity.ivf_search(index, C, queries, n_probe=n_probe)
 
 def test_pyramid_negative_tile_coords(spark):
     """Grids with negative tile coordinates: floor-division parent math —

@@ -66,12 +66,10 @@ def test_phash_near_dups_still_exact(spark):
 
 # ----------------------------------------------- batch top-k tie-breaks ----
 
-def test_brute_force_topk_ties_stable_across_partitioning(spark):
+def test_brute_force_topk_ties_stable_across_partitioning(spark, tied_corpus):
     """Duplicate embeddings (exact score ties straddling the k boundary)
     must resolve by neighbor_id under ANY partitioning."""
-    vec = [1.0, 2.0, 3.0, 4.0]
-    rows = [(100 + i, vec) for i in range(10)]          # 10 identical vectors
-    rows += [(200, [-1.0, 0.0, 0.0, 1.0])]
+    rows, vec = tied_corpus                             # 10 identical vectors
     queries = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<double>")
     want = [100, 101, 102]                              # lowest ids win ties
     for nparts in (1, 4, 11):

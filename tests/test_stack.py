@@ -360,3 +360,32 @@ def test_mean_assoc_qa_nan_value_matches_batch_path(spark):
     # the NaN-under-clear pixel averages the other three members
     assert np.isclose(batch[0, 0], (10.0 + 12.0 + 13.0) / 3)
     assert np.isclose(assoc[0, 0], (10.0 + 12.0 + 13.0) / 3)
+
+
+def test_value_band_selects_one_band_with_or_without_qa(spark):
+    """An explicit value_band reduces that one band, with or without a QA
+    band; None keeps every band without QA and means band 0 with QA."""
+    import pandas as pd
+    clear = float(fixtures.QA_CLEAR_C1[0])
+    rows = [{"scene_id": "s", "bytes": codec.encode(np.stack(
+        [np.full((2, 2), t, np.float32), np.full((2, 2), 10 + t, np.float32),
+         np.full((2, 2), clear, np.float32)]))} for t in range(3)]
+    pdf = pd.DataFrame(rows)
+
+    def median(**kw):
+        row = S._reduce_group(("s",), pdf, ["scene_id"], S._MEASURES["median"],
+                              "raw", kw.get("value_band"), kw.get("qa_band"),
+                              fixtures.QA_CLEAR_C1, None)
+        return codec.decode(bytes(row["bytes"]))
+
+    assert median(value_band=1).shape == (1, 2, 2)
+    assert np.all(median(value_band=1) == 11)
+    assert np.all(median(value_band=1, qa_band=2) == 11)
+    assert np.all(median(value_band=None, qa_band=2) == 1)
+    every = median(value_band=None)
+    assert every.shape == (3, 2, 2)
+    assert [float(b[0, 0]) for b in every] == [1.0, 11.0, clear]
+    # the public entry point reaches the same rule
+    out = S.stack_composite(spark.createDataFrame(pdf), "median",
+                            value_band=1, fmt_out="raw").collect()[0]
+    assert np.array_equal(codec.decode(bytes(out["bytes"])), median(value_band=1))
