@@ -11,10 +11,14 @@ Five dedup families over the ``documents`` table (and phash for images):
 - n-gram Jaccard — exact verification of candidate pairs
 - embedding cosine — near-dup by vector similarity (see similarity.py)
 
-Scale notes: every family is one-shuffle (groupBy on hash / band bucket);
-candidate verification joins are self-equi-joins on bucket keys, which AQE
-splits when a bucket is hot (a crawl with boilerplate). The expensive
-per-pair Jaccard runs only on LSH candidates, never all-pairs.
+Scale notes: exact dedup is one shuffle on the content hash. The LSH
+families (MinHash, SimHash, phash) share one band-bucket pair generator,
+``_band_pairs``: one banded shuffle on (band, bsig) whose window sizes
+and salt-splits hot buckets (a crawl with boilerplate) and whose
+collect emits each bucket's pairs, then one shuffle on the pair (MinHash
+plans three Exchanges in all: round-robin before the signature pass, the
+band bucket, the pair count). The expensive per-pair Jaccard runs only
+on LSH candidates, never all-pairs.
 """
 
 from __future__ import annotations
@@ -256,54 +260,76 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return narrow.mapInPandas(gen, schema=T.StructType(fields))
 
 
-def _salted_buckets(banded: DataFrame, max_bucket: int,
-                    id_col: str = "_id", carry_col: str | None = None) -> DataFrame:
+def _check_max_bucket(max_bucket: int) -> None:
+    """``max_bucket`` sizes the salt split: 0 divides by zero in the
+    executor and a negative cap turns salting off without a word."""
+    if max_bucket < 1:
+        raise ValueError(f"max_bucket={max_bucket} must be >= 1")
+
+
+def _salted_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
     """Bound LSH bucket size WITHOUT dropping content: buckets larger than
     ``max_bucket`` are split into ⌈n/max_bucket⌉ salt sub-buckets by a hash
     of the member id. Returns the banded rows with ``salt`` plus the
-    bucket's global ``_n`` (size) and ``_bmin`` (canonical = min id) so
-    callers can emit canonical→sub-bucket *bridge* pairs that keep each
-    oversized bucket's duplicate group connected (pair recall inside a
-    sub-bucket is exact; cross-sub-bucket pairs are represented through
-    the canonical doc, which downstream connected-component grouping
-    re-joins).
+    bucket's global ``_n`` (size) and ``_bmin`` (canonical = min member
+    ``m``) so callers can emit canonical→sub-bucket *bridge* pairs (pair
+    recall inside a sub-bucket is exact; cross-sub-bucket pairs are
+    represented through the canonical member). MinHash candidates are
+    unverified, so each oversized bucket stays one connected group; the
+    hash families verify every pair by hamming, bridges included, so a
+    near-dup pair split across sub-buckets of a bucket whose canonical
+    is far from both is lost.
 
-    r7: ``_n``/``_bmin`` are WINDOW aggregates over (band, bsig) instead
-    of a size aggregation joined back on the same key — one pass over
-    ``banded`` instead of two, no equi-join, and (because the window's
-    hash partitioning on (band, bsig) already satisfies the downstream
-    groupBy(band, bsig, salt) clustering) exactly ONE exchange for the
-    whole size→salt→pair chain. This also removes the reason the
-    upstream signature table had to be persisted (guide §2.4: two
-    operations keyed the same way share one exchange).
+    ``_n``/``_bmin`` are WINDOW aggregates over (band, bsig), not a size
+    aggregation joined back on the same key: one pass over ``banded``, no
+    equi-join, and (because the window's hash partitioning on
+    (band, bsig) already satisfies the downstream groupBy(band, bsig,
+    salt) clustering) exactly ONE exchange for the whole
+    size→salt→pair chain. A member ``m`` that carries a payload is
+    ``struct(_id, payload)``: ordered by id first, so its min is the
+    canonical row and the payload rides along with no lookup join.
 
-    ``carry_col``: optionally ride a payload column (e.g. the 64-bit hash
-    a bridge pair must compare against) as ``_bmin_carry`` = the
-    canonical row's value — callers then need no lookup join (and
-    especially no corpus-wide broadcast) to resolve the canonical's
-    payload. (min over struct(id, carry) is ordered by id first; ids are
-    unique within a bucket, so the carry is exactly the canonical's.)
-
-    A NULL id raises (inline, in the window's projection — no extra job):
-    ``min(id)`` would skip it while ``min(struct(id, carry))`` elects it
-    canonical, and a NULL member cannot be paired either way."""
+    A NULL id raises (inline, in the member's projection — no extra job):
+    a NULL member can be neither paired nor elected canonical."""
     w = Window.partitionBy("band", "bsig")
-    j = banded.withColumn(id_col, F.when(F.col(id_col).isNull(), F.raise_error(
-        F.lit("LSH input has a NULL id; ids must be non-null"))).otherwise(F.col(id_col)))
-    j = j.withColumn("_n", F.count("*").over(w))
-    if carry_col is None:
-        j = j.withColumn("_bmin", F.min(id_col).over(w))
-    else:
-        mn = F.min(F.struct(F.col(id_col).alias("i"),
-                            F.col(carry_col).alias("c"))).over(w)
-        j = (j.withColumn("_mn", mn)
-             .withColumn("_bmin", F.col("_mn.i"))
-             .withColumn("_bmin_carry", F.col("_mn.c"))
-             .drop("_mn"))
-    n_sub = F.greatest(F.ceil(F.col("_n") / max_bucket), F.lit(1))
+    j = banded.withColumn("m", F.when(F.col("_id").isNull(), F.raise_error(
+        F.lit("LSH input has a NULL id; ids must be non-null"))).otherwise(F.col("m")))
+    j = (j.withColumn("_n", F.count("*").over(w))
+         .withColumn("_bmin", F.min("m").over(w)))
+    n_sub = F.ceil(F.col("_n") / max_bucket)
     salt = F.when(F.col("_n") <= max_bucket, F.lit(0)) \
-        .otherwise(F.pmod(F.xxhash64(F.col(id_col).cast("string")), n_sub))
+        .otherwise(F.pmod(F.xxhash64(F.col("_id").cast("string")), n_sub))
     return j.withColumn("salt", salt.cast("int"))
+
+
+def _band_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """The one LSH pair generator: banded rows ``(_id, band, bsig, m)`` →
+    candidate pairs ``(a, b)`` of members with ``a < b``, one row per
+    (pair, band bucket) it is found in.
+
+    Buckets are salt-split by :func:`_salted_buckets`; each (band, bsig,
+    salt) sub-bucket collects its sorted members ``xs`` and emits, in ONE
+    array expression, its within-bucket pairs plus the canonical bridge
+    ``_bmin ↔ xs[0]`` when the bucket was split and the sub-bucket does
+    not hold the canonical. One expression rather than a union of the
+    two: a union would recompute the whole signature→banding→window→
+    collect chain once per branch. The member ``m`` is the raw id
+    (MinHash) or ``struct(_id, sh)`` (SimHash/phash); either way its
+    order is id order, so ``a < b`` holds with no reordering."""
+    _check_max_bucket(max_bucket)
+    grouped = (_salted_buckets(banded, max_bucket)
+               .groupBy("band", "bsig", "salt")
+               .agg(F.sort_array(F.collect_list("m")).alias("xs"),
+                    F.first("_bmin").alias("_bmin"), F.first("_n").alias("_n"))
+               .filter((F.size("xs") > 1) | (F.col("_n") > F.size("xs"))))
+    pair_list = F.expr(
+        "concat("
+        " flatten(transform(xs, (a, i) -> "
+        "   transform(slice(xs, i + 2, size(xs) - i - 1),"
+        "             b -> named_struct('a', a, 'b', b)))),"
+        " filter(array(named_struct('a', _bmin, 'b', xs[0])),"
+        f"        x -> _n > {int(max_bucket)} AND _bmin < xs[0]))")
+    return grouped.select(F.explode(pair_list).alias("p")).select("p.a", "p.b")
 
 
 def lsh_bucket_stats(banded: DataFrame, max_bucket: int = 1000) -> DataFrame:
@@ -311,6 +337,7 @@ def lsh_bucket_stats(banded: DataFrame, max_bucket: int = 1000) -> DataFrame:
     ``max_bucket`` (i.e. were salt-split). On a production crawl this is
     the 'boilerplate hot bucket' report — run it alongside the candidate
     job (same one aggregation) and alert on growth."""
+    _check_max_bucket(max_bucket)
     return (banded.groupBy("band", "bsig")
             .agg(F.count("*").alias("n_docs"))
             .filter(F.col("n_docs") > max_bucket)
@@ -326,13 +353,14 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     n_hashes/bands rows; docs sharing any band signature are candidates.
     Output: (id_a, id_b, n_shared_bands), id_a < id_b.
 
-    Plan shape: one narrow signature pass → explode(bands) → ONE shuffle
-    groupBy(band, sig) → within-bucket pairing. Hot buckets (boilerplate
-    text) are the skew risk — pair generation is quadratic per bucket, so
-    buckets larger than ``max_bucket`` are salt-split into bounded
-    sub-buckets and re-connected through canonical bridge pairs (see
-    _salted_buckets; sizes observable via lsh_bucket_stats). Nothing is
-    silently dropped.
+    Plan shape: one narrow signature pass → explode(bands) → ONE banded
+    shuffle on (band, bsig) → within-bucket pairing (:func:`_band_pairs`)
+    → a pair shuffle whose count is ``n_shared_bands``. Hot buckets
+    (boilerplate text) are the skew risk — pair generation is quadratic
+    per bucket, so buckets larger than ``max_bucket`` are salt-split into
+    bounded sub-buckets and re-connected through canonical bridge pairs
+    (see _salted_buckets; sizes observable via lsh_bucket_stats). Nothing
+    is silently dropped.
 
     r7: signatures come from the vectorized Arrow kernel
     (:func:`minhash_signatures` — values identical to the SQL form, see
@@ -348,6 +376,8 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     t ≈ 0.71. Larger families sharpen the S-curve: fewer low-similarity
     false candidates reach the Jaccard verification join at equal
     recall (measured in BENCH/notes_r6.md)."""
+    if bands < 1:
+        raise ValueError(f"bands={bands} must be >= 1")
     if n_hashes % bands:
         # silently dropping the trailing hashes would weaken the signature
         # with no signal (and the banded column refs would blow up later
@@ -355,32 +385,12 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
         raise ValueError(f"bands={bands} must divide n_hashes={n_hashes}")
     rows = n_hashes // bands
     sig_df = minhash_signatures(df, text_col, id_col, k, n_hashes)
-    banded = sig_df.select("_id", F.posexplode(F.array(*[
+    banded = sig_df.select("_id", F.col("_id").alias("m"), F.posexplode(F.array(*[
         F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)])
         for b in range(bands)])).alias("band", "bsig"))
-    salted = _salted_buckets(banded, max_bucket)
-    grouped = (salted.groupBy("band", "bsig", "salt")
-               .agg(F.sort_array(F.collect_list("_id")).alias("ids"),
-                    F.first("_bmin").alias("_bmin"), F.first("_n").alias("_n"))
-               .filter((F.size("ids") > 1) | (F.col("_n") > F.size("ids"))))
-    # within-bucket pairs and the canonical bridge pair are ONE concat'd
-    # array expression (r7): the pre-r7 within.union(bridges) made Spark
-    # recompute the whole signature→banding→window→collect chain once per
-    # union branch — the plan's dominant cost once signatures got fast.
-    # The bridge is a one-element array filtered by the oversize
-    # condition (empty otherwise), so rows and counts are identical.
-    pair_list = F.expr(
-        "concat("
-        " flatten(transform(ids, (a, i) -> "
-        "   transform(slice(ids, i + 2, size(ids) - i - 1),"
-        "             b -> named_struct('a', a, 'b', b)))),"
-        " filter(array(named_struct('a', _bmin, 'b', ids[0])),"
-        f"        x -> _n > {int(max_bucket)} AND _bmin < ids[0]))")
-    pairs = (grouped.select(F.explode(pair_list).alias("p"))
-             .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("n_shared_bands")))
-    return pairs
+    return (_band_pairs(banded, max_bucket)
+            .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+            .agg(F.count("*").alias("n_shared_bands")))
 
 
 def _i64(x: int) -> int:
@@ -429,6 +439,10 @@ def band_masks(max_hamming: int, band_bits: int = 16) -> list[int]:
     when enough of them exist; otherwise the 64 bits are re-split into
     max_hamming+1 near-equal contiguous bands. Shared with the DuckDB
     oracle builder so engine and oracle can never band differently."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming={max_hamming} must be >= 0")
+    if band_bits < 1:
+        raise ValueError(f"band_bits={band_bits} must be >= 1")
     n_bands = 64 // band_bits
     if n_bands >= max_hamming + 1:
         return [_i64(((1 << band_bits) - 1) << (b * band_bits))
@@ -445,41 +459,19 @@ def _hash_band_near_dups(d: DataFrame, max_hamming: int, band_bits: int,
                          max_bucket: int = 1000) -> DataFrame:
     """Shared 64-bit-hash LSH: bucket by bit-bands (band_masks — enough
     bands that a pair within max_hamming ALWAYS shares ≥1 exact band),
-    salt-split oversized buckets with canonical bridges
-    (see _salted_buckets), verify with bit_count. Input d: (_id, sh)."""
+    pair through :func:`_band_pairs` (salt-split oversized buckets with
+    canonical bridges), verify with bit_count. Input d: (_id, sh). Each
+    member is ``struct(_id, sh)``, so a bridge pair carries the
+    canonical's hash with no lookup join or corpus broadcast."""
     masks = band_masks(max_hamming, band_bits)
     bandcols = [(F.col("sh").cast("long").bitwiseAND(F.lit(m))).alias(f"b{b}")
                 for b, m in enumerate(masks)]
-    banded = d.select("_id", "sh", F.posexplode(F.array(*bandcols)).alias("band", "bsig"))
-    salted = _salted_buckets(banded, max_bucket, carry_col="sh")
-    g = (salted.groupBy("band", "bsig", "salt")
-         .agg(F.sort_array(F.collect_list(F.struct("_id", "sh"))).alias("xs"),
-              F.min_by(F.struct("_id", "sh"), F.col("_id")).alias("sub_min"),
-              F.first("_bmin").alias("_bmin_id"),
-              F.first("_bmin_carry").alias("_bmin_sh"),
-              F.first("_n").alias("_n"))
-         .filter((F.size("xs") > 1) | (F.col("_n") > F.size("xs"))))
-    # within-bucket pairs + the canonical bridge (sub-bucket canonical ↔
-    # bucket canonical; its hash rides the window as _bmin_carry — no
-    # lookup join, no corpus broadcast) as ONE concat'd array per group:
-    # a union of two branches would recompute the whole upstream chain
-    # twice (r7 — see minhash_lsh_candidates). The bridge is a
-    # one-element array filtered by the oversize condition.
-    pair_list = F.expr(
-        "concat("
-        " flatten(transform(xs, (a, i) -> "
-        "   transform(slice(xs, i + 2, size(xs) - i - 1),"
-        "             b -> named_struct('ia', a._id, 'ib', b._id,"
-        "                               'sa', a.sh, 'sb', b.sh)))),"
-        " filter(array(named_struct('ia', _bmin_id, 'ib', sub_min._id,"
-        "                           'sa', _bmin_sh, 'sb', sub_min.sh)),"
-        f"        x -> _n > {int(max_bucket)} AND _bmin_id != sub_min._id))")
-    pairs = (g.select(F.explode(pair_list).alias("p"))
-             .select("p.*").distinct())
-    return (pairs.withColumn("hamming", F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))))
+    banded = d.select("_id", F.struct("_id", "sh").alias("m"),
+                      F.posexplode(F.array(*bandcols)).alias("band", "bsig"))
+    return (_band_pairs(banded, max_bucket)
+            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+                    F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
-            .select(F.least("ia", "ib").alias("id_a"),
-                    F.greatest("ia", "ib").alias("id_b"), "hamming")
             .distinct())
 
 

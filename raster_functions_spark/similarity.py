@@ -343,6 +343,11 @@ def lsh_multi_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     members are scored against only its probing queries, and pairs
     matched in several tables count once. No join, no candidate rows,
     shuffle = n_q·k partials."""
+    if n_tables < 1:
+        # no tables means no groups: the kernel would answer every query
+        # with an empty result instead of failing
+        raise ValueError(f"n_tables ≥ 1 (one sign-hash table at least), "
+                         f"got n_tables={n_tables}")
     return _cosine_topk(queries, k, vec_col, qid_col,
                         _lsh_plan(corpus, id_col, vec_col, n_bits, n_tables,
                                   1, dim))
@@ -379,10 +384,14 @@ def _train_sample(corpus: DataFrame, id_col: str, vec_col: str,
     """Deterministic UNBIASED k-means training sample: TakeOrdered on
     xxhash64(id) (id as tiebreaker). Same cost shape as orderBy(id) —
     a top-K, never a full sort — but decorrelated from ingest order."""
-    return np.stack(
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col)).limit(n)
-        .toPandas()[vec_col].to_numpy())
+    vecs = (corpus.select(id_col, vec_col)
+            .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col)).limit(n)
+            .toPandas()[vec_col].to_numpy())
+    if len(vecs) == 0:
+        raise ValueError("empty corpus: no vectors to train the IVF "
+                         "quantizer on (ivf_build and ivf_build_snapshot "
+                         "accept fixed centroids=)")
+    return np.stack(vecs)
 
 
 def _probe_lists(Q: np.ndarray, C: np.ndarray,

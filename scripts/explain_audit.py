@@ -5,6 +5,8 @@ properties the engine is designed around (SURVEY.md §4):
 - small-side joins go broadcast
 - cell-encode lives inside WholeStageCodegen (zero Python)
 - minhash runs as codegen'd hash aggregation (no interpreted HOFs)
+- MinHash, SimHash and phash LSH shuffle the banded table once, under
+  one Window, with no join
 - per-pixel zonal statistics run their zone op in one Python pass
 - a halo-exchange chain scans its tile table once and joins nothing,
   and runs its pointwise ops inside the halo stage's two Python passes
@@ -87,7 +89,7 @@ def main() -> int:
     # (they are allowed only in the tiny post-agg pair-generation stage)
     from raster_functions_spark import dedup
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(dedup.minhash_lsh_candidates(docs, n_hashes=64, bands=16))
+    p = p_minhash = plan_of(dedup.minhash_lsh_candidates(docs, n_hashes=64, bands=16))
     hot = p.split("Exchange (")[0]
     ok = ("MapInPandas" in p and "transform(" not in hot
           and "SortAggregate" not in hot
@@ -164,14 +166,24 @@ def main() -> int:
     for name, p in knn_plans.items():
         out += [f"\n## {name}\n", p]
 
-    # 10. salted minhash: the banded table is shuffled ONCE on (band, bsig)
-    # for the size join, and the (band, bsig, salt) pairing groupBy reuses
-    # that partitioning (grouping keys ⊇ partitioning keys → no second
-    # banded shuffle). Count Exchanges carrying the banded row width.
-    p = plan_of(dedup.minhash_lsh_candidates(docs, n_hashes=64, bands=16))
-    n_band_exchanges = p.count("Exchange hashpartitioning(band")
-    ok = n_band_exchanges <= 2  # banded rows + the small sizes aggregate
-    checks.append(("salted minhash adds no extra banded-table shuffle", ok))
+    # 10. every LSH family (MinHash, SimHash, phash) pairs through
+    # dedup._band_pairs: the banded table is shuffled ONCE on (band, bsig)
+    # — the window that sizes and salts the buckets and the
+    # (band, bsig, salt) collect share that partitioning — under ONE
+    # Window, and nothing is joined. (Formatted explain prints an
+    # Exchange's partitioning on its "Arguments:" line.)
+    lsh_plans = {
+        "minhash_lsh_candidates": p_minhash,
+        "simhash_near_dups": plan_of(dedup.simhash_near_dups(docs)),
+        "phash_near_dups": plan_of(dedup.phash_near_dups(fixtures.images_df(spark, 600))),
+    }
+    ok = all(len(_re.findall(r"Arguments: hashpartitioning\(band#\d+, bsig#", p)) == 1
+             and len(_re.findall(r"^\(\d+\) Window$", p, _re.M)) == 1 and "Join" not in p
+             for p in lsh_plans.values())
+    checks.append(("LSH families (minhash, simhash, phash): one banded shuffle, "
+                   "one Window, no join", ok))
+    for name in ("simhash_near_dups", "phash_near_dups"):
+        out += [f"\n## {name}\n", lsh_plans[name]]
 
     # 11. SARIMA hourly pre-aggregation keeps partial aggregation, then
     # ONE grouped Python pass (stack.grouped_sorted_map's mapInPandas)

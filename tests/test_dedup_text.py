@@ -57,8 +57,8 @@ def test_minhash_lsh_rejects_unsafe_shingle_k(spark, k):
 
 @pytest.mark.parametrize("max_bucket", [1000, 1])
 def test_lsh_rejects_null_ids(spark, max_bucket):
-    """A NULL id would be skipped as minhash's bucket canonical but elected
-    canonical by SimHash's carry branch: both raise, salted or not."""
+    """A NULL id can be neither paired nor elected bucket canonical:
+    MinHash and SimHash both raise, salted or not."""
     base = "the quick brown fox jumps over the lazy dog " * 8
     df = spark.createDataFrame([(None, base), (1, base), (2, base)],
                                "doc_id long, text string")
@@ -68,6 +68,107 @@ def test_lsh_rejects_null_ids(spark, max_bucket):
                                                   max_bucket=max_bucket)):
         with pytest.raises(Exception, match="NULL id"):
             build().collect()
+
+
+@pytest.mark.parametrize("family, kwargs, arg", [
+    ("minhash", {"max_bucket": 0}, "max_bucket"),
+    ("minhash", {"max_bucket": -1}, "max_bucket"),
+    ("minhash", {"n_hashes": 8, "bands": -2}, "bands"),
+    ("minhash", {"n_hashes": 8, "bands": 0}, "bands"),
+    ("simhash", {"max_bucket": 0}, "max_bucket"),
+    ("simhash", {"band_bits": 0}, "band_bits"),
+    ("phash", {"max_bucket": -1}, "max_bucket"),
+    ("phash", {"max_hamming": -1}, "max_hamming"),
+])
+def test_lsh_rejects_bad_arguments_on_driver(spark, family, kwargs, arg):
+    """Bad LSH arguments fail while the plan is built, naming the argument:
+    a zero cap used to die in the executor with DIVIDE_BY_ZERO, a negative
+    cap silently turned salting off, and bands=-2 silently returned no
+    rows."""
+    df = spark.createDataFrame([(0, "alpha beta"), (1, "alpha beta")],
+                               "doc_id long, text string")
+    build = {"minhash": dedup.minhash_lsh_candidates,
+             "simhash": dedup.simhash_near_dups,
+             "phash": lambda d, **kw: dedup.phash_near_dups(d.select(
+                 F.col("doc_id").alias("image_id"),
+                 F.col("doc_id").alias("phash")), **kw)}[family]
+    with pytest.raises(ValueError, match=f"{arg}="):
+        build(df, **kwargs)
+
+
+def _components(pairs) -> set[frozenset]:
+    """Connected components of an edge list, as a set of member sets."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent[find(a)] = find(b)
+    groups: dict = {}
+    for x in list(parent):
+        groups.setdefault(find(x), set()).add(x)
+    return {frozenset(g) for g in groups.values()}
+
+
+def test_lsh_families_match_bruteforce_replay(spark, docs):
+    """The shared band-bucket pair generator against plain replays:
+    unsalted MinHash counts exactly the equal band keys of its own
+    signatures; unsalted phash finds exactly the pairs within max_hamming
+    (the pigeonhole guarantee of band_masks). Salting (max_bucket=2) only
+    drops pairs, never invents them, and MinHash's unverified bridges
+    keep its candidate groups whole. (phash verifies its bridges by
+    hamming, so a salted phash can lose a group: not asserted here.)"""
+    n_hashes, bands, rows = 8, 4, 2
+    sig = dedup.minhash_signatures(docs, "text", "doc_id", 5, n_hashes).toPandas()
+    shared: dict = {}
+    for b in range(bands):
+        keys = sig[[f"h{b * rows + r}" for r in range(rows)]].astype(str).agg("|".join, axis=1)
+        for ids in sig["_id"].groupby(keys).agg(sorted):
+            for i, a in enumerate(ids):
+                for c in ids[i + 1:]:
+                    shared[(a, c)] = shared.get((a, c), 0) + 1
+
+    def minhash_pairs(max_bucket):
+        return {(r.id_a, r.id_b): r.n_shared_bands for r in dedup.minhash_lsh_candidates(
+            docs, n_hashes=n_hashes, bands=bands, max_bucket=max_bucket).collect()}
+
+    got, salted = minhash_pairs(10**6), minhash_pairs(2)
+    assert got == shared and len(got) > 0
+    assert len(salted) < len(got)          # the cap did split buckets
+    assert set(salted) <= set(got)
+    assert _components(salted) == _components(got)
+
+    # ~300 64-bit hashes: 240 random, 60 planted near-dups of them with
+    # 0..max_hamming+2 flipped bits (some just past the threshold)
+    max_hamming, rng = 8, np.random.default_rng(7)
+    h = list(rng.integers(0, 2**63, 240, dtype=np.uint64) * np.uint64(2)
+             + rng.integers(0, 2, 240, dtype=np.uint64))
+    for j in range(60):
+        flips = rng.choice(64, j % (max_hamming + 3), replace=False)
+        h.append(h[int(rng.integers(0, 240))]
+                 ^ np.uint64(sum(1 << int(f) for f in flips)))
+    h = np.array(h, dtype=np.uint64)
+    ids = [f"i{i:03d}" for i in range(len(h))]
+    bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1)
+    ham = (bits[:, None, :] != bits[None, :, :]).sum(axis=2)
+    want = {(ids[i], ids[j], int(ham[i, j]))
+            for i in range(len(h)) for j in range(i + 1, len(h))
+            if ham[i, j] <= max_hamming}
+    images = spark.createDataFrame(pd.DataFrame(
+        {"image_id": ids, "phash": h.view(np.int64)}))
+
+    def phash_pairs(max_bucket):
+        return {tuple(r) for r in dedup.phash_near_dups(
+            images, max_hamming=max_hamming, max_bucket=max_bucket).collect()}
+
+    unsalted, salted = phash_pairs(10**6), phash_pairs(2)
+    assert unsalted == want and len(want) >= 40
+    assert salted <= unsalted
 
 
 def test_minhash_signature_matches_duckdb(spark, docs, docs_pdf):

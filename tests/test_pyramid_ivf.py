@@ -171,7 +171,9 @@ def test_topk_paths_share_tie_order(spark, tied_corpus):
 def test_topk_entry_points_share_empty_and_k_rules(spark, tmp_path):
     """All six search entry points answer an empty query set with an
     empty frame of their usual schema, and reject k < 1 on the driver;
-    lsh_topk rejects n_probes < 1 and IVF search n_probe < 1."""
+    lsh_topk rejects n_probes < 1, lsh_multi_topk n_tables < 1, IVF
+    search n_probe < 1, and every IVF path that trains centroids an
+    empty corpus."""
     corpus, queries = fixtures.ann_vectors_dfs(spark, 200, 3, 8)
     index, C = similarity.ivf_build(corpus, n_lists=4)
     snap = str(tmp_path / "snap")
@@ -198,9 +200,20 @@ def test_topk_entry_points_share_empty_and_k_rules(spark, tmp_path):
             run()
     with pytest.raises(ValueError, match="n_probes"):
         similarity.lsh_topk(corpus, queries, n_probes=0)
+    with pytest.raises(ValueError, match="n_tables"):
+        similarity.lsh_multi_topk(corpus, queries, n_tables=0)
     for n_probe in (0, -1):
         with pytest.raises(ValueError, match="n_probe"):
             similarity.ivf_search(index, C, queries, n_probe=n_probe)
+    # an empty corpus leaves k-means nothing to train on
+    empty = corpus.limit(0)
+    for train in (lambda: similarity.ivf_topk(empty, queries, k=3, n_lists=4),
+                  lambda: similarity.ivf_build(empty, n_lists=4),
+                  lambda: similarity.ivf_build_snapshot(
+                      empty, str(tmp_path / "empty_snap"), n_lists=4)):
+        with pytest.raises(ValueError, match="empty corpus"):
+            train()
+
 
 def test_pyramid_negative_tile_coords(spark):
     """Grids with negative tile coordinates: floor-division parent math —
