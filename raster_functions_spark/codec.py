@@ -151,9 +151,10 @@ def _dct_encode(chw: np.ndarray) -> bytes:
 
 
 def _dct_decode(payload: bytes, bands: int, h: int, w: int) -> np.ndarray:
-    raw = zlib.decompress(payload)
+    raw = _inflate(payload)
     ph, pw = h + ((-h) % DCT_BLOCK), w + ((-w) % DCT_BLOCK)
     per_band = (ph // DCT_BLOCK) * (pw // DCT_BLOCK)
+    _need(raw, bands * per_band * DCT_BLOCK * DCT_BLOCK * 2, "dct")
     q = np.frombuffer(raw, dtype="<i2").astype(np.float64)
     q = q.reshape(bands, per_band, DCT_BLOCK, DCT_BLOCK) * DCT_QSTEP
     out = np.empty((bands, h, w), dtype=np.uint8)
@@ -196,21 +197,52 @@ def encode(pixels: np.ndarray, fmt: str = "zlib",
     return hdr + payload
 
 
-def decode(buf: bytes) -> np.ndarray:
-    """Decode container bytes → (bands, h, w) ndarray (native byte order)."""
+def _inflate(payload: bytes) -> bytes:
+    try:
+        return zlib.decompress(payload)
+    except zlib.error as e:
+        raise ValueError(f"corrupt zlib payload: {e}") from None
+
+
+def _need(payload: bytes, nbytes: int, fmt: str) -> None:
+    if len(payload) < nbytes:
+        raise ValueError(f"truncated {fmt} payload: {len(payload)} of {nbytes} bytes")
+
+
+def _header(buf: bytes) -> tuple[str, str, int, int, int]:
+    """(fmt, dtype, bands, h, w) of a container; ValueError for a short or
+    foreign header or an unknown fmt/dtype code."""
+    if len(buf) < HEADER_SIZE:
+        raise ValueError(f"container shorter than its {HEADER_SIZE}-byte header")
     magic, ver, fmt_c, dt_c, bands, h, w, _ = _HDR.unpack_from(buf, 0)
     if magic != MAGIC or ver != VERSION:
         raise ValueError("bad container header")
-    fmt = FMT_NAMES[fmt_c]
-    dtype = np.dtype(DTYPE_NAMES[dt_c])
+    if fmt_c not in FMT_NAMES or dt_c not in DTYPE_NAMES:
+        raise ValueError(f"unknown fmt code {fmt_c} or dtype code {dt_c}")
+    return FMT_NAMES[fmt_c], DTYPE_NAMES[dt_c], bands, h, w
+
+
+def decode(buf: bytes) -> np.ndarray:
+    """Decode container bytes → (bands, h, w) ndarray (native byte order).
+
+    Every malformed container raises ValueError: short or foreign header,
+    unknown fmt/dtype code, a zero dimension, a truncated or corrupt
+    payload (so a permissive caller can catch exactly that)."""
+    fmt, dt, bands, h, w = _header(buf)
+    if not (bands and h and w):
+        raise ValueError(f"zero dimension in (bands, h, w) = {(bands, h, w)}")
+    dtype = np.dtype(dt)
     payload = buf[HEADER_SIZE:]
     count = bands * h * w
     if fmt == "raw":
+        _need(payload, count * dtype.itemsize, fmt)
         flat = np.frombuffer(payload, dtype=dtype.newbyteorder("<"), count=count)
     elif fmt == "rle":
         flat = _rle_decode(payload, dtype, count)
     elif fmt == "zlib":
-        flat = np.frombuffer(zlib.decompress(payload), dtype=dtype.newbyteorder("<"), count=count)
+        raw = _inflate(payload)
+        _need(raw, count * dtype.itemsize, fmt)
+        flat = np.frombuffer(raw, dtype=dtype.newbyteorder("<"), count=count)
     elif fmt == "dct":
         return _dct_decode(payload, bands, h, w)
     else:  # pragma: no cover
@@ -221,8 +253,8 @@ def decode(buf: bytes) -> np.ndarray:
 def peek_header(buf: bytes) -> dict:
     """Cheap metadata read without decoding pixels (catalog-crawl path,
     analog of /root/reference/scripts/ExtractRasterInfo.py:1-11)."""
-    magic, ver, fmt_c, dt_c, bands, h, w, _ = _HDR.unpack_from(buf, 0)
-    return {"fmt": FMT_NAMES[fmt_c], "dtype": DTYPE_NAMES[dt_c],
+    fmt, dt, bands, h, w = _header(buf)
+    return {"fmt": fmt, "dtype": dt,
             "bands": int(bands), "h": int(h), "w": int(w),
             "nbytes": len(buf)}
 

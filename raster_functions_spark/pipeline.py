@@ -5,9 +5,15 @@
 One fused mapInPandas pass decodes each image ONCE and emits scalar
 features + fidelity checks (caption passthrough is structural: the column
 is never touched). Cell-encode is a pure Column expression (codegen). The
-PIP join picks broadcast vs partitioned by vector-side size. Zonal stats
-are a plain hash aggregation. Total: one Python pass over pixels + (at
-most) one shuffle for the join + one for the agg — the minimum possible.
+PIP join picks broadcast vs partitioned by vector-side size; the routing
+probe IS the bounded AOI collect (spatial.broadcast_aoi with limit=), one
+driver job. Zonal stats are a plain hash aggregation: one Exchange on
+(aoi_id, cell) for the decomposable partials and one on aoi_id for the
+merge. The broadcast route returns at most ``broadcast_threshold`` rows,
+so it orders them in one partition (coalesce(1) + sortWithinPartitions:
+no range-partition sample job, no range Exchange); the partitioned route
+keeps a global orderBy. A broadcast pass is 4 Spark jobs: the AOI
+collect, the kernel stage, the merge stage and the ordered tail.
 """
 
 from __future__ import annotations
@@ -19,6 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec, grid, session, spatial
+
+# the image columns _assign_batch reads: the broadcast kernel scans only
+# these (decode_features, the partitioned route's kernel, adds fmt)
+_KERNEL_COLS = ("image_id", "caption", "bytes", "phash", "lon", "lat")
 
 
 def decode_features(images: DataFrame, cell_res: int = 7) -> DataFrame:
@@ -52,17 +62,28 @@ def decode_features(images: DataFrame, cell_res: int = 7) -> DataFrame:
             out["n_px"] = npx
             yield out
 
-    feats = images.mapInPandas(run, schema=out_schema)
+    feats = images.select(*_KERNEL_COLS, "fmt").mapInPandas(run, schema=out_schema)
     return feats.withColumn("cell", grid.encode_col(F.col("lon"), F.col("lat"), cell_res))
 
 
-def _zonal_agg(assigned: DataFrame) -> DataFrame:
+def _zonal_agg(assigned: DataFrame, route: str) -> DataFrame:
     """Batch flagship aggregation — expressed as the MERGE of the same
     decomposable partials the incremental view commits
     (_assigned_partials → merge_flagship_partials), so the batch and
     materialized-view paths share one definition of every statistic and
-    cannot drift."""
-    return merge_flagship_partials(_assigned_partials(assigned))
+    cannot drift. ``route`` is the prepare_aoi route; see _by_aoi."""
+    return _by_aoi(_merged_stats(_assigned_partials(assigned)), route)
+
+
+def _by_aoi(stats: DataFrame, route: str) -> DataFrame:
+    """Order the per-AOI rows by aoi_id. The broadcast route yields at
+    most one row per broadcast AOI (≤ broadcast_threshold, all of them
+    already held on the driver), so one partition sorts them with no
+    range-partition sample job and no range Exchange; any other result
+    may be unbounded and keeps the global orderBy."""
+    if route == "broadcast":
+        return stats.coalesce(1).sortWithinPartitions("aoi_id")
+    return stats.orderBy("aoi_id")
 
 
 def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
@@ -71,7 +92,9 @@ def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
     """decode → cell-encode → PIP join with ONE fused Python
     pass (SURVEY.md O11): decode, features, vectorized cell-encode, bbox
     prefilter and exact PIP all happen on each Arrow batch in a single
-    worker; the only shuffle in the whole plan is the final zonal groupBy.
+    worker, over a scan pruned to the six columns the kernel reads; the
+    assigned rows need no shuffle at all (the zonal aggregation that
+    follows in flagship is the first).
 
     At N tasks this runs exactly N Python workers (separate decode / join
     / agg stages would run 3N — a 3× oversubscription that inverts
@@ -80,9 +103,9 @@ def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
     Routing: the fused path materializes the AOI table on the driver and
     broadcasts it, which is the right call for the typical few-thousand-
     polygon case but a ceiling at millions of polygons. The same bounded
-    probe as spatial.pip_join (limit N+1, never a full count) routes
-    oversized vector sides to the fused-decode + cell-cover partitioned
-    join, which never touches the driver."""
+    collect as spatial.pip_join (at most N+1 rows, never a full count; see
+    prepare_aoi) routes oversized vector sides to the fused-decode +
+    cell-cover partitioned join, which never touches the driver."""
     session.ship_package(spark)
     prep = prepare_aoi(spark, aoi, broadcast_threshold)
     return flagship_assigned_prepared(spark, images, prep, cell_res)
@@ -94,16 +117,19 @@ _ASSIGNED_SCHEMA = ("aoi_id long, image_id string, caption string, cell long, "
 
 def prepare_aoi(spark: SparkSession, aoi: DataFrame,
                 broadcast_threshold: int = 10000):
-    """One-time AOI preparation for the fused flagship: bounded-probe
-    routing decision + (broadcast route) ONE collect + ONE broadcast.
-    Streaming sinks MUST call this once outside their per-batch closure —
-    re-probing/re-collecting/re-broadcasting a static dim per microbatch
-    runs extra driver jobs every batch and leaks one broadcast per batch
-    (they are never destroyed)."""
-    n_aoi = aoi.limit(broadcast_threshold + 1).count()
-    if n_aoi > broadcast_threshold:
+    """One-time AOI preparation for the fused flagship: ONE bounded
+    collect (spatial.broadcast_aoi with limit=broadcast_threshold: at most
+    threshold + 1 rows) that is both the routing decision and, on the
+    broadcast route, the broadcast payload. Returns ("broadcast", bcast)
+    or ("partitioned", aoi) when the table has more rows than the
+    threshold. Streaming sinks MUST call this once outside their
+    per-batch closure — re-collecting/re-broadcasting a static dim per
+    microbatch runs a driver job every batch and leaks one broadcast per
+    batch (they are never destroyed)."""
+    baoi = spatial.broadcast_aoi(spark, aoi, limit=broadcast_threshold)
+    if baoi is None:
         return ("partitioned", aoi)
-    return ("broadcast", spatial.broadcast_aoi(spark, aoi))
+    return ("broadcast", baoi)
 
 
 def flagship_assigned_prepared(spark: SparkSession, images: DataFrame,
@@ -121,7 +147,7 @@ def flagship_assigned_prepared(spark: SparkSession, images: DataFrame,
         for pdf in batches:
             yield _assign_batch(pdf, a, cell_res)
 
-    return images.mapInPandas(run, schema=_ASSIGNED_SCHEMA)
+    return images.select(*_KERNEL_COLS).mapInPandas(run, schema=_ASSIGNED_SCHEMA)
 
 
 def _assign_batch(pdf: pd.DataFrame, aoi_arrays, cell_res: int) -> pd.DataFrame:
@@ -148,7 +174,9 @@ def _decode_feature_arrays(pdf: pd.DataFrame):
     """Permissive per-image decode+features over one Arrow batch — ONE
     definition for every flagship path: a corrupt payload at 10^12-row
     scale is a certainty; mark it (phash_ham = -1, NaN stats), never kill
-    the task (rows stay joinable/countable downstream)."""
+    the task (rows stay joinable/countable downstream). codec.decode
+    raises ValueError for every malformed container, so only that is
+    caught: any other error is a bug and fails the task."""
     n = len(pdf)
     mean = np.empty(n); std = np.empty(n); ham = np.empty(n, np.int32)
     npx = np.zeros(n, np.int64)
@@ -160,7 +188,7 @@ def _decode_feature_arrays(pdf: pd.DataFrame):
             ham[i] = codec.hamming64(codec.phash64(px), int(hashes[i]))
             f = px.astype(np.float64)
             mean[i] = f.mean(); std[i] = f.std(); npx[i] = f.size
-        except Exception:
+        except ValueError:
             ham[i] = -1
             mean[i] = np.nan; std[i] = np.nan
     return mean, std, ham, npx
@@ -170,19 +198,21 @@ def flagship(spark: SparkSession, images: DataFrame, aoi: DataFrame,
              cell_res: int = 7, broadcast_threshold: int = 10000) -> DataFrame:
     """The headline query: fused assigned rows (flagship_assigned) → zonal
     aggregation. See flagship_assigned for the fusion/routing story."""
-    return _zonal_agg(flagship_assigned(spark, images, aoi, cell_res,
-                                        broadcast_threshold))
+    session.ship_package(spark)
+    prep = prepare_aoi(spark, aoi, broadcast_threshold)
+    return _zonal_agg(flagship_assigned_prepared(spark, images, prep, cell_res),
+                      prep[0])
 
 
 def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
                        cell_res: int = 7, partitions: int | None = None) -> DataFrame:
     """Fully fused flagship from the deterministic generator: ONE Python
     pass per task does synthesize→encode→decode→features→cell→PIP; the only
-    shuffle is the zonal agg, and no image bytes ever cross the JVM↔Python
-    boundary. This is the CPU-bound variant used for scaling-efficiency
-    evidence (the sandbox's virtio disk throttles unpredictably, so a
-    disk-backed scan measures the hypervisor, not the engine — see
-    BENCH/BASELINE.md).
+    shuffles are the zonal agg's two, and no image bytes ever cross the
+    JVM↔Python boundary. This is the CPU-bound variant used for
+    scaling-efficiency evidence (the sandbox's virtio disk throttles
+    unpredictably, so a disk-backed scan measures the hypervisor, not the
+    engine — see BENCH/BASELINE.md).
 
     ``partitions=None`` → data-proportional task sizing: ~2000 images per
     task, floored at 2 waves per core. Measured (BENCH/notes_r3.md): with
@@ -210,7 +240,7 @@ def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
 
     assigned = (spark.range(0, n_images, 1, partitions)
                 .mapInPandas(run, schema=_ASSIGNED_SCHEMA))
-    return _zonal_agg(assigned)
+    return _zonal_agg(assigned, "broadcast")
 
 
 # ------------------------------------------------ incremental flagship ----
@@ -226,16 +256,23 @@ def _assigned_partials(assigned: DataFrame) -> DataFrame:
     which halved the microbatch fixed cost (BENCH/notes_r6.md §5).
     Cardinality per batch is bounded by AOIs × cells-per-AOI, same as
     the old pairs table, never by image count."""
-    ok = lambda c: F.when(~F.isnan(c), F.col(c))
+    ok = lambda c: f"CASE WHEN NOT isnan({c}) THEN {c} END"
     return (assigned.groupBy("aoi_id", "cell")
-            .agg(F.count("*").alias("n_images"),
-                 F.sum(ok("px_mean")).alias("s_mean"),
-                 F.count(ok("px_mean")).alias("k_mean"),
-                 F.sum(ok("px_std")).alias("s_std"),
-                 F.count(ok("px_std")).alias("k_std"),
-                 F.max("phash_ham").alias("max_phash_ham"),
-                 F.sum(F.when(F.col("phash_ham") < 0, 1).otherwise(0))
-                 .alias("n_bad")))
+            .agg(*_sql_aggs(
+                n_images="count(*)",
+                s_mean=f"sum({ok('px_mean')})",
+                k_mean=f"count({ok('px_mean')})",
+                s_std=f"sum({ok('px_std')})",
+                k_std=f"count({ok('px_std')})",
+                max_phash_ham="max(phash_ham)",
+                n_bad="sum(CASE WHEN phash_ham < 0 THEN 1 ELSE 0 END)")))
+
+
+def _sql_aggs(**aggs: str) -> list:
+    """One parsed SQL aggregate per output column: a string costs one
+    driver→JVM call to build, where the equivalent F.when/F.col chain
+    costs one per node (the plan is identical)."""
+    return [F.expr(f"{sql} AS {name}") for name, sql in aggs.items()]
 
 
 def flagship_batch_partials(spark: SparkSession, images: DataFrame,
@@ -314,14 +351,18 @@ def merge_flagship_partials(p: DataFrame) -> DataFrame:
     output schema — THE one definition of the flagship's statistics,
     used by the batch aggregation (_zonal_agg) and the materialized view
     (current_flagship) alike. n_cells = countDistinct(cell) (the same
-    cell recurs across batches; within one batch groups are unique)."""
-    return (p.groupBy("aoi_id")
-            .agg(F.sum("n_images").alias("n_images"),
-                 F.round(F.sum("s_mean") / F.sum("k_mean"), 6).alias("mean_px"),
-                 F.round(F.sum("s_std") / F.sum("k_std"), 6).alias("mean_std"),
-                 F.countDistinct("cell").alias("n_cells"),
-                 F.max("max_phash_ham").alias("max_phash_ham"),
-                 F.sum("n_bad").alias("n_bad"))
-            .select("aoi_id", "n_images", "mean_px", "mean_std", "n_cells",
-                    "max_phash_ham", "n_bad")
-            .orderBy("aoi_id"))
+    cell recurs across batches; within one batch groups are unique).
+    Ordered by aoi_id with a global orderBy: a view's row count is not
+    bounded by any broadcast."""
+    return _by_aoi(_merged_stats(p), "partitioned")
+
+
+def _merged_stats(p: DataFrame) -> DataFrame:
+    """The unordered merge behind merge_flagship_partials and _zonal_agg."""
+    return p.groupBy("aoi_id").agg(*_sql_aggs(
+        n_images="sum(n_images)",
+        mean_px="round(sum(s_mean) / sum(k_mean), 6)",
+        mean_std="round(sum(s_std) / sum(k_std), 6)",
+        n_cells="count(DISTINCT cell)",
+        max_phash_ham="max(max_phash_ham)",
+        n_bad="sum(n_bad)"))

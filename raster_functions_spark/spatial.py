@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -160,13 +161,23 @@ def auto_cover_res_distributed(aoi: DataFrame, max_cells_per_aoi: int = 64) -> i
 
 # ------------------------------------------------------- PIP join API ------
 
-def broadcast_aoi(spark, aoi: DataFrame):
+def broadcast_aoi(spark, aoi: DataFrame, limit: int | None = None):
     """Collect + broadcast the AOI table as dense arrays — built ONCE per
     query (a streaming sink must hoist this out of its per-batch closure:
     re-collecting and re-broadcasting a static dim per microbatch leaks
-    one broadcast per batch)."""
-    aoi_pdf = aoi.select("aoi_id", "ring_x", "ring_y",
-                         "xmin", "ymin", "xmax", "ymax").toPandas()
+    one broadcast per batch).
+
+    ``limit`` makes the collect the routing probe too: it collects at most
+    ``limit + 1`` rows in ONE job and returns None (no broadcast) when more
+    than ``limit`` come back, so a caller routes on the result instead of
+    running a separate count. The driver never holds more than one row
+    beyond what the broadcast route would hold anyway."""
+    cols = aoi.select("aoi_id", "ring_x", "ring_y", "xmin", "ymin", "xmax", "ymax")
+    if limit is not None:
+        cols = cols.limit(limit + 1)
+    aoi_pdf = cols.toPandas()
+    if limit is not None and len(aoi_pdf) > limit:
+        return None
     return spark.sparkContext.broadcast({
         "aoi_id": aoi_pdf["aoi_id"].to_numpy(np.int64),
         "xmin": aoi_pdf["xmin"].to_numpy(np.float64),
@@ -208,19 +219,21 @@ def pip_assign_np(a: dict, x: np.ndarray, y: np.ndarray,
     return ridx, aid
 
 
-def pip_join_broadcast(points: DataFrame, aoi: DataFrame,
+def pip_join_broadcast(points: DataFrame, aoi: DataFrame | Broadcast,
                        x_col: str = "lon", y_col: str = "lat",
                        keep_unmatched: bool = False) -> DataFrame:
     """Point-in-polygon join with a broadcast vector side.
 
-    The whole AOI table is shipped once per executor (Spark broadcast);
+    ``aoi`` is the AOI table or a ``broadcast_aoi`` result (pip_join passes
+    the broadcast its routing collect already built). The whole AOI table
+    is shipped once per executor (Spark broadcast);
     each Arrow batch of points does a vectorized bbox prefilter against ALL
     polygons at once (N×K boolean), then exact crossing-number PIP only on
     bbox hits. Emits one row per (point, containing AOI). No shuffle at all —
     the plan is scan → mapInPandas; at 10^12 rows this is embarrassingly
     parallel."""
-    spark = points.sparkSession
-    baoi = broadcast_aoi(spark, aoi)
+    baoi = (aoi if isinstance(aoi, Broadcast)
+            else broadcast_aoi(points.sparkSession, aoi))
     out_schema = T.StructType(list(points.schema)
                               + [T.StructField("aoi_id", T.LongType(), True)])
 
@@ -334,13 +347,14 @@ def pip_join(points: DataFrame, aoi: DataFrame, x_col: str = "lon",
              **kwargs) -> DataFrame:
     """Route between the broadcast and partitioned PIP strategies by vector
     side size — the broadcast-vs-shuffle decision of SURVEY.md O12. The
-    probe is bounded (limit N+1, not a full count): on a 10^7-polygon
-    table it scans just enough rows to prove 'bigger than the threshold'
-    instead of running a full count job per invocation."""
-    n_aoi = aoi.limit(broadcast_threshold + 1).count()
+    probe is the bounded broadcast collect itself (broadcast_aoi with
+    limit=N: at most N+1 rows, never a full count), so a broadcast join
+    runs ONE driver job before the plan, and a 10^7-polygon table costs
+    just enough rows to prove 'bigger than the threshold'."""
     keep = kwargs.get("keep_unmatched", False)
-    if n_aoi <= broadcast_threshold:
-        return pip_join_broadcast(points, aoi, x_col, y_col,
+    baoi = broadcast_aoi(points.sparkSession, aoi, limit=broadcast_threshold)
+    if baoi is not None:
+        return pip_join_broadcast(points, baoi, x_col, y_col,
                                   keep_unmatched=keep)
     # left-join semantics must survive the routing decision — the
     # partitioned path needs a point key for the global anti-join

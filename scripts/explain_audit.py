@@ -16,6 +16,8 @@ properties the engine is designed around (SURVEY.md §4):
   ``stack.grouped_sorted_map`` (no FlatMapGroupsInPandas)
 - every cosine top-k path scores in one MapInPandas with no candidate
   cross product
+- the broadcast flagship scans only its kernel's columns, shuffles twice
+  (both hash Exchanges) and orders without a range Exchange
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -195,19 +197,21 @@ def main() -> int:
 
     # 12. flagship above the AOI threshold routes to the cell-cover
     # partitioned join: the plan must carry a shuffle equi-join on the
-    # private _cover_cell key and NO broadcast of the vector side (and
-    # therefore no driver-side toPandas of the AOI table — the broadcast
-    # path is the only one that materializes it)
+    # private _cover_cell key and NO broadcast of the vector side. The
+    # routing collect holds at most broadcast_threshold + 1 AOI rows on
+    # the driver (spatial.broadcast_aoi with limit=) and, above the
+    # threshold, builds no broadcast from them
     from raster_functions_spark import fixtures, pipeline
     imgs_small = fixtures.images_df(spark, 50, partitions=2)
     aoi_many = fixtures.aoi_df(spark, 60)
     p = plan_of(pipeline.flagship(spark, imgs_small, aoi_many,
                                   broadcast_threshold=10))
     # "_cover_cell" proves the partitioned implementation was selected
-    # (the broadcast path has no join node at all — the AOI table would
-    # instead be collected to the driver before the plan even builds)
+    # (the broadcast path has no join node at all — its AOI arrays are
+    # a Spark broadcast built from the routing collect)
     ok = "_cover_cell" in p and "BroadcastNestedLoopJoin" not in p
-    checks.append(("flagship >threshold AOIs: partitioned cell join, no driver collect", ok))
+    checks.append(("flagship >threshold AOIs: partitioned cell join, routing collect "
+                   "≤ threshold+1 AOI rows, no broadcast", ok))
     out += ["\n## flagship_partitioned_route\n", p]
 
     # 13. snapshot incremental read touches ONLY the files added after the
@@ -484,6 +488,25 @@ def main() -> int:
                    "no FlatMapGroupsInPandas", ok))
     out += ["\n## sarima_stack_delta / export_shards / flow_accumulation_distributed\n",
             *plans]
+
+    # 32. the broadcast flagship over a stored image table: the scan reads
+    # only the six columns the fused kernel uses, the zonal aggregation
+    # shuffles on (aoi_id, cell) and on aoi_id, and the ≤ threshold result
+    # rows are ordered in one partition (no rangepartitioning Exchange
+    # and so no sample job)
+    with tempfile.TemporaryDirectory() as td:
+        fixtures.images_df(spark, 50, partitions=2).write.parquet(td + "/img")
+        p = plan_of(pipeline.flagship(spark, spark.read.parquet(td + "/img"),
+                                      fixtures.aoi_df(spark, 20)))
+    read = _re.findall(r"ReadSchema: struct<(.*)>", p)
+    ok = (len(_re.findall(r"Arguments: hashpartitioning\(", p)) == 2
+          and "rangepartitioning" not in p
+          and len(read) == 1
+          and sorted(f.split(":")[0] for f in read[0].split(","))
+          == sorted(pipeline._KERNEL_COLS))
+    checks.append(("broadcast flagship: 6-column scan, two hash Exchanges, "
+                   "no range Exchange", ok))
+    out += ["\n## flagship_broadcast_route\n", p]
 
     out.append("\n# Assertions\n")
     failed = 0

@@ -16,6 +16,24 @@ def spark():
 
 
 @pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)`` → ``(fn(), number of Spark jobs fn started)``,
+    counted under a job group of its own with the listener bus drained."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-run-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
+@pytest.fixture
 def tied_corpus():
     """Ten identical vectors (ids 100–109, exact score ties straddling any
     small k) plus one far vector (id 200), and the tied vector as the one

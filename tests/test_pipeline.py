@@ -2,10 +2,11 @@ import inspect
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from raster_functions_spark import fixtures, lineage, pipeline
+from raster_functions_spark import codec, fixtures, lineage, pipeline, spatial
 
 
 def test_decode_features_fidelity(spark):
@@ -192,3 +193,106 @@ def test_incremental_flagship_matches_batch(spark, tmp_path):
     live2 = {r["aoi_id"]: r["n_images"]
              for r in pipeline.current_flagship(spark, vp).collect()}
     assert live2 == {a: full[a]["n_images"] for a in full}
+
+
+def test_broadcast_flagship_runs_at_most_four_jobs(spark, jobs_run):
+    """One pass of the broadcast route: the bounded AOI collect, the
+    kernel stage, the merge stage and the one-partition ordered tail —
+    no separate routing count, no range-partition sample."""
+    images = fixtures.images_df(spark, 300)
+    aoi = fixtures.aoi_df(spark, 20)
+    for _ in range(2):
+        rows, n_jobs = jobs_run(
+            lambda: pipeline.flagship(spark, images, aoi).collect())
+        assert rows and 1 <= n_jobs <= 4, n_jobs
+
+
+def test_flagship_routes_agree_in_rows_and_order(spark):
+    images = fixtures.images_df(spark, 600)
+    aoi = fixtures.aoi_df(spark, 60)
+    bcast = pipeline.flagship(spark, images, aoi).collect()
+    part = pipeline.flagship(spark, images, aoi, broadcast_threshold=10).collect()
+    ids = [r.aoi_id for r in bcast]
+    assert len(ids) > 1 and ids == sorted(ids)
+    assert [r.aoi_id for r in part] == ids
+    for b, p in zip(bcast, part):
+        for col in ("n_images", "n_cells", "max_phash_ham", "n_bad"):
+            assert b[col] == p[col], (b.aoi_id, col)
+        for col in ("mean_px", "mean_std"):
+            assert b[col] == pytest.approx(p[col], abs=1e-6), (b.aoi_id, col)
+
+
+def test_broadcast_aoi_limit_bounds_the_collect(spark):
+    aoi = fixtures.aoi_df(spark, 12)
+    for k in (0, 11):
+        assert spatial.broadcast_aoi(spark, aoi, limit=k) is None
+    full = spatial.broadcast_aoi(spark, aoi)
+    want = full.value
+    for k in (12, 13):
+        b = spatial.broadcast_aoi(spark, aoi, limit=k)
+        got = b.value
+        assert set(got) == set(want)
+        for key in ("aoi_id", "xmin", "ymin", "xmax", "ymax"):
+            assert np.array_equal(got[key], want[key]), key
+        assert len(got["rings"]) == len(want["rings"]) == 12
+        for (gx, gy), (wx, wy) in zip(got["rings"], want["rings"]):
+            assert np.array_equal(gx, wx) and np.array_equal(gy, wy)
+        b.unpersist()
+    full.unpersist()
+
+
+def _malformed_containers():
+    px = (np.arange(3 * 40 * 40) % 251).astype(np.uint8).reshape(3, 40, 40)
+    enc = {f: codec.encode(px, f) for f in ("raw", "rle", "zlib", "dct")}
+
+    def header(fmt=0, dtype=0, bands=1, h=8, w=8):
+        return codec._HDR.pack(codec.MAGIC, codec.VERSION, fmt, dtype,
+                               bands, h, w, 0)
+    return {
+        "garbage_8_bytes": b"\x00garbage",
+        "empty": b"",
+        "bad_magic": b"XX" + enc["raw"][2:],
+        "bad_fmt_code": header(fmt=9) + bytes(64),
+        "bad_dtype_code": header(dtype=9) + bytes(64),
+        "zero_dims": header(h=0) + bytes(64),
+        "truncated_raw": enc["raw"][:100],
+        "truncated_zlib": enc["zlib"][:60],
+        "truncated_rle": enc["rle"][:len(enc["rle"]) // 2],
+        "truncated_dct": enc["dct"][:60],
+        "huge_dims": header(bands=255, h=2**32 - 1, w=2**32 - 1) + bytes(64),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_malformed_containers()))
+def test_malformed_container_is_marked_bad(case):
+    """codec.decode raises ValueError for every malformed container, and
+    the flagship kernel (which catches only ValueError) marks the row:
+    phash_ham = -1, NaN stats. A good row in the same batch decodes."""
+    bad = _malformed_containers()[case]
+    with pytest.raises(ValueError):
+        codec.decode(bad)
+    good = fixtures.images_pdf(np.arange(1))
+    pdf = pd.DataFrame({"bytes": [bad, good["bytes"][0]],
+                        "phash": [0, good["phash"][0]]})
+    mean, std, ham, npx = pipeline._decode_feature_arrays(pdf)
+    assert ham[0] == -1 and np.isnan(mean[0]) and np.isnan(std[0])
+    assert npx[0] == 0
+    assert ham[1] >= 0 and np.isfinite(mean[1]) and npx[1] > 0
+
+
+@pytest.mark.parametrize("case", ["garbage_8_bytes", "empty", "bad_magic",
+                                  "bad_fmt_code", "bad_dtype_code"])
+def test_peek_header_rejects_malformed_header(case):
+    with pytest.raises(ValueError):
+        codec.peek_header(_malformed_containers()[case])
+
+
+def test_decode_feature_arrays_propagates_other_errors(monkeypatch):
+    """Only a malformed container is tolerated: any other error inside
+    the per-image loop is a bug and must fail the task."""
+    def broken(_):
+        raise TypeError("not a container problem")
+    monkeypatch.setattr(codec, "decode", broken)
+    pdf = fixtures.images_pdf(np.arange(2))
+    with pytest.raises(TypeError, match="not a container problem"):
+        pipeline._decode_feature_arrays(pdf)

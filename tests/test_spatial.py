@@ -71,6 +71,20 @@ def test_pip_join_broadcast_matches_oracle(spark):
     assert got  # non-trivial
 
 
+def test_pip_join_routes_on_one_bounded_collect(spark, jobs_run):
+    """A broadcast pip_join runs ONE driver job while it is built (the
+    bounded AOI collect that both routes and feeds the broadcast) and
+    returns the rows of pip_join_broadcast, in the same order."""
+    df, _ = _points_df(spark)
+    aoi = fixtures.aoi_df(spark, 20)
+    for keep in (False, True):
+        joined, n_jobs = jobs_run(
+            lambda: spatial.pip_join(df, aoi, keep_unmatched=keep))
+        assert n_jobs == 1, (keep, n_jobs)
+        want = spatial.pip_join_broadcast(df, aoi, keep_unmatched=keep)
+        assert joined.collect() == want.collect()
+
+
 def test_pip_join_partitioned_matches_broadcast(spark):
     df, pdf = _points_df(spark)
     aoi = fixtures.aoi_df(spark, 20)
