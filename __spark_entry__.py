@@ -2467,7 +2467,7 @@ def q_m5_sarima_d2(spark, sf_dir):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship on sf0.001: image count seeded from the documents table,
-    full decode→cell→PIP→zonal pipeline."""
+    full PIP→cell→decode→zonal pipeline."""
     from raster_functions_spark import fixtures, pipeline
     _ensure_shipped(spark)
     sf_dir = "/root/testdata/sf0.001"

@@ -116,7 +116,7 @@ def run_default() -> None:
     total = round(sum(qtimes.values()), 3)
     spark.stop()
     print(json.dumps({
-        "metric": "headline suite wall time (img_flagship = decode→cell→PIP→zonal "
+        "metric": "headline suite wall time (img_flagship = PIP→cell→decode→zonal "
                   f"over {N_BENCH_IMAGES} images @ {images_per_sec} images/sec)",
         "value": total, "unit": "sec",
         "queries": qtimes, "sf": float(sf),

@@ -1,11 +1,16 @@
 """The flagship end-to-end pipeline (BASELINE.json metric):
 
-    decode → cell-encode → point-in-polygon join → tile assign → zonal stats
+    point-in-polygon join → cell-encode → decode → zonal stats
 
-One fused mapInPandas pass decodes each image ONCE and emits scalar
-features + fidelity checks (caption passthrough is structural: the column
-is never touched). Cell-encode is a pure Column expression (codegen). The
-PIP join picks broadcast vs partitioned by vector-side size; the routing
+On the broadcast route one fused mapInPandas pass joins before it
+decodes: the PIP kernel assigns each Arrow batch's lon/lat to AOIs first,
+then only the distinct assigned images are cell-encoded, decoded and
+summarized (scalar features + fidelity checks), once each however many
+AOIs hold them; an image outside every AOI is never decoded. Caption
+passthrough is structural: the column is never touched. The partitioned
+route (decode_features) still decodes every image, then cell-encodes with
+a Column expression (codegen) before its cover join. The PIP join picks
+broadcast vs partitioned by vector-side size; the routing
 probe IS the bounded AOI collect (spatial.broadcast_aoi with limit=), one
 driver job. Zonal stats are a plain hash aggregation: one Exchange on
 (aoi_id, cell) for the decomposable partials and one on aoi_id for the
@@ -89,12 +94,13 @@ def _by_aoi(stats: DataFrame, route: str) -> DataFrame:
 def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
                       cell_res: int = 7,
                       broadcast_threshold: int = 10000) -> DataFrame:
-    """decode → cell-encode → PIP join with ONE fused Python
-    pass (SURVEY.md O11): decode, features, vectorized cell-encode, bbox
-    prefilter and exact PIP all happen on each Arrow batch in a single
-    worker, over a scan pruned to the six columns the kernel reads; the
-    assigned rows need no shuffle at all (the zonal aggregation that
-    follows in flagship is the first).
+    """PIP join → cell-encode → decode with ONE fused Python pass
+    (SURVEY.md O11): bbox prefilter and exact PIP, then vectorized
+    cell-encode, decode and features for the assigned images only
+    (_assign_batch), all on each Arrow batch in a single worker, over a
+    scan pruned to the six columns the kernel reads; the assigned rows
+    need no shuffle at all (the zonal aggregation that follows in flagship
+    is the first).
 
     At N tasks this runs exactly N Python workers (separate decode / join
     / agg stages would run 3N — a 3× oversubscription that inverts
@@ -151,22 +157,27 @@ def flagship_assigned_prepared(spark: SparkSession, images: DataFrame,
 
 
 def _assign_batch(pdf: pd.DataFrame, aoi_arrays, cell_res: int) -> pd.DataFrame:
-    """The fused per-batch body of every broadcast flagship path: decode +
-    features (_decode_feature_arrays), vectorized cell-encode and the
-    shared broadcast-PIP kernel (spatial.pip_assign_np: AOI-chunked bbox
-    prefilter + exact crossing-number refine) → _ASSIGNED_SCHEMA rows."""
+    """The fused per-batch body of every broadcast flagship path, join
+    before decode: the shared broadcast-PIP kernel (spatial.pip_assign_np:
+    AOI-chunked bbox prefilter + exact crossing-number refine) runs first
+    on lon/lat, then cell-encode and decode + features
+    (_decode_feature_arrays) run on the distinct assigned images only and
+    are gathered back to the match rows → _ASSIGNED_SCHEMA rows. An image
+    outside every AOI is never decoded; one inside k overlapping AOIs is
+    decoded once, not k times."""
     x = pdf["lon"].to_numpy(np.float64)
     y = pdf["lat"].to_numpy(np.float64)
-    cells = grid.encode_np(x, y, cell_res)
-    mean, std, ham, _npx = _decode_feature_arrays(pdf)
     ridx, aid = spatial.pip_assign_np(aoi_arrays, x, y)
+    rows, inv = np.unique(ridx, return_inverse=True)
+    cells = grid.encode_np(x[rows], y[rows], cell_res)
+    mean, std, ham, _npx = _decode_feature_arrays(pdf.iloc[rows])
     return pd.DataFrame({
         "aoi_id": aid,
         "image_id": pdf["image_id"].to_numpy()[ridx],
         "caption": pdf["caption"].to_numpy()[ridx],
-        "cell": cells[ridx],
-        "px_mean": mean[ridx], "px_std": std[ridx],
-        "phash_ham": ham[ridx],
+        "cell": cells[inv],
+        "px_mean": mean[inv], "px_std": std[inv],
+        "phash_ham": ham[inv],
     })
 
 
@@ -207,12 +218,13 @@ def flagship(spark: SparkSession, images: DataFrame, aoi: DataFrame,
 def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
                        cell_res: int = 7, partitions: int | None = None) -> DataFrame:
     """Fully fused flagship from the deterministic generator: ONE Python
-    pass per task does synthesize→encode→decode→features→cell→PIP; the only
-    shuffles are the zonal agg's two, and no image bytes ever cross the
-    JVM↔Python boundary. This is the CPU-bound variant used for
-    scaling-efficiency evidence (the sandbox's virtio disk throttles
-    unpredictably, so a disk-backed scan measures the hypervisor, not the
-    engine — see BENCH/BASELINE.md).
+    pass per task does synthesize→encode→PIP→cell→decode→features; every
+    image is synthesized and encoded, but only the ones the PIP assigns
+    are decoded (_assign_batch). The only shuffles are the zonal agg's
+    two, and no image bytes ever cross the JVM↔Python boundary. This is
+    the CPU-bound variant used for scaling-efficiency evidence (the
+    sandbox's virtio disk throttles unpredictably, so a disk-backed scan
+    measures the hypervisor, not the engine — see BENCH/BASELINE.md).
 
     ``partitions=None`` → data-proportional task sizing: ~2000 images per
     task, floored at 2 waves per core. Measured (BENCH/notes_r3.md): with
@@ -231,9 +243,10 @@ def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
     def run(batches):
         a = baoi.value
         for idx_pdf in batches:
-            # zlib_level=3: the encoded bytes are decoded by _assign_batch
-            # and never leave this task — level 3 is ~1.8× faster to
-            # compress and slightly smaller on this data (codec.encode)
+            # zlib_level=3: _assign_batch decodes the assigned images'
+            # bytes and none of them leave this task — level 3 is ~1.8×
+            # faster to compress and slightly smaller on this data
+            # (codec.encode)
             yield _assign_batch(
                 fixtures.images_pdf(idx_pdf["id"].to_numpy(), zlib_level=3),
                 a, cell_res)
@@ -293,7 +306,8 @@ def start_flagship_incremental(stream_images: DataFrame, aoi: DataFrame,
                                query_name: str = "flagship-incremental",
                                run_prefix: str = "batch"):
     """The flagship zonal query as a continuously-updatable materialized
-    view: each image microbatch runs decode→cell→PIP once, reduces to
+    view: each image microbatch runs PIP→cell→decode once (the
+    broadcast kernel decodes only the images its PIP assigns), reduces to
     the per-(aoi, cell) decomposable partials (_assigned_partials — ONE
     aggregation; n_cells is the group key, so no second dataset), and
     commits ONE snapshot with run_id=<run_prefix>-<id> — a retried batch

@@ -178,7 +178,13 @@ def broadcast_aoi(spark, aoi: DataFrame, limit: int | None = None):
     aoi_pdf = cols.toPandas()
     if limit is not None and len(aoi_pdf) > limit:
         return None
-    return spark.sparkContext.broadcast({
+    return spark.sparkContext.broadcast(aoi_arrays(aoi_pdf))
+
+
+def aoi_arrays(aoi_pdf: pd.DataFrame) -> dict:
+    """The dense-array form of an AOI table that pip_assign_np reads (the
+    broadcast_aoi payload)."""
+    return {
         "aoi_id": aoi_pdf["aoi_id"].to_numpy(np.int64),
         "xmin": aoi_pdf["xmin"].to_numpy(np.float64),
         "ymin": aoi_pdf["ymin"].to_numpy(np.float64),
@@ -186,7 +192,7 @@ def broadcast_aoi(spark, aoi: DataFrame, limit: int | None = None):
         "ymax": aoi_pdf["ymax"].to_numpy(np.float64),
         "rings": [(np.asarray(rx, np.float64), np.asarray(ry, np.float64))
                   for rx, ry in zip(aoi_pdf["ring_x"], aoi_pdf["ring_y"])],
-    })
+    }
 
 
 def pip_assign_np(a: dict, x: np.ndarray, y: np.ndarray,

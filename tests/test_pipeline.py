@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from raster_functions_spark import codec, fixtures, lineage, pipeline, spatial
+from raster_functions_spark import codec, fixtures, grid, lineage, pipeline, spatial
 
 
 def test_decode_features_fidelity(spark):
@@ -296,3 +296,114 @@ def test_decode_feature_arrays_propagates_other_errors(monkeypatch):
     pdf = fixtures.images_pdf(np.arange(2))
     with pytest.raises(TypeError, match="not a container problem"):
         pipeline._decode_feature_arrays(pdf)
+
+
+# ------------------------------------------ join before decode (kernel) ----
+
+def _assign_batch_decode_all(pdf, aoi_arrays, cell_res):
+    """The decode-every-image kernel body (features for every row, PIP
+    last): the reference the join-before-decode body must equal."""
+    x = pdf["lon"].to_numpy(np.float64)
+    y = pdf["lat"].to_numpy(np.float64)
+    cells = grid.encode_np(x, y, cell_res)
+    mean, std, ham, _npx = pipeline._decode_feature_arrays(pdf)
+    ridx, aid = spatial.pip_assign_np(aoi_arrays, x, y)
+    return pd.DataFrame({
+        "aoi_id": aid,
+        "image_id": pdf["image_id"].to_numpy()[ridx],
+        "caption": pdf["caption"].to_numpy()[ridx],
+        "cell": cells[ridx],
+        "px_mean": mean[ridx], "px_std": std[ridx],
+        "phash_ham": ham[ridx],
+    })
+
+
+@pytest.fixture
+def decode_calls(monkeypatch):
+    """Counts codec.decode calls (the kernel resolves it per call)."""
+    calls = []
+    real = codec.decode
+
+    def counting(buf):
+        calls.append(buf)
+        return real(buf)
+    monkeypatch.setattr(codec, "decode", counting)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def kernel_batch():
+    """750 fixture images × 200 AOIs: ~160 distinct assigned images, some
+    in two overlapping AOIs; 12 corrupt payloads inside an AOI and 12
+    outside every AOI."""
+    pdf = fixtures.images_pdf(np.arange(750))
+    aoi = spatial.aoi_arrays(fixtures.aoi_pdf(200))
+    ridx, _ = spatial.pip_assign_np(aoi, pdf["lon"].to_numpy(np.float64),
+                                    pdf["lat"].to_numpy(np.float64))
+    inside = np.unique(ridx)
+    outside = np.setdiff1d(np.arange(len(pdf)), inside)
+    bad_in = inside[::len(inside) // 12][:12]
+    bad_out = outside[::len(outside) // 12][:12]
+    for i in np.concatenate([bad_in, bad_out]):
+        pdf.at[i, "bytes"] = b"\x00garbage-%d" % i
+    return pdf, aoi, ridx, bad_in, outside
+
+
+def test_assign_batch_decodes_only_assigned_images(kernel_batch, decode_calls):
+    pdf, aoi, ridx, _, _ = kernel_batch
+    assigned = np.unique(ridx)
+    assert 0 < assigned.size < len(ridx) < len(pdf)   # overlaps exist
+    pipeline._assign_batch(pdf, aoi, 7)
+    assert sorted(decode_calls) == sorted(pdf["bytes"].iloc[assigned])
+
+
+def test_assign_batch_decodes_overlapping_image_once(kernel_batch,
+                                                     decode_calls):
+    pdf, aoi, ridx, _, _ = kernel_batch
+    ids, counts = np.unique(ridx, return_counts=True)
+    multi = pdf.iloc[ids[counts > 1]]      # each image in ≥ 2 AOIs
+    assert len(multi) > 0
+    out = pipeline._assign_batch(multi, aoi, 7)
+    assert len(out) == counts[counts > 1].sum()
+    assert len(decode_calls) == len(multi)
+    feats = ["cell", "px_mean", "px_std", "phash_ham"]
+    for _, rows in out.groupby("image_id"):
+        assert len(rows) > 1 and rows.aoi_id.is_unique
+        got = rows[feats].reset_index(drop=True)
+        pd.testing.assert_frame_equal(
+            got, got.iloc[[0] * len(got)].reset_index(drop=True),
+            check_exact=True)
+
+
+def test_assign_batch_equals_decode_every_image(kernel_batch):
+    pdf, aoi, _, bad_in, _ = kernel_batch
+    got = pipeline._assign_batch(pdf, aoi, 7)
+    assert set(got.image_id[got.phash_ham == -1]) == set(pdf["image_id"].iloc[bad_in])
+    pd.testing.assert_frame_equal(got, _assign_batch_decode_all(pdf, aoi, 7),
+                                  check_exact=True)
+
+
+def test_assign_batch_without_assignment_decodes_nothing(kernel_batch,
+                                                         decode_calls):
+    pdf, aoi, _, _, outside = kernel_batch
+    far = pdf.iloc[outside]     # holds the 12 corrupt payloads outside
+    got = pipeline._assign_batch(far, aoi, 7)
+    assert decode_calls == []
+    cols = [c.split()[0] for c in pipeline._ASSIGNED_SCHEMA.split(", ")]
+    assert list(got.columns) == cols and len(got) == 0
+    pd.testing.assert_frame_equal(got, _assign_batch_decode_all(far, aoi, 7),
+                                  check_exact=True)
+
+
+def test_flagship_from_seed_matches_stored_table_route(spark):
+    n = 1200
+    aoi = fixtures.aoi_df(spark, 60)
+    seed = pipeline.flagship_from_seed(spark, n, aoi).collect()
+    table = pipeline.flagship(spark, fixtures.images_df(spark, n), aoi).collect()
+    ids = [r.aoi_id for r in table]
+    assert len(ids) > 1 and [r.aoi_id for r in seed] == ids
+    for s, t in zip(seed, table):
+        for col in ("n_images", "n_cells", "max_phash_ham", "n_bad"):
+            assert s[col] == t[col], (t.aoi_id, col)
+        for col in ("mean_px", "mean_std"):
+            assert s[col] == pytest.approx(t[col], abs=1e-6), (t.aoi_id, col)
