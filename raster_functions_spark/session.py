@@ -8,15 +8,28 @@ thread per task so NumPy kernels inside Arrow batches don't oversubscribe
 cores (the reference pins BLAS threads the same way:
 /root/reference/functions/LandsatMedianImage.py:4-9).
 
-Per-task Python worker cost: PySpark starts every Python task with
-``importlib.invalidate_caches()``, which on Python >= 3.10 makes each zip
-importer re-read its archive's central directory (``pyspark.zip`` once per
-imported sub-package, plus the shipped package zip) — ~225 ms of CPU per
-task in a warm worker, more than a small tile task's own work. The package
-``__init__`` installs ``_worker``'s stat-keyed hook inside workers so an
-unchanged archive is not re-read. Its counterpart here: ``ship_package``
-writes the package zip once per content hash and adds each file once per
-SparkContext, so an archive that workers import from never changes.
+Per-task Python worker cost: two fixed costs fall between tasks in a
+reused worker, and the package ``__init__`` installs ``_worker``'s hooks
+inside workers to cut both.
+
+- PySpark starts every Python task with ``importlib.invalidate_caches()``,
+  which on Python >= 3.10 makes each zip importer re-read its archive's
+  central directory (``pyspark.zip`` once per imported sub-package, plus
+  the shipped package zip) — ~225 ms of CPU per task in a warm worker,
+  more than a small tile task's own work. The stat-keyed hook skips an
+  unchanged archive. Its counterpart here: ``ship_package`` writes the
+  package zip once per content hash and adds each file once per
+  SparkContext, so an archive that workers import from never changes.
+- PySpark's daemon runs a full ``gc.collect()`` after every task in a
+  reused worker, and each one walks the ~73,000 objects tracked since
+  import (20-35 ms of CPU). A reused worker freezes its import-time heap
+  once (``gc.freeze()``), so later collections walk only newer objects. A
+  worker that is not reused runs one task and freezes nothing. Reference
+  counting still frees frozen objects: only reference cycles among the
+  objects alive at the freeze are never collected.
+
+The driver's JVM heap defaults to about half of physical memory, capped
+at 48g (``default_driver_memory``); ``SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -32,6 +45,18 @@ from pyspark.sql import SparkSession
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
     os.environ.setdefault(_v, "1")
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` default: about half of ``phys_bytes`` (the
+    host's physical memory when None), in MiB, capped at 48g. A larger
+    heap than the host holds gets the JVM killed instead of collected."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (AttributeError, ValueError, OSError):     # no sysconf names
+            return "48g"
+    return f"{min(phys_bytes // 2, 48 << 30) >> 20}m"
 
 
 def get_spark(app_name: str = "raster_functions_spark",
@@ -64,7 +89,7 @@ def get_spark(app_name: str = "raster_functions_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

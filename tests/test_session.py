@@ -1,6 +1,8 @@
-"""Session set-up: shipping the package to workers, and the worker-side
-zip import hook (``raster_functions_spark._worker``)."""
+"""Session set-up: shipping the package to workers, the driver heap
+default, and the worker-side hooks (``raster_functions_spark._worker``):
+the zip import hook and the import-time heap freeze."""
 
+import gc
 import os
 import subprocess
 import sys
@@ -11,7 +13,7 @@ import pandas as pd
 import pytest
 
 from raster_functions_spark import _worker, grid
-from raster_functions_spark.session import package_zip, ship_package
+from raster_functions_spark.session import default_driver_memory, package_zip, ship_package
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -108,7 +110,9 @@ def test_hook_active_in_workers_results_unchanged(spark):
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat})).repartition(n_tasks)
 
     def run(batches):
+        import gc as _gc
         import os as _os
+        from pyspark import TaskContext
         from raster_functions_spark import _worker as w
         from raster_functions_spark import grid as g
         for pdf in batches:
@@ -116,20 +120,84 @@ def test_hook_active_in_workers_results_unchanged(spark):
                 "lon": pdf["lon"], "lat": pdf["lat"],
                 "cell": g.encode_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 9),
                 "active": w.active(), "pid": _os.getpid(),
-                "keyed_archives": len(w._read_keys)})
+                "keyed_archives": len(w._read_keys),
+                "frozen": _gc.get_freeze_count(), "tracked": len(_gc.get_objects()),
+                "task": TaskContext.get().taskAttemptId()})
 
     out = df.mapInPandas(run, "lon double, lat double, cell long, active boolean, "
-                              "pid long, keyed_archives long").toPandas()
+                              "pid long, keyed_archives long, frozen long, "
+                              "tracked long, task long").toPandas()
     assert len(out) == len(lon)
     assert out["active"].all()
     # reused workers ran several tasks, and from a worker's second task on
     # its zip importers went through the stat-keyed path
     assert out["pid"].nunique() < n_tasks
     assert (out["keyed_archives"] > 0).any()
+    # every reused worker froze its import-time heap; a worker runs its
+    # tasks one after another, so per pid the tasks after the smallest id
+    # are its later ones, and only objects made since the freeze are left
+    # for the collector (~73,000 without it)
+    assert (out["frozen"] > 0).all()
+    later = out[out["task"] > out.groupby("pid")["task"].transform("min")]
+    assert len(later) > 0
+    assert (later["tracked"] < 20_000).all(), later["tracked"].max()
     out = out.sort_values(["lon", "lat"]).reset_index(drop=True)
     expect = grid.encode_np(out["lon"].to_numpy(), out["lat"].to_numpy(), 9)
     assert (out["cell"].to_numpy() == expect).all()
-    assert not _worker.active()            # the driver's imports are untouched
+    # the driver's imports and heap are untouched
+    assert not _worker.active()
+    assert gc.get_freeze_count() == 0
+
+
+# Runs in a fresh interpreter, outside any Spark worker. Prints the freeze
+# count after the package import and around two install() calls.
+_FREEZE_SCRIPT = textwrap.dedent("""
+    import gc, sys
+    sys.path.insert(0, {repo!r})
+    from raster_functions_spark import _worker
+    print("after_import", gc.get_freeze_count())
+    _worker.install()
+    first = gc.get_freeze_count()
+    made_after = [[i] for i in range(1000)]    # would be frozen by a 2nd freeze
+    _worker.install()
+    print("installs", first, gc.get_freeze_count())
+""").format(repo=REPO)
+
+
+def _run_freeze_script(tmp_path, reuse):
+    script = tmp_path / "freeze_check.py"
+    script.write_text(_FREEZE_SCRIPT)
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+    if reuse:
+        env["SPARK_REUSE_WORKER"] = "1"
+    res = subprocess.run([sys.executable, str(script)], capture_output=True, text=True,
+                         timeout=120, cwd=tmp_path, env=env)
+    assert res.returncode == 0, res.stderr
+    return dict(line.split(" ", 1) for line in res.stdout.splitlines())
+
+
+def test_install_freezes_once_in_a_reused_worker_only(tmp_path):
+    out = _run_freeze_script(tmp_path, reuse=True)
+    # importing the package outside a Spark worker freezes nothing
+    assert out["after_import"] == "0"
+    first, second = map(int, out["installs"].split())
+    assert first > 0
+    assert second == first
+
+
+def test_no_freeze_without_worker_reuse(tmp_path):
+    out = _run_freeze_script(tmp_path, reuse=False)
+    assert out["after_import"] == "0"
+    assert out["installs"] == "0 0"
+
+
+def test_default_driver_memory_is_half_the_host_capped():
+    assert default_driver_memory(16 << 30) == "8192m"
+    assert default_driver_memory(15_700_000_000) == "7486m"
+    assert default_driver_memory(96 << 30) == "49152m"
+    assert default_driver_memory(1 << 40) == "49152m"
+    host = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert default_driver_memory() == default_driver_memory(host)
 
 
 def test_ship_package_adds_each_file_once(spark):
