@@ -182,7 +182,8 @@ def images_pdf(indices: np.ndarray, zlib_level: int = 6) -> pd.DataFrame:
             "bands": meta["bands"], "dtype": meta["dtype"],
             "nodata": meta["nodata"],
         })
-    return pd.DataFrame(rows)
+    # keeps the columns when ``indices`` is empty
+    return pd.DataFrame(rows, columns=IMAGES_SCHEMA.fieldNames())
 
 
 def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:

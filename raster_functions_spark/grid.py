@@ -196,16 +196,25 @@ def _spread_col(c: Column) -> Column:
     return c
 
 
+def lonlat_to_ij_col(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """Column form of :func:`lonlat_to_ij`, same arithmetic in the same order."""
+    n = 1 << res
+    i, j = (F.least(F.greatest(F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n))),
+                               F.lit(0)), F.lit(n - 1)).cast("long")
+            for v, off, span in ((lon, 180.0, 360.0), (lat, 90.0, 180.0)))
+    return i, j
+
+
+def ij_to_cell_col(i: Column, j: Column, res: int) -> Column:
+    """Column form of :func:`ij_to_cell` (long Columns in, cell id out)."""
+    morton = _spread_col(i).bitwiseOR(F.shiftleft(_spread_col(j), 1))
+    return F.shiftleft(morton, RES_BITS).bitwiseOR(F.lit(res))
+
+
 def encode_col(lon: Column, lat: Column, res: int) -> Column:
     """Cell id as a pure Column expression — stays inside whole-stage
     codegen; this is how a 10^12-row cell-encode should run (no Python)."""
-    n = 1 << res
-    i = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))),
-                           F.lit(0)), F.lit(n - 1)).cast("long")
-    j = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))),
-                           F.lit(0)), F.lit(n - 1)).cast("long")
-    morton = _spread_col(i).bitwiseOR(F.shiftleft(_spread_col(j), 1))
-    return F.shiftleft(morton, RES_BITS).bitwiseOR(F.lit(res)).alias("cell")
+    return ij_to_cell_col(*lonlat_to_ij_col(lon, lat, res), res).alias("cell")
 
 
 def parent_col(cell: Column, cell_resolution: int, parent_res: int) -> Column:

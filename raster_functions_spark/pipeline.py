@@ -3,20 +3,21 @@
     point-in-polygon join → cell-encode → decode → zonal stats
 
 On the broadcast route one fused mapInPandas pass joins before it
-decodes: the PIP kernel assigns each Arrow batch's lon/lat to AOIs first,
-then only the distinct assigned images are cell-encoded, decoded and
-summarized (scalar features + fidelity checks), once each however many
-AOIs hold them; an image outside every AOI is never decoded. Caption
-passthrough is structural: the column is never touched. The partitioned
-route (decode_features) still decodes every image, then cell-encodes with
-a Column expression (codegen) before its cover join. The PIP join picks
-broadcast vs partitioned by vector-side size; the routing
-probe IS the bounded AOI collect (spatial.broadcast_aoi with limit=), one
-driver job. Zonal stats are a plain hash aggregation: one Exchange on
-(aoi_id, cell) for the decomposable partials and one on aoi_id for the
-merge. The broadcast route returns at most ``broadcast_threshold`` rows,
-so it orders them in one partition (coalesce(1) + sortWithinPartitions:
-no range-partition sample job, no range Exchange); the partitioned route
+decodes: the PIP kernel assigns each Arrow batch's lon/lat to AOIs
+first, then only the distinct assigned images are cell-encoded, decoded
+and summarized (scalar features + fidelity checks), once each however
+many AOIs hold them; an image outside every AOI is never decoded.
+Caption passthrough is structural: the column is never touched. The
+partitioned route runs two Python passes: decode_features (every image;
+the cell is a codegen Column), then spatial.pip_join_partitioned's
+exact-PIP refine after its JVM-built cover and ring joins. The PIP join
+picks broadcast vs partitioned by vector-side size; the routing probe IS
+the bounded AOI collect (spatial.broadcast_aoi with limit=), one driver
+job. Zonal stats are a plain hash aggregation: one Exchange on (aoi_id,
+cell) for the decomposable partials and one on aoi_id for the merge. The
+broadcast route returns at most ``broadcast_threshold`` rows, so it
+orders them in one partition (coalesce(1) + sortWithinPartitions: no
+range-partition sample job, no range Exchange); the partitioned route
 keeps a global orderBy. A broadcast pass is 4 Spark jobs: the AOI
 collect, the kernel stage, the merge stage and the ordered tail.
 """
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import codec, grid, session, spatial
+from . import codec, fixtures, grid, session, spatial
 
 # the image columns _assign_batch reads: the broadcast kernel scans only
 # these (decode_features, the partitioned route's kernel, adds fmt)
@@ -218,13 +219,14 @@ def flagship(spark: SparkSession, images: DataFrame, aoi: DataFrame,
 def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
                        cell_res: int = 7, partitions: int | None = None) -> DataFrame:
     """Fully fused flagship from the deterministic generator: ONE Python
-    pass per task does synthesize→encode→PIP→cell→decode→features; every
-    image is synthesized and encoded, but only the ones the PIP assigns
-    are decoded (_assign_batch). The only shuffles are the zonal agg's
-    two, and no image bytes ever cross the JVM↔Python boundary. This is
-    the CPU-bound variant used for scaling-efficiency evidence (the
-    sandbox's virtio disk throttles unpredictably, so a disk-backed scan
-    measures the hypervisor, not the engine — see BENCH/BASELINE.md).
+    pass per task does PIP→synthesize→encode→cell→decode→features
+    (_seed_batch): the PIP runs on the closed-form tile positions first, so
+    only the images it assigns are ever synthesized. The only shuffles are
+    the zonal agg's two, and no image bytes ever cross the JVM↔Python
+    boundary. This is the CPU-bound variant used for scaling-efficiency
+    evidence (the sandbox's virtio disk throttles unpredictably, so a
+    disk-backed scan measures the hypervisor, not the engine — see
+    BENCH/BASELINE.md).
 
     ``partitions=None`` → data-proportional task sizing: ~2000 images per
     task, floored at 2 waves per core. Measured (BENCH/notes_r3.md): with
@@ -237,23 +239,32 @@ def flagship_from_seed(spark: SparkSession, n_images: int, aoi: DataFrame,
     if partitions is None:
         cores = spark.sparkContext.defaultParallelism
         partitions = max(2 * cores, (n_images + 1999) // 2000)
-    from . import fixtures
     baoi = spatial.broadcast_aoi(spark, aoi)
 
     def run(batches):
         a = baoi.value
         for idx_pdf in batches:
-            # zlib_level=3: _assign_batch decodes the assigned images'
-            # bytes and none of them leave this task — level 3 is ~1.8×
-            # faster to compress and slightly smaller on this data
-            # (codec.encode)
-            yield _assign_batch(
-                fixtures.images_pdf(idx_pdf["id"].to_numpy(), zlib_level=3),
-                a, cell_res)
+            yield _seed_batch(idx_pdf["id"].to_numpy(), a, cell_res)
 
     assigned = (spark.range(0, n_images, 1, partitions)
                 .mapInPandas(run, schema=_ASSIGNED_SCHEMA))
     return _zonal_agg(assigned, "broadcast")
+
+
+def _seed_batch(ids: np.ndarray, aoi_arrays, cell_res: int) -> pd.DataFrame:
+    """flagship_from_seed's per-batch body: the PIP on the closed-form
+    fixtures.tile_lonlat positions of ``ids`` picks the distinct assigned
+    ids, and only those are synthesized (fixtures.images_pdf) and handed
+    to _assign_batch. Same rows, in the same order, as _assign_batch over
+    every id's image."""
+    ll = np.array([fixtures.tile_lonlat(i) for i in ids.tolist()],
+                  np.float64).reshape(-1, 2)
+    ridx, _ = spatial.pip_assign_np(aoi_arrays, ll[:, 0], ll[:, 1])
+    # zlib_level=3: _assign_batch decodes these bytes and none of them
+    # leave this task — level 3 is ~1.8× faster to compress and slightly
+    # smaller on this data (codec.encode)
+    pdf = fixtures.images_pdf(ids[np.unique(ridx)], zlib_level=3)
+    return _assign_batch(pdf, aoi_arrays, cell_res)
 
 
 # ------------------------------------------------ incremental flagship ----
@@ -286,14 +297,6 @@ def _sql_aggs(**aggs: str) -> list:
     driver→JVM call to build, where the equivalent F.when/F.col chain
     costs one per node (the plan is identical)."""
     return [F.expr(f"{sql} AS {name}") for name, sql in aggs.items()]
-
-
-def flagship_batch_partials(spark: SparkSession, images: DataFrame,
-                            aoi: DataFrame, cell_res: int = 7) -> DataFrame:
-    """One batch's contribution to the incremental flagship: the
-    decomposable per-(aoi, cell) partial aggregates (see
-    _assigned_partials)."""
-    return _assigned_partials(flagship_assigned(spark, images, aoi, cell_res))
 
 
 def start_flagship_incremental(stream_images: DataFrame, aoi: DataFrame,

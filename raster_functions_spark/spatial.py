@@ -10,10 +10,11 @@ as Spark joins:
 
 - **broadcast path** (small vector side): bbox prefilter + exact vectorized
   crossing-number PIP inside one mapInPandas — zero shuffle.
-- **partitioned path** (large vector side): polygons → cell covers at a
-  chosen resolution (the spatial-predicate→cell-range rewrite, SURVEY.md O4),
-  equi-join on cell id (AQE skew-join splits hot cells; optional explicit
-  salting), exact PIP refinement after the join.
+- **partitioned path** (large vector side): polygons → bbox cell covers at
+  a chosen resolution, built in the JVM as Column expressions (the
+  spatial-predicate→cell-range rewrite, SURVEY.md O4), shuffle equi-join on
+  cell id (AQE skew-join splits hot cells), the rings joined to the
+  candidates only, exact PIP refinement after the joins.
 
 The crossing-number test is implemented from scratch in NumPy (no shapely
 in the environment; the north rule requires from-scratch anyway).
@@ -89,9 +90,10 @@ def polygon_runs(xs, ys, res: int):
 
 
 def polygon_cover_cells(ring_x, ring_y, res: int) -> np.ndarray:
-    """Cells at ``res`` intersecting the polygon's bbox (coarse cover used
-    as the equi-join key; exact PIP refines). Bbox cover is the analog of
-    the reference's envelope-intersects pushdown (utils.py:213-229)."""
+    """Cells at ``res`` intersecting the polygon's bbox: the NumPy
+    reference of the partitioned join's JVM cover (_bbox_cover), which
+    must produce the same cells per AOI. Bbox cover is the analog of the
+    reference's envelope-intersects pushdown (utils.py:213-229)."""
     return grid.cover_bbox(float(np.min(ring_x)), float(np.min(ring_y)),
                            float(np.max(ring_x)), float(np.max(ring_y)), res)
 
@@ -262,19 +264,34 @@ def pip_join_broadcast(points: DataFrame, aoi: DataFrame | Broadcast,
     return points.mapInPandas(probe, schema=out_schema)
 
 
+def _bbox_cover(aoi: DataFrame, res: int) -> DataFrame:
+    """(aoi_id, _cover_cell): every cell at ``res`` that meets each AOI's
+    ring bbox, as Column expressions — explode(sequence(i0, i1)) ×
+    explode(sequence(j0, j1)) over the grid indices of the ring's
+    array_min / array_max, cell ids from the Column helpers behind
+    grid.encode_col. Equals polygon_cover_cells per AOI, with no Python
+    and no ring column on the rows."""
+    i0, j0 = grid.lonlat_to_ij_col(F.array_min("ring_x"), F.array_min("ring_y"), res)
+    i1, j1 = grid.lonlat_to_ij_col(F.array_max("ring_x"), F.array_max("ring_y"), res)
+    ij = (aoi.select("aoi_id", F.explode(F.sequence(i0, i1)).alias("_ci"),
+                     j0.alias("_j0"), j1.alias("_j1"))
+          .select("aoi_id", "_ci", F.explode(F.sequence("_j0", "_j1")).alias("_cj")))
+    return ij.select("aoi_id", grid.ij_to_cell_col(F.col("_ci"), F.col("_cj"), res)
+                     .alias("_cover_cell"))
+
+
 def pip_join_partitioned(points: DataFrame, aoi: DataFrame,
                          x_col: str = "lon", y_col: str = "lat",
                          res: int | None = None,
-                         salt_hot_cells: int = 0,
                          keep_unmatched: bool = False,
                          id_col: str | None = None) -> DataFrame:
     """Point-in-polygon join for a LARGE vector side: polygons exploded to
-    cell covers, shuffle equi-join on cell id, exact PIP refinement.
-
-    ``salt_hot_cells > 0`` additionally splits each (cell, aoi) pair into
-    that many salt buckets on the polygon side and hashes points to one
-    bucket — an explicit skew-defeat on top of AQE's skew-join splitting
-    (SURVEY.md O12).
+    cell covers in the JVM (_bbox_cover), shuffle equi-join on cell id,
+    then the rings joined on aoi_id to the candidates only, exact PIP
+    refinement. Both joins are pinned to shuffled hash joins (the cover
+    and the rings build the hash tables): left to itself, AQE may turn a
+    side into a broadcast that a small driver heap cannot build. Hot cells
+    are left to AQE's skew-join splitting.
 
     No driver-side materialization of the vector side anywhere: when
     ``res`` is not given it comes from a distributed approxQuantile of the
@@ -295,36 +312,16 @@ def pip_join_partitioned(points: DataFrame, aoi: DataFrame,
             "unique point key) — unmatched detection is a global per-point "
             "anti-join at this scale")
     r = res if res is not None else auto_cover_res_distributed(aoi)
-    spark = points.sparkSession
-
-    cover_schema = ("aoi_id long, _cover_cell long, "
-                    "ring_x array<double>, ring_y array<double>")
-
-    def explode_cover(batches):
-        for pdf in batches:
-            out = {"aoi_id": [], "_cover_cell": [], "ring_x": [], "ring_y": []}
-            for i in range(len(pdf)):
-                cells = polygon_cover_cells(pdf["ring_x"].iloc[i], pdf["ring_y"].iloc[i], r)
-                out["aoi_id"].extend([int(pdf["aoi_id"].iloc[i])] * cells.size)
-                out["_cover_cell"].extend(cells.tolist())
-                out["ring_x"].extend([list(pdf["ring_x"].iloc[i])] * cells.size)
-                out["ring_y"].extend([list(pdf["ring_y"].iloc[i])] * cells.size)
-            yield pd.DataFrame(out)
-
-    covers = aoi.select("aoi_id", "ring_x", "ring_y").mapInPandas(explode_cover, cover_schema)
 
     pts = points.withColumn("_cover_cell",
                             grid.encode_col(F.col(x_col), F.col(y_col), r))
-    if salt_hot_cells > 0:
-        covers = covers.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_hot_cells - 1))))
-        pts = pts.withColumn("salt", F.pmod(F.hash(x_col, y_col), F.lit(salt_hot_cells)))
-        joined = pts.join(covers, ["_cover_cell", "salt"]).drop("salt")
-    else:
-        joined = pts.join(covers, "_cover_cell")
+    cand = pts.join(_bbox_cover(aoi, r).hint("shuffle_hash"), "_cover_cell")
+    rings = aoi.select("aoi_id", "ring_x", "ring_y").hint("shuffle_hash")
+    joined = (cand.join(rings, "aoi_id")
+              .select(*points.columns, "aoi_id", "ring_x", "ring_y"))
 
     out_schema = T.StructType([f for f in joined.schema
-                               if f.name not in ("ring_x", "ring_y", "_cover_cell")])
+                               if f.name not in ("ring_x", "ring_y")])
 
     def refine(batches):
         for pdf in batches:
@@ -337,7 +334,7 @@ def pip_join_partitioned(points: DataFrame, aoi: DataFrame,
                 keep[loc] = point_in_polygon_np(
                     pdf[x_col].to_numpy(np.float64)[loc],
                     pdf[y_col].to_numpy(np.float64)[loc], rx, ry)
-            yield pdf.loc[keep].drop(columns=["ring_x", "ring_y", "_cover_cell"])
+            yield pdf.loc[keep].drop(columns=["ring_x", "ring_y"])
 
     matched = joined.mapInPandas(refine, schema=out_schema)
     if not keep_unmatched:
@@ -366,25 +363,11 @@ def pip_join(points: DataFrame, aoi: DataFrame, x_col: str = "lon",
     # partitioned path needs a point key for the global anti-join
     return pip_join_partitioned(points, aoi, x_col, y_col,
                                 res=kwargs.get("res"),
-                                salt_hot_cells=kwargs.get("salt_hot_cells", 0),
                                 keep_unmatched=keep,
                                 id_col=kwargs.get("id_col"))
 
 
 # ------------------------------------------------------------- zonal -------
-
-def zonal_statistics(assigned: DataFrame, value_col: str,
-                     zone_col: str = "aoi_id") -> DataFrame:
-    """Raster→vector zonal statistics over join output: plain Catalyst
-    hash aggregation (partial+final, no custom code needed)."""
-    return (assigned.groupBy(zone_col)
-            .agg(F.count("*").alias("n"),
-                 F.avg(value_col).alias("mean"),
-                 F.min(value_col).alias("min"),
-                 F.max(value_col).alias("max"),
-                 F.stddev_pop(value_col).alias("std"),
-                 F.sum(value_col).alias("sum")))
-
 
 def zonal_remap_col(df: DataFrame, zones: DataFrame, value_col: str,
                     zone_col: str = "zone_id", default: float = 255.0,

@@ -18,6 +18,8 @@ properties the engine is designed around (SURVEY.md §4):
   cross product
 - the broadcast flagship scans only its kernel's columns, shuffles twice
   (both hash Exchanges) and orders without a range Exchange
+- the partitioned flagship builds its cell cover without Python and joins
+  through two shuffled hash joins, broadcasting nothing
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -196,22 +198,26 @@ def main() -> int:
     out += ["\n## m5_sarima\n", p]
 
     # 12. flagship above the AOI threshold routes to the cell-cover
-    # partitioned join: the plan must carry a shuffle equi-join on the
-    # private _cover_cell key and NO broadcast of the vector side. The
-    # routing collect holds at most broadcast_threshold + 1 AOI rows on
-    # the driver (spatial.broadcast_aoi with limit=) and, above the
-    # threshold, builds no broadcast from them
+    # partitioned join. The routing collect holds at most
+    # broadcast_threshold + 1 AOI rows on the driver (spatial.broadcast_aoi
+    # with limit=) and, above the threshold, builds no broadcast from them.
+    # Over an image table with no Python of its own, the plan runs exactly
+    # two Python passes (decode_features and the PIP refine: the cell cover
+    # is Column expressions) and two shuffled hash joins (images × cover on
+    # the cell, candidates × rings on aoi_id), and broadcasts nothing
+    import numpy as np
     from raster_functions_spark import fixtures, pipeline
-    imgs_small = fixtures.images_df(spark, 50, partitions=2)
+    imgs_small = spark.createDataFrame(fixtures.images_pdf(np.arange(50)),
+                                       schema=fixtures.IMAGES_SCHEMA)
     aoi_many = fixtures.aoi_df(spark, 60)
     p = plan_of(pipeline.flagship(spark, imgs_small, aoi_many,
                                   broadcast_threshold=10))
-    # "_cover_cell" proves the partitioned implementation was selected
-    # (the broadcast path has no join node at all — its AOI arrays are
-    # a Spark broadcast built from the routing collect)
-    ok = "_cover_cell" in p and "BroadcastNestedLoopJoin" not in p
-    checks.append(("flagship >threshold AOIs: partitioned cell join, routing collect "
-                   "≤ threshold+1 AOI rows, no broadcast", ok))
+    ok = (len(_re.findall(r"\(\d+\) MapInPandas", p)) == 2
+          and len(_re.findall(r"\(\d+\) ShuffledHashJoin", p)) == 2
+          and "BroadcastExchange" not in p
+          and "BroadcastNestedLoopJoin" not in p)
+    checks.append(("flagship >threshold AOIs: partitioned route, 2 MapInPandas "
+                   "(decode, refine), 2 ShuffledHashJoin, no broadcast", ok))
     out += ["\n## flagship_partitioned_route\n", p]
 
     # 13. snapshot incremental read touches ONLY the files added after the

@@ -185,7 +185,7 @@ def test_incremental_flagship_matches_batch(spark, tmp_path):
             assert abs(live[a][col] - full[a][col]) <= 2e-6, (a, col)
     # replayed commit: no-op
     b0 = images.filter("image_id < 'img000000200'")
-    p0 = pipeline.flagship_batch_partials(spark, b0, aoi)
+    p0 = pipeline._assigned_partials(pipeline.flagship_assigned(spark, b0, aoi))
     SnapshotTable(spark, vp).append_tables(
         {"partials": (p0.withColumn("_vb", F.pmod(F.col("aoi_id"), F.lit(16))
                                     .cast("long")), "_vb")},
@@ -393,6 +393,31 @@ def test_assign_batch_without_assignment_decodes_nothing(kernel_batch,
     assert list(got.columns) == cols and len(got) == 0
     pd.testing.assert_frame_equal(got, _assign_batch_decode_all(far, aoi, 7),
                                   check_exact=True)
+
+
+def test_seed_batch_synthesizes_only_assigned_images(kernel_batch,
+                                                      monkeypatch):
+    """The from-seed body makes the pixels of exactly the distinct ids its
+    PIP assigns, and returns _assign_batch's rows over every id's image,
+    in order."""
+    _, aoi, ridx, _, outside = kernel_batch
+    ids = np.arange(750)
+    made = []
+    real = fixtures.images_pdf
+
+    def counting(indices, zlib_level=6):
+        made.extend(indices.tolist())
+        return real(indices, zlib_level)
+    monkeypatch.setattr(fixtures, "images_pdf", counting)
+    got = pipeline._seed_batch(ids, aoi, 7)
+    assert made == np.unique(ridx).tolist() and len(made) < len(ids)
+    want = pipeline._assign_batch(real(ids, zlib_level=3), aoi, 7)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    # a batch with no assigned image synthesizes nothing, typed empty rows
+    made.clear()
+    none = pipeline._seed_batch(ids[outside], aoi, 7)
+    assert made == [] and len(none) == 0
+    assert list(none.columns) == list(want.columns)
 
 
 def test_flagship_from_seed_matches_stored_table_route(spark):

@@ -88,11 +88,33 @@ def test_pip_join_routes_on_one_bounded_collect(spark, jobs_run):
 def test_pip_join_partitioned_matches_broadcast(spark):
     df, pdf = _points_df(spark)
     aoi = fixtures.aoi_df(spark, 20)
-    want = _oracle_pairs(pdf, 20)
-    for salt in (0, 4):
-        got = {(int(r.pid), int(r.aoi_id))
-               for r in spatial.pip_join_partitioned(df, aoi, salt_hot_cells=salt).collect()}
-        assert got == want, f"salt={salt}"
+    got = {(int(r.pid), int(r.aoi_id))
+           for r in spatial.pip_join_partitioned(df, aoi).collect()}
+    assert got == _oracle_pairs(pdf, 20)
+
+
+def test_jvm_bbox_cover_equals_polygon_cover_cells(spark):
+    """The partitioned join's Column-built cover is polygon_cover_cells per
+    AOI, at the coarsest, the auto and a fine resolution; rings on the
+    grid's edges (lon ±180, lat ±90: indices clamped) and a zero-width
+    ring included."""
+    pdf = fixtures.aoi_pdf(30)
+    extra = {100: ([179.99, 180.0, 180.0], [89.99, 89.99, 90.0]),
+             101: ([-180.0, -179.99, -180.0], [-90.0, -90.0, -89.99]),
+             102: ([10.0, 10.0, 10.0], [5.0, 5.5, 6.0])}
+    for k, (xs, ys) in extra.items():
+        pdf.loc[len(pdf)] = [k, f"aoi-{k}", xs, ys, min(xs), min(ys),
+                             max(xs), max(ys)]
+    aoi = spark.createDataFrame(pdf, schema=fixtures.AOI_SCHEMA)
+    auto = spatial.auto_cover_res_distributed(aoi)
+    assert 0 < auto < 12
+    for res in (0, auto, 12):
+        got = {(r.aoi_id, r._cover_cell)
+               for r in spatial._bbox_cover(aoi, res).collect()}
+        want = {(int(a), int(c))
+                for a, rx, ry in zip(pdf.aoi_id, pdf.ring_x, pdf.ring_y)
+                for c in spatial.polygon_cover_cells(rx, ry, res)}
+        assert got == want, res
 
 
 def test_pip_join_keep_unmatched(spark):
@@ -105,13 +127,6 @@ def test_pip_join_keep_unmatched(spark):
     assert out.select("pid").distinct().count() == 500
     assert n_rows >= 500
     assert matched_pids == {p for (p, _) in _oracle_pairs(pdf, 5)}
-
-
-def test_zonal_statistics(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0), (1, 20.0), (2, 5.0)], "aoi_id long, v double")
-    out = {r.aoi_id: r for r in spatial.zonal_statistics(df, "v").collect()}
-    assert out[1].n == 2 and out[1].mean == 15.0 and out[2].sum == 5.0
 
 
 def test_zonal_remap_col(spark):
