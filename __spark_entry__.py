@@ -777,6 +777,7 @@ def q_stream_sessionize(spark, sf_dir):
 def q_stream_windowed(spark, sf_dir):
     """Structured Streaming: availableNow ingest of the events table →
     1-hour tumbling event-time windows (batch-equivalent oracle below)."""
+    from raster_functions_spark.streaming.ingest import run_available_now
     schema = _t(spark, sf_dir, "events").schema
     stream = (spark.readStream.schema(schema)
               .option("pathGlobFilter", "events.parquet")  # file source needs a dir
@@ -787,11 +788,7 @@ def q_stream_windowed(spark, sf_dir):
     agg = (stream
            .groupBy(F.window("ts", "1 hour"), "event_type")
            .agg(F.count("*").alias("n")))
-    qname = "stream_windowed_out"
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName(qname).trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.table(qname)
+    return (run_available_now(agg, "stream_windowed_out")
             .select(F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("hour_block"),
                     "event_type", "n")
             .orderBy("hour_block", "event_type"))

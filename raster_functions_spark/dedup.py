@@ -1123,15 +1123,14 @@ def start_dedup_ingest(stream: DataFrame, corpus_path: str, checkpoint: str,
                        query_name: str = "dedup-ingest",
                        run_prefix: str = "batch"):
     """Streaming wrapper over :class:`DedupIngest`: one exactly-once
-    commit per microbatch (run_id=<run_prefix>-<id>), novel rows only."""
+    commit per microbatch on the shared loop
+    (SnapshotTable.microbatch_sink, run_id=<run_prefix>-<id>), novel
+    rows only."""
     ing = DedupIngest(stream.sparkSession, corpus_path, text_col, id_col,
                       key, m_bits, k_hashes, n_buckets)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ing.ingest(batch_df, run_id=f"{run_prefix}-{batch_id}")
-        ing.table.maintain(batch_id, compact_every=compact_every,
-                           expire_every=expire_every, keep_last=keep_last)
-
-    return (stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name).trigger(availableNow=True).start())
+    t = ing.table
+    return t.start_stream(
+        stream, t.microbatch_sink(
+            lambda df, run_id, _: ing.ingest(df, run_id=run_id),
+            run_prefix, compact_every, expire_every, keep_last),
+        checkpoint, query_name)

@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -150,7 +151,7 @@ def checkpointed_write(df: DataFrame, path: str, key_col: str,
                    .agg(F.count("*").alias("rows"),
                         F.sum(F.crc32(F.col(key_col).cast("string"))).alias("key_checksum"))
                    .collect())
-    except Exception as e:  # noqa: BLE001 — AnalysisException class moves
+    except AnalysisException as e:
         if "infer schema" not in str(e).lower() and "PATH_NOT_FOUND" not in str(e):
             raise
         # first run where EVERY todo bucket was empty: the dynamic

@@ -313,10 +313,9 @@ def start_flagship_incremental(stream_images: DataFrame, aoi: DataFrame,
     broadcast kernel decodes only the images its PIP assigns), reduces to
     the per-(aoi, cell) decomposable partials (_assigned_partials — ONE
     aggregation; n_cells is the group key, so no second dataset), and
-    commits ONE snapshot with run_id=<run_prefix>-<id> — a retried batch
-    is a no-op (exactly-once; give each logical stream its own
-    run_prefix if the view table can outlive its checkpoint — see
-    SnapshotTable.streaming_sink on checkpoint identity). ``current_flagship`` merges at read time.
+    commits ONE snapshot on the shared loop (SnapshotTable.microbatch_sink
+    — exactly-once per <run_prefix>-<id>, with its checkpoint-identity
+    caveat). ``current_flagship`` merges at read time.
     Work per batch ∝ batch size; view freshness is one tiny aggregation.
 
     Per-batch FIXED cost (r6, measured in BENCH/notes_r6.md §5): one
@@ -340,18 +339,17 @@ def start_flagship_incremental(stream_images: DataFrame, aoi: DataFrame,
     prep = prepare_aoi(spark, aoi)
     vb = F.pmod(F.col("aoi_id"), F.lit(view_buckets)).cast("long")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def commit(batch_df: DataFrame, run_id: str, _) -> None:
         assigned = flagship_assigned_prepared(spark, batch_df, prep, cell_res)
         partials = _assigned_partials(assigned)
         vt.append_tables(
             {"partials": (partials.withColumn("_vb", vb).coalesce(1), "_vb")},
-            run_id=f"{run_prefix}-{batch_id}")
-        vt.maintain(batch_id, compact_every=compact_every,
-                    expire_every=expire_every, keep_last=keep_last)
+            run_id=run_id)
 
-    return (stream_images.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name).trigger(availableNow=True).start())
+    return vt.start_stream(
+        stream_images, vt.microbatch_sink(commit, run_prefix, compact_every,
+                                          expire_every, keep_last),
+        checkpoint, query_name)
 
 
 def current_flagship(spark: SparkSession, view_path: str) -> DataFrame:

@@ -613,11 +613,10 @@ def start_ivf_ingest(stream: DataFrame, snap_path: str, checkpoint: str,
                      query_name: str = "ivf-ingest",
                      run_prefix: str = "ivf"):
     """Wire a vector stream into the snapshot-backed IVF index: one
-    ivf_append per microbatch (run_id=<run_prefix>-<batch_id> ⇒
-    exactly-once; a retried batch cannot double-insert — give each
-    logical stream its own run_prefix if the index can outlive its
-    checkpoint), with the shared maintain()
-    cadence for small-file compaction and log retention. The index must
+    ivf_append per microbatch on the shared loop
+    (SnapshotTable.microbatch_sink — exactly-once per
+    <run_prefix>-<batch_id>, so a retried batch cannot double-insert,
+    with its compaction and retention cadence). The index must
     already exist (ivf_build_snapshot) — appends assign against its
     frozen centroids, so searches stay parity-exact with a full rebuild
     at any point in the stream."""
@@ -629,17 +628,16 @@ def start_ivf_ingest(stream: DataFrame, snap_path: str, checkpoint: str,
     # broadcast every microbatch)
     C = ivf_load_centroids(spark, snap_path)
     bC = spark.sparkContext.broadcast(C)
+    table = SnapshotTable(spark, snap_path)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_append(batch_df, snap_path, run_id=f"{run_prefix}-{batch_id}",
-                   id_col=id_col, vec_col=vec_col, centroids=C, _bc=bC)
-        SnapshotTable(spark, snap_path).maintain(
-            batch_id, compact_every=compact_every,
-            expire_every=expire_every, keep_last=keep_last)
+    def commit(batch_df: DataFrame, run_id: str, _) -> None:
+        ivf_append(batch_df, snap_path, run_id=run_id, id_col=id_col,
+                   vec_col=vec_col, centroids=C, _bc=bC)
 
-    return (stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name).trigger(availableNow=True).start())
+    return table.start_stream(
+        stream, table.microbatch_sink(commit, run_prefix, compact_every,
+                                      expire_every, keep_last),
+        checkpoint, query_name)
 
 
 def _search_lists(read_lists: Callable[[list], DataFrame], centroids,

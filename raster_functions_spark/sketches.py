@@ -342,21 +342,24 @@ def hll_streaming_sink(table, key_col: str, group_cols: list[str],
                        p: int = 8, seed: int = _DEFAULT_SEED,
                        hashes: str = "md5", rollup_every: int | None = None,
                        run_prefix: str = "hll"):
-    """foreachBatch sink maintaining a live distinct-count sketch: one
-    register commit per microbatch (``run_id = <run_prefix>-<batch_id>``
-    — a retried microbatch no-ops, so the sketch is exactly-once end to
-    end), with an optional rollup every N batches that rewrites the
-    accumulated registers into one merged vector (read cost stays
-    O(groups × 2^p) on an unbounded stream). Same checkpoint-identity
-    caveat as SnapshotTable.streaming_sink: give each logical stream its
-    own ``run_prefix``."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    """foreachBatch sink maintaining a live distinct-count sketch on the
+    shared loop (SnapshotTable.microbatch_sink): one register commit per
+    microbatch, exactly-once per ``<run_prefix>-<batch_id>``, plus a
+    rollup that rewrites the accumulated registers into one merged
+    vector (read cost stays O(groups × 2^p) on an unbounded stream) on
+    the loop's cadence — every ``rollup_every`` batches, as the
+    contiguous ordinal ``<run_prefix>-rollup-<k>``, so expired rollups
+    fold into the retention watermark."""
+    from .snapshots import _cadence
+
+    def commit(batch_df: DataFrame, run_id: str, batch_id: int) -> None:
         hll_commit_batch(table, batch_df, key_col, group_cols, p, seed,
-                         run_id=f"{run_prefix}-{batch_id}", hashes=hashes)
-        if rollup_every and batch_id > 0 and batch_id % rollup_every == 0:
+                         run_id=run_id, hashes=hashes)
+        k = _cadence(batch_id, rollup_every)
+        if k:
             hll_rollup_commit(table, group_cols,
-                              run_id=f"{run_prefix}-rollup-{batch_id}")
-    return sink
+                              run_id=f"{run_prefix}-rollup-{k}")
+    return table.microbatch_sink(commit, run_prefix)
 
 
 def start_hll_ingest(table, stream: DataFrame, key_col: str,
@@ -367,12 +370,10 @@ def start_hll_ingest(table, stream: DataFrame, key_col: str,
                      run_prefix: str = "hll"):
     """Wire a stream into a snapshot-backed HLL (availableNow trigger).
     The live estimate at any time is :func:`hll_read_distinct`."""
-    return (stream.writeStream
-            .foreachBatch(hll_streaming_sink(table, key_col, group_cols,
-                                             p, seed, hashes, rollup_every,
-                                             run_prefix))
-            .option("checkpointLocation", checkpoint)
-            .queryName(query_name).trigger(availableNow=True).start())
+    return table.start_stream(
+        stream, hll_streaming_sink(table, key_col, group_cols, p, seed,
+                                   hashes, rollup_every, run_prefix),
+        checkpoint, query_name)
 
 
 # --------------------------------- incremental quantile (snapshot) ---------

@@ -48,7 +48,7 @@ from .lineage import _hadoop_fs, _read_manifest_path, _write_json_atomic
 
 ROOT = "metadata.json"
 
-# sequential run-id shape "<prefix>-<n>" used by every streaming sink
+# sequential run-id shape "<prefix>-<n>" issued by the streaming loop
 # (batch-<n>, compaction-<n>): expired ids fold into a per-prefix
 # contiguous watermark range instead of one tombstone each
 _SEQ_RUN_ID = re.compile(r"^(.*)-(\d+)$")
@@ -57,6 +57,15 @@ _SEQ_RUN_ID = re.compile(r"^(.*)-(\d+)$")
 # a cadence hit finds nothing to compact; "replaying" such an ordinal
 # would only re-rewrite unchanged files)
 _GAP_SAFE_PREFIXES = {"compaction"}
+
+
+def _cadence(batch_id: int, every: int | None) -> int:
+    """The streaming loop's one cadence rule (compaction, retention, HLL
+    rollup): the contiguous ordinal k ≥ 1 when microbatch ``batch_id``
+    closes the k-th run of ``every`` batches, else 0."""
+    if not every or (batch_id + 1) % every:
+        return 0
+    return (batch_id + 1) // every
 
 
 class SnapshotTable:
@@ -370,76 +379,84 @@ class SnapshotTable:
                  compact_every: int | None = None,
                  expire_every: int | None = None,
                  keep_last: int = 64) -> None:
-        """The per-microbatch maintenance cadence, shared by every
-        foreachBatch sink (snapshot ingest, pixel-composite ingest,
-        incremental flagship): small-file compaction every
-        ``compact_every`` batches (exactly-once via its own run_id) and
-        log retention every ``expire_every`` batches (per-prefix
-        watermarks + tombstones keep expired batches replay-safe). One
-        copy of the scheduling semantics — change it here, every sink
-        follows. The compaction run_id is the CONTIGUOUS compaction
-        ordinal (compaction-1, compaction-2, …), not the raw batch id,
-        so expired compact commits fold into the retention watermark
-        instead of accreting one exception tombstone per cadence hit.
-        The prefix is 'compaction' — distinct from the pre-r6
-        'compact-<batch_id>' scheme — so an ordinal can never collide
-        with a legacy run_id on an upgraded table (a collision would
-        silently skip that compaction as a replay)."""
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            self.compact(min_files_per_value=2,
-                         run_id=f"compaction-{(batch_id + 1) // compact_every}")
-        if expire_every and (batch_id + 1) % expire_every == 0:
+        """The maintenance step the streaming loop (:meth:`microbatch_sink`)
+        runs after every commit, on the :func:`_cadence` rule: small-file
+        compaction every ``compact_every`` batches and log retention
+        every ``expire_every`` batches. The compaction run_id is the
+        contiguous ordinal compaction-<k>, so expired compactions fold
+        into the retention watermark; its prefix differs from the pre-r6
+        'compact-<batch_id>' scheme, so an ordinal never collides with a
+        legacy run_id on an upgraded table."""
+        k = _cadence(batch_id, compact_every)
+        if k:
+            self.compact(min_files_per_value=2, run_id=f"compaction-{k}")
+        if _cadence(batch_id, expire_every):
             self.expire_snapshots(keep_last=keep_last)
+
+    def microbatch_sink(self, commit, run_prefix: str = "batch",
+                        compact_every: int | None = None,
+                        expire_every: int | None = None,
+                        keep_last: int = 64):
+        """THE streaming loop: the foreachBatch function of every
+        snapshot-backed ``start_*`` ingest. Per microbatch it forms
+        ``run_id = <run_prefix>-<batch_id>``, calls the sink's own body
+        ``commit(batch_df, run_id, batch_id)`` (which commits to this
+        table under ``run_id``), then :meth:`maintain`. A retried
+        microbatch is a no-op commit, so every sink is exactly-once: a
+        mid-commit failure leaves only unreferenced files (reclaimed by
+        expire_snapshots' orphan sweep), and a post-commit retry
+        short-circuits on its run_id — expired batches included, via the
+        retention watermark.
+
+        CHECKPOINT IDENTITY: batch ids come from the streaming
+        checkpoint. Starting a NEW query (fresh checkpoint dir) against a
+        table a sink already wrote resets ids to 0, and the replay
+        protection would then silently discard the new batches as
+        replays of the old ones. Give each logical stream its own
+        ``run_prefix`` (e.g. the query name) when a table can outlive
+        its checkpoint — distinct prefixes never collide.
+
+        RETENTION: every ``expire_every`` batches the log is truncated
+        to ``keep_last`` snapshots, keeping the per-commit root rewrite
+        O(keep_last); time travel and read_incremental then reach back
+        at most keep_last commits, so size keep_last to the slowest
+        downstream consumer's lag."""
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            commit(batch_df, f"{run_prefix}-{batch_id}", batch_id)
+            self.maintain(batch_id, compact_every, expire_every, keep_last)
+        return sink
+
+    @staticmethod
+    def start_stream(stream: DataFrame, sink, checkpoint: str,
+                     query_name: str):
+        """Wire a :meth:`microbatch_sink` function to ``stream`` with the
+        ``availableNow`` trigger; a restart resumes from ``checkpoint``."""
+        return (stream.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", checkpoint)
+                .queryName(query_name).trigger(availableNow=True).start())
 
     def streaming_sink(self, partition_col: str,
                        expire_every: int | None = None,
                        keep_last: int = 64,
                        compact_every: int | None = None,
                        run_prefix: str = "batch"):
-        """foreachBatch sink: one snapshot commit per microbatch with
-        ``run_id = <run_prefix>-<id>`` — a retried microbatch is a no-op
-        commit, so snapshot appends are exactly-once end to end (a
-        mid-append failure leaves only unreferenced files, reclaimed by
-        expire_snapshots' orphan sweep; a post-commit retry
-        short-circuits on run_id — including replays of already-EXPIRED
-        batches, via the retention watermark). Downstream consumers use
-        read_incremental to process exactly the newly committed rows.
-
-        CHECKPOINT IDENTITY: batch ids come from the streaming
-        checkpoint. Starting a NEW query (fresh checkpoint dir) against a
-        table this sink already wrote resets ids to 0, and the replay
-        protection would then silently discard the new batches as
-        replays of the old ones. Give each logical stream its own
-        ``run_prefix`` (e.g. the query name) when a table can outlive
-        its checkpoint — distinct prefixes never collide.
-
-        ``expire_every`` bounds the metadata: every N batches the log is
-        truncated to ``keep_last`` snapshots (watermark + tombstones
-        retained), keeping the per-commit root rewrite O(keep_last)
-        instead of O(#commits). ``compact_every`` enables the small-file
-        compaction cadence (see maintain). Time travel /
-        read_incremental reach back at most keep_last commits once
-        enabled; size keep_last to the slowest downstream consumer's
-        lag."""
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            self.append(batch_df, partition_col,
-                        run_id=f"{run_prefix}-{batch_id}")
-            self.maintain(batch_id, compact_every=compact_every,
-                          expire_every=expire_every, keep_last=keep_last)
-        return sink
+        """One :meth:`append` per microbatch on the streaming loop
+        (:meth:`microbatch_sink`). Downstream consumers use
+        read_incremental to process exactly the newly committed rows."""
+        return self.microbatch_sink(
+            lambda df, run_id, _: self.append(df, partition_col, run_id=run_id),
+            run_prefix, compact_every, expire_every, keep_last)
 
     def start_ingest(self, stream: DataFrame, partition_col: str,
                      checkpoint: str, query_name: str = "snapshot-ingest",
                      expire_every: int | None = None, keep_last: int = 64,
                      compact_every: int | None = None,
                      run_prefix: str = "batch"):
-        """Wire a stream into this table (availableNow trigger)."""
-        return (stream.writeStream
-                .foreachBatch(self.streaming_sink(
-                    partition_col, expire_every, keep_last,
-                    compact_every=compact_every, run_prefix=run_prefix))
-                .option("checkpointLocation", checkpoint)
-                .queryName(query_name).trigger(availableNow=True).start())
+        """Wire a stream into this table (:meth:`streaming_sink`)."""
+        return self.start_stream(
+            stream, self.streaming_sink(partition_col, expire_every,
+                                        keep_last, compact_every, run_prefix),
+            checkpoint, query_name)
 
     # --------------------------------------------------------- maintain ----
 
@@ -508,15 +525,17 @@ class SnapshotTable:
 
         Replay protection is BOUNDED on an infinite stream (r6): a
         sequential run_id "<prefix>-<n>" folds into a per-prefix
-        contiguous watermark range {lo, hi, hi_snap} — every streaming
-        sink issues exactly that shape with n increasing by 1 per commit
-        (batch-<n> from foreachBatch's contiguous batch ids, compact-<n>
-        from maintain()'s compaction ordinal), so the root carries O(#sink
-        prefixes) watermarks regardless of how many commits have ever
-        expired. An id that does NOT extend its prefix's range
-        contiguously (out-of-order replay mid-retention, hand-issued ids)
-        keeps an exact per-id tombstone in ``expired_run_ids`` — the
-        exception set, empty in normal streaming operation. Correctness of
+        contiguous watermark range {lo, hi, hi_snap} — the one streaming
+        loop (:meth:`microbatch_sink`) issues exactly that shape with n
+        increasing by 1 per commit (<run_prefix>-<n> from foreachBatch's
+        contiguous batch ids; compaction-<k> and the HLL sink's
+        <run_prefix>-rollup-<k> from the :func:`_cadence` ordinal), so
+        the root carries O(#sink prefixes) watermarks regardless of how
+        many commits have ever expired. An id that does NOT extend its
+        prefix's range contiguously (out-of-order replay mid-retention,
+        hand-issued ids) keeps an exact per-id tombstone in
+        ``expired_run_ids`` — the exception set, empty in normal
+        streaming operation. Correctness of
         the watermark relies on the writer issuing prefix seqs
         monotonically, which is Structured Streaming's foreachBatch
         contract; arbitrary ad-hoc run_ids (no trailing -<n>) always take

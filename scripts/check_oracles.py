@@ -5,6 +5,11 @@ hash), and order-insensitive values (exact for ints/strings, 1e-9 for
 floats). Mimics the driver's CORRECTNESS gate so mismatches surface before
 the round ends.
 
+After each query it also prints the query's session-state deltas —
+persistent RDDs, temporary views and active streaming queries it left
+behind — and one summary line at the end. The report is informational:
+it changes no verdict and no exit code.
+
 Usage: python scripts/check_oracles.py [sf_dir] [only_query_prefix]
 """
 
@@ -52,6 +57,40 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> str:
     return "OK"
 
 
+def session_state(spark) -> tuple[int, set[str], set[str]]:
+    """(persistent RDD count, temporary view names, active streaming
+    query names) of the session."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    streams = {q.name or q.id for q in spark.streams.active}
+    return spark.sparkContext._jsc.getPersistentRDDs().size(), views, streams
+
+
+def run_query(name, fn, spark, con, sf_dir, oracles) -> bool:
+    """Run one query on Spark and (if it has one) its DuckDB oracle;
+    print the verdict line. Returns True on a failure."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf_dir).toPandas()
+    except Exception as e:
+        print(f"{name:24s} SPARK ERROR: {type(e).__name__}: {str(e)[:300]}")
+        return True
+    if name not in oracles:
+        print(f"{name:24s} rows-only: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
+        if len(sdf) == 0:
+            print(f"{name:24s}   WARNING: zero rows")
+        return False
+    try:
+        odf = con.sql(oracles[name]).df()
+    except Exception as e:
+        print(f"{name:24s} DUCKDB ERROR: {type(e).__name__}: {str(e)[:300]}")
+        return True
+    verdict = compare(name, sdf, odf)
+    status = "✓" if verdict == "OK" else "✗"
+    print(f"{name:24s} {status} {len(sdf)} rows ({time.time()-t0:.1f}s)"
+          + ("" if verdict == "OK" else f"  {verdict}"))
+    return verdict != "OK"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefix = sys.argv[2] if len(sys.argv) > 2 else ""
@@ -67,33 +106,25 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
+    leaks: dict[str, list[str]] = {"persistent RDDs": [], "temp views": [],
+                                   "active streams": []}
     for name, fn in qs.items():
         if prefix and not name.startswith(prefix):
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:
-            print(f"{name:24s} SPARK ERROR: {type(e).__name__}: {str(e)[:300]}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"{name:24s} rows-only: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
-            if len(sdf) == 0:
-                print(f"{name:24s}   WARNING: zero rows")
-            continue
-        try:
-            odf = con.sql(oracles[name]).df()
-        except Exception as e:
-            print(f"{name:24s} DUCKDB ERROR: {type(e).__name__}: {str(e)[:300]}")
-            failures += 1
-            continue
-        verdict = compare(name, sdf, odf)
-        status = "✓" if verdict == "OK" else "✗"
-        print(f"{name:24s} {status} {len(sdf)} rows ({time.time()-t0:.1f}s)"
-              + ("" if verdict == "OK" else f"  {verdict}"))
-        if verdict != "OK":
-            failures += 1
+        rdds0, views0, streams0 = session_state(spark)
+        failures += run_query(name, fn, spark, con, sf_dir, oracles)
+        rdds1, views1, streams1 = session_state(spark)
+        new_views, new_streams = sorted(views1 - views0), sorted(streams1 - streams0)
+        print(f"{name:24s}   state: persistent_rdds {rdds1 - rdds0:+d}, "
+              f"temp_views +{new_views}, active_streams +{new_streams}")
+        for kind, grew in (("persistent RDDs", rdds1 > rdds0),
+                           ("temp views", new_views),
+                           ("active streams", new_streams)):
+            if grew:
+                leaks[kind].append(name)
+    print("\nSESSION STATE (report only): "
+          + "; ".join(f"{len(v)} queries left {k} behind {v}"
+                      for k, v in leaks.items()))
     spark.stop()
     print(f"\n{'PASS' if failures == 0 else 'FAIL'}: {failures} failures")
     return 1 if failures else 0

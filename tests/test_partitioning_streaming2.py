@@ -63,3 +63,30 @@ def test_incremental_composite_stream(spark, tmp_path):
               + list(pdf2["bytes"])]
     want_mean = np.concatenate([p.ravel() for p in all_px]).mean()
     assert abs(c2["scene0"].mean - want_mean) < 1e-9
+
+
+def test_incremental_composite_replay_is_noop(spark, tmp_path):
+    """The composite's partials commit through the snapshot streaming
+    loop: a replayed microbatch (here batch 0 again, from a fresh
+    checkpoint over the same files) carries a run id already in the log,
+    so it commits nothing and the composite is unchanged."""
+    from raster_functions_spark.snapshots import SnapshotTable
+    src = str(tmp_path / "incoming")
+    partials = str(tmp_path / "partials")
+    pdf = fixtures.stack_images_pdf([0, 1], 3)
+    spark.createDataFrame(pdf).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    q = composites.start_incremental_composite(
+        spark.readStream.schema(schema).parquet(src), partials,
+        str(tmp_path / "ck1"), "inc_replay1")
+    q.awaitTermination(120)
+    snaps = SnapshotTable(spark, partials).snapshots()
+    assert [s["run_id"] for s in snaps] == ["batch-0"]
+    q2 = composites.start_incremental_composite(
+        spark.readStream.schema(schema).parquet(src), partials,
+        str(tmp_path / "ck2"), "inc_replay2")
+    q2.awaitTermination(120)
+    assert SnapshotTable(spark, partials).snapshots() == snaps
+    got = composites.current_composite(spark, partials).collect()
+    assert [(r.scene_id, r.n_tiles, r.last_batch) for r in got] == \
+        [("scene0", 3, 0), ("scene1", 3, 0)]

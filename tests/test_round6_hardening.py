@@ -135,21 +135,77 @@ def test_sessionize_stream_drops_null_timestamps(spark, tmp_path):
         [(1, 1, "gap")]
 
 
-def test_flagship_incremental_honors_run_prefix(spark, tmp_path):
-    """start_flagship_incremental accepted run_prefix but hardcoded
-    'batch-<id>' run ids — two logical streams sharing a view table
-    would silently no-op each other's commits (the exact checkpoint
-    identity hazard the parameter exists to prevent)."""
-    from raster_functions_spark import fixtures, pipeline
+# one microbatch per snapshot-backed start_* ingest: name ->
+# (spark, table path) -> (source rows, start(stream, checkpoint, **kw))
+def _snapshot_sink(spark, path):
+    return (_df(spark, (0, 8), 1),
+            lambda s, ck, **kw: SnapshotTable(spark, path).start_ingest(
+                s, "p_cell", ck, **kw))
 
-    images = fixtures.images_df(spark, 40)
+
+def _flagship_sink(spark, path):
+    from raster_functions_spark import fixtures, pipeline
     aoi = fixtures.aoi_df(spark, 4)
-    src = str(tmp_path / "imgs")
-    images.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(images.schema).parquet(src)
-    vp = str(tmp_path / "view")
-    q = pipeline.start_flagship_incremental(
-        stream, aoi, vp, str(tmp_path / "ck"), run_prefix="streamA")
+    return (fixtures.images_df(spark, 40),
+            lambda s, ck, **kw: pipeline.start_flagship_incremental(
+                s, aoi, path, ck, **kw))
+
+
+def _pixel_mean_sink(spark, path):
+    from raster_functions_spark import fixtures
+    from raster_functions_spark.streaming import composites
+    return (spark.createDataFrame(fixtures.mosaic_stack_pdf(2, 2)),
+            lambda s, ck, **kw: composites.start_pixel_mean_ingest(
+                s, path, ck, **kw))
+
+
+def _ivf_sink(spark, path):
+    from raster_functions_spark import similarity
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), float(i // 4)]) for i in range(8)],
+        "vec_id long, embedding array<double>")
+    similarity.ivf_build_snapshot(vecs, path, n_lists=2,
+                                  centroids=[[0.0, 0.0], [3.0, 1.0]])
+    return (vecs.withColumn("vec_id", F.col("vec_id") + 100),
+            lambda s, ck, **kw: similarity.start_ivf_ingest(s, path, ck, **kw))
+
+
+def _dedup_sink(spark, path):
+    from raster_functions_spark import dedup
+    docs = spark.createDataFrame([(i, f"t {i % 3}") for i in range(6)],
+                                 "doc_id long, text string")
+    return (docs, lambda s, ck, **kw: dedup.start_dedup_ingest(
+        s, path, ck, m_bits=1 << 10, n_buckets=2, **kw))
+
+
+def _hll_sink(spark, path):
+    from raster_functions_spark import sketches
+    rows = spark.range(50).select(F.lit("g").alias("grp"),
+                                  F.col("id").alias("key"))
+    return (rows, lambda s, ck, **kw: sketches.start_hll_ingest(
+        SnapshotTable(spark, path), s, "key", ["grp"], ck, **kw))
+
+
+_SINKS = {"snapshot": _snapshot_sink, "flagship": _flagship_sink,
+          "pixel_mean": _pixel_mean_sink, "ivf": _ivf_sink,
+          "dedup": _dedup_sink, "hll": _hll_sink}
+
+
+@pytest.mark.parametrize("sink", list(_SINKS))
+def test_streaming_sinks_honor_run_prefix(spark, tmp_path, sink):
+    """Every snapshot-backed start_* commits through the one streaming
+    loop (SnapshotTable.microbatch_sink), so each issues
+    <run_prefix>-<n> run ids. A former per-sink copy of that loop in
+    start_flagship_incremental hardcoded 'batch-<id>': two logical
+    streams sharing a view table silently no-opped each other's commits
+    (the checkpoint identity hazard run_prefix exists to prevent)."""
+    path = str(tmp_path / "table")
+    rows, start = _SINKS[sink](spark, path)
+    before = len(SnapshotTable(spark, path).snapshots())
+    src = str(tmp_path / "src")
+    rows.coalesce(1).write.parquet(src)
+    q = start(spark.readStream.schema(rows.schema).parquet(src),
+              str(tmp_path / "ck"), run_prefix="streamA")
     q.awaitTermination(120)
-    ids = [s["run_id"] for s in SnapshotTable(spark, vp).snapshots()]
-    assert ids == ["streamA-0"]
+    ids = [s["run_id"] for s in SnapshotTable(spark, path).snapshots()]
+    assert ids[before:] == ["streamA-0"]

@@ -505,6 +505,31 @@ def test_hll_streaming_ingest(spark, tmp_path):
     assert t.current_id == cid
 
 
+def test_hll_rollups_fold_into_retention_watermark(spark, tmp_path):
+    """Rollups fire on the streaming loop's cadence ((batch_id + 1) %
+    rollup_every == 0) under contiguous ordinal ids <prefix>-rollup-<k>,
+    so expiring them extends the per-prefix watermark: no per-id
+    tombstone. Ids stepping by rollup_every (rollup-2, -4, -6) left
+    every rollup after the first as an exception tombstone."""
+    from raster_functions_spark.snapshots import SnapshotTable
+    df = _mixed_card_df(spark)
+    t = SnapshotTable(spark, str(tmp_path / "hll"))
+    sink = sketches.hll_streaming_sink(t, "key", ["grp"], p=9,
+                                       rollup_every=2)
+    for b in range(7):
+        sink(df.filter(F.col("key") % 7 == b), b)
+    ids = [s["run_id"] for s in t.snapshots()]
+    assert [i for i in ids if "rollup" in i] == \
+        ["hll-rollup-1", "hll-rollup-2", "hll-rollup-3"]
+    t.expire_snapshots(keep_last=1)
+    assert t._root()["expired_run_ids"] == {}
+    live = {r["grp"]: r["est"] for r in
+            sketches.hll_read_distinct(t, ["grp"], p=9).collect()}
+    full = {r["grp"]: r["est"] for r in
+            sketches.hll_distinct(df, "key", ["grp"], p=9).collect()}
+    assert live == full
+
+
 # ------------------------------------------------ shard export (tar) -------
 
 def test_export_shards_tar_roundtrip(spark):
