@@ -718,8 +718,8 @@ def _demux_tables(buf: bytes) -> dict:
             if bt == b"hvcC":
                 prof = parse_hvcc(buf[cs:ce])
                 break
-    except Exception:
-        pass                                        # enrichment is best-effort
+    except (ValueError, IndexError, struct.error):
+        pass                  # best-effort: a truncated record keeps None
     # stsz
     ps, pe = boxes[b"stsz"]
     fixed, cnt = struct.unpack_from(">II", buf, ps + 4)
@@ -957,8 +957,8 @@ def parse_avcc(payload: bytes) -> dict:
         pos += 2 + ln
         try:
             out.update(parse_sps_h264(sps))
-        except Exception:
-            pass
+        except (ValueError, IndexError, struct.error):
+            pass                                    # truncated SPS
         break                                       # first SPS governs
     return out
 
@@ -980,8 +980,8 @@ def parse_hvcc(payload: bytes) -> dict:
             if nal_type == 33 and out["w"] is None:     # SPS
                 try:
                     out.update(parse_sps_h265(nal))
-                except Exception:
-                    pass
+                except (ValueError, IndexError, struct.error):
+                    pass                            # truncated SPS
     return out
 
 

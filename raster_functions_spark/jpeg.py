@@ -18,9 +18,11 @@ against the public specification:
 Decode covers baseline sequential (SOF0/SOF1, 8-bit Huffman) AND
 progressive (SOF2: spectral selection + successive approximation, any
 EOBn run length); arithmetic-coded, hierarchical and lossless processes
-are detected and raise a clear ValueError (quarantine path). The entropy
-loop is per-block Python (inherently sequential); dequantization, IDCT
-and color transforms are batched NumPy over all blocks of a scan. This is the *interchange*
+are detected and raise a clear ValueError (quarantine path). Both
+processes decode through one scan decoder (_decode_scan) into per-component
+coefficient stores; the entropy loop is per-block Python (inherently
+sequential), and dequantization, IDCT and color transforms run once, batched
+NumPy over all blocks of the frame, at EOI. This is the *interchange*
 ingest path for crawl data — the engine container (codec.py) remains the
 hot on-cluster representation.
 """
@@ -620,7 +622,13 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
     Supports Huffman baseline (SOF0/SOF1) AND progressive (SOF2: spectral
     selection + successive approximation, DC/AC refinement scans, EOB
     runs), sampling factors up to 4, restart intervals. Arithmetic coding
-    and the hierarchical/lossless processes raise."""
+    and the hierarchical/lossless processes raise.
+
+    Both processes share one path: every scan fills the frame's
+    coefficient stores through :func:`_decode_scan` (a sequential scan is
+    the band (0, 63, 0, 0)), and one batched :func:`_idct_assemble` turns
+    the stores into pixels at EOI. A sequential frame must code all its
+    components in one interleaved scan."""
     if buf[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     qtabs: dict[int, np.ndarray] = {}
@@ -628,8 +636,7 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
     ac_tabs: dict[int, dict] = {}
     frame = None
     restart = 0
-    stores = None                                 # progressive coef stores
-    any_scan = False
+    stores = None                                 # per frame component
     pos = 2
     n = len(buf)
     while pos + 4 <= n:
@@ -697,22 +704,21 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             segs, pos = _entropy_segments(buf, pos)
             if frame["progressive"]:
                 ss, se, ahl = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-                if stores is None:
-                    stores = _init_stores(frame)
-                _decode_prog_scan(frame, scan, (ss, se, ahl >> 4, ahl & 0xF),
-                                  segs, dc_tabs, ac_tabs, restart, stores)
-                any_scan = True
-                continue
-            if ns != len(frame["comps"]):
+                band = (ss, se, ahl >> 4, ahl & 0xF)
+            elif ns != len(frame["comps"]):
                 raise ValueError(
                     "non-interleaved multi-scan baseline JPEG not supported")
-            return _decode_scan(frame, scan, segs, qtabs, dc_tabs, ac_tabs,
-                                restart)
+            else:
+                band = (0, 63, 0, 0)
+            if stores is None:
+                stores = _init_stores(frame)
+            _decode_scan(frame, scan, band, segs, dc_tabs, ac_tabs, restart,
+                         stores)
         # APPn/COM and anything else: skipped
-    if frame is not None and frame.get("progressive") and any_scan:
-        entries = [(c, stores[i]) for i, c in enumerate(frame["comps"])]
-        return _idct_assemble(frame, entries, qtabs)
-    raise ValueError("JPEG has no SOS scan")
+    if stores is None:
+        raise ValueError("JPEG has no SOS scan")
+    entries = [(c, stores[i]) for i, c in enumerate(frame["comps"])]
+    return _idct_assemble(frame, entries, qtabs)
 
 
 def _entropy_segments(buf: bytes, pos: int) -> tuple[list[bytes], int]:
@@ -743,77 +749,9 @@ def _entropy_segments(buf: bytes, pos: int) -> tuple[list[bytes], int]:
     return segs, pos
 
 
-def _decode_scan(frame, scan, segs, qtabs, dc_tabs, ac_tabs,
-                 restart: int) -> np.ndarray:
-    h, w = frame["h"], frame["w"]
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    if hmax not in (1, 2, 4) or vmax not in (1, 2, 4):
-        raise ValueError("unsupported JPEG sampling factors")
-    for c in frame["comps"]:
-        # EVERY component's factor must be a power-of-two divisor of the
-        # max (the np.repeat upsample is integer-ratio): e.g. H=3 under
-        # hmax=4 would silently misalign chroma or die on an opaque
-        # shape error instead of this clear quarantine-able message
-        if (c["h"] not in (1, 2, 4) or c["v"] not in (1, 2, 4)
-                or hmax % c["h"] or vmax % c["v"]):
-            raise ValueError(
-                f"unsupported JPEG sampling factors "
-                f"{c['h']}x{c['v']} (max {hmax}x{vmax})")
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # coefficient store per scan component: (blocks_down, blocks_across, 64)
-    store = []
-    for comp, _td, _ta in scan:
-        store.append(np.zeros((mcuy * comp["v"], mcux * comp["h"], 64),
-                              np.int32))
-    seg_i = 0
-    br = _BitReader(segs[0])
-    preds = [0] * len(scan)
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart and mcu and mcu % restart == 0:
-                seg_i += 1                        # RST boundary: new segment
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG truncated at restart interval")
-                br = _BitReader(segs[seg_i])
-                preds = [0] * len(scan)
-            for si, (comp, td, ta) in enumerate(scan):
-                dct = dc_tabs.get(td)
-                act = ac_tabs.get(ta)
-                if dct is None or act is None:
-                    raise ValueError("JPEG scan references missing Huffman table")
-                for v in range(comp["v"]):
-                    for u in range(comp["h"]):
-                        zz = np.zeros(64, np.int32)
-                        s = _huff_decode(br, dct)
-                        if s:
-                            preds[si] += _extend(br.bits(s), s)
-                        zz[0] = preds[si]
-                        k = 1
-                        while k < 64:
-                            rs = _huff_decode(br, act)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:       # ZRL
-                                    k += 16
-                                    continue
-                                break             # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC run past block end")
-                            zz[k] = _extend(br.bits(s), s)
-                            k += 1
-                        store[si][my * comp["v"] + v, mx * comp["h"] + u] = zz
-            mcu += 1
-    entries = [(comp, store[si]) for si, (comp, _td, _ta) in enumerate(scan)]
-    return _idct_assemble(frame, entries, qtabs)
-
-
 def _idct_assemble(frame, entries, qtabs) -> np.ndarray:
     """Batched dequantize + IDCT + upsample + color transform over the
-    final coefficient stores (shared by baseline and progressive)."""
+    final coefficient stores."""
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c in frame["comps"])
     vmax = max(c["v"] for c in frame["comps"])
@@ -844,10 +782,12 @@ def _idct_assemble(frame, entries, qtabs) -> np.ndarray:
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-# ------------------------------------------------------- progressive -------
-# T.81 Annex G: spectral selection (each scan codes one zigzag band of one
-# component, or the DC band of all) + successive approximation (coefficient
-# bits arrive MSB-first across scans; refinement scans append one bit).
+# ----------------------------------------------------------------- scans ---
+# One scan decoder for both processes. Sequential (T.81 Annex F): one scan
+# codes every coefficient of every component. Progressive (Annex G):
+# spectral selection (each scan codes one zigzag band of one component, or
+# the DC band of all) + successive approximation (coefficient bits arrive
+# MSB-first across scans; refinement scans append one bit).
 
 def _frame_geometry(frame):
     hmax = max(c["h"] for c in frame["comps"])
@@ -884,7 +824,8 @@ def _init_stores(frame):
 
 
 class _SegmentCursor:
-    """Restart-interval segment switching for progressive scans."""
+    """Restart-interval segment switching: one entropy-coded segment per
+    restart interval of MCUs."""
 
     def __init__(self, segs, restart):
         self.segs = segs
@@ -894,7 +835,7 @@ class _SegmentCursor:
         self.unit = 0
 
     def step(self):
-        """Advance one MCU/block; returns True when a restart boundary was
+        """Advance one MCU; returns True when a restart boundary was
         crossed (callers reset DC predictions / EOB runs)."""
         crossed = (self.restart and self.unit
                    and self.unit % self.restart == 0)
@@ -907,7 +848,11 @@ class _SegmentCursor:
         return crossed
 
 
-def _ac_first(br, zz, ss, se, al, act, eobrun):
+def _ac_first(br, zz, ss, se, al, act, eobrun, runs):
+    """First AC pass over zigzag band ss..se of one block; returns the EOB
+    run left for the blocks after it. ``runs`` is False in sequential
+    scans, where every SSSS = 0 symbol but ZRL ends the block and carries
+    no run bits (T.81 F.2.2.2)."""
     if eobrun > 0:
         return eobrun - 1
     k = ss
@@ -916,6 +861,8 @@ def _ac_first(br, zz, ss, se, al, act, eobrun):
         r, s = rs >> 4, rs & 0xF
         if s == 0:
             if r != 15:
+                if not runs:
+                    return 0
                 eobrun = (1 << r) - 1
                 if r:
                     eobrun += br.bits(r)
@@ -973,58 +920,61 @@ def _ac_refine(br, zz, ss, se, al, act, eobrun):
     return eobrun
 
 
-def _decode_prog_scan(frame, scan, band, segs, dc_tabs, ac_tabs,
-                      restart, stores):
+def _decode_scan(frame, scan, band, segs, dc_tabs, ac_tabs, restart, stores):
+    """Decode one scan's entropy-coded segments into ``stores``, the
+    frame's zigzag coefficient arrays (one (blocks_down, blocks_across, 64)
+    int32 array per frame component, sized by :func:`_init_stores`).
+
+    ``band`` is (Ss, Se, Ah, Al). A sequential scan is the band
+    (0, 63, 0, 0): each block codes its DC difference, then its AC
+    coefficients from 1. A progressive scan codes the DC band of one or
+    more components, or one AC band of one component, either first
+    (Ah = 0) or as a one-bit refinement (T.81 G.1.2). An interleaved scan
+    walks MCU order, H×V blocks per component; a one-component scan walks
+    that component's own unpadded block grid, one block per MCU (T.81
+    A.2). Each restart interval resets the DC predictions and the EOB
+    run."""
     ss, se, ah, al = band
-    hmax, vmax, mcux, mcuy = _frame_geometry(frame)
-    cidx = {id(c): i for i, c in enumerate(frame["comps"])}
-    cur = _SegmentCursor(segs, restart)
-    if ss == 0:                                   # ---- DC scan
-        if se != 0:
-            raise ValueError("progressive scan mixes DC and AC bands")
-        preds = [0] * len(scan)
-        if len(scan) > 1:                         # interleaved, MCU order
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if cur.step():
-                        preds = [0] * len(scan)
-                    for si, (comp, td, _ta) in enumerate(scan):
-                        st = stores[cidx[id(comp)]]
-                        for v in range(comp["v"]):
-                            for u in range(comp["h"]):
-                                blk = st[my * comp["v"] + v, mx * comp["h"] + u]
-                                preds[si] = _dc_one(cur.br, blk, ah, al,
-                                                    dc_tabs.get(td), preds[si])
-        else:                                     # single comp, own grid
-            comp, td, _ta = scan[0]
-            st = stores[cidx[id(comp)]]
-            bh, bw = _comp_block_dims(frame, comp)
-            for by in range(bh):
-                for bx in range(bw):
-                    if cur.step():
-                        preds = [0]
-                    preds[0] = _dc_one(cur.br, st[by, bx], ah, al,
-                                       dc_tabs.get(td), preds[0])
-        return
-    # ---- AC scan: exactly one component, unpadded grid, EOB-run state
-    if len(scan) != 1:
+    progressive = frame["progressive"]
+    if progressive and ss == 0 and se != 0:
+        raise ValueError("progressive scan mixes DC and AC bands")
+    if progressive and ss and len(scan) != 1:
         raise ValueError("progressive AC scan must be non-interleaved")
-    comp, _td, ta = scan[0]
-    act = ac_tabs.get(ta)
-    if act is None:
+    cidx = {id(c): i for i, c in enumerate(frame["comps"])}
+    comps = [c for c, _td, _ta in scan]
+    sts = [stores[cidx[id(c)]] for c in comps]
+    dcs = [dc_tabs.get(td) for _c, td, _ta in scan]
+    acs = [ac_tabs.get(ta) for _c, _td, ta in scan]
+    if se and any(t is None for t in acs):
         raise ValueError("JPEG scan references missing Huffman table")
-    st = stores[cidx[id(comp)]]
-    bh, bw = _comp_block_dims(frame, comp)
+    if len(scan) > 1:
+        _hmax, _vmax, mcux, mcuy = _frame_geometry(frame)
+        mcus = ([(si, sts[si][my * c["v"] + v, mx * c["h"] + u])
+                 for si, c in enumerate(comps)
+                 for v in range(c["v"]) for u in range(c["h"])]
+                for my in range(mcuy) for mx in range(mcux))
+    else:
+        bh, bw = _comp_block_dims(frame, comps[0])
+        mcus = ([(0, sts[0][by, bx])] for by in range(bh) for bx in range(bw))
+    k0 = max(ss, 1)
+    cur = _SegmentCursor(segs, restart)
+    preds = [0] * len(scan)
     eobrun = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if cur.step():
-                eobrun = 0
-            zz = st[by, bx]
-            if ah == 0:
-                eobrun = _ac_first(cur.br, zz, ss, se, al, act, eobrun)
+    for mcu in mcus:
+        if cur.step():
+            preds = [0] * len(scan)
+            eobrun = 0
+        br = cur.br
+        for si, blk in mcu:
+            if ss == 0:
+                preds[si] = _dc_one(br, blk, ah, al, dcs[si], preds[si])
+            if not se:
+                continue
+            if ah:
+                eobrun = _ac_refine(br, blk, ss, se, al, acs[si], eobrun)
             else:
-                eobrun = _ac_refine(cur.br, zz, ss, se, al, act, eobrun)
+                eobrun = _ac_first(br, blk, k0, se, al, acs[si], eobrun,
+                                   progressive)
 
 
 def _dc_one(br, blk, ah, al, dct, pred):

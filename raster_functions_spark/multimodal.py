@@ -7,7 +7,18 @@ Opaque ``binary`` payload columns with typed metadata, driven through
 - BMP, PPM/PGM and RIFF-PCM WAV (formats.py — pure struct+NumPy, no
   external libraries),
 - PNG (formats.decode_png: stdlib zlib + the five scanline filters),
-- baseline JPEG (jpeg.py: Annex-K huffman + the shared 8×8 DCT basis).
+- baseline and progressive JPEG (jpeg.py: Annex-K huffman + the shared
+  8×8 DCT basis).
+
+Payload kernels (``image_features``, ``decode_metrics``,
+``image_catalog``, ``video_decode_metrics``) are one pass,
+:func:`_payload_pass`: it selects the kept columns and the payload column
+only, so no other column crosses the Arrow boundary, and calls one
+``payload -> dict`` function per row in a single ``mapInPandas``. Images
+dispatch by magic bytes (formats.decode_image_any / peek_image_any),
+never by a format column. The pass is the quarantine boundary: a row
+whose payload fails gets the kernel's sentinel row, or, where the kernel
+has none (``on_error='raise'``, the catalog), fails the task.
 
 Video containers demux for real (round 4): formats.demux_mp4 walks the
 ISO-BMFF box tree (moov → video trak → stsc/stsz/stco sample map) and
@@ -31,32 +42,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import codec, formats
+from . import formats
 from .operators.stack import grouped_sorted_map
 from .raster import (TILE_COLS, TILE_FIELDS, TileOp, apply_chain, chained_tiles,
                      tile_columns, tile_row)
 
 
-def decode_external_image(buf: bytes) -> np.ndarray:
-    """Decode an external image payload to (bands, h, w). Every common
-    interchange format decodes from scratch: BMP/PNM (formats.py), PNG
-    (zlib + the five scanline filters, formats.decode_png), baseline JPEG
-    (huffman + IDCT, jpeg.decode_jpeg) and the engine container."""
-    kind = formats.sniff(bytes(buf))
-    if kind in formats.IMAGE_KINDS:
-        return formats.decode_image_any(buf)
-    raise ValueError(
-        f"unrecognized image payload (magic {bytes(buf[:4])!r}); "
-        "supported: BMP, PNM, PNG, baseline JPEG, engine container")
+def _payload_pass(df: DataFrame, bytes_col: str, keep_cols, fields: list,
+                  fn, bad: dict | None) -> DataFrame:
+    """One row out per payload row in: ``keep_cols`` as they are, then
+    ``fields`` from ``fn(payload bytes) -> dict``. Only ``keep_cols`` and
+    ``bytes_col`` are selected before the ``mapInPandas``. A row whose
+    ``fn`` raises gets ``bad``; with ``bad=None`` the error fails the
+    task."""
+    keep_cols = list(keep_cols)
+    out_schema = T.StructType([df.schema[c] for c in keep_cols] + fields)
+    names = [f.name for f in fields]
 
+    def one(buf):
+        try:
+            return fn(buf)
+        except Exception:
+            # payloads come from outside the program: a corrupt one can
+            # break a decoder in any way (ValueError, struct.error,
+            # zlib.error, IndexError …), and each is a bad row, not a bug
+            if bad is None:
+                raise
+            return bad
 
-def fake_decode(buf: bytes, h: int = 8, w: int = 8, bands: int = 3) -> np.ndarray:
-    """Deterministic stand-in decode: pixels derived from payload bytes.
-    Lets the full pipeline (batching, schema, feature extraction) run and
-    be asserted on without external codec libs."""
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    reps = int(np.ceil(bands * h * w / max(raw.size, 1)))
-    return np.tile(raw, reps)[:bands * h * w].reshape(bands, h, w)
+    def run(batches):
+        for pdf in batches:
+            vals = pd.DataFrame([one(bytes(b)) for b in pdf[bytes_col]],
+                                columns=names)
+            yield pd.concat([pdf[keep_cols].reset_index(drop=True), vals],
+                            axis=1)
+
+    return df.select(*keep_cols, bytes_col).mapInPandas(run, schema=out_schema)
 
 
 FEATURE_SCHEMA = T.StructType([
@@ -69,51 +90,23 @@ FEATURE_SCHEMA = T.StructType([
 
 
 def image_features(df: DataFrame, bytes_col: str = "bytes",
-                   fmt_col: str = "fmt", keep_cols: tuple = ("image_id",),
-                   use_fake: bool = False) -> DataFrame:
+                   keep_cols: tuple = ("image_id",)) -> DataFrame:
     """Decode → basic feature extraction per image (mean/std/min/max + a
-    gradient-energy proxy). Engine-format rows decode via codec;
-    PNG/JPEG/BMP/PNM payloads decode for real through the from-scratch
-    codecs (formats.decode_image_any); unrecognized payloads NaN-fill
-    their features (rows stay joinable) unless ``use_fake`` substitutes
-    the deterministic fake decoder."""
-    out_schema = T.StructType([df.schema[c] for c in keep_cols]
-                              + list(FEATURE_SCHEMA))
+    gradient-energy proxy). Every payload the magic bytes name (engine
+    container, PNG, JPEG, BMP, PNM) decodes through
+    formats.decode_image_any; unrecognized or corrupt payloads NaN-fill
+    their features (rows stay joinable)."""
+    def features(buf):
+        px = formats.decode_image_any(buf).astype(np.float64)
+        gy = np.abs(np.diff(px, axis=1)).mean() if px.shape[1] > 1 else 0.0
+        gx = np.abs(np.diff(px, axis=2)).mean() if px.shape[2] > 1 else 0.0
+        return {"px_mean": float(px.mean()), "px_std": float(px.std()),
+                "px_min": float(px.min()), "px_max": float(px.max()),
+                "edge_energy": float(gx + gy)}
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                buf = bytes(pdf[bytes_col].iloc[i])
-                fmt = pdf[fmt_col].iloc[i] if fmt_col in pdf else "raw"
-                try:
-                    if fmt in codec.FMT_CODES:
-                        px = codec.decode(buf).astype(np.float64)
-                    elif formats.sniff(buf) in formats.IMAGE_KINDS:
-                        px = formats.decode_image_any(buf).astype(np.float64)
-                    elif use_fake:
-                        px = fake_decode(buf).astype(np.float64)
-                    else:
-                        px = None
-                except Exception:
-                    # sniffable magic but corrupt body (truncated IDAT,
-                    # bad entropy stream): the documented contract is
-                    # rows stay joinable — NaN-fill, never kill the task
-                    px = None
-                if px is None:
-                    feats = dict.fromkeys(
-                        ("px_mean", "px_std", "px_min", "px_max", "edge_energy"),
-                        float("nan"))
-                else:
-                    gy = np.abs(np.diff(px, axis=1)).mean() if px.shape[1] > 1 else 0.0
-                    gx = np.abs(np.diff(px, axis=2)).mean() if px.shape[2] > 1 else 0.0
-                    feats = {"px_mean": float(px.mean()), "px_std": float(px.std()),
-                             "px_min": float(px.min()), "px_max": float(px.max()),
-                             "edge_energy": float(gx + gy)}
-                rows.append({**{c: pdf[c].iloc[i] for c in keep_cols}, **feats})
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.mapInPandas(run, schema=out_schema)
+    bad = dict.fromkeys(FEATURE_SCHEMA.fieldNames(), float("nan"))
+    return _payload_pass(df, bytes_col, keep_cols, list(FEATURE_SCHEMA),
+                         features, bad)
 
 
 def decode_metrics(df: DataFrame, bytes_col: str = "bytes",
@@ -133,7 +126,7 @@ def decode_metrics(df: DataFrame, bytes_col: str = "bytes",
     if on_error not in ("raise", "quarantine"):
         raise ValueError("on_error must be 'raise' or 'quarantine'")
     quarantine = on_error == "quarantine"
-    fields = [df.schema[c] for c in keep_cols] + [
+    fields = [
         T.StructField("bands", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("w", T.IntegerType()),
@@ -141,30 +134,18 @@ def decode_metrics(df: DataFrame, bytes_col: str = "bytes",
     ]
     if quarantine:
         fields.append(T.StructField("ok", T.BooleanType()))
-    out_schema = T.StructType(fields)
-    cols = [f.name for f in out_schema]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                keep = {c: pdf[c].iloc[i] for c in keep_cols}
-                try:
-                    px = decode_external_image(bytes(pdf[bytes_col].iloc[i]))
-                    m = {"bands": px.shape[0], "h": px.shape[1],
-                         "w": px.shape[2],
-                         "px_sum": int(px.astype(np.int64).sum())}
-                    if quarantine:
-                        m["ok"] = True
-                except Exception:
-                    if not quarantine:
-                        raise
-                    m = {"bands": -1, "h": -1, "w": -1, "px_sum": -1,
-                         "ok": False}
-                rows.append({**keep, **m})
-            yield pd.DataFrame(rows, columns=cols)
+    def metrics(buf):
+        px = formats.decode_image_any(buf)
+        m = {"bands": px.shape[0], "h": px.shape[1], "w": px.shape[2],
+             "px_sum": int(px.astype(np.int64).sum())}
+        if quarantine:
+            m["ok"] = True
+        return m
 
-    return df.mapInPandas(run, schema=out_schema)
+    bad = ({"bands": -1, "h": -1, "w": -1, "px_sum": -1, "ok": False}
+           if quarantine else None)
+    return _payload_pass(df, bytes_col, keep_cols, fields, metrics, bad)
 
 
 def image_catalog(df: DataFrame, bytes_col: str = "bytes",
@@ -172,27 +153,21 @@ def image_catalog(df: DataFrame, bytes_col: str = "bytes",
     """Catalog crawl over interchange-format payloads: header-only metadata
     (formats.peek_image_any — PNG IDAT never inflated, JPEG entropy never
     decoded), the S7 analog for a crawl dump. Orders of magnitude cheaper
-    than decode; pair with a groupBy rollup for corpus inventory."""
-    out_schema = T.StructType([df.schema[c] for c in keep_cols] + [
+    than decode; pair with a groupBy rollup for corpus inventory. An
+    unreadable header fails the task."""
+    fields = [
         T.StructField("fmt", T.StringType()),
         T.StructField("bands", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("w", T.IntegerType()),
         T.StructField("nbytes", T.LongType()),
-    ])
-    cols = [f.name for f in out_schema]
+    ]
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                m = formats.peek_image_any(bytes(pdf[bytes_col].iloc[i]))
-                rows.append({**{c: pdf[c].iloc[i] for c in keep_cols},
-                             "fmt": m["fmt"], "bands": m["bands"],
-                             "h": m["h"], "w": m["w"], "nbytes": m["nbytes"]})
-            yield pd.DataFrame(rows, columns=cols)
+    def header(buf):
+        m = formats.peek_image_any(buf)
+        return {f.name: m[f.name] for f in fields}
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _payload_pass(df, bytes_col, keep_cols, fields, header, None)
 
 
 def resize_tiles(df: DataFrame, out_h: int, out_w: int,
@@ -248,8 +223,6 @@ def video_decode_metrics(df: DataFrame, bytes_col: str = "bytes",
     profile_idc/level_idc identify the bitstream profile, so quarantined
     crawl rows still catalog usefully. One mapInPandas pass; payload
     bytes cross Arrow exactly once."""
-    from . import formats
-
     if on_error not in ("raise", "quarantine"):
         raise ValueError("on_error must be 'raise' or 'quarantine'")
     if every_n < 1:
@@ -257,7 +230,7 @@ def video_decode_metrics(df: DataFrame, bytes_col: str = "bytes",
         # would silently mark every video bad instead of surfacing it
         raise ValueError(f"every_n must be >= 1, got {every_n}")
     quarantine = on_error == "quarantine"
-    out_schema = T.StructType([df.schema[c] for c in keep_cols] + [
+    fields = [
         T.StructField("codec", T.StringType()),
         T.StructField("n_frames", T.IntegerType()),
         T.StructField("n_decoded", T.IntegerType()),
@@ -267,57 +240,45 @@ def video_decode_metrics(df: DataFrame, bytes_col: str = "bytes",
         T.StructField("profile_idc", T.IntegerType()),
         T.StructField("level_idc", T.IntegerType()),
         T.StructField("ok", T.BooleanType()),
-    ])
-    cols = [f.name for f in out_schema]
+    ]
     decodable = ("jpeg", "mjpa", "png")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                keep = {c: pdf[c].iloc[i] for c in keep_cols}
-                try:
-                    raw = bytes(pdf[bytes_col].iloc[i])
-                    t = formats._demux_tables(raw)
-                    tag = t["codec"]
-                    samples = formats.samples_from_tables(raw, t)
-                    m = {"codec": tag, "n_frames": len(samples),
-                         "n_decoded": 0,
-                         "h": t["codec_h"] if t["codec_h"] is not None else -1,
-                         "w": t["codec_w"] if t["codec_w"] is not None else -1,
-                         "px_sum": -1,
-                         "profile_idc": (t["profile_idc"]
-                                         if t["profile_idc"] is not None else -1),
-                         "level_idc": (t["level_idc"]
-                                       if t["level_idc"] is not None else -1),
-                         "ok": False}
-                    if tag.strip() in decodable:
-                        # frame-decode failures must NOT discard the
-                        # already-resolved demux metadata — the row
-                        # quarantines WITH its codec/frame-count/dims
-                        # enrichment (that is the catalog contract)
-                        try:
-                            total, nd, hh, ww = 0, 0, -1, -1
-                            for s in samples[::every_n]:
-                                px = formats.decode_image_any(s)
-                                total += int(px.astype(np.int64).sum())
-                                hh, ww = int(px.shape[1]), int(px.shape[2])
-                                nd += 1
-                            m.update({"n_decoded": nd, "h": hh, "w": ww,
-                                      "px_sum": total, "ok": True})
-                        except Exception:
-                            if not quarantine:
-                                raise
-                except Exception:
-                    if not quarantine:
-                        raise
-                    m = {"codec": "", "n_frames": -1, "n_decoded": -1,
-                         "h": -1, "w": -1, "px_sum": -1,
-                         "profile_idc": -1, "level_idc": -1, "ok": False}
-                rows.append({**keep, **m})
-            yield pd.DataFrame(rows, columns=cols)
+    def metrics(raw):
+        t = formats._demux_tables(raw)
+        tag = t["codec"]
+        samples = formats.samples_from_tables(raw, t)
+        m = {"codec": tag, "n_frames": len(samples), "n_decoded": 0,
+             "h": t["codec_h"] if t["codec_h"] is not None else -1,
+             "w": t["codec_w"] if t["codec_w"] is not None else -1,
+             "px_sum": -1,
+             "profile_idc": (t["profile_idc"]
+                             if t["profile_idc"] is not None else -1),
+             "level_idc": (t["level_idc"]
+                           if t["level_idc"] is not None else -1),
+             "ok": False}
+        if tag.strip() in decodable:
+            # frame-decode failures must NOT discard the already-resolved
+            # demux metadata — the row quarantines WITH its
+            # codec/frame-count/dims enrichment (that is the catalog
+            # contract); a frame fails the same ways an image payload does
+            try:
+                total, nd, hh, ww = 0, 0, -1, -1
+                for s in samples[::every_n]:
+                    px = formats.decode_image_any(s)
+                    total += int(px.astype(np.int64).sum())
+                    hh, ww = int(px.shape[1]), int(px.shape[2])
+                    nd += 1
+                m.update({"n_decoded": nd, "h": hh, "w": ww,
+                          "px_sum": total, "ok": True})
+            except Exception:
+                if not quarantine:
+                    raise
+        return m
 
-    return df.mapInPandas(run, schema=out_schema)
+    bad = ({"codec": "", "n_frames": -1, "n_decoded": -1, "h": -1, "w": -1,
+            "px_sum": -1, "profile_idc": -1, "level_idc": -1, "ok": False}
+           if quarantine else None)
+    return _payload_pass(df, bytes_col, keep_cols, fields, metrics, bad)
 
 
 def patchify_tiles(df: DataFrame, patch_h: int, patch_w: int,

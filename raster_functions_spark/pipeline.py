@@ -92,32 +92,6 @@ def _by_aoi(stats: DataFrame, route: str) -> DataFrame:
     return stats.orderBy("aoi_id")
 
 
-def flagship_assigned(spark: SparkSession, images: DataFrame, aoi: DataFrame,
-                      cell_res: int = 7,
-                      broadcast_threshold: int = 10000) -> DataFrame:
-    """PIP join → cell-encode → decode with ONE fused Python pass
-    (SURVEY.md O11): bbox prefilter and exact PIP, then vectorized
-    cell-encode, decode and features for the assigned images only
-    (_assign_batch), all on each Arrow batch in a single worker, over a
-    scan pruned to the six columns the kernel reads; the assigned rows
-    need no shuffle at all (the zonal aggregation that follows in flagship
-    is the first).
-
-    At N tasks this runs exactly N Python workers (separate decode / join
-    / agg stages would run 3N — a 3× oversubscription that inverts
-    local-mode scaling and wastes executor memory on a real cluster).
-
-    Routing: the fused path materializes the AOI table on the driver and
-    broadcasts it, which is the right call for the typical few-thousand-
-    polygon case but a ceiling at millions of polygons. The same bounded
-    collect as spatial.pip_join (at most N+1 rows, never a full count; see
-    prepare_aoi) routes oversized vector sides to the fused-decode +
-    cell-cover partitioned join, which never touches the driver."""
-    session.ship_package(spark)
-    prep = prepare_aoi(spark, aoi, broadcast_threshold)
-    return flagship_assigned_prepared(spark, images, prep, cell_res)
-
-
 _ASSIGNED_SCHEMA = ("aoi_id long, image_id string, caption string, cell long, "
                     "px_mean double, px_std double, phash_ham int")
 
@@ -141,8 +115,8 @@ def prepare_aoi(spark: SparkSession, aoi: DataFrame,
 
 def flagship_assigned_prepared(spark: SparkSession, images: DataFrame,
                                prep, cell_res: int = 7) -> DataFrame:
-    """The per-batch half of flagship_assigned, reusing a prepare_aoi
-    result (see prepare_aoi for why streaming callers need the split)."""
+    """The assigned rows of :func:`flagship` for a prepare_aoi result
+    (see prepare_aoi for why streaming callers prepare once)."""
     kind, payload = prep
     if kind == "partitioned":
         feats = decode_features(images, cell_res)
@@ -208,8 +182,24 @@ def _decode_feature_arrays(pdf: pd.DataFrame):
 
 def flagship(spark: SparkSession, images: DataFrame, aoi: DataFrame,
              cell_res: int = 7, broadcast_threshold: int = 10000) -> DataFrame:
-    """The headline query: fused assigned rows (flagship_assigned) → zonal
-    aggregation. See flagship_assigned for the fusion/routing story."""
+    """The headline query: PIP join → cell-encode → decode with ONE fused
+    Python pass (SURVEY.md O11), then the zonal aggregation.
+
+    Fusion: bbox prefilter and exact PIP, then vectorized cell-encode,
+    decode and features for the assigned images only (_assign_batch), all
+    on each Arrow batch in a single worker, over a scan pruned to the six
+    columns the kernel reads; the assigned rows need no shuffle at all
+    (the zonal aggregation is the first). At N tasks this runs exactly N
+    Python workers (separate decode / join / agg stages would run 3N — a
+    3× oversubscription that inverts local-mode scaling and wastes
+    executor memory on a real cluster).
+
+    Routing: the fused path materializes the AOI table on the driver and
+    broadcasts it, which is the right call for the typical few-thousand-
+    polygon case but a ceiling at millions of polygons. The same bounded
+    collect as spatial.pip_join (at most N+1 rows, never a full count; see
+    prepare_aoi) routes oversized vector sides to the fused-decode +
+    cell-cover partitioned join, which never touches the driver."""
     session.ship_package(spark)
     prep = prepare_aoi(spark, aoi, broadcast_threshold)
     return _zonal_agg(flagship_assigned_prepared(spark, images, prep, cell_res),

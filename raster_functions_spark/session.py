@@ -39,6 +39,7 @@ import os
 import tempfile
 import zipfile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Pin NumPy/BLAS threads before NumPy is imported anywhere on workers.
@@ -124,7 +125,7 @@ def ensure_min_parallelism(df, bytes_per_core: int = 4 * 1024 * 1024):
     cores = sc.defaultParallelism
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:    # a streaming input lists no files
         return df
     if not files:
         return df

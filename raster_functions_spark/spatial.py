@@ -141,14 +141,6 @@ def _res_from_median_span(med: float, max_cells_per_aoi: int = 64) -> int:
     return int(np.clip(np.floor(np.log2(360.0 / med * side)), 0, grid.MAX_RES))
 
 
-def auto_cover_res(aoi_pdf: pd.DataFrame, max_cells_per_aoi: int = 64) -> int:
-    """Pick a cover resolution so the median AOI covers ≲ max_cells cells
-    (driver-side pandas variant, for already-collected small AOI sets)."""
-    spans = np.maximum(aoi_pdf["xmax"] - aoi_pdf["xmin"],
-                       (aoi_pdf["ymax"] - aoi_pdf["ymin"]) * 2.0)
-    return _res_from_median_span(float(np.median(spans)), max_cells_per_aoi)
-
-
 def auto_cover_res_distributed(aoi: DataFrame, max_cells_per_aoi: int = 64) -> int:
     """Distributed variant for the partitioned path's LARGE vector side:
     the median bbox span comes from approxQuantile (a tiny aggregate job —

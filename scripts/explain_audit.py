@@ -20,6 +20,8 @@ properties the engine is designed around (SURVEY.md §4):
   (both hash Exchanges) and orders without a range Exchange
 - the partitioned flagship builds its cell cover without Python and joins
   through two shuffled hash joins, broadcasting nothing
+- each multimodal payload kernel sends only its kept columns and the
+  payload column into its one MapInPandas
 
 Run from anywhere: ``python scripts/explain_audit.py``. Prints one
 PASS/FAIL line per assertion (exit status 1 on any FAIL) and writes the
@@ -513,6 +515,30 @@ def main() -> int:
     checks.append(("broadcast flagship: 6-column scan, two hash Exchanges, "
                    "no range Exchange", ok))
     out += ["\n## flagship_broadcast_route\n", p]
+
+    # 33. every multimodal payload kernel over the 17-column image table
+    # plans one MapInPandas whose input is exactly its kept columns and the
+    # payload column: nothing else crosses the Arrow boundary
+    with tempfile.TemporaryDirectory() as td:
+        fixtures.images_df(spark, 20, partitions=2).write.parquet(td + "/img")
+        imgs = spark.read.parquet(td + "/img")
+        kernels = {
+            "image_features": (multimodal.image_features(imgs), ["image_id"]),
+            "decode_metrics": (multimodal.decode_metrics(imgs), ["image_id"]),
+            "image_catalog": (multimodal.image_catalog(imgs), ["image_id"]),
+            "video_decode_metrics": (multimodal.video_decode_metrics(
+                imgs, keep_cols=("image_id", "fmt")), ["image_id", "fmt"]),
+        }
+        ok = len(imgs.columns) == 17
+        for name, (df, keep) in kernels.items():
+            p = plan_of(df)
+            inputs = _re.findall(r"\(\d+\) MapInPandas\s*\nInput \[\d+\]: \[(.*)\]", p)
+            ok &= (len(inputs) == 1 and
+                   [c.split("#")[0] for c in inputs[0].split(", ")]
+                   == keep + ["bytes"])
+            out += [f"\n## multimodal.{name}\n", p]
+    checks.append(("multimodal payload kernels: one MapInPandas fed only "
+                   "kept columns + bytes", ok))
 
     out.append("\n# Assertions\n")
     failed = 0

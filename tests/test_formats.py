@@ -118,13 +118,13 @@ def test_image_features_decodes_bmp_column(spark):
     assert np.allclose(out["px_mean"], out["want_mean"])
 
 
-def test_decode_external_image_rejects_malformed_jpeg():
+def test_decode_image_any_rejects_malformed_jpeg():
     """JPEG now decodes for real (jpeg.py); a payload with the right magic
     but no scan must fail loudly, not hang."""
     with pytest.raises(ValueError):
-        multimodal.decode_external_image(b"\xff\xd8\xff\xe0JFIF....")
+        formats.decode_image_any(b"\xff\xd8\xff\xe0JFIF....")
     with pytest.raises(ValueError, match="unrecognized"):
-        multimodal.decode_external_image(b"\x00\x11\x22\x33")
+        formats.decode_image_any(b"\x00\x11\x22\x33")
 
 
 # ----------------------------------------------------------- ISO-BMFF ------
@@ -269,6 +269,24 @@ def test_avcc_in_container_enriches_demux():
     # tracks without codec config keep None enrichment
     t2 = Fm._demux_tables(Fm.encode_mp4_samples([b"x" * 9] * 2, "jpeg", 8, 8))
     assert t2["profile_idc"] is None and t2["codec_w"] is None
+
+
+@pytest.mark.parametrize("keep", [4, 12])
+def test_truncated_avcc_still_demuxes(spark, keep):
+    """A truncated avcC (record header cut at 4 bytes, SPS cut at 12)
+    leaves the SPS enrichment empty; the container still demuxes to a
+    quarantine row with its stsd dims."""
+    from raster_functions_spark import formats as Fm
+    record = Fm.encode_avcc(14, 12, 66, 30)[8:]
+    buf = Fm.encode_mp4_samples([b"\x00" * 40] * 3, "avc1", 16, 16,
+                                codec_config=Fm._box(b"avcC", record[:keep]))
+    t = Fm._demux_tables(buf)
+    assert (t["w"], t["h"]) == (16, 16)
+    assert (t["codec_w"], t["codec_h"]) == (None, None)
+    df = spark.createDataFrame(pd.DataFrame({"video_id": ["v0"], "bytes": [buf]}))
+    row = multimodal.video_decode_metrics(df).collect()[0]
+    assert (row.codec, row.n_frames, row.h, row.w, row.ok) == \
+        ("avc1", 3, -1, -1, False)
 
 
 def test_peek_matches_decode_band_count_palette():

@@ -1,7 +1,7 @@
 import numpy as np
 import pytest
 
-from raster_functions_spark import codec, fixtures, multimodal
+from raster_functions_spark import codec, fixtures, formats, jpeg, multimodal
 
 
 def test_image_features_engine_format(spark):
@@ -17,24 +17,31 @@ def test_image_features_engine_format(spark):
         assert np.isclose(row.px_max, px.max(), atol=1e-9)
 
 
+def test_image_features_dispatches_by_magic_bytes(spark):
+    """The PNG and JPEG fixture tables carry no format column: every row
+    decodes by its magic bytes, none comes back null."""
+    for table, pixels in (
+            (fixtures.png_images_df(spark, 6), fixtures.png_fixture_pixels),
+            (fixtures.jpeg_images_df(spark, 6),
+             lambda i: jpeg.decode_jpeg(fixtures.jpeg_fixture_payload(i)))):
+        out = multimodal.image_features(table).toPandas()
+        assert len(out) == 6
+        for iid, mean in zip(out.image_id, out.px_mean):
+            want = pixels(int(iid[3:])).astype(np.float64).mean()
+            assert np.isclose(mean, want, rtol=0, atol=1e-9)
+
+
 def test_external_decode_raises():
     """JPEG decodes for real now (jpeg.py) — malformed payloads with a JPEG
     magic raise ValueError, as do unknown magics."""
     with pytest.raises(ValueError):
-        multimodal.decode_external_image(b"\xff\xd8\xff\xe0fakejpeg")
+        formats.decode_image_any(b"\xff\xd8\xff\xe0fakejpeg")
     with pytest.raises(ValueError, match="unrecognized"):
-        multimodal.decode_external_image(b"\x01\x02\x03\x04")
+        formats.decode_image_any(b"\x01\x02\x03\x04")
     # a REAL jpeg payload decodes
-    from raster_functions_spark import jpeg
     px = np.full((3, 8, 8), 77, np.uint8)
-    out = multimodal.decode_external_image(jpeg.encode_jpeg(px, quality=95))
+    out = formats.decode_image_any(jpeg.encode_jpeg(px, quality=95))
     assert out.shape == (3, 8, 8)
-
-
-def test_fake_decode_deterministic():
-    a = multimodal.fake_decode(b"hello world payload")
-    assert a.shape == (3, 8, 8)
-    assert np.array_equal(a, multimodal.fake_decode(b"hello world payload"))
 
 
 def test_resize_tiles(spark):

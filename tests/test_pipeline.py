@@ -185,7 +185,8 @@ def test_incremental_flagship_matches_batch(spark, tmp_path):
             assert abs(live[a][col] - full[a][col]) <= 2e-6, (a, col)
     # replayed commit: no-op
     b0 = images.filter("image_id < 'img000000200'")
-    p0 = pipeline._assigned_partials(pipeline.flagship_assigned(spark, b0, aoi))
+    p0 = pipeline._assigned_partials(pipeline.flagship_assigned_prepared(
+        spark, b0, pipeline.prepare_aoi(spark, aoi)))
     SnapshotTable(spark, vp).append_tables(
         {"partials": (p0.withColumn("_vb", F.pmod(F.col("aoi_id"), F.lit(16))
                                     .cast("long")), "_vb")},

@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from raster_functions_spark import codec, formats, jpeg, multimodal
+from raster_functions_spark import codec, formats, jpeg
 
 
 def _img(bands, h, w, seed=0):
@@ -188,6 +188,20 @@ def test_jpeg_restart_intervals(ri):
     rec = jpeg.decode_jpeg(buf)
     # restart markers change framing, not content
     assert np.array_equal(rec, base)
+
+
+@pytest.mark.parametrize("ri", [0, 2])
+def test_jpeg_one_component_scan_walks_its_own_block_grid(ri):
+    """T.81 A.2: a one-component scan codes one block per MCU in the
+    component's own grid, whatever its sampling factors. A grayscale frame
+    relabelled H=V=2 carries the same entropy data as H=V=1 and decodes to
+    the same pixels."""
+    px = _img(1, 17, 23, seed=3)
+    buf = jpeg.encode_jpeg(px, quality=90, restart_interval=ri)
+    sof = buf.index(b"\xff\xc0")
+    assert buf[sof + 11] == 0x11                 # component 1: H=V=1
+    relabelled = buf[:sof + 11] + b"\x22" + buf[sof + 12:]
+    assert np.array_equal(jpeg.decode_jpeg(relabelled), jpeg.decode_jpeg(buf))
 
 
 def test_jpeg_golden_hand_built_single_block():
@@ -428,6 +442,5 @@ def test_sniff_and_dispatch_png_jpeg():
     assert formats.sniff(jpg) == "jpeg"
     assert formats.decode_image_any(png).shape == (3, 4, 4)
     assert formats.decode_image_any(jpg).shape == (3, 8, 8)
-    assert multimodal.decode_external_image(png).shape == (3, 4, 4)
     with pytest.raises(ValueError, match="unrecognized"):
-        multimodal.decode_external_image(b"\x00\x01\x02\x03")
+        formats.decode_image_any(b"\x00\x01\x02\x03")

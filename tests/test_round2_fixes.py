@@ -195,7 +195,8 @@ def test_random_source_process_independent():
 def test_auto_cover_res_distributed_matches_pandas(spark):
     from raster_functions_spark import fixtures
     pdf = fixtures.aoi_pdf(40)
-    res_pd = spatial.auto_cover_res(pdf)
+    spans = np.maximum(pdf["xmax"] - pdf["xmin"], (pdf["ymax"] - pdf["ymin"]) * 2.0)
+    res_pd = spatial._res_from_median_span(float(np.median(spans)))
     res_dist = spatial.auto_cover_res_distributed(
         spark.createDataFrame(pdf[["aoi_id", "xmin", "ymin", "xmax", "ymax"]]))
     assert abs(res_dist - res_pd) <= 1  # approxQuantile 1% tolerance

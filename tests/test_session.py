@@ -229,14 +229,16 @@ def _plan(df) -> str:
 
 
 def test_ensure_min_parallelism_leaves_fileless_inputs_alone(spark, tmp_path):
-    """An input with no files (an in-memory frame) has no knowable size, so
-    it is returned unchanged; a small parquet table is still spread over
-    the cores."""
+    """An input with no files (an in-memory frame, a streaming source) has
+    no knowable size, so it is returned unchanged; a small parquet table is
+    still spread over the cores."""
     from raster_functions_spark.session import ensure_min_parallelism
     df = spark.createDataFrame(pd.DataFrame({"v": range(100)}))
     out = ensure_min_parallelism(df)
     assert out is df
     assert "RoundRobinPartitioning" not in _plan(out)
+    rate = spark.readStream.format("rate").load()
+    assert ensure_min_parallelism(rate) is rate
 
     path = str(tmp_path / "small.parquet")
     df.coalesce(1).write.parquet(path)
